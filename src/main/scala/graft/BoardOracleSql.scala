@@ -2,8 +2,9 @@ package graft
 
 /** DuckDB oracle SQL for the board queries (q16–q23), composed from
   * shared fragments exactly mirroring BoardOps/HexRules semantics.
-  * Validated against the Spark outputs by tools/board_oracle_proto.py
-  * (same composition in python) before being frozen here.
+  * `tools/oracle_check.py` hash-matches each statement, run in DuckDB,
+  * against the Spark output; OracleSweepSpec runs it on `spark.sql`
+  * against its DSL twin.
   */
 object BoardOracleSql {
 

@@ -115,9 +115,12 @@ object BoardOps {
   }
 
   /** The materialized pieces universe for queries whose plans read it
-    * from several subtrees (q17's four, q22's delta union): kept per
-    * (session, dir) under spark.graft.cacheTables like the text/vector
-    * indexes; uncached callers still get a per-call localCheckpoint.
+    * from several subtrees (q17's four, q22's delta union): built once
+    * and cached per (session, dir) UNCONDITIONALLY —
+    * spark.graft.cacheTables does not gate it, and no caller gets a
+    * per-call checkpoint. The copy factor is therefore read from
+    * `orders` once per session: the first call's row count fixes it,
+    * and changing the rows under `dir` within a session is not seen.
     *
     * Repartitioned to a DATA-sized count before the checkpoint: the
     * raw [[pieces]] frame is a LocalTableScan of the ~120-row fixture,

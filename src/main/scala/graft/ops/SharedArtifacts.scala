@@ -51,8 +51,7 @@ private[graft] object SharedArtifacts {
         new java.io.File(root, "graft_shared"),
         s"${name}_${key}_${graft.SessionCache.sessionToken(spark)}")
         .getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      CommitLog.fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
       build(path)
       path
     }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import CommitLog.fs
+
 /** File-level data skipping (zone maps) for the sink — the metadata
   * layer that makes a selective query on a NON-partition column cheap:
   * `day=` pruning already serves time predicates, but a 100 TB table
@@ -88,10 +90,6 @@ object SinkStats {
     }.reduce(_ + _)
   }
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def currentEpoch(spark: SparkSession, sink: String): Long =
     Streaming.listSinkEpochs(spark, sink).collect()
       .map(_.getLong(0)).foldLeft(-1L)(math.max)
@@ -101,7 +99,7 @@ object SinkStats {
     * view readSink serves — refuse loudly until compaction normalizes. */
   private def requireNoAlter(spark: SparkSession, sink: String,
       op: String): Unit = {
-    val (r, d) = Streaming.readAlter(fsOf(spark, sink), sink)
+    val (r, d) = Streaming.readAlter(fs(spark, sink), sink)
     require(r.isEmpty && d.isEmpty,
       s"$op over $sink: a schema alter is pending - run compactSink to " +
         "normalize it first (file manifests index physical column names)")
@@ -194,7 +192,7 @@ object SinkStats {
     require(cols.nonEmpty, "index at least one column")
     requireNoAlter(spark, sink, "indexSinkStats")
     import spark.implicits._
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
     val days = Streaming.resolvedDays(f, sink, e)
@@ -370,7 +368,7 @@ object SinkStats {
       lo: Double, hi: Double, tsCol: String = "ts"): DataFrame = {
     require(lo <= hi, s"empty band: $lo > $hi")
     requireNoAlter(spark, sink, "readSinkPruned")
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink")
     val manifest = s"$sink/epoch=$e/$StatsDir"
@@ -420,7 +418,7 @@ object SinkStats {
       tsCol: String = "ts"): DataFrame = {
     require(lo != null && hi != null && lo <= hi, s"empty band: $lo > $hi")
     requireNoAlter(spark, sink, "readSinkPrunedString")
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink")
     val manifest = s"$sink/epoch=$e/$StatsDir"
@@ -478,7 +476,7 @@ object SinkStats {
       i.getEpochSecond.toDouble * 1e6 + i.getNano.toDouble / 1e3
     }
     requireNoAlter(spark, sink, "readSinkPrunedTs")
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink")
     val manifest = s"$sink/epoch=$e/$StatsDir"
@@ -531,11 +529,7 @@ object SinkStats {
     val wmRow = Streaming.listSinkEpochs(spark, sink).collect()
       .filter(_.getLong(0) == e)
     val wm = wmRow.headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveParts = Streaming.subdirs(spark, sink, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm &&
-          f.exists(new org.apache.hadoop.fs.Path(p, Streaming.BatchCommit))
-      }.sortBy(_._1)
+    val liveParts = Streaming.committedBatches(spark, sink, wm)
       .map(d => withDay(spark.read.parquet(d._2.toString)))
     val parts = epochParts ++ liveParts
     if (parts.nonEmpty) parts.reduce(_.unionByName(_,
@@ -567,7 +561,7 @@ object SinkStats {
         ev.filter(pmod(col("event_id"), lit(2)) === 0), sink, 0L)
       Streaming.writeBatchIdempotent(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), sink, 1L)
-      val f = fsOf(spark, sink)
+      val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
       val prevTarget =
@@ -639,7 +633,7 @@ object SinkStats {
     require(lo <= hi, s"empty band: $lo > $hi")
     requireNoAlter(spark, sink, "countSinkPruned")
     import spark.implicits._
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink")
     val manifest = s"$sink/epoch=$e/$StatsDir"
@@ -690,11 +684,7 @@ object SinkStats {
         .groupBy(col("day")).agg(count(lit(1)).as("n")))
     val wm = Streaming.listSinkEpochs(spark, sink).collect()
       .filter(_.getLong(0) == e).headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveDF = Streaming.subdirs(spark, sink, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm &&
-          f.exists(new org.apache.hadoop.fs.Path(p, Streaming.BatchCommit))
-      }.sortBy(_._1)
+    val liveDF = Streaming.committedBatches(spark, sink, wm)
       .map { d =>
         val raw = spark.read.parquet(d._2.toString)
         val dated =
@@ -762,7 +752,7 @@ object SinkStats {
       bits: Int = 1 << 14, seeds: Int = 4): Long = {
     require(bits > 0 && seeds > 0, "bloom needs positive bits and seeds")
     requireNoAlter(spark, sink, "indexSinkBloom")
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
     // IDEMPOTENCE FAST PATH (r18, the stats manifest's twin): the
@@ -1043,7 +1033,7 @@ object SinkStats {
     values.foreach(v => require(v != null,
       "point lookup on NULL is an IS NULL scan, not an equality probe"))
     val vs = values.distinct
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink")
     val (colType, dayMap, perValue) = pointKeptByValue(spark, sink,
@@ -1061,11 +1051,7 @@ object SinkStats {
       else df.withColumn("day", lit(null).cast("date"))
     val wm = Streaming.listSinkEpochs(spark, sink).collect()
       .filter(_.getLong(0) == e).headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveParts = Streaming.subdirs(spark, sink, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm &&
-          f.exists(new org.apache.hadoop.fs.Path(p, Streaming.BatchCommit))
-      }.sortBy(_._1)
+    val liveParts = Streaming.committedBatches(spark, sink, wm)
       .map(d => withDay(spark.read.parquet(d._2.toString)))
     val parts = epochParts ++ liveParts
     val base =
@@ -1249,7 +1235,7 @@ object SinkStats {
         ev0.filter(pmod(col("event_id"), lit(2)) === 0), out, 0L)
       Streaming.writeBatchIdempotent(
         ev0.filter(pmod(col("event_id"), lit(2)) === 1), out, 1L)
-      val f = fsOf(spark, out)
+      val f = fs(spark, out)
       val inputBytes = Streaming.subdirs(spark, out, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
       val prevTarget =
@@ -1341,7 +1327,7 @@ object SinkStats {
         ev.filter(pmod(col("event_id"), lit(2)) === 0), sink, 0L)
       Streaming.writeBatchIdempotent(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), sink, 1L)
-      val f = fsOf(spark, sink)
+      val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
       val prevTarget =
@@ -1373,7 +1359,7 @@ object SinkStats {
         ev.filter(pmod(col("event_id"), lit(2)) === 0), sink, 0L)
       Streaming.writeBatchIdempotent(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), sink, 1L)
-      val f = fsOf(spark, sink)
+      val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
       val prevTarget =
@@ -1441,7 +1427,7 @@ object SinkStats {
     SharedArtifacts.once(spark, dir, "events_autoindex") { sink =>
       val ev = graft.Tables.events(spark, dir)
       Streaming.writeBatchIdempotent(ev, sink, 0L)
-      val f = fsOf(spark, sink)
+      val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
       val prev = Seq("spark.graft.compact.targetFileBytes",
@@ -1492,7 +1478,7 @@ object SinkStats {
     val ev = graft.Tables.events(spark, dir)
     // total file count via the epoch listing (NOT via an index call -
     // this query must never index anything)
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val e = currentEpoch(spark, sink)
     val total = Streaming.resolvedDays(f, sink, e).map { case (_, d) =>
       f.listStatus(d).count(s => s.isFile &&

@@ -308,8 +308,7 @@ object SnapshotDiff {
       tsCol: String = "ts"): (Long, Long) = {
     require(changes.columns.contains("change"),
       "applyChanges expects a readSinkChanges feed (no 'change' column)")
-    val f = new org.apache.hadoop.fs.Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = CommitLog.fs(spark, replica)
     val staging = s"$replica/.apply_staging"
     changes.write.mode("overwrite").parquet(staging)
     val feed = spark.read.parquet(staging)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
+import CommitLog.fs
 
 /** Structured Streaming surface (SURVEY §2.1 S6, §2.8 V11/V16): the
   * reference's per-frame event loop becomes micro-batch streams; its
@@ -487,7 +488,7 @@ object Streaming {
     * a torn watermark; an EMPTY marker (readable, no watermark line)
     * falls back to the epoch id, which is exact for every epoch minted
     * before the watermark existed — but a FAILED or corrupt read
-    * refuses loudly (consumedThrough), because guessing low-by-error
+    * refuses loudly ([[EpochMarker.watermark]]), because guessing low-by-error
     * would retire live batches. */
   private val EpochCommit = "_EPOCH_COMMIT"
 
@@ -801,10 +802,6 @@ object Streaming {
     * `spark.graft.compact.lockStaleMs` (default 1 h). */
   private val CompactLock = "_COMPACT_LOCK"
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private[ops] def subdirs(spark: SparkSession, path: String, prefix: String)
       : Seq[(Long, org.apache.hadoop.fs.Path)] = {
     val f = fs(spark, path)
@@ -813,6 +810,27 @@ object Streaming {
     else f.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .map(s => s.getPath.getName.stripPrefix(prefix).toLong -> s.getPath)
+  }
+
+  /** Committed batch dirs (their [[BatchCommit]] marker exists) with id
+    * above `after`, ascending — with the watermark as `after`, the live
+    * batches no epoch has folded yet. */
+  private[ops] def committedBatches(spark: SparkSession, path: String,
+      after: Long = -1L): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val f = fs(spark, path)
+    subdirs(spark, path, "batch_id=").filter { case (id, p) =>
+      id > after && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
+    }.sortBy(_._1)
+  }
+
+  /** Committed epoch dirs (their [[EpochCommit]] marker exists),
+    * ascending. */
+  private def committedEpochs(spark: SparkSession, path: String)
+      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val f = fs(spark, path)
+    subdirs(spark, path, "epoch=").filter { case (_, p) =>
+      f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit))
+    }.sortBy(_._1)
   }
 
   private def touch(f: org.apache.hadoop.fs.FileSystem,
@@ -829,7 +847,7 @@ object Streaming {
     * columns ANY file visible through this epoch may carry NATIVE
     * parquet blooms for — see [[mintedBloomCols]]. Written as a
     * `bloom_cols=` line; extra marker lines are ignored by every
-    * pre-existing parser (prefix-matched), so the marker stays
+    * pre-existing parser (key-matched), so the marker stays
     * backward-readable.
     *
     * A `mint_ms=` line records WHEN the epoch committed (epoch
@@ -839,19 +857,17 @@ object Streaming {
     * record + 1 ms — because two epochs stamped the same millisecond
     * would make timestamp resolution ambiguous (two lifecycle ops
     * legitimately land inside one ms; a wall-clock step backwards must
-    * never reorder history). `prevEpoch` is the max committed epoch
-    * the caller is superseding (−1 = none) — NOT the new id minus one:
-    * an ingest compaction's id jumps to the consumed batch counter, so
-    * id−1 frequently names an epoch that never existed. The superseded
-    * epoch's marker is always still on disk here: every caller holds
-    * the lock, and retirement runs AFTER commit. */
+    * never reorder history). `prev` is the marker of the max committed
+    * epoch the caller is superseding (None = none) — NOT the new id
+    * minus one: an ingest compaction's id jumps to the consumed batch
+    * counter, so id−1 frequently names an epoch that never existed.
+    * The caller read it strictly under the lock, and retirement runs
+    * AFTER commit. */
   private def commitEpoch(f: org.apache.hadoop.fs.FileSystem,
       epochDir: org.apache.hadoop.fs.Path, consumed: Long,
       op: String, bloomCols: Option[Set[String]],
-      prevEpoch: Long,
+      prev: Option[EpochMarker],
       schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(epochDir, s".$EpochCommit.tmp")
-    val out = f.create(tmp, true)
     val bc = bloomCols.map(cs =>
       s"\nbloom_cols=${cs.toSeq.sorted.mkString(",")}").getOrElse("")
     // `schema=` records the epoch's READER-facing schema (data columns
@@ -866,117 +882,127 @@ object Streaming {
     // metadata) instead of the footers. One json line; absent on
     // legacy/hand-made markers, where readers fall back to inference.
     val sc = schema.map(s => s"\nschema=${s.json}").getOrElse("")
-    // the superseded marker's read is STRICT here (consumedThrough's
-    // rule): a transient read failure lenient-swallowed into None
-    // would degrade the clamp to the bare wall clock, and a clock
-    // sitting behind a clamp-advanced previous mint would then record
-    // a non-increasing mint — the exact inversion the strict-increase
-    // invariant exists to prevent. None stays legitimate ONLY for a
-    // readable marker without the record (pre-record history).
-    val prevMint =
-      if (prevEpoch < 0) None
-      else mintLineOf(f, new org.apache.hadoop.fs.Path(
-        s"${epochDir.getParent}/epoch=$prevEpoch", EpochCommit))
+    // the superseded marker's mint is STRICT here: a corrupt record
+    // lenient-swallowed into None would degrade the clamp to the bare
+    // wall clock, and a clock sitting behind a clamp-advanced previous
+    // mint would then record a non-increasing mint — the exact
+    // inversion the strict-increase invariant exists to prevent. None
+    // stays legitimate ONLY for a readable marker without the record
+    // (pre-record history).
     val mint = math.max(System.currentTimeMillis(),
-      prevMint.map(_ + 1).getOrElse(Long.MinValue))
-    try out.write(s"batches=$consumed\nop=$op$bc$sc\nmint_ms=$mint"
-      .getBytes("UTF-8"))
-    finally out.close()
-    require(f.rename(tmp, new org.apache.hadoop.fs.Path(epochDir, EpochCommit)),
+      prev.flatMap(_.mintMs).map(_ + 1).getOrElse(Long.MinValue))
+    CommitLog.write(f, epochDir, EpochCommit,
+      s"batches=$consumed\nop=$op$bc$sc\nmint_ms=$mint",
       s"could not install epoch commit marker under $epochDir")
   }
 
-  /** The `mint_ms=` line of the marker at `marker`, read STRICTLY:
-    * None means the marker was READ and carries no record (pre-record
-    * history — the only legitimate absence); a failed read or a
-    * corrupt number propagates loudly, because the caller
-    * ([[commitEpoch]]'s clamp) would otherwise guess a wall-clock
-    * value that can invert the strictly-increasing mint invariant. */
-  private def mintLineOf(f: org.apache.hadoop.fs.FileSystem,
-      marker: org.apache.hadoop.fs.Path): Option[Long] = {
-    val lines =
-      try {
-        val in = f.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      } catch {
-        case e: Exception => throw new IllegalStateException(
-          s"cannot read epoch commit marker $marker - refusing to " +
-            "guess the previous mint time (a wall-clock guess can " +
-            "record a non-increasing mint_ms and corrupt TIMESTAMP " +
-            "AS OF resolution); resolve the read failure and retry", e)
-      }
-    lines.collectFirst { case l if l.startsWith("mint_ms=") =>
-      try l.stripPrefix("mint_ms=").toLong
+  /** One committed epoch's [[EpochCommit]] marker, read once: every
+    * record below comes from that single read. */
+  private[graft] final case class EpochMarker(id: Long,
+      file: org.apache.hadoop.fs.Path, lines: Seq[String]) {
+    private val kv = CommitLog.keyValues(lines)
+
+    private def long(key: String): Option[Long] = kv.get(key).map { v =>
+      try v.toLong
       catch {
         case e: NumberFormatException => throw new IllegalStateException(
-          s"corrupt epoch commit marker $marker: '$l'", e)
+          s"corrupt epoch commit marker $file: '$key=$v'", e)
       }
     }
+
+    /** The consumed-batch watermark: the highest batch id folded into
+      * this epoch. Batch dirs with id <= watermark are durably
+      * represented in the epoch (retire on sight); ids above it are
+      * live. Falls back to the epoch id itself ONLY for a marker that
+      * carries no content at all (every pre-watermark epoch consumed
+      * exactly the batches up to its own id). A marker with content but
+      * no parsable watermark line is corruption, not legacy, and
+      * refuses like an unreadable one. */
+    def watermark: Long = long("batches").getOrElse {
+      val content = lines.filter(_.nonEmpty)
+      if (content.isEmpty) id
+      else throw new IllegalStateException(
+        s"corrupt epoch commit marker $file: no watermark line in " +
+          s"${content.take(3).mkString("[", ", ", "]")}")
+    }
+
+    /** The `mint_ms=` record — when the epoch committed, for
+      * `TIMESTAMP AS OF` resolution ([[readSinkAsOf]]). None means the
+      * marker carries no record (pre-record history — the only
+      * legitimate absence); a corrupt number throws, because
+      * [[commitEpoch]]'s clamp would otherwise guess a wall-clock value
+      * that can invert the strictly-increasing mint invariant. */
+    def mintMs: Option[Long] = long("mint_ms")
+
+    /** The `op=` tag (`compact` / `delete` / `update` / `upsert` /
+      * `apply` / `retire` / `restore`). None for markers minted before
+      * the tag existed, which [[Views.incrementalSound]] treats as
+      * unprovable, never as a compaction. */
+    def op: Option[String] = kv.get("op")
+
+    /** The `bloom_cols=` record: Some(columns) = every file visible
+      * through this epoch was written by an epoch whose active
+      * `spark.graft.bloom.autoIndexColumns` sat inside this set
+      * (Some(empty) = NO file can carry a native bloom — the receipt
+      * that lets [[SinkStats.indexSinkBloom]] skip its footer
+      * classification); None = minted before the record existed, so
+      * native coverage is unknown and the index must classify per
+      * file. Perf only: both bloom index paths serve exact answers. */
+    def bloomCols: Option[Set[String]] = kv.get("bloom_cols").map(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+    /** The `schema=` record — the reader-facing schema [[commitEpoch]]
+      * recorded at mint, sparing every frame construction over the
+      * epoch its distributed mergeSchema footer sweep. None = pre-record
+      * or unparsable: perf-only, readers fall back to inference, never
+      * to a wrong answer. */
+    def schema: Option[org.apache.spark.sql.types.StructType] =
+      CommitLog.lenient(kv.get("schema").map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]))
   }
 
-  /** The `mint_ms=` record of committed epoch `epochId`'s marker —
-    * when it committed, for `TIMESTAMP AS OF` resolution
-    * ([[readSinkAsOf]]). None for markers minted before the record
-    * existed or unreadable mid-race; the resolver refuses rather than
-    * guesses there (a guessed time would silently serve the wrong
-    * snapshot), while every correctness decision elsewhere keys on
-    * the watermark line, never on this. The COMMIT-side clamp uses
-    * the strict [[mintLineOf]] instead — a lenient None there would
-    * degrade to the bare wall clock. */
+  /** Committed epoch `epochId`'s marker (None for −1: no epoch yet),
+    * read STRICTLY. A failed read (transient I/O, corrupt content)
+    * must fail LOUDLY, never fall back: after a delete/upsert epoch the
+    * epoch id exceeds the true watermark, so a fallback taken on an I/O
+    * hiccup would let recovery retire live batches that no epoch holds
+    * — silent data loss. The marker is installed by temp-write +
+    * atomic rename ([[commitEpoch]]), so a committed epoch's marker is
+    * never legitimately unreadable. Monitoring-only reads wrap this in
+    * [[CommitLog.lenient]]. */
+  private[graft] def epochMarker(f: org.apache.hadoop.fs.FileSystem,
+      path: String, epochId: Long): Option[EpochMarker] =
+    if (epochId < 0) None
+    else {
+      val file = new org.apache.hadoop.fs.Path(
+        s"$path/epoch=$epochId", EpochCommit)
+      val lines =
+        try CommitLog.readLines(f, file)
+        catch {
+          case e: Exception => throw new IllegalStateException(
+            s"cannot read epoch commit marker $file - refusing to " +
+              "guess the consumed-batch watermark (a wrong guess " +
+              "retires live batches); resolve the read failure and " +
+              "retry", e)
+        }
+      Some(EpochMarker(epochId, file, lines))
+    }
+
+  /** The `mint_ms=` record of committed epoch `epochId`, lenient: None
+    * for pre-record or unreadable-mid-race markers. The resolver
+    * refuses rather than guesses there (a guessed time would silently
+    * serve the wrong snapshot). */
   private[graft] def epochMintMsOf(f: org.apache.hadoop.fs.FileSystem,
       path: String, epochId: Long): Option[Long] =
-    try mintLineOf(f, new org.apache.hadoop.fs.Path(
-      s"$path/epoch=$epochId", EpochCommit))
-    catch { case _: Exception => None }
+    CommitLog.lenient(epochMarker(f, path, epochId).flatMap(_.mintMs))
 
-  /** The `bloom_cols=` record of committed epoch `epochId`'s marker:
-    * Some(columns) = every file visible through this epoch was written
-    * by an epoch whose active `spark.graft.bloom.autoIndexColumns` sat
-    * inside this set (Some(empty) = NO file can carry a native bloom —
-    * the receipt that lets [[SinkStats.indexSinkBloom]] skip its
-    * footer-classification pass entirely); None = minted before the
-    * record existed, so native coverage is unknown and the index must
-    * classify per file. Monitoring/perf only: a wrong answer here
-    * costs a footer pass or a per-file scan, never correctness — both
-    * bloom index paths serve exact answers. */
+  /** The `bloom_cols=` record of committed epoch `epochId`, lenient
+    * (see [[EpochMarker.bloomCols]]): a wrong None costs a footer pass
+    * or a per-file scan, never correctness. */
   private[graft] def epochBloomColsOf(f: org.apache.hadoop.fs.FileSystem,
       path: String, epochId: Long): Option[Set[String]] =
-    try {
-      val in = f.open(new org.apache.hadoop.fs.Path(
-        s"$path/epoch=$epochId", EpochCommit))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.collectFirst { case l if l.startsWith("bloom_cols=") =>
-        l.stripPrefix("bloom_cols=").split(",")
-          .map(_.trim).filter(_.nonEmpty).toSet
-      }
-    } catch { case _: Exception => None }
-
-  /** The `schema=` record of committed epoch `epochId`'s marker — the
-    * reader-facing schema [[commitEpoch]] recorded at mint, sparing
-    * every frame construction over the epoch its distributed
-    * mergeSchema footer sweep. None = pre-record marker or unreadable
-    * — perf-only either way: readers fall back to inference, never to
-    * a wrong answer (the record is written from the very frame the
-    * epoch write executed, unioned to the superseded epoch's width so
-    * moved-in days stay covered). */
-  private[ops] def epochSchemaOf(f: org.apache.hadoop.fs.FileSystem,
-      path: String, epochId: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val in = f.open(new org.apache.hadoop.fs.Path(
-        s"$path/epoch=$epochId", EpochCommit))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.collectFirst { case l if l.startsWith("schema=") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-    } catch { case _: Exception => None }
+    CommitLog.lenient(epochMarker(f, path, epochId).flatMap(_.bloomCols))
 
   /** The schema a fresh data-bearing epoch records: the written
     * frame's columns widened by-name to the full previous-epoch width
@@ -1008,90 +1034,17 @@ object Streaming {
     * there is unknowable and the index side must keep classifying per
     * file. */
   private def mintedBloomCols(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, path: String,
-      prevEpoch: Long): Option[Set[String]] = {
+      prev: Option[EpochMarker]): Option[Set[String]] = {
     val own = bloomAutoCols(spark).toSet
-    if (prevEpoch < 0) Some(own)
-    else epochBloomColsOf(f, path, prevEpoch).map(_ ++ own)
+    prev.fold(Option(own))(_.bloomCols.map(_ ++ own))
   }
-
-  /** The consumed-batch watermark of committed epoch `epochId`: the
-    * highest batch id folded into it. Batch dirs with id <= watermark
-    * are durably represented in the epoch (retire on sight); ids above
-    * it are live. Falls back to the epoch id itself ONLY for markers
-    * that read successfully but carry no watermark line (every
-    * pre-watermark epoch consumed exactly the batches up to its own
-    * id). −1 when no epoch exists.
-    *
-    * A FAILED read (transient I/O, corrupt content) must fail LOUDLY,
-    * never fall back: after a delete/upsert epoch the epoch id exceeds
-    * the true watermark, so a fallback taken on an I/O hiccup would
-    * let recovery retire live batches that no epoch holds — silent
-    * data loss. The marker is installed by temp-write + atomic rename
-    * (commitEpoch), so a committed epoch's marker is never legitimately
-    * unreadable; an unreadable one is an infrastructure fault the
-    * caller must surface, not paper over. */
-  private def consumedThrough(f: org.apache.hadoop.fs.FileSystem,
-      path: String, epochId: Long): Long =
-    if (epochId < 0) -1L
-    else {
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$path/epoch=$epochId", EpochCommit)
-      val lines =
-        try {
-          val in = f.open(marker)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        } catch {
-          case e: Exception => throw new IllegalStateException(
-            s"cannot read epoch commit marker $marker - refusing to " +
-              "guess the consumed-batch watermark (a wrong guess " +
-              "retires live batches); resolve the read failure and " +
-              "retry", e)
-        }
-      val content = lines.filter(_.nonEmpty)
-      content.collectFirst { case l if l.startsWith("batches=") =>
-        try l.stripPrefix("batches=").toLong
-        catch {
-          case e: NumberFormatException => throw new IllegalStateException(
-            s"corrupt epoch commit marker $marker: '$l'", e)
-        }
-      }.getOrElse {
-        // legacy EMPTY marker: watermark = epoch id (exact for every
-        // epoch minted before the watermark existed). A marker with
-        // content but no parsable watermark line is corruption, not
-        // legacy — refuse like the unreadable case.
-        if (content.isEmpty) epochId
-        else throw new IllegalStateException(
-          s"corrupt epoch commit marker $marker: no watermark line in " +
-            s"${content.take(3).mkString("[", ", ", "]")}")
-      }
-    }
-
-  /** The `op=` tag of a committed epoch's marker (`compact` /
-    * `delete` / `update` / `upsert` / `apply` / `retire`) — None for markers minted before
-    * the tag existed or unreadable mid-race. Monitoring-only
-    * ([[describeSink]]): every correctness decision keys on the
-    * watermark line, never on this. */
-  private def commitOpOf(f: org.apache.hadoop.fs.FileSystem,
-      path: String, epochId: Long): Option[String] =
-    try {
-      val in = f.open(new org.apache.hadoop.fs.Path(
-        s"$path/epoch=$epochId", EpochCommit))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.collectFirst { case l if l.startsWith("op=") =>
-        l.stripPrefix("op=")
-      }
-    } catch { case _: Exception => None }
 
   /** Watermark read for UNLOCKED callers (readers, pollers, policy
     * inputs): a concurrent maintenance op may retire the listed max
     * epoch between `maxEpoch` and the marker open — a benign race, and
     * the post-race state is consistent, so retry once; a second
     * failure (or any non-FileNotFound cause) is real corruption and
-    * propagates. LOCKED maintenance bodies call [[consumedThrough]]
+    * propagates. LOCKED maintenance bodies read [[epochMarker]]
     * directly: under the lock the epoch cannot vanish, so every
     * failure there is loud by design. */
   private def racedWatermark(spark: SparkSession, path: String,
@@ -1101,7 +1054,8 @@ object Streaming {
       case e if e.getCause != null => fnf(e.getCause)
       case _ => false
     }
-    def once() = consumedThrough(f, path, maxEpoch(spark, path))
+    def once() = epochMarker(f, path, maxEpoch(spark, path))
+      .fold(-1L)(_.watermark)
     try once() catch { case e: IllegalStateException if fnf(e) => once() }
   }
 
@@ -1111,16 +1065,10 @@ object Streaming {
 
   private def readWriterLock(f: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[(String, Long, String)] =
-    try {
-      val in = f.open(lock)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val m = lines.filter(_.contains("=")).map { l =>
-        val Array(k, v) = l.split("=", 2); k -> v
-      }.toMap
+    CommitLog.lenient { // absent or torn mid-write
+      val m = CommitLog.keyValues(CommitLog.readLines(f, lock))
       Some((m("id"), m("fence").toLong, m("token")))
-    } catch { case _: Exception => None } // absent or torn mid-write
+    }
 
   /** Acquire (or take over) the sink's writer lease as `writerId`;
     * returns the FENCE for this acquisition, to be passed to every
@@ -1271,21 +1219,15 @@ object Streaming {
         true
       } catch { case _: java.io.IOException => false }
     def holdsOwnToken(): Boolean =
-      try {
-        val in = f.open(lock)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString == token
-        finally in.close()
-      } catch { case _: java.io.IOException => false }
+      try CommitLog.read(f, lock) == token
+      catch { case _: java.io.IOException => false }
     if (!tryAcquire()) {
       // read the blocker's token BEFORE judging staleness: the steal
       // below is IDENTITY-CHECKED against this value, so it can only
       // ever displace the exact lock instance judged stale
       val staleTok: Option[String] =
-        try {
-          val in = f.open(lock)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          finally in.close()
-        } catch { case _: java.io.IOException => None } // vanished/torn
+        try Some(CommitLog.read(f, lock))
+        catch { case _: java.io.IOException => None } // vanished/torn
       val age =
         try System.currentTimeMillis() -
           f.getFileStatus(lock).getModificationTime
@@ -1316,11 +1258,8 @@ object Streaming {
         catch { case _: java.io.IOException => false }
       if (renamed) {
         val tombTok: Option[String] =
-          try {
-            val in = f.open(tomb)
-            try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-            finally in.close()
-          } catch { case _: java.io.IOException => None }
+          try Some(CommitLog.read(f, tomb))
+          catch { case _: java.io.IOException => None }
         if (staleTok.isDefined && tombTok == staleTok)
           f.delete(tomb, false) // confirmed: retired the stale instance
         else {
@@ -1361,13 +1300,8 @@ object Streaming {
     * directory counts only once its [[EpochCommit]] marker exists, so
     * a compaction that died mid-write or mid-merge is invisible to
     * readers until recovery completes or discards it. */
-  private def maxEpoch(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, path)
-    val committed = subdirs(spark, path, "epoch=").collect {
-      case (id, p) if f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)) => id
-    }
-    if (committed.isEmpty) -1L else committed.max
-  }
+  private def maxEpoch(spark: SparkSession, path: String): Long =
+    committedEpochs(spark, path).lastOption.fold(-1L)(_._1)
 
   /** Write the merge plan atomically: content to a temp name, then
     * rename. A torn plan must be impossible — recovery trusts the plan
@@ -1375,26 +1309,18 @@ object Streaming {
     * list would commit an epoch missing the unlisted days. */
   private def writePlan(f: org.apache.hadoop.fs.FileSystem,
       epochDir: org.apache.hadoop.fs.Path, from: Long,
-      days: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(epochDir, s".$MergePlan.tmp")
-    val out = f.create(tmp, true)
-    try out.write((s"from=$from" +: days).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // Hadoop rename reports failure as `false`, not an exception — and
+      days: Seq[String]): Unit =
     // a silently missing plan would let the commit marker land with the
     // owed-day list gone (recovery would then retire the source epoch
-    // and lose those days). Fail HERE, before the commit, where the
-    // uncommitted attempt is still safely discardable.
-    require(f.rename(tmp, new org.apache.hadoop.fs.Path(epochDir, MergePlan)),
+    // and lose those days): a failed install fails HERE, before the
+    // commit, where the uncommitted attempt is still safely discardable
+    CommitLog.write(f, epochDir, MergePlan,
+      (s"from=$from" +: days).mkString("\n"),
       s"could not install merge plan under $epochDir")
-  }
 
   private def readPlan(f: org.apache.hadoop.fs.FileSystem,
       plan: org.apache.hadoop.fs.Path): (Long, Seq[String]) = {
-    val in = f.open(plan)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
+    val lines = CommitLog.readLines(f, plan)
     (lines.head.stripPrefix("from=").toLong, lines.tail.filter(_.nonEmpty))
   }
 
@@ -1522,10 +1448,7 @@ object Streaming {
     val p = new org.apache.hadoop.fs.Path(path, PendingAlter)
     if (!f.exists(p)) (Map.empty, Seq.empty)
     else {
-      val in = f.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
+      val lines = CommitLog.readLines(f, p)
       val renames = lines.collect { case l if l.startsWith("rename ") =>
         val Array(_, o, n) = l.split(" "); o -> n
       }.toMap
@@ -1623,13 +1546,8 @@ object Streaming {
         s"rename $o $n"
       } ++ drops.sorted.map(c => s"drop $c")
       fence()
-      val tmp = new org.apache.hadoop.fs.Path(path, s".$PendingAlter.tmp")
-      val out = f.create(tmp, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      require(f.rename(tmp,
-        new org.apache.hadoop.fs.Path(path, PendingAlter)),
-        s"could not install alter marker under $path")
+      CommitLog.write(f, new org.apache.hadoop.fs.Path(path), PendingAlter,
+        lines.mkString("\n"), s"could not install alter marker under $path")
     }
 
   // ------------------------------------------------ CHECK constraints
@@ -1663,11 +1581,7 @@ object Streaming {
     val marker = new org.apache.hadoop.fs.Path(path, ChecksMarker)
     if (!f.exists(marker)) Seq.empty
     else {
-      val in = f.open(marker)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.nonEmpty).map { l =>
+      CommitLog.readLines(f, marker).filter(_.nonEmpty).map { l =>
         val i = l.indexOf('=')
         require(i > 0, s"corrupt checks marker $marker: '$l'")
         (l.substring(0, i), l.substring(i + 1))
@@ -1676,42 +1590,19 @@ object Streaming {
   }
 
   /** Install the checks marker atomically (temp + rename); an empty
-    * list removes it. Caller holds [[CompactLock]]. */
+    * list removes it. Caller holds [[CompactLock]]. Replacing the
+    * marker must not fail OPEN: a moment with NO marker would let every
+    * later fold silently admit violating rows — the opposite of the
+    * feature's fail-safe rule — hence [[CommitLog.write]]'s atomic
+    * replace. */
   private def writeChecksMarker(f: org.apache.hadoop.fs.FileSystem,
       path: String, checks: Seq[(String, String)]): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(path, ChecksMarker)
-    if (checks.isEmpty) { f.delete(marker, false); return }
-    val tmp = new org.apache.hadoop.fs.Path(path, s".$ChecksMarker.tmp")
-    val out = f.create(tmp, true)
-    try out.write(checks.map { case (n, s) => s"$n=$s" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // Replacing the marker must not fail OPEN: a crash between a
-    // delete and a rename would leave NO marker, and every later fold
-    // would silently admit violating rows — the opposite of the
-    // feature's fail-safe rule. On a local filesystem the replace is
-    // one ATOMIC move (either the old or the new check set is always
-    // on disk); elsewhere fall back to delete+rename, whose window is
-    // under [[CompactLock]] and crash-exposed only on filesystems
-    // without atomic replace (documented, not silent: the tmp file
-    // survives such a crash as evidence).
-    def local(fs: org.apache.hadoop.fs.FileSystem): Boolean = fs match {
-      case _: org.apache.hadoop.fs.LocalFileSystem => true
-      case _: org.apache.hadoop.fs.RawLocalFileSystem => true
-      case _ => false
-    }
-    if (local(f)) {
-      def nio(p: org.apache.hadoop.fs.Path) = java.nio.file.Path.of(
-        org.apache.hadoop.fs.Path.getPathWithoutSchemeAndAuthority(p)
-          .toString)
-      java.nio.file.Files.move(nio(tmp), nio(marker),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      f.delete(marker, false)
-      require(f.rename(tmp, marker),
-        s"could not install checks marker under $path")
-    }
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (checks.isEmpty)
+      f.delete(new org.apache.hadoop.fs.Path(root, ChecksMarker), false)
+    else CommitLog.write(f, root, ChecksMarker,
+      checks.map { case (n, s) => s"$n=$s" }.mkString("\n"),
+      s"could not install checks marker under $path", atomicReplace = true)
   }
 
   /** Declare CHECK constraint `name` (`sql`, a boolean SQL predicate
@@ -2036,7 +1927,7 @@ object Streaming {
     * group's basePath, so day-predicate pruning prunes file listings
     * exactly as on a fully-physical epoch. */
   /** One frame over resolved day directories. With a recorded epoch
-    * schema ([[epochSchemaOf]]) the read is declared, not inferred —
+    * schema ([[EpochMarker.schema]]) the read is declared, not inferred —
     * no footer job at construction; files missing a recorded column
     * (additive drift in moved days) surface it as NULL, exactly what
     * the mergeSchema fallback produced. */
@@ -2066,7 +1957,8 @@ object Streaming {
     // recorded schema (r18): construction is declared, not inferred —
     // the mergeSchema footer sweep ran as a 0.2-0.5 s job per frame
     // here; legacy markers fall back to it
-    val recorded = epochSchemaOf(f, path, epochId)
+    val recorded =
+      CommitLog.lenient(epochMarker(f, path, epochId).flatMap(_.schema))
     if (!f.exists(plan)) {
       val hasDays = f
         .listStatus(new org.apache.hadoop.fs.Path(eDir)).toSeq
@@ -2116,9 +2008,7 @@ object Streaming {
     * Returns the retired epoch ids, oldest first. */
   private def retireEpochsLocked(spark: SparkSession, path: String,
       f: org.apache.hadoop.fs.FileSystem): Seq[Long] = {
-    val committed = subdirs(spark, path, "epoch=").filter { case (_, p) =>
-      f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit))
-    }.sortBy(_._1)
+    val committed = committedEpochs(spark, path)
     val keep = keepEpochs(spark)
     if (committed.size <= keep) Seq.empty
     else {
@@ -2405,7 +2295,8 @@ object Streaming {
     // consumed-batch WATERMARK, not its id: a delete-minted epoch id
     // runs ahead of the batch counter, and comparing ids would retire
     // the next batches unconsumed.
-    val wm = consumedThrough(f, path, before)
+    val prev = epochMarker(f, path, before)
+    val wm = prev.fold(-1L)(_.watermark)
     fence() // about to retire subsumed epochs/batches: last exit
     retireEpochsLocked(spark, path, f)
     settleChangeRefs(spark, path, f, wm)
@@ -2428,7 +2319,7 @@ object Streaming {
         return before
       }
       val src = applyAlter(
-        readDays(spark, prevDays, epochSchemaOf(f, path, before)),
+        readDays(spark, prevDays, prev.flatMap(_.schema)),
         alterRen, alterDrop)
       val epoch = before + 1
       val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
@@ -2455,8 +2346,8 @@ object Streaming {
       carryQuarantine(spark, f, path, before, epochDir, alterRen, alterDrop)
       fence()
       // all-days rewrite: the written frame IS the epoch's full width
-      commitEpoch(f, epochDir, consumedThrough(f, path, before), "compact",
-        mintedBloomCols(spark, f, path, before), before,
+      commitEpoch(f, epochDir, wm, "compact",
+        mintedBloomCols(spark, prev), prev,
         Some(mintSchema(src.schema, None)))
       f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false)
       retireEpochsLocked(spark, path, f)
@@ -2506,7 +2397,7 @@ object Streaming {
     // previous epoch forces the all-days rewrite below
     val batchSchemas = withData.map(d =>
       alterOf(spark.read.parquet(d._2.toString)).schema)
-    val prevRecorded = epochSchemaOf(f, path, before)
+    val prevRecorded = prev.flatMap(_.schema)
     val prevSchema: Option[org.apache.spark.sql.types.StructType] =
       if (prevDays.isEmpty) None
       else Some(org.apache.spark.sql.types.StructType(
@@ -2632,7 +2523,7 @@ object Streaming {
     // in moved days writes a merged frame NARROWER than the epoch it
     // mints (the moved days still carry those columns)
     commitEpoch(f, epochDir, consumed, "compact",
-      mintedBloomCols(spark, f, path, before), before,
+      mintedBloomCols(spark, prev), prev,
       Some(mintSchema(merged.schema,
         Some(org.apache.spark.sql.types.StructType(target)))))
     // the alter is now physical: clear the marker. A crash between the
@@ -2901,8 +2792,8 @@ object Streaming {
       writeBatchIdempotent(ev.filter(pmod(col("event_id"), lit(3)) === 2),
         out, 2L)
     }
-    val cursor = consumedThrough(fs(spark, sink), sink,
-      maxEpoch(spark, sink))
+    val cursor = epochMarker(fs(spark, sink), sink, maxEpoch(spark, sink))
+      .fold(-1L)(_.watermark)
     readSinkSince(spark, sink, cursor)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_events"),
@@ -3370,10 +3261,7 @@ object Streaming {
     atEpoch.foreach { id =>
       require(f.exists(new org.apache.hadoop.fs.Path(
         s"$path/epoch=$id", EpochCommit)), {
-        val retained = subdirs(spark, path, "epoch=").collect {
-          case (e, p)
-            if f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)) => e
-        }.sorted
+        val retained = committedEpochs(spark, path).map(_._1)
         s"epoch $id is not a committed retained epoch of $path " +
           s"(retained: ${retained.mkString("[", ", ", "]")}) - history " +
           "past the grace depth is vacuumed; raise " +
@@ -3419,10 +3307,7 @@ object Streaming {
     // anyway (the documented reader-overlap contract), but the
     // watermark read itself must not die on the benign window.
     val wm = racedWatermark(spark, path, f)
-    val liveDirs = subdirs(spark, path, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
+    val liveDirs = committedBatches(spark, path, wm)
       .sortBy(_._1).map(_._2.toString)
     val parts = (epochParts ++
       liveDirs.map(d => withDay(spark.read.parquet(d)))).map(altered)
@@ -3458,10 +3343,7 @@ object Streaming {
   def readSinkAsOf(spark: SparkSession, path: String, tsMillis: Long,
       tsCol: String = "ts"): DataFrame = {
     val f = fs(spark, path)
-    val committed = subdirs(spark, path, "epoch=").collect {
-      case (e, p)
-        if f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)) => e
-    }.sorted
+    val committed = committedEpochs(spark, path).map(_._1)
     require(committed.nonEmpty,
       s"TIMESTAMP AS OF over $path: no committed epoch - nothing to " +
         "travel to")
@@ -3509,11 +3391,7 @@ object Streaming {
   def sinkWatermark(spark: SparkSession, path: String): Long = {
     val f = fs(spark, path)
     val wm = racedWatermark(spark, path, f)
-    subdirs(spark, path, "batch_id=")
-      .filter { case (_, p) =>
-        f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
-      .map(_._1).foldLeft(wm)(math.max)
+    committedBatches(spark, path).map(_._1).foldLeft(wm)(math.max)
   }
 
   /** Incremental consumption: the rows of exactly the COMMITTED batch
@@ -3549,10 +3427,7 @@ object Streaming {
         s"cursor $cursor predates the compaction horizon (those batches " +
         "were folded into the epoch and their boundaries retired) — " +
         "re-read the full sink via readSink and restart the cursor")
-    val delta = subdirs(spark, path, "batch_id=")
-      .filter { case (id, p) =>
-        id > cursor && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
+    val delta = committedBatches(spark, path, cursor)
       .sortBy(_._1).map(_._2.toString)
     def withDay(df: DataFrame): DataFrame =
       if (df.columns.contains(tsCol))
@@ -3564,9 +3439,8 @@ object Streaming {
     // poll-before-first-commit case as a distinct, actionable error
     // instead of readSink's generic empty-sink failure.
     if (delta.isEmpty) {
-      require(wm >= 0 || subdirs(spark, path, "batch_id=").exists {
-        case (_, p) => f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }, s"readSinkSince($cursor) on $path: the sink holds no committed " +
+      require(wm >= 0 || committedBatches(spark, path).nonEmpty,
+        s"readSinkSince($cursor) on $path: the sink holds no committed " +
         "data yet, so there is no schema to serve an empty delta with - " +
         "poll again after the producer's first commit")
       readSink(spark, path, tsCol).limit(0)
@@ -3615,11 +3489,9 @@ object Streaming {
         def expired(name: String): Boolean =
           name != NullDayDir &&
             java.sql.Date.valueOf(name.stripPrefix("day=")).before(olderThan)
-        val wm = consumedThrough(f, path, cut)
-        val liveCommitted = subdirs(spark, path, "batch_id=")
-          .filter { case (id, p) =>
-            id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-          }
+        val prev = epochMarker(f, path, cut)
+        val wm = prev.fold(-1L)(_.watermark)
+        val liveCommitted = committedBatches(spark, path, wm)
         require(liveCommitted.isEmpty,
           s"retention over $path requires a quiesced compaction first: " +
             s"${liveCommitted.size} consumable live batch dir(s) would " +
@@ -3660,10 +3532,10 @@ object Streaming {
             carryQuarantine(spark, f, path, cut, epochDir)
             fence() // the commit makes the retention visible: last exit
             commitEpoch(f, epochDir, wm, "retire", // no batches consumed
-              mintedBloomCols(spark, f, path, cut), cut,
+              mintedBloomCols(spark, prev), prev,
               // by-reference mint: content is the survivors of the
               // superseded epoch — its recorded schema carries forward
-              epochSchemaOf(f, path, cut))
+              prev.flatMap(_.schema))
             retireEpochsLocked(spark, path, f)
             autoIndexStats(spark, path)
             victims
@@ -3905,11 +3777,9 @@ object Streaming {
         s"compactSink to normalize it first (the $op's per-day " +
         "rewrite must see one physical schema)")
     val before = maxEpoch(spark, path)
-    val wm = consumedThrough(f, path, before)
-    val liveCommitted = subdirs(spark, path, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
+    val prev = epochMarker(f, path, before)
+    val wm = prev.fold(-1L)(_.watermark)
+    val liveCommitted = committedBatches(spark, path, wm)
     require(liveCommitted.isEmpty,
       s"row-level $op over $path requires a quiesced compaction " +
         s"first: ${liveCommitted.size} consumable live batch dir(s) may " +
@@ -3940,8 +3810,7 @@ object Streaming {
     // CDC manifest reads the same days a third time — MEMORY_AND_DISK
     // bounds it to the affected days (the working set every row-level
     // rewrite materializes); unpersisted in the finally below.
-    val affectedFrame = readDays(spark, affectedDirs,
-      epochSchemaOf(f, path, before))
+    val affectedFrame = readDays(spark, affectedDirs, prev.flatMap(_.schema))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     // rewrite = what the affected days become: the survivors
@@ -3980,7 +3849,7 @@ object Streaming {
     carryQuarantine(spark, f, path, before, epochDir)
     fence() // the commit makes the rewrite visible: last exit
     commitEpoch(f, epochDir, wm, op, // no batches consumed
-      mintedBloomCols(spark, f, path, before), before,
+      mintedBloomCols(spark, prev), prev,
       // widened to the FULL epoch frame: an affected-days subset can
       // be narrower than the moved days' drift columns
       Some(mintSchema(kept.schema, Some(epochFrame.schema))))
@@ -4068,10 +3937,7 @@ object Streaming {
       // have had days renamed out of it — restoring from it would mint
       // a silently truncated snapshot and then DELETE the moved days'
       // last copies at the retire step
-      val committed = subdirs(spark, path, "epoch=").collect {
-        case (e, p)
-          if f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)) => e
-      }.sorted
+      val committed = committedEpochs(spark, path).map(_._1)
       val depthRetained = committed.takeRight(keepEpochs(spark))
       require(depthRetained.contains(toEpoch),
         s"restoreSink over $path: epoch $toEpoch is not a committed " +
@@ -4082,11 +3948,9 @@ object Streaming {
           "you may want to undo")
       if (toEpoch == before) before // restoring to the present: no-op
       else {
-        val wm = consumedThrough(f, path, before)
-        val liveCommitted = subdirs(spark, path, "batch_id=")
-          .filter { case (id, p) =>
-            id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-          }
+        val prev = epochMarker(f, path, before)
+        val wm = prev.fold(-1L)(_.watermark)
+        val liveCommitted = committedBatches(spark, path, wm)
         require(liveCommitted.isEmpty,
           s"restoreSink over $path requires a quiesced compaction " +
             s"first: ${liveCommitted.size} consumable live batch dir(s) " +
@@ -4145,10 +4009,11 @@ object Streaming {
         // forward from the epoch it supersedes, like every other mint
         carryQuarantine(spark, f, path, before, epochDir)
         fence() // the commit makes the restore visible: last exit
+        // the restored files ARE the snapshot's: its bloom and schema
+        // records carry (lenient: both are perf-only)
+        val target = CommitLog.lenient(epochMarker(f, path, toEpoch))
         commitEpoch(f, epochDir, wm, "restore",
-          epochBloomColsOf(f, path, toEpoch), before,
-          // the restored files ARE the snapshot's: its schema carries
-          epochSchemaOf(f, path, toEpoch))
+          target.flatMap(_.bloomCols), prev, target.flatMap(_.schema))
         retireEpochsLocked(spark, path, f)
         autoIndexStats(spark, path)
         epoch
@@ -4297,11 +4162,9 @@ object Streaming {
         "compactSink to normalize it first (the merge must see one " +
         "physical schema)")
     val before = maxEpoch(spark, path)
-    val wm = consumedThrough(f, path, before)
-    val liveCommitted = subdirs(spark, path, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
+    val prev = epochMarker(f, path, before)
+    val wm = prev.fold(-1L)(_.watermark)
+    val liveCommitted = committedBatches(spark, path, wm)
     require(liveCommitted.isEmpty,
       s"$opName over $path requires a quiesced compaction first: " +
         s"${liveCommitted.size} consumable live batch dir(s) may hold " +
@@ -4404,8 +4267,7 @@ object Streaming {
       // declared at the previous epoch's recorded schema: no footer
       // inference, and drift columns living only in unaffected days
       // stay in-width (r18)
-      else Some(readDays(spark, affectedDirs,
-        epochSchemaOf(f, path, before))
+      else Some(readDays(spark, affectedDirs, prev.flatMap(_.schema))
         // PERSISTED across its consumers (r18): the survivor
         // anti-join feeds the range-partitioner's SAMPLE pass and the
         // epoch write, and the manifest's olds/delPre joins read the
@@ -4506,7 +4368,7 @@ object Streaming {
     fence() // the commit makes the merge visible: last exit
     commitEpoch(f, epochDir, wm, // no batches consumed
       if (delKeys.isDefined) "apply" else "upsert",
-      mintedBloomCols(spark, f, path, before), before,
+      mintedBloomCols(spark, prev), prev,
       // widened to the FULL previous-epoch frame: the affected-days
       // subset can be narrower than the moved days' drift columns
       Some(mintSchema(epochRows.schema, prevFrame.map(_.schema))))
@@ -4559,7 +4421,8 @@ object Streaming {
     import spark.implicits._
     val f = fs(spark, path)
     val cut = maxEpoch(spark, path)
-    val wm = consumedThrough(f, path, cut)
+    val cutMarker = epochMarker(f, path, cut)
+    val wm = cutMarker.fold(-1L)(_.watermark)
     val batches = subdirs(spark, path, "batch_id=")
     val (committed, inflight) = batches.partition { case (_, p) =>
       f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
@@ -4599,12 +4462,9 @@ object Streaming {
     // snapshot-retention visibility: how deep the time-travel history
     // actually is right now, and which lifecycle op minted the current
     // epoch — the counters an operator reads instead of listing dirs
-    val committedEpochs = subdirs(spark, path, "epoch=").collect {
-      case (id, p)
-        if f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)) => id
-    }.sorted
-    val oldestEpoch = committedEpochs.headOption.getOrElse(-1L)
-    val lastOp = if (cut < 0) null else commitOpOf(f, path, cut).orNull
+    val epochIds = committedEpochs(spark, path).map(_._1)
+    val oldestEpoch = epochIds.headOption.getOrElse(-1L)
+    val lastOp = cutMarker.flatMap(_.op).orNull
     // a pending rename/drop is operator-visible state: readers serve
     // the logical schema, mutations refuse, the next compaction pays
     // an all-days rewrite - the monitor should see it without knowing
@@ -4619,13 +4479,12 @@ object Streaming {
     // when the current epoch committed (the TIMESTAMP-AS-OF anchor an
     // operator correlates with feed timelines); null for pre-record
     // markers, like last_op for pre-tag ones
-    val lastMint: java.lang.Long =
-      if (cut < 0) null
-      else epochMintMsOf(f, path, cut).map(java.lang.Long.valueOf).orNull
+    val lastMint: java.lang.Long = CommitLog.lenient(cutMarker.flatMap(_.mintMs))
+      .map(java.lang.Long.valueOf).orNull
     Seq((cut, wm, live.size.toLong, liveBytes, inflight.size.toLong,
       dayDirs.size.toLong, epochBytes, dayDirs.contains(NullDayDir),
       pendingMoves, compactorLocked, writerId,
-      committedEpochs.size.toLong, oldestEpoch, lastOp, lastMint,
+      epochIds.size.toLong, oldestEpoch, lastOp, lastMint,
       pendingAlter))
       .toDF("epoch", "watermark", "live_batches", "live_bytes",
         "inflight_batches", "days", "epoch_bytes", "has_null_day",
@@ -4678,10 +4537,7 @@ object Streaming {
       tsCol: String = "ts"): Seq[String] = {
     val f = fs(spark, path)
     val wm = racedWatermark(spark, path, f)
-    val live = subdirs(spark, path, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-      }
+    val live = committedBatches(spark, path, wm)
     // unlocked policy input, racing a concurrent compactor's batch
     // retirement: a dir that vanishes between list and stat simply
     // contributes 0 to the backlog (the other actor is already doing
@@ -4700,9 +4556,7 @@ object Streaming {
         require(n > 0, s"retainDays must be positive, got $n")
         val cut = maxEpoch(spark, path)
         val wmNow = racedWatermark(spark, path, f) // unlocked policy read
-        val backlog = subdirs(spark, path, "batch_id=").exists { case (id, p) =>
-          id > wmNow && f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
-        }
+        val backlog = committedBatches(spark, path, wmNow).nonEmpty
         val days =
           if (cut < 0) Seq.empty
           else try f
@@ -4824,9 +4678,7 @@ object Streaming {
       import spark.implicits._
       val f = fs(spark, path)
       val cut = maxEpoch(spark, path)
-      val committed = subdirs(spark, path, "epoch=").filter { case (_, p) =>
-        f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit))
-      }.sortBy(_._1)
+      val committed = committedEpochs(spark, path)
       committed.map { case (id, p) =>
         val phys = f.listStatus(p).toSeq.count(s =>
           s.isDirectory && s.getPath.getName.startsWith("day="))
@@ -4836,8 +4688,8 @@ object Streaming {
           else readPlan(f, plan)._2
             .count(d => !f.exists(new org.apache.hadoop.fs.Path(p, d))).toLong
         }
-        (id, commitOpOf(f, path, id).orNull,
-          consumedThrough(f, path, id), phys.toLong, refd,
+        val marker = epochMarker(f, path, id).get
+        (id, marker.op.orNull, marker.watermark, phys.toLong, refd,
           f.getContentSummary(p).getLength, id == cut)
       }.toDF("epoch", "op", "watermark", "physical_days",
         "referenced_days", "bytes", "is_current")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
+import CommitLog.fs
 
 /** One keyed arrival of the streaming near-dup admission op (q129):
   * the doc's md5-portable 8-min signature plus its band-0 bucket key —
@@ -1747,67 +1748,20 @@ object TextOps {
       (bytes + targetBytes - 1) / targetBytes)).toInt
   }
 
-  private def lexFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val LexMarker = "_GEN_COMMIT_"
 
-  /** Every generation marker with the generations it supersedes (a
-    * compaction's marker carries `replaces=…`; append markers are
-    * empty). Unreadable content never guesses: a marker installed by
-    * atomic rename is never legitimately torn. */
-  private def lexMarkers(spark: SparkSession, out: String)
-      : Seq[(Long, Seq[Long])] = {
-    val f = lexFs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(out)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_GEN_COMMIT_"))
-      .map { name =>
-        val gen = name.stripPrefix("_GEN_COMMIT_").toLong
-        val in = f.open(new org.apache.hadoop.fs.Path(root, name))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        val replaced = lines.collectFirst {
-          case l if l.startsWith("replaces=") =>
-            l.stripPrefix("replaces=").split(",").toSeq
-              .filter(_.nonEmpty).map(_.toLong)
-        }.getOrElse(Seq.empty)
-        gen -> replaced
-      }.sortBy(_._1)
-  }
+  /** Every generation marker under the index, with the generations a
+    * compaction's `replaces=` supersedes (see [[CommitLog.Generations]]:
+    * readers serve its `committed` set, so the crash window between a
+    * compaction's marker and its cleanup double-counts nothing). */
+  private def lexGens(spark: SparkSession, out: String) =
+    CommitLog.generations(fs(spark, out),
+      new org.apache.hadoop.fs.Path(out), LexMarker)
 
-  /** Generic `key=value` lines of every generation marker —
-    * [[lexMarkers]] reads only the replaces list; the sync lineage
-    * ([[syncLexicalIndex]]'s cursor/epoch) reads the rest. */
-  private def lexMarkerMeta(spark: SparkSession, out: String)
-      : Seq[(Long, Map[String, String])] = {
-    val f = lexFs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(out)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_GEN_COMMIT_"))
-      .map { name =>
-        val gen = name.stripPrefix("_GEN_COMMIT_").toLong
-        val in = f.open(new org.apache.hadoop.fs.Path(root, name))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        gen -> lines.filter(_.contains("="))
-          .map { l => val i = l.indexOf('=')
-            l.substring(0, i) -> l.substring(i + 1) }.toMap
-      }.sortBy(_._1)
-  }
-
-  /** The generations a reader serves: marker-committed minus those a
-    * later compaction superseded (the replaces list makes the flip
-    * ATOMIC — the crash window between a compaction's marker and its
-    * cleanup double-counts nothing). */
-  private def lexCommittedGens(spark: SparkSession, out: String): Seq[Long] = {
-    val marks = lexMarkers(spark, out)
-    val replaced = marks.flatMap(_._2).toSet
-    marks.map(_._1).filterNot(replaced).sorted
-  }
+  /** One generation's data directories across the four tables. */
+  private def lexGenDirs(out: String, gen: Long) =
+    Seq("postings", "df", "stats", "tomb")
+      .map(part => new org.apache.hadoop.fs.Path(s"$out/$part/gen=$gen"))
 
   /** Clear any orphan data a TORN write left under generation id
     * `gen` before minting it anew: a crash after data landed but
@@ -1819,11 +1773,19 @@ object TextOps {
     * write no tomb would adopt the stale one). */
   private def lexClearGen(spark: SparkSession, out: String,
       gen: Long): Unit = {
-    val f = lexFs(spark, out)
-    Seq("postings", "df", "stats", "tomb").foreach { part =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$out/$part/gen=$gen"), true)
-    }
+    val f = fs(spark, out)
+    lexGenDirs(out, gen).foreach(f.delete(_, true))
   }
+
+  /** Install generation `gen`'s marker, LAST: the generation becomes
+    * visible atomically (temp + rename, so a marker carrying metadata
+    * lines — e.g. [[syncLexicalIndex]]'s sink cursor — is never
+    * torn). */
+  private def lexCommit(spark: SparkSession, out: String, gen: Long,
+      lines: Seq[String], what: String): Unit =
+    CommitLog.write(fs(spark, out), new org.apache.hadoop.fs.Path(out),
+      s"$LexMarker$gen", lines.mkString("\n"),
+      s"could not commit $what at $out")
 
   /** Space-split tokens per doc (q135's tokenizer — the index and the
     * from-scratch oracle must agree on token identity). */
@@ -1862,16 +1824,7 @@ object TextOps {
       () => dl.agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$out/stats/gen=$gen"))
-    // marker LAST: the generation becomes visible atomically
-    // (temp+rename so a marker carrying metadata lines — e.g.
-    // syncLexicalIndex's sink cursor — is never torn)
-    val f = lexFs(spark, out)
-    val tmp = new org.apache.hadoop.fs.Path(out, s"._GEN_COMMIT_$gen.tmp")
-    val o = f.create(tmp, true)
-    try o.write(meta.mkString("\n").getBytes("UTF-8")) finally o.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen")),
-      s"could not commit lexical-index generation $gen at $out")
+    lexCommit(spark, out, gen, meta, s"lexical-index generation $gen")
   }
 
   /** Build the stored lexical index from scratch (generation 0).
@@ -1879,7 +1832,7 @@ object TextOps {
     * [[syncLexicalIndex]]) — atomic with the generation itself. */
   def writeLexicalIndex(spark: SparkSession, docs: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Unit = {
-    lexFs(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
+    fs(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
     lexAppendGen(spark, docs, out, 0L, meta)
   }
 
@@ -1890,10 +1843,10 @@ object TextOps {
     * in-place update; re-ingest = dedup upstream, q126's admission). */
   def appendLexicalIndex(spark: SparkSession, docs: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Unit = {
-    val gens = lexCommittedGens(spark, out)
-    require(gens.nonEmpty,
+    val gens = lexGens(spark, out)
+    require(gens.committed.nonEmpty,
       s"no committed lexical index at $out - writeLexicalIndex first")
-    lexAppendGen(spark, docs, out, gens.max + 1, meta)
+    lexAppendGen(spark, docs, out, gens.nextId, meta)
   }
 
   /** The union of every active generation's tombstones, or None when
@@ -1902,7 +1855,7 @@ object TextOps {
     * empty, which `spark.read.parquet` refuses to infer a schema for. */
   private def lexTomb(spark: SparkSession, out: String,
       gens: Seq[Long]): Option[DataFrame] = {
-    val f = lexFs(spark, out)
+    val f = fs(spark, out)
     val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
     if (!f.exists(root)) None
     else if (!f.listStatus(root).exists(s =>
@@ -1945,10 +1898,11 @@ object TextOps {
     * batch matched nothing and no generation was minted). */
   def deleteFromLexicalIndex(spark: SparkSession, deletes: DataFrame,
       out: String): Long = {
-    val gens = lexCommittedGens(spark, out)
+    val marks = lexGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed lexical index at $out - writeLexicalIndex first")
-    val gen = lexMarkers(spark, out).map(_._1).max + 1
+    val gen = marks.nextId
     lexClearGen(spark, out, gen)
     val genF = col("gen").isin(gens: _*)
     val ids = deletes.select("doc_id").distinct()
@@ -1980,9 +1934,8 @@ object TextOps {
         .parquet(s"$out/stats/gen=$gen"),
       () => hit.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
-    val f = lexFs(spark, out)
-    f.create(new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen"), true)
-      .close()
+    lexCommit(spark, out, gen, Seq.empty,
+      s"lexical-index delete generation $gen")
     gen
   }
 
@@ -2009,12 +1962,13 @@ object TextOps {
   def upsertLexicalIndex(spark: SparkSession, docs: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Long = {
     import spark.implicits._
-    val gens = lexCommittedGens(spark, out)
+    val marks = lexGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed lexical index at $out - writeLexicalIndex first")
     val batch = docs.select("doc_id", "text")
     if (batch.isEmpty) return gens.max
-    val gen = lexMarkers(spark, out).map(_._1).max + 1
+    val gen = marks.nextId
     lexClearGen(spark, out, gen)
     val genF = col("gen").isin(gens: _*)
     val ids = batch.select("doc_id").distinct()
@@ -2078,13 +2032,7 @@ object TextOps {
       () => victims.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
     // marker LAST: the delete side and the add side flip visible as one
-    val f = lexFs(spark, out)
-    val tmp = new org.apache.hadoop.fs.Path(out, s"._GEN_COMMIT_$gen.tmp")
-    val o = f.create(tmp, true)
-    try o.write(meta.mkString("\n").getBytes("UTF-8")) finally o.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen")),
-      s"could not commit lexical-index upsert generation $gen at $out")
+    lexCommit(spark, out, gen, meta, s"lexical-index upsert generation $gen")
     gen
   }
 
@@ -2102,14 +2050,13 @@ object TextOps {
     * nature; appends stay O(batch). Returns the surviving generation
     * id; a single-generation index is a no-op. */
   def compactLexicalIndex(spark: SparkSession, out: String): Long = {
-    val f = lexFs(spark, out)
     // sweep any prior compaction's unfinished cleanup first
-    lexSweepReplaced(spark, out)
-    val marks = lexMarkers(spark, out)
-    val active = lexCommittedGens(spark, out)
+    lexGens(spark, out).retire(lexGenDirs(out, _))
+    val marks = lexGens(spark, out)
+    val active = marks.committed
     require(active.nonEmpty, s"no committed lexical index at $out")
     if (active.size == 1) return active.head
-    val gen = marks.map(_._1).max + 1
+    val gen = marks.nextId
     lexClearGen(spark, out, gen)
     val genF = col("gen").isin(active: _*)
     // fold tombstones away physically: the merged generation carries
@@ -2140,43 +2087,17 @@ object TextOps {
         .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total_len"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$out/stats/gen=$gen"))
-    // atomic flip: temp + rename, content superseding the old gens.
-    // Sync lineage CARRIES FORWARD: the folded generations' max
-    // cursor/epoch move into the compaction's marker — without this a
-    // compaction would amnesia the indexer's position and the next
-    // syncLexicalIndex would re-append already-indexed batches
-    val carried = {
-      val metas = lexMarkerMeta(spark, out).filter(m => active.contains(m._1))
-      val cur = metas.flatMap(_._2.get("cursor")).map(_.toLong)
-      val ep = metas.flatMap(_._2.get("epoch")).map(_.toLong)
-      (if (cur.nonEmpty) Seq(s"cursor=${cur.max}") else Seq.empty) ++
-        (if (ep.nonEmpty) Seq(s"epoch=${ep.max}") else Seq.empty)
-    }
-    val tmp = new org.apache.hadoop.fs.Path(out, s"._GEN_COMMIT_$gen.tmp")
-    val o = f.create(tmp, true)
-    try o.write((s"replaces=${active.mkString(",")}" +: carried)
-      .mkString("\n").getBytes("UTF-8"))
-    finally o.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen")),
-      s"could not commit lexical-index compaction at $out")
-    lexSweepReplaced(spark, out)
+    // atomic flip: the marker supersedes the old gens. Sync lineage
+    // CARRIES FORWARD (the folded generations' max cursor/epoch) —
+    // without it the next syncLexicalIndex would re-append
+    // already-indexed batches. Cleanup then drops the superseded gens
+    // (re-run at the next compaction, so a crash mid-sweep only defers
+    // garbage, never correctness).
+    lexCommit(spark, out, gen,
+      s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
+      "lexical-index compaction")
+    lexGens(spark, out).retire(lexGenDirs(out, _))
     gen
-  }
-
-  /** Drop every generation some marker's replaces-list supersedes —
-    * data dirs first, markers last, idempotent (the cleanup half of
-    * [[compactLexicalIndex]], re-run at its next invocation so a crash
-    * mid-sweep only defers garbage, never correctness). */
-  private def lexSweepReplaced(spark: SparkSession, out: String): Unit = {
-    val f = lexFs(spark, out)
-    val replaced = lexMarkers(spark, out).flatMap(_._2).distinct
-    replaced.foreach { g =>
-      Seq("postings", "df", "stats", "tomb").foreach { part =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$out/$part/gen=$g"), true)
-      }
-      f.delete(new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$g"), false)
-    }
   }
 
   /** BM25 top-k per probe against the STORED index: the probe's
@@ -2189,7 +2110,7 @@ object TextOps {
   def searchLexicalIndex(spark: SparkSession, probes: DataFrame,
       out: String, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val gens = lexCommittedGens(spark, out)
+    val gens = lexGens(spark, out).committed
     require(gens.nonEmpty, s"no committed lexical index at $out")
     val genF = col("gen").isin(gens: _*)
     val ptoks = lexToks(probes
@@ -2382,10 +2303,11 @@ object TextOps {
     * on disk. Listings and content summaries only — no data I/O. */
   def describeLexicalIndex(spark: SparkSession, out: String): DataFrame = {
     import spark.implicits._
-    val gens = lexCommittedGens(spark, out)
+    val marks = lexGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty, s"no committed lexical index at $out")
-    val (cursor, epoch) = lexSyncState(spark, out)
-    val f = lexFs(spark, out)
+    val (cursor, epoch) = marks.syncState
+    val f = fs(spark, out)
     val tombs = {
       val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
       f.exists(root) && f.listStatus(root).exists(s =>
@@ -2410,24 +2332,13 @@ object TextOps {
       compactAfterGens: Int = 8): Seq[String] = {
     require(compactAfterGens > 1,
       s"compactAfterGens must be > 1, got $compactAfterGens")
-    val gens = lexCommittedGens(spark, out)
+    val gens = lexGens(spark, out).committed
     require(gens.nonEmpty, s"no committed lexical index at $out")
     if (gens.size < compactAfterGens) Seq.empty
     else {
       val g = compactLexicalIndex(spark, out)
       Seq(s"compacted=${gens.size}->gen=$g")
     }
-  }
-
-  /** The indexer's recorded position over its source sink: max
-    * `cursor=`/`epoch=` across COMMITTED generation markers (−1/−1
-    * before the first sync). Max, not latest-gen: a delete generation
-    * carries no lineage and must not reset the position. */
-  private def lexSyncState(spark: SparkSession, out: String): (Long, Long) = {
-    val committed = lexCommittedGens(spark, out).toSet
-    val metas = lexMarkerMeta(spark, out).filter(m => committed(m._1))
-    (metas.flatMap(_._2.get("cursor")).map(_.toLong).foldLeft(-1L)(math.max),
-      metas.flatMap(_._2.get("epoch")).map(_.toLong).foldLeft(-1L)(math.max))
   }
 
   /** Keep the stored lexical index in step with a document SINK — the
@@ -2458,7 +2369,8 @@ object TextOps {
     * Returns (current max generation, mode ∈ build|append|noop). */
   def syncLexicalIndex(spark: SparkSession, sink: String, out: String)
       : (Long, String) = {
-    val gens = lexCommittedGens(spark, out)
+    val marks = lexGens(spark, out)
+    val gens = marks.committed
     val catalog = Views.epochCatalog(spark, sink)
     val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
     if (gens.isEmpty) {
@@ -2467,7 +2379,7 @@ object TextOps {
         Seq(s"cursor=$cursor", s"epoch=$epoch"))
       (0L, "build")
     } else {
-      val (c, e0) = lexSyncState(spark, out)
+      val (c, e0) = marks.syncState
       require(Views.incrementalSound(catalog, e0, c),
         s"cannot sync $out from $sink: the sink compacted past cursor " +
           s"$c or mutated content (delete/upsert/retire) since epoch " +

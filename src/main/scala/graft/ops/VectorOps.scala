@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import CommitLog.fs
 
 /** Similarity search over the `embeddings` table (SURVEY §2.8 V13 and
   * the LLM-pipeline mandate: brute-force cosine top-k as the exactness
@@ -1119,93 +1120,24 @@ object VectorOps {
     * and the base (gen 0) codes. */
   private val IndexCommit = "_INDEX_COMMIT"
 
-  private def hfs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Every committed code generation with the generations it
     * supersedes: 0 certified by [[IndexCommit]] (geometry content, no
     * replaces), appends/deletes by their `_GEN_COMMIT_N` markers
-    * (touched last, q138's discipline — a torn write is invisible),
-    * compactions by a `replaces=…`-carrying marker installed via
-    * atomic rename. */
-  private def vecMarkers(spark: SparkSession, out: String)
-      : Seq[(Long, Seq[Long])] = {
-    val f = hfs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(out)
-    if (!f.exists(root)) Seq.empty
-    else {
-      val names = f.listStatus(root).toSeq.map(_.getPath.getName)
-      val base =
-        if (names.contains(IndexCommit)) Seq(0L -> Seq.empty[Long])
-        else Seq.empty
-      base ++ names.filter(_.startsWith("_GEN_COMMIT_")).map { name =>
-        val gen = name.stripPrefix("_GEN_COMMIT_").toLong
-        val in = f.open(new org.apache.hadoop.fs.Path(root, name))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        val replaced = lines.collectFirst {
-          case l if l.startsWith("replaces=") =>
-            l.stripPrefix("replaces=").split(",").toSeq
-              .filter(_.nonEmpty).map(_.toLong)
-        }.getOrElse(Seq.empty)
-        gen -> replaced
-      }.sortBy(_._1)
-    }
-  }
-
-  /** The code generations a reader serves: marker-committed minus
-    * those a later compaction's replaces-list superseded. (After a
+    * (installed last, q138's discipline — a torn write is invisible),
+    * compactions by a `replaces=…`-carrying marker. (After a
     * compacted-away marker is itself swept by a LATER compaction,
-    * generation 0 can reappear here as a phantom — [[IndexCommit]] is
-    * never deleted because it certifies centroids + codebook — but a
-    * phantom gen has no codes/ or tomb/ directory, so every read
-    * through it is vacuously empty.) */
-  private def vecCommittedGens(spark: SparkSession, out: String): Seq[Long] = {
-    val marks = vecMarkers(spark, out)
-    val replaced = marks.flatMap(_._2).toSet
-    marks.map(_._1).filterNot(replaced).sorted
-  }
+    * generation 0 can reappear in `committed` as a phantom —
+    * [[IndexCommit]] is never deleted because it certifies centroids +
+    * codebook — but a phantom gen has no codes/ or tomb/ directory, so
+    * every read through it is vacuously empty.) */
+  private def vecGens(spark: SparkSession, out: String) =
+    CommitLog.generations(fs(spark, out), new org.apache.hadoop.fs.Path(out),
+      "_GEN_COMMIT_", base = Some(IndexCommit))
 
-  /** Generic `key=value` lines of every generation marker (gen 0's
-    * lines live in [[IndexCommit]]) — the sync lineage reads
-    * cursor/epoch from here. */
-  private def vecMarkerMeta(spark: SparkSession, out: String)
-      : Seq[(Long, Map[String, String])] = {
-    val f = hfs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(out)
-    if (!f.exists(root)) Seq.empty
-    else {
-      def parse(name: String): Map[String, String] = {
-        val in = f.open(new org.apache.hadoop.fs.Path(root, name))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.filter(_.contains("=")).map { l =>
-          val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-        }.toMap
-      }
-      val names = f.listStatus(root).toSeq.map(_.getPath.getName)
-      val base =
-        if (names.contains(IndexCommit)) Seq(0L -> parse(IndexCommit))
-        else Seq.empty
-      base ++ names.filter(_.startsWith("_GEN_COMMIT_")).map { n =>
-        n.stripPrefix("_GEN_COMMIT_").toLong -> parse(n)
-      }.sortBy(_._1)
-    }
-  }
-
-  /** The indexer's recorded position over its source sink: max
-    * cursor/epoch across committed generation markers (−1/−1 before
-    * the first sync). Max, not latest-gen: delete generations carry
-    * no lineage and must not reset the position. */
-  private def vecSyncState(spark: SparkSession, out: String): (Long, Long) = {
-    val committed = vecCommittedGens(spark, out).toSet
-    val metas = vecMarkerMeta(spark, out).filter(m => committed(m._1))
-    (metas.flatMap(_._2.get("cursor")).map(_.toLong).foldLeft(-1L)(math.max),
-      metas.flatMap(_._2.get("epoch")).map(_.toLong).foldLeft(-1L)(math.max))
-  }
+  /** One code generation's data directories. */
+  private def vecGenDirs(out: String, gen: Long) = Seq(
+    new org.apache.hadoop.fs.Path(s"$out/codes/gen=$gen"),
+    new org.apache.hadoop.fs.Path(s"$out/tomb/gen=$gen"))
 
   /** The LATEST active tombstone per vec_id, or None when the index
     * has never seen a delete/upsert (the common case pays no read).
@@ -1218,7 +1150,7 @@ object VectorOps {
     * indexes, no `final` column) read as final — they were deletes. */
   private def vecTomb(spark: SparkSession, out: String,
       gens: Seq[Long]): Option[DataFrame] = {
-    val f = hfs(spark, out)
+    val f = fs(spark, out)
     val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
     if (!f.exists(root)) None
     else if (!f.listStatus(root).exists(s =>
@@ -1257,9 +1189,8 @@ object VectorOps {
     * `tomb/gen=N` would be adopted by the new generation's marker). */
   private def vecClearGen(spark: SparkSession, out: String,
       gen: Long): Unit = {
-    val f = hfs(spark, out)
-    f.delete(new org.apache.hadoop.fs.Path(s"$out/codes/gen=$gen"), true)
-    f.delete(new org.apache.hadoop.fs.Path(s"$out/tomb/gen=$gen"), true)
+    val f = fs(spark, out)
+    vecGenDirs(out, gen).foreach(f.delete(_, true))
   }
 
   /** Size-aware range write of a codes frame into
@@ -1299,7 +1230,7 @@ object VectorOps {
     * records the geometry (M, K, nLists) and lands last. */
   def writeVectorIndex(spark: SparkSession, dir: String, out: String,
       encodeFilter: Column = lit(true)): Unit = {
-    val f = hfs(spark, out)
+    val f = fs(spark, out)
     f.delete(new org.apache.hadoop.fs.Path(out), true)
     val cents = spark.createDataFrame(refinedCentroids(spark, dir).toSeq)
       .toDF("cid", "cu")
@@ -1318,13 +1249,9 @@ object VectorOps {
       () => cb.coalesce(1).write.mode("overwrite")
         .parquet(s"$out/codebook"),
       () => writeCodes(spark, codes, out, 0L))
-    val marker = new org.apache.hadoop.fs.Path(out, IndexCommit)
-    val tmp = new org.apache.hadoop.fs.Path(out, s".$IndexCommit.tmp")
-    val o = f.create(tmp, true)
-    try o.write(
-      s"m=$pqSubspaces\nk=$pqCentroids\nlists=$ivfCentroids".getBytes("UTF-8"))
-    finally o.close()
-    require(f.rename(tmp, marker), s"could not commit vector index at $out")
+    CommitLog.write(f, new org.apache.hadoop.fs.Path(out), IndexCommit,
+      s"m=$pqSubspaces\nk=$pqCentroids\nlists=$ivfCentroids",
+      s"could not commit vector index at $out")
   }
 
   /** Ingest new vectors into the STORED index without retraining — the
@@ -1350,14 +1277,14 @@ object VectorOps {
     * sync cursor discipline. */
   def appendVectorIndexRows(spark: SparkSession, rows: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Unit = {
-    val gens = vecCommittedGens(spark, out)
-    require(gens.nonEmpty,
+    val marks = vecGens(spark, out)
+    require(marks.committed.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first")
     val codes = encodeAgainstStored(spark, rows, out)
-    val gen = gens.max + 1
+    val gen = marks.nextId
     vecClearGen(spark, out, gen)
     writeCodes(spark, codes, out, gen)
-    commitVecGen(spark, out, gen, meta)
+    commitVecGen(spark, out, gen, meta, s"vector-index generation $gen")
   }
 
   /** Route + residual-encode `rows` against the STORED artifacts (the
@@ -1379,16 +1306,12 @@ object VectorOps {
       .join(assigned.select("vec_id", "cid"), "vec_id")
   }
 
+  /** Install code generation `gen`'s marker, last (temp + rename). */
   private def commitVecGen(spark: SparkSession, out: String, gen: Long,
-      meta: Seq[String]): Unit = {
-    val f = hfs(spark, out)
-    val tmp = new org.apache.hadoop.fs.Path(out, s"._GEN_COMMIT_$gen.tmp")
-    val o = f.create(tmp, true)
-    try o.write(meta.mkString("\n").getBytes("UTF-8")) finally o.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen")),
-      s"could not commit vector-index generation $gen at $out")
-  }
+      lines: Seq[String], what: String): Unit =
+    CommitLog.write(fs(spark, out), new org.apache.hadoop.fs.Path(out),
+      s"_GEN_COMMIT_$gen", lines.mkString("\n"),
+      s"could not commit $what at $out")
 
   /** UPSERT vectors into the stored index — the embedding-side
     * update-document (a re-embedded doc, a refreshed crawl): ONE
@@ -1410,12 +1333,13 @@ object VectorOps {
     * empty batch). */
   def upsertVectorIndexRows(spark: SparkSession, rows: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Long = {
-    val gens = vecCommittedGens(spark, out)
+    val marks = vecGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first")
     if (rows.isEmpty) return gens.max
     val codes = encodeAgainstStored(spark, rows, out)
-    val gen = vecMarkers(spark, out).map(_._1).max + 1
+    val gen = marks.nextId
     vecClearGen(spark, out, gen)
     // the codes and tombstone tables are independent: overlap their
     // writes (Par.all); the commit marker lands after both join
@@ -1424,7 +1348,7 @@ object VectorOps {
       () => rows.select("vec_id").distinct()
         .withColumn("final", lit(false))
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
-    commitVecGen(spark, out, gen, meta)
+    commitVecGen(spark, out, gen, meta, s"vector-index generation $gen")
     gen
   }
 
@@ -1449,10 +1373,11 @@ object VectorOps {
     * tombstoned). */
   def deleteFromVectorIndex(spark: SparkSession, out: String,
       deletes: DataFrame): Long = {
-    val gens = vecCommittedGens(spark, out)
+    val marks = vecGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first")
-    val gen = vecMarkers(spark, out).map(_._1).max + 1
+    val gen = marks.nextId
     val ids = deletes.select("vec_id").distinct()
     // skip ids that are FULLY dead, nothing to re-kill. A final latest
     // tombstone alone cannot prove death: an append after a delete
@@ -1484,8 +1409,8 @@ object VectorOps {
     vecClearGen(spark, out, gen)
     fresh.withColumn("final", lit(true))
       .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen")
-    hfs(spark, out).create(
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen"), true).close()
+    commitVecGen(spark, out, gen, Seq.empty,
+      s"vector-index delete generation $gen")
     gen
   }
 
@@ -1511,12 +1436,12 @@ object VectorOps {
     * Listings and content summaries only — no data I/O. */
   def describeVectorIndex(spark: SparkSession, out: String): DataFrame = {
     import spark.implicits._
-    val gens = vecCommittedGens(spark, out)
+    val marks = vecGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty, s"no committed vector index at $out")
-    val (cursor, epoch) = vecSyncState(spark, out)
-    val geom = vecMarkerMeta(spark, out).find(_._1 == 0L).map(_._2)
-      .getOrElse(Map.empty[String, String])
-    val f = hfs(spark, out)
+    val (cursor, epoch) = marks.syncState
+    val geom = marks.meta(0L)
+    val f = fs(spark, out)
     val tombs = {
       val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
       f.exists(root) && f.listStatus(root).exists(s =>
@@ -1544,7 +1469,7 @@ object VectorOps {
       compactAfterGens: Int = 8): Seq[String] = {
     require(compactAfterGens > 1,
       s"compactAfterGens must be > 1, got $compactAfterGens")
-    val gens = vecCommittedGens(spark, out)
+    val gens = vecGens(spark, out).committed
     require(gens.nonEmpty, s"no committed vector index at $out")
     if (gens.size < compactAfterGens) Seq.empty
     else {
@@ -1573,13 +1498,14 @@ object VectorOps {
     * Returns (current max code generation, mode ∈ append|noop). */
   def syncVectorIndex(spark: SparkSession, sink: String, out: String)
       : (Long, String) = {
-    val gens = vecCommittedGens(spark, out)
+    val marks = vecGens(spark, out)
+    val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first " +
         "(train the artifacts; encodeFilter = lit(false) starts empty)")
     val catalog = Views.epochCatalog(spark, sink)
     val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
-    val (c, e0) = vecSyncState(spark, out)
+    val (c, e0) = marks.syncState
     require(Views.incrementalSound(catalog, e0, c),
       s"cannot sync $out from $sink: the sink compacted past cursor " +
         s"$c or mutated content (delete/upsert/retire) since epoch " +
@@ -1650,13 +1576,13 @@ object VectorOps {
     }
 
   def compactVectorIndex(spark: SparkSession, out: String): Long = {
-    val f = hfs(spark, out)
-    vecSweepReplaced(spark, out)
-    val active = vecCommittedGens(spark, out)
+    vecGens(spark, out).retire(vecGenDirs(out, _))
+    val marks = vecGens(spark, out)
+    val active = marks.committed
     require(active.nonEmpty, s"no committed vector index at $out")
     val tomb = vecTomb(spark, out, active)
     if (active.size == 1 && tomb.isEmpty) return active.head
-    val gen = vecMarkers(spark, out).map(_._1).max + 1
+    val gen = marks.nextId
     vecClearGen(spark, out, gen)
     val base = spark.read.schema(vecCodesSchema).parquet(s"$out/codes")
       .filter(col("gen").isin(active: _*))
@@ -1664,41 +1590,16 @@ object VectorOps {
     val survivors = vecSurvivors(base, tomb).drop("gen")
     writeCodes(spark, survivors, out, gen)
     // sync lineage CARRIES FORWARD (the lexical index's discipline):
-    // without this a compaction would amnesia the indexer's cursor and
-    // the next syncVectorIndex would re-encode already-indexed batches
-    val carried = {
-      val metas = vecMarkerMeta(spark, out).filter(m => active.contains(m._1))
-      val cur = metas.flatMap(_._2.get("cursor")).map(_.toLong)
-      val ep = metas.flatMap(_._2.get("epoch")).map(_.toLong)
-      (if (cur.nonEmpty) Seq(s"cursor=${cur.max}") else Seq.empty) ++
-        (if (ep.nonEmpty) Seq(s"epoch=${ep.max}") else Seq.empty)
-    }
-    val tmp = new org.apache.hadoop.fs.Path(out, s"._GEN_COMMIT_$gen.tmp")
-    val o = f.create(tmp, true)
-    try o.write((s"replaces=${active.mkString(",")}" +: carried)
-      .mkString("\n").getBytes("UTF-8"))
-    finally o.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$gen")),
-      s"could not commit vector-index compaction at $out")
-    vecSweepReplaced(spark, out)
+    // without it the next syncVectorIndex would re-encode already-
+    // indexed batches. The cleanup sweep then drops the superseded
+    // code/tomb dirs and markers; [[IndexCommit]] survives even when
+    // gen 0 is replaced (it certifies the trained artifacts, not the
+    // codes, and is not a `_GEN_COMMIT_` marker).
+    commitVecGen(spark, out, gen,
+      s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
+      "vector-index compaction")
+    vecGens(spark, out).retire(vecGenDirs(out, _))
     gen
-  }
-
-  /** Drop every generation some marker's replaces-list supersedes —
-    * data dirs first, markers last, idempotent (the cleanup half of
-    * [[compactVectorIndex]]; a crash mid-sweep defers garbage, never
-    * correctness). [[IndexCommit]] survives even when gen 0 is
-    * replaced: it certifies the trained artifacts, not the codes. */
-  private def vecSweepReplaced(spark: SparkSession, out: String): Unit = {
-    val f = hfs(spark, out)
-    val replaced = vecMarkers(spark, out).flatMap(_._2).distinct
-    replaced.foreach { g =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$out/codes/gen=$g"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$out/tomb/gen=$g"), true)
-      if (g != 0L)
-        f.delete(new org.apache.hadoop.fs.Path(out, s"_GEN_COMMIT_$g"), false)
-    }
   }
 
   /** The stored index's three relations (centroids, codebook, codes —
@@ -1706,11 +1607,11 @@ object VectorOps {
     * append never serves). Refuses an uncommitted index loudly. */
   def readVectorIndex(spark: SparkSession, out: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val gens = vecCommittedGens(spark, out)
+    val gens = vecGens(spark, out).committed
     // the geometry marker certifies centroids + codebook (gen 0 itself
     // may since have been compacted away — that's fine; its SUCCESSOR
     // is in gens)
-    require(hfs(spark, out).exists(
+    require(fs(spark, out).exists(
         new org.apache.hadoop.fs.Path(out, IndexCommit)) && gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex did not " +
         "finish (torn indexes must refuse, not serve partial lists)")
@@ -1733,7 +1634,7 @@ object VectorOps {
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (cents, cb, codes) = readVectorIndex(spark, out)
-    val gens = vecCommittedGens(spark, out)
+    val gens = vecGens(spark, out).committed
     val unit = unitVecs(normed(spark, dir))
     val probesU = unit.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("u").as("pu"))

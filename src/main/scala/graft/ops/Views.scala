@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import CommitLog.fs
+
 /** Incremental materialized-view maintenance over the streaming sink —
   * the downstream half of the warehouse story the sink's lifecycle ops
   * (ingest → compact → retain → delete → upsert) tell on the write
@@ -98,41 +100,10 @@ object Views {
   private val ViewLock = "_VIEW_LOCK"
   private val MarkerPrefix = "_VIEW_COMMIT_"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Every generation marker with its metadata lines. A marker is
-    * installed by temp+rename, so unreadable content is infrastructure
-    * corruption and fails loudly — never a guess. */
-  private def markers(spark: SparkSession, viewPath: String)
-      : Seq[(Long, Map[String, String])] = {
-    val f = fsOf(spark, viewPath)
-    val root = new org.apache.hadoop.fs.Path(viewPath)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(MarkerPrefix))
-      .map { name =>
-        val gen = name.stripPrefix(MarkerPrefix).toLong
-        val in = f.open(new org.apache.hadoop.fs.Path(root, name))
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        gen -> lines.filter(_.contains("="))
-          .map { l => val i = l.indexOf('=')
-            l.substring(0, i) -> l.substring(i + 1) }.toMap
-      }.sortBy(_._1)
-  }
-
-  /** Committed generations minus those a later refresh's `replaces=`
-    * list superseded — the crash window between a new marker and the
-    * sweep serves the NEW generation (the flip is the marker). */
-  private def committedGens(marks: Seq[(Long, Map[String, String])])
-      : Seq[Long] = {
-    val replaced = marks.flatMap(_._2.get("replaces")).flatMap(
-      _.split(",").toSeq.filter(_.nonEmpty).map(_.toLong)).toSet
-    marks.map(_._1).filterNot(replaced).sorted
-  }
+  /** Every generation marker, read strictly (see [[CommitLog]]). */
+  private def markers(spark: SparkSession, viewPath: String) =
+    CommitLog.generations(fs(spark, viewPath),
+      new org.apache.hadoop.fs.Path(viewPath), MarkerPrefix)
 
   private def withDay(df: DataFrame, tsCol: String): DataFrame =
     if (df.columns.contains(tsCol))
@@ -172,17 +143,13 @@ object Views {
     * watermark. */
   private[ops] def pinnedFullRead(spark: SparkSession, sink: String,
       tsCol: String): (DataFrame, Long, Long) = {
-    val f = fsOf(spark, sink)
+    val f = fs(spark, sink)
     val catalog = epochCatalog(spark, sink)
     val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
     val wm = catalog.lastOption.map(_._3).getOrElse(-1L)
     val epochPart: Option[DataFrame] =
       if (e1 < 0) None else Streaming.readEpochFrame(spark, f, sink, e1)
-    val live = Streaming.subdirs(spark, sink, "batch_id=")
-      .filter { case (id, p) =>
-        id > wm &&
-          f.exists(new org.apache.hadoop.fs.Path(p, Streaming.BatchCommit))
-      }.sortBy(_._1)
+    val live = Streaming.committedBatches(spark, sink, wm)
     val cursor = (wm +: live.map(_._1)).max
     val parts = epochPart.toSeq ++
       live.map(d => withDay(spark.read.parquet(d._2.toString), tsCol))
@@ -196,12 +163,7 @@ object Views {
     * advance it to. None when the view is already current. */
   private[ops] def pinnedDelta(spark: SparkSession, sink: String, cursor: Long,
       tsCol: String): (Option[DataFrame], Long) = {
-    val f = fsOf(spark, sink)
-    val delta = Streaming.subdirs(spark, sink, "batch_id=")
-      .filter { case (id, p) =>
-        id > cursor &&
-          f.exists(new org.apache.hadoop.fs.Path(p, Streaming.BatchCommit))
-      }.sortBy(_._1)
+    val delta = Streaming.committedBatches(spark, sink, cursor)
     if (delta.isEmpty) (None, cursor)
     else (Some(delta.map(d => withDay(spark.read.parquet(d._2.toString), tsCol))
       .reduce(_.unionByName(_, allowMissingColumns = true))),
@@ -233,7 +195,7 @@ object Views {
   private def writeGen(spark: SparkSession, viewPath: String,
       rows: DataFrame, gen: Long, cursor: Long, epoch: Long, mode: String,
       replaces: Seq[Long], fp: String): Long = {
-    val f = fsOf(spark, viewPath)
+    val f = fs(spark, viewPath)
     val root = new org.apache.hadoop.fs.Path(viewPath)
     val dir = new org.apache.hadoop.fs.Path(root, s"gen=$gen")
     f.delete(dir, true) // a previous refresher's uncommitted attempt
@@ -244,21 +206,14 @@ object Views {
     val parts = spark.conf
       .getOption("spark.graft.view.writePartitions").map(_.toInt).getOrElse(1)
     rows.repartition(parts).write.mode("overwrite").parquet(dir.toString)
-    val tmp = new org.apache.hadoop.fs.Path(root, s".$MarkerPrefix$gen.tmp")
-    val out = f.create(tmp, true)
-    try out.write((s"cursor=$cursor\nepoch=$epoch\nmode=$mode\n" +
-      s"def=$fp\nreplaces=${replaces.mkString(",")}").getBytes("UTF-8"))
-    finally out.close()
-    require(f.rename(tmp,
-      new org.apache.hadoop.fs.Path(root, s"$MarkerPrefix$gen")),
+    CommitLog.write(f, root, s"$MarkerPrefix$gen",
+      s"cursor=$cursor\nepoch=$epoch\nmode=$mode\n" +
+        s"def=$fp\nreplaces=${replaces.mkString(",")}",
       s"could not install view commit marker for gen $gen under $viewPath")
-    // sweep superseded generations: marker first (visibility), then
-    // data — idempotent, and a crash between the two leaves an
-    // invisible dir the next refresh's writeGen clears
-    replaces.foreach { g =>
-      f.delete(new org.apache.hadoop.fs.Path(root, s"$MarkerPrefix$g"), false)
-      f.delete(new org.apache.hadoop.fs.Path(root, s"gen=$g"), true)
-    }
+    // sweep superseded generations: data first, marker last — a crash
+    // between the two leaves a superseded marker the next sweep retires
+    markers(spark, viewPath)
+      .retire(g => Seq(new org.apache.hadoop.fs.Path(root, s"gen=$g")))
     gen
   }
 
@@ -267,7 +222,7 @@ object Views {
     * visible, so [[breakViewLock]] is always safe and always explicit. */
   private def withViewLock[T](spark: SparkSession, viewPath: String)
       (body: => T): T = {
-    val f = fsOf(spark, viewPath)
+    val f = fs(spark, viewPath)
     val root = new org.apache.hadoop.fs.Path(viewPath)
     if (!f.exists(root)) f.mkdirs(root)
     val lock = new org.apache.hadoop.fs.Path(root, ViewLock)
@@ -284,11 +239,8 @@ object Views {
     finally {
       // release only our own lock: a broken-and-retaken lock belongs
       // to the new holder
-      val held = try {
-        val in = f.open(lock)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString == token
-        finally in.close()
-      } catch { case _: Exception => false }
+      val held = try CommitLog.read(f, lock) == token
+        catch { case _: Exception => false }
       if (held) f.delete(lock, false)
     }
   }
@@ -296,7 +248,7 @@ object Views {
   /** Manual lock release after a crashed refresher (see
     * [[withViewLock]]). Returns true if a lock was removed. */
   def breakViewLock(spark: SparkSession, viewPath: String): Boolean =
-    fsOf(spark, viewPath).delete(
+    fs(spark, viewPath).delete(
       new org.apache.hadoop.fs.Path(viewPath, ViewLock), false)
 
   /** Materialize `vd` over the sink's CURRENT content into generation
@@ -306,7 +258,7 @@ object Views {
   def createView(spark: SparkSession, sink: String, viewPath: String,
       vd: ViewDef, tsCol: String = "ts"): Long =
     withViewLock(spark, viewPath) {
-      require(committedGens(markers(spark, viewPath)).isEmpty,
+      require(markers(spark, viewPath).committed.isEmpty,
         s"view already exists at $viewPath - refreshView maintains it")
       val (rows, cursor, e1) = pinnedFullRead(spark, sink, tsCol)
       writeGen(spark, viewPath, vd.partial(rows), 0L, cursor, e1, "full",
@@ -322,11 +274,11 @@ object Views {
       vd: ViewDef, tsCol: String = "ts"): (Long, String) =
     withViewLock(spark, viewPath) {
       val marks = markers(spark, viewPath)
-      val committed = committedGens(marks)
+      val committed = marks.committed
       require(committed.nonEmpty,
         s"no committed view at $viewPath - createView first")
       val cur = committed.max
-      val meta = marks.find(_._1 == cur).get._2
+      val meta = marks.meta(cur)
       // the stored partials only merge correctly under the SHAPE they
       // were built with — a drifted key set or combiner algebra would
       // corrupt every later merge silently, so it refuses instead
@@ -358,7 +310,7 @@ object Views {
   /** The view's current committed relation — one bounded scan of the
     * newest committed generation, never the source table. */
   def readView(spark: SparkSession, viewPath: String): DataFrame = {
-    val gens = committedGens(markers(spark, viewPath))
+    val gens = markers(spark, viewPath).committed
     require(gens.nonEmpty, s"no committed view at $viewPath")
     spark.read.parquet(s"$viewPath/gen=${gens.max}")
   }
@@ -369,9 +321,9 @@ object Views {
   def viewStatus(spark: SparkSession, viewPath: String): DataFrame = {
     import spark.implicits._
     val marks = markers(spark, viewPath)
-    val gens = committedGens(marks)
+    val gens = marks.committed
     require(gens.nonEmpty, s"no committed view at $viewPath")
-    val meta = marks.find(_._1 == gens.max).get._2
+    val meta = marks.meta(gens.max)
     Seq((gens.max, meta("cursor").toLong, meta("epoch").toLong,
       meta.getOrElse("mode", null), meta.getOrElse("def", null),
       gens.size.toLong))
