@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every declared query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock.
@@ -102,27 +101,15 @@ object Bench {
   private[graft] val shortId: String => String =
     s => s.takeWhile(_ != '_').stripPrefix("q")
 
+  /** The bench session's settings: the shared local list plus the
+    * table cache. SessionSettingsSpec pins them key for key, so bench
+    * totals stay comparable across rounds. */
+  private[graft] def sessionSettings: Seq[(String, String)] =
+    LocalSpark.settings(Seq(LocalSpark.CacheTables))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // the stored text/vector indexes are gen=/b= directory trees of
-      // 100-200 leaves; above the default threshold (32) Spark lists
-      // them with a DISTRIBUTED job — 32 task launches to stat ~200
-      // local dirs, 0.2-0.8 s of pure overhead per index read (q153
-      // profile). Driver-side listing handles thousands of dirs in ms
-      // on any filesystem with sane metadata latency; a deployment on
-      // a slow object store can lower it back via this env.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(sessionSettings).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     try Tables.warm(spark, sfDir) catch { case _: Throwable => () }

@@ -22,11 +22,7 @@ import org.apache.spark.sql.functions._
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.settings()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("bucketed")) {
       bucketedDemo(spark, dir)

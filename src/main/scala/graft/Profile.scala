@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job profiler: run one declared query end to end (after the
   * Bench-identical warm + one untimed warmup rep) and print every Spark
@@ -16,25 +15,15 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
-      .config("spark.ui.enabled", "false")
     // dev-only conf overrides for A/B runs: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
+    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
+      .map { kv =>
         val i = kv.indexOf('=')
-        builder.config(kv.substring(0, i), kv.substring(i + 1))
+        kv.substring(0, i) -> kv.substring(i + 1)
       }
-    val spark = builder.getOrCreate()
+    val spark = LocalSpark.builder(
+      LocalSpark.settings(LocalSpark.CacheTables +: overrides)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.warm(spark, sfDir)
 

@@ -15,9 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * Caching layer: the driver's test parquet is written as ONE row group
   * per table, so a plain scan is a single task no matter how many cores
   * the session has. When `spark.graft.cacheTables=true` (set by Bench),
-  * fact tables are repartitioned to the session's default parallelism and
-  * persisted — the local[32] analogue of the partitioned/bucketed layout
-  * a 100 TB warehouse would already have on disk. Dimension tables stay
+  * fact tables are repartitioned by size (about 4 MiB per partition, at
+  * least min(cores, 8) partitions) and persisted — the local[32]
+  * analogue of the partitioned/bucketed layout a 100 TB warehouse would
+  * already have on disk. Dimension tables stay
   * un-repartitioned (they must remain obviously broadcast-able).
   */
 object Tables {
@@ -52,11 +53,8 @@ object Tables {
     * thousand documents is CPU-bound long before it is MB-sized) from
     * serializing onto one core at tiny SF. */
   private def cachedPartitions(spark: SparkSession, df: DataFrame): Int = {
-    val target = spark.conf.getOption("spark.graft.cache.partitionBytes")
-      .map(_.toLong).getOrElse(4L << 20)
-    val floor = spark.conf.getOption("spark.graft.cache.minPartitions")
-      .map(_.toInt).getOrElse(
-        math.min(spark.sparkContext.defaultParallelism, 8))
+    val target = 4L << 20
+    val floor = math.min(spark.sparkContext.defaultParallelism, 8)
     val stat = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val bytes = if (stat >= BigInt(Long.MaxValue) / 2) 0L else stat.toLong
     math.min(32768L,

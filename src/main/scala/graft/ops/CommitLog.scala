@@ -46,6 +46,13 @@ private[graft] object CommitLog {
       java.nio.file.Files.move(nio(tmp), nio(marker),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // the move bypasses Hadoop, so the tmp's checksum sidecar stays
+      // behind; the marker never had one, and nothing else sweeps it
+      f match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+          java.nio.file.Files.deleteIfExists(nio(c.getChecksumFile(tmp)))
+        case _ => ()
+      }
     } else {
       if (atomicReplace) f.delete(marker, false)
       require(f.rename(tmp, marker), failure)

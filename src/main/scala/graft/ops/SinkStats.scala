@@ -552,8 +552,8 @@ object SinkStats {
     * only a handful of files, so each day's two band-boundary files
     * must be outnumbered by its interiors with margin (the previous
     * ~256-file layout sat at ~50/50 there and flipped on byte-level
-    * layout perturbations). Conf overrides restore in `finally`
-    * (the session is shared). */
+    * layout perturbations). The layout settings go to the compaction
+    * call only; the shared session conf is never touched. */
   private def sharedClusteredSink(spark: SparkSession, dir: String): String =
     SharedArtifacts.once(spark, dir, "events_cluster") { sink =>
       val ev = graft.Tables.events(spark, dir)
@@ -564,21 +564,10 @@ object SinkStats {
       val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
-      val prevTarget =
-        spark.conf.getOption("spark.graft.compact.targetFileBytes")
-      val prevCluster = spark.conf.getOption("spark.graft.compact.clusterBy")
-      try {
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, inputBytes / 512).toString)
-        spark.conf.set("spark.graft.compact.clusterBy", "user_id")
-        Streaming.compactSink(spark, sink, quiesced = true)
-      } finally {
-        prevTarget.fold(spark.conf
-          .unset("spark.graft.compact.targetFileBytes"))(v =>
-          spark.conf.set("spark.graft.compact.targetFileBytes", v))
-        prevCluster.fold(spark.conf.unset("spark.graft.compact.clusterBy"))(
-          v => spark.conf.set("spark.graft.compact.clusterBy", v))
-      }
+      Streaming.compactSink(spark, sink, quiesced = true,
+        conf = Some(SinkConf.of(spark).copy(
+          targetFileBytes = math.max(1L, inputBytes / 512),
+          clusterBy = Seq("user_id"))))
     }
 
   /** q144 — zone-map data skipping END TO END under the oracle hash:
@@ -1238,23 +1227,12 @@ object SinkStats {
       val f = fs(spark, out)
       val inputBytes = Streaming.subdirs(spark, out, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
-      val prevTarget =
-        spark.conf.getOption("spark.graft.compact.targetFileBytes")
-      val prevZ = spark.conf.getOption("spark.graft.compact.zorderBy")
-      try {
-        // ~256 files: enough z refinement per day that each file's
-        // rectangle is a few cells in BOTH dimensions
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, inputBytes / 256).toString)
-        spark.conf.set("spark.graft.compact.zorderBy", "user_id,value")
-        Streaming.compactSink(spark, out, quiesced = true)
-      } finally {
-        prevTarget.fold(spark.conf
-          .unset("spark.graft.compact.targetFileBytes"))(v =>
-          spark.conf.set("spark.graft.compact.targetFileBytes", v))
-        prevZ.fold(spark.conf.unset("spark.graft.compact.zorderBy"))(v =>
-          spark.conf.set("spark.graft.compact.zorderBy", v))
-      }
+      // ~256 files: enough z refinement per day that each file's
+      // rectangle is a few cells in BOTH dimensions
+      Streaming.compactSink(spark, out, quiesced = true,
+        conf = Some(SinkConf.of(spark).copy(
+          targetFileBytes = math.max(1L, inputBytes / 256),
+          zorderBy = Seq("user_id", "value"))))
     }
     val ev = graft.Tables.events(spark, dir)
     val total = indexSinkStats(spark, sink, Seq("user_id", "value"))
@@ -1330,21 +1308,10 @@ object SinkStats {
       val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
-      val prevTarget =
-        spark.conf.getOption("spark.graft.compact.targetFileBytes")
-      val prevCluster = spark.conf.getOption("spark.graft.compact.clusterBy")
-      try {
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, inputBytes / 64).toString)
-        spark.conf.set("spark.graft.compact.clusterBy", "event_type")
-        Streaming.compactSink(spark, sink, quiesced = true)
-      } finally {
-        prevTarget.fold(spark.conf
-          .unset("spark.graft.compact.targetFileBytes"))(v =>
-          spark.conf.set("spark.graft.compact.targetFileBytes", v))
-        prevCluster.fold(spark.conf.unset("spark.graft.compact.clusterBy"))(
-          v => spark.conf.set("spark.graft.compact.clusterBy", v))
-      }
+      Streaming.compactSink(spark, sink, quiesced = true,
+        conf = Some(SinkConf.of(spark).copy(
+          targetFileBytes = math.max(1L, inputBytes / 64),
+          clusterBy = Seq("event_type"))))
     }
 
   /** Shared DEFAULT-layout sink for the TIMESTAMP band prover (q157):
@@ -1362,15 +1329,9 @@ object SinkStats {
       val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
-      val prevTarget =
-        spark.conf.getOption("spark.graft.compact.targetFileBytes")
-      try {
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, inputBytes / 512).toString)
-        Streaming.compactSink(spark, sink, quiesced = true)
-      } finally prevTarget.fold(spark.conf
-        .unset("spark.graft.compact.targetFileBytes"))(v =>
-        spark.conf.set("spark.graft.compact.targetFileBytes", v))
+      Streaming.compactSink(spark, sink, quiesced = true,
+        conf = Some(SinkConf.of(spark).copy(
+          targetFileBytes = math.max(1L, inputBytes / 512))))
     }
 
   /** q157 — TIMESTAMP band data skipping END TO END under the oracle
@@ -1415,7 +1376,7 @@ object SinkStats {
   }
 
   /** Shared AUTO-INDEXED, MUTATED sink for the q158 prover — built
-    * once with `spark.graft.{stats,bloom}.autoIndexColumns` set for
+    * once with stats and bloom auto-indexing ([[SinkConf]]) on for
     * the WHOLE lifecycle (ingest → clustered compaction → row-level
     * delete), so every epoch commit chains its own manifest emission
     * ([[Streaming]]'s autoIndexStats) and the artifact ends on a
@@ -1430,33 +1391,24 @@ object SinkStats {
       val f = fs(spark, sink)
       val inputBytes = Streaming.subdirs(spark, sink, "batch_id=")
         .map(d => f.getContentSummary(d._2).getLength).sum
-      val prev = Seq("spark.graft.compact.targetFileBytes",
-        "spark.graft.compact.clusterBy",
-        "spark.graft.stats.autoIndexColumns",
-        "spark.graft.bloom.autoIndexColumns")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, inputBytes / 512).toString)
-        spark.conf.set("spark.graft.compact.clusterBy", "user_id")
-        spark.conf.set("spark.graft.stats.autoIndexColumns", "user_id")
-        spark.conf.set("spark.graft.bloom.autoIndexColumns", "event_id")
-        Streaming.compactSink(spark, sink, quiesced = true)
-        // re-derive the sizing target from the COMPACTED epoch before
-        // the delete: the epoch's bytes differ materially from the
-        // batch's (clustering reorders event_id out of delta-encodable
-        // runs, native blooms add per-file pages), and a delete rewrite
-        // sized against the stale batch-derived target wrote ~17x the
-        // intended file count
-        val epochBytes = f.getContentSummary(new org.apache.hadoop.fs.Path(
-          s"$sink/epoch=${Streaming.listSinkEpochs(spark, sink).collect()
-            .map(_.getLong(0)).max}")).getLength
-        spark.conf.set("spark.graft.compact.targetFileBytes",
-          math.max(1L, epochBytes / 512).toString)
-        Streaming.deleteWhere(spark, sink, col("user_id") % 7 === 3)
-      } finally prev.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
+      val conf = SinkConf.of(spark).copy(
+        targetFileBytes = math.max(1L, inputBytes / 512),
+        clusterBy = Seq("user_id"),
+        statsAutoIndex = Seq("user_id"),
+        bloomAutoIndex = Seq("event_id"))
+      Streaming.compactSink(spark, sink, quiesced = true, conf = Some(conf))
+      // re-derive the sizing target from the COMPACTED epoch before
+      // the delete: the epoch's bytes differ materially from the
+      // batch's (clustering reorders event_id out of delta-encodable
+      // runs, native blooms add per-file pages), and a delete rewrite
+      // sized against the stale batch-derived target wrote ~17x the
+      // intended file count
+      val epochBytes = f.getContentSummary(new org.apache.hadoop.fs.Path(
+        s"$sink/epoch=${Streaming.listSinkEpochs(spark, sink).collect()
+          .map(_.getLong(0)).max}")).getLength
+      Streaming.deleteWhere(spark, sink, col("user_id") % 7 === 3,
+        conf = Some(conf.copy(
+          targetFileBytes = math.max(1L, epochBytes / 512))))
     }
 
   /** q158 — the AUTO-INDEX chain END TO END under the oracle hash,

@@ -94,9 +94,8 @@ object SnapshotDiff {
   private def changeFileDiff(spark: SparkSession, path: String,
       fromEpoch: Long, toEpoch: Long, keyCols: Seq[String],
       compareCols: Seq[String], valueCols: Seq[String],
-      tsCol: String): Option[DataFrame] = {
-    if (!spark.conf.getOption("spark.graft.cdc.useChangeFiles")
-      .forall(_.toBoolean)) return None
+      tsCol: String, conf: SinkConf): Option[DataFrame] = {
+    if (!conf.cdcUseChangeFiles) return None
     val retained = Streaming.listSinkEpochs(spark, path).collect()
       .map(_.getLong(0)).toSet
     if (!retained.contains(fromEpoch) || !retained.contains(toEpoch))
@@ -205,14 +204,15 @@ object SnapshotDiff {
     *    through [[Streaming.readSink]]`(atEpoch)` (a vacuumed epoch
     *    refuses loudly) and full-outer-joined on the key. Taken when
     *    any in-range epoch lacks its manifest (pre-r15 epochs, emission
-    *    disabled, a retention without `onRetire`, an insert epoch
+    *    disabled, a retention, an insert epoch
     *    whose by-reference batches were deleted by hand), when a
     *    requested column is missing from the recorded manifests (a
     *    rename crossed the range), or when
     *    `spark.graft.cdc.useChangeFiles=false` forces it. */
   def readSinkChanges(spark: SparkSession, path: String,
       fromEpoch: Long, toEpoch: Long, keyCols: Seq[String],
-      compareCols: Seq[String], tsCol: String = "ts"): DataFrame = {
+      compareCols: Seq[String], tsCol: String = "ts",
+      conf: Option[SinkConf] = None): DataFrame = {
     require(keyCols.nonEmpty, "readSinkChanges needs at least one key column")
     require(fromEpoch < toEpoch,
       s"readSinkChanges diffs an older snapshot against a newer one: " +
@@ -222,7 +222,7 @@ object SnapshotDiff {
     val valueCols = (compareCols :+ "day").distinct.filterNot(keyCols.contains)
     val cols = keyCols ++ valueCols
     changeFileDiff(spark, path, fromEpoch, toEpoch, keyCols,
-      compareCols, valueCols, tsCol).getOrElse {
+      compareCols, valueCols, tsCol, conf.getOrElse(SinkConf.of(spark))).getOrElse {
       snapshotJoinDiff(spark, path, fromEpoch, toEpoch, keyCols,
         compareCols, valueCols, cols, tsCol)
     }
@@ -361,29 +361,21 @@ object SnapshotDiff {
       // own manifests are the only ones the diff range reads)
       SharedArtifacts.cloneTo(spark, Streaming.sharedEventsBase(spark, dir),
         src)
-      val prevKeep = spark.conf.getOption("spark.graft.sink.keepEpochs")
-      val prevCf = spark.conf.getOption("spark.graft.sink.changeFiles")
-      spark.conf.set("spark.graft.sink.keepEpochs", "3")
-      spark.conf.set("spark.graft.sink.changeFiles", "true")
-      try {
-        Streaming.deleteWhere(spark, src, col("user_id") % 7 === 3)
-        val upd = ev.filter(col("event_id") % 3 === 0)
-          .withColumn("user_id", col("user_id") + 1000000L)
-        val ins = ev.filter(col("event_id") % 10 === 1)
-          .withColumn("event_id", col("event_id") + 1000000000L)
-        Streaming.upsertBatch(spark, src, upd.unionByName(ins),
-          Seq("event_id"))
-      } finally {
-        prevKeep match {
-          case Some(v) => spark.conf.set("spark.graft.sink.keepEpochs", v)
-          case None => spark.conf.unset("spark.graft.sink.keepEpochs")
-        }
-        prevCf match {
-          case Some(v) => spark.conf.set("spark.graft.sink.changeFiles", v)
-          case None => spark.conf.unset("spark.graft.sink.changeFiles")
-        }
-      }
+      val conf = Some(cdcConf(spark))
+      Streaming.deleteWhere(spark, src, col("user_id") % 7 === 3,
+        conf = conf)
+      val upd = ev.filter(col("event_id") % 3 === 0)
+        .withColumn("user_id", col("user_id") + 1000000L)
+      val ins = ev.filter(col("event_id") % 10 === 1)
+        .withColumn("event_id", col("event_id") + 1000000000L)
+      Streaming.upsertBatch(spark, src, upd.unionByName(ins),
+        Seq("event_id"), conf = conf)
     }
+
+  /** The shared CDC sources' lifecycle settings: three retained epochs
+    * and change manifests on, everything else from the session. */
+  private def cdcConf(spark: SparkSession): SinkConf =
+    SinkConf.of(spark).copy(keepEpochs = 3, changeFiles = true)
 
   /** The shared source's diff endpoints: the oldest retained epoch is
     * the pre-mutation snapshot (ingest compaction), the newest is the
@@ -453,22 +445,15 @@ object SnapshotDiff {
       dir: String): String =
     SharedArtifacts.once(spark, dir, "events_cdc_ingest") { src =>
       val ev = Tables.events(spark, dir)
-      val prev = Seq("spark.graft.sink.keepEpochs",
-        "spark.graft.sink.changeFiles")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.graft.sink.keepEpochs", "3")
-        spark.conf.set("spark.graft.sink.changeFiles", "true")
-        Streaming.writeBatchIdempotent(
-          ev.filter(pmod(col("event_id"), lit(2)) === 0), src, 0L)
-        Streaming.compactSink(spark, src, quiesced = true)
-        Streaming.writeBatchIdempotent(
-          ev.filter(pmod(col("event_id"), lit(2)) === 1), src, 1L)
-        Streaming.compactSink(spark, src, quiesced = true)
-        Streaming.deleteWhere(spark, src, col("user_id") % 7 === 3)
-      } finally prev.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
+      val conf = Some(cdcConf(spark))
+      Streaming.writeBatchIdempotent(
+        ev.filter(pmod(col("event_id"), lit(2)) === 0), src, 0L)
+      Streaming.compactSink(spark, src, quiesced = true, conf = conf)
+      Streaming.writeBatchIdempotent(
+        ev.filter(pmod(col("event_id"), lit(2)) === 1), src, 1L)
+      Streaming.compactSink(spark, src, quiesced = true, conf = conf)
+      Streaming.deleteWhere(spark, src, col("user_id") % 7 === 3,
+        conf = conf)
     }
 
   /** q159 — CDC ACROSS AN INGEST COMPACTION under the oracle hash,

@@ -200,11 +200,9 @@ object SqlSurface {
   def q114CtasBucketed(spark: SparkSession, dir: String): DataFrame = {
     val tbl = warehouseTable(spark, dir, "cust_orders")
     // Bucket count is the scaling lever: at 100 TB you'd size it so
-    // each bucket's key range fits an executor (thousands, not 8).
-    // spark.graft.buckets states that knob explicitly; 8 is the
-    // demonstration default at test SF.
-    val buckets = spark.conf.getOption("spark.graft.buckets")
-      .map(_.toInt).getOrElse(8)
+    // each bucket's key range fits an executor (thousands, not 8);
+    // 8 is the demonstration count at test SF.
+    val buckets = 8
     spark.sql(
       s"""CREATE TABLE $tbl USING PARQUET
          |CLUSTERED BY (o_custkey) SORTED BY (o_custkey)

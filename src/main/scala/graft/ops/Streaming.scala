@@ -550,10 +550,10 @@ object Streaming {
     *     upsertBatch, whose manifests are O(churn) by nature, the
     *     alter-normalize empty manifest, AND data-bearing compactions,
     *     whose churn is recorded BY REFERENCE (see below) at O(1)
-    *     metadata cost — no ingest byte is ever rewritten;
-    *   - `spark.graft.sink.changeFiles.onRetire` (default false) — a
-    *     snapshot-mode retention's expired rows recorded as deletes.
-    *     Off by default because retention is otherwise O(1) metadata.
+    *     metadata cost — no ingest byte is ever rewritten. A
+    *     retention ([[retireDays]]) never records churn: reading its
+    *     expired rows back would cost O(expired data) where retention
+    *     is otherwise O(1) metadata.
     *
     * INSERT epochs record churn BY REFERENCE (Delta CDF's add-only
     * commits do exactly this): a data-bearing compaction's change set
@@ -584,10 +584,6 @@ object Streaming {
     * prefix is reserved: mutation ops refuse a sink column colliding
     * with it, and the reader's fold bookkeeping stays collision-free. */
   private[ops] val CdcKindCol = "__cdc_kind"
-
-  private def changeFilesEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.sink.changeFiles")
-      .exists(_.toBoolean)
 
   /** Run a sink FILE WRITE with parquet timestamps as INT64
     * microseconds. This Spark build's session default is legacy INT96,
@@ -643,8 +639,8 @@ object Streaming {
         !(refManifest && c == CdcRefCol))
     require(clash.isEmpty,
       s"sink columns ${clash.mkString(", ")} collide with the reserved " +
-        "__cdc prefix of CDC change manifests - rename them or disable " +
-        "spark.graft.sink.changeFiles")
+        "__cdc prefix of CDC change manifests - rename them or " +
+        "disable spark.graft.sink.changeFiles")
     withMicrosTs(spark) {
       events.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(epochDir, ChangesDir).toString)
@@ -668,7 +664,7 @@ object Streaming {
     * manifest parquet dir has `_SUCCESS` but no part files, and reads
     * as an empty kind-only frame), None when it did not (epochs minted
     * before manifests existed, with emission disabled, or by an op
-    * that does not record churn — a retention without `onRetire`) —
+    * that does not record churn — a retention) —
     * None is the reader's signal to fall back to the snapshot join.
     *
     * BY-REFERENCE rows ([[CdcRefCol]] — insert epochs) resolve here:
@@ -734,43 +730,6 @@ object Streaming {
           .reduce(_.unionByName(_, allowMissingColumns = true))))
       }
     }
-  }
-
-  /** Snapshot-retention depth: the number of most-recent committed
-    * epochs kept on disk (`spark.graft.sink.keepEpochs`, default 1 =
-    * the pre-snapshot behavior: every lifecycle op retires its source
-    * epoch as soon as the new one commits).
-    *
-    * With K > 1 the sink gains SNAPSHOT GRACE and TIME TRAVEL:
-    *  - a reader constructed on epoch N keeps its files for K−1 more
-    *    lifecycle ops instead of racing the source retirement (the
-    *    reader-overlap window documented on [[compactSink]] closes for
-    *    any read that finishes within the grace depth);
-    *  - [[readSink]]'s `atEpoch` serves any retained epoch exactly
-    *    as-of its commit — `VERSION AS OF` over the sink.
-    *
-    * Mechanically, K > 1 flips the merge-move protocol into
-    * BY-REFERENCE mode: a lifecycle op still records the untouched
-    * days it owes from the previous epoch in its [[MergePlan]], but
-    * the plan becomes a DURABLE structure — nobody rolls it forward,
-    * the previous epoch stays intact as an immutable snapshot, and
-    * readers resolve each referenced day transitively down the
-    * committed-epoch chain ([[resolvedDays]]). Day directories MOVE
-    * (O(1) rename) only when an epoch falls below the retention
-    * horizon: [[retireEpochsLocked]] first MATERIALIZES the oldest
-    * retained epoch (pulls every day it still references up into its
-    * own directory and drops its plan) and only then deletes the
-    * expired epochs, so no retained snapshot ever dangles. Lowering K
-    * (even back to 1) is safe and collapses history at the next
-    * maintenance op ([[vacuumEpochs]] forces it). The marginal cost
-    * of an epoch of grace is metadata plus the TOUCHED days' data —
-    * untouched days are shared by reference — so grace is cheap
-    * exactly when mutations are day-local, the 100 TB steady state. */
-  private def keepEpochs(spark: SparkSession): Int = {
-    val k = spark.conf.getOption("spark.graft.sink.keepEpochs")
-      .map(_.toInt).getOrElse(1)
-    require(k >= 1, s"spark.graft.sink.keepEpochs must be >= 1, got $k")
-    k
   }
 
   /** Writer lease for the sink's BATCH WRITE path — the sibling of
@@ -1024,8 +983,7 @@ object Streaming {
 
   /** The `bloom_cols` value a fresh epoch commits ([[commitEpoch]]):
     * the bloom columns its own write emitted native filters for
-    * (the active `spark.graft.bloom.autoIndexColumns`,
-    * [[epochWriteOptions]]) UNIONED with the previous committed
+    * ([[SinkConf.bloomAutoIndex]], [[epochWriteOptions]]) UNIONED with the previous committed
     * epoch's record — moves and by-reference plans carry the previous
     * epoch's files forward untouched, so the union is what makes the
     * CURRENT epoch's single line a sound over-approximation for every
@@ -1033,9 +991,9 @@ object Streaming {
     * without the record (pre-record history) propagates None: coverage
     * there is unknowable and the index side must keep classifying per
     * file. */
-  private def mintedBloomCols(spark: SparkSession,
+  private def mintedBloomCols(conf: SinkConf,
       prev: Option[EpochMarker]): Option[Set[String]] = {
-    val own = bloomAutoCols(spark).toSet
+    val own = conf.bloomAutoIndex.toSet
     prev.fold(Option(own))(_.bloomCols.map(_ ++ own))
   }
 
@@ -1098,8 +1056,7 @@ object Streaming {
     val root = new org.apache.hadoop.fs.Path(path)
     f.mkdirs(root)
     val lock = new org.apache.hadoop.fs.Path(root, WriterLock)
-    val staleMs = spark.conf.getOption("spark.graft.writer.lockStaleMs")
-      .map(_.toLong).getOrElse(60L * 60 * 1000)
+    val staleMs = SinkConf.of(spark).writerLockStaleMs
     val cur = readWriterLock(f, lock)
     cur match {
       case Some((id, _, _)) if id != writerId =>
@@ -1188,28 +1145,26 @@ object Streaming {
   /** Run `body` holding the sink's [[CompactLock]]. Acquisition is
     * create-exclusive (`create(overwrite = false)` fails if the marker
     * exists); a fresh lock means another maintenance op is live and the
-    * call FAILS LOUDLY instead of racing it; a lock older than the
-    * staleness threshold belongs to a crashed holder and is stolen.
-    * Released on every exit — an exception from `body` means the op has
-    * stopped mutating, and crash recovery is the next run's job. */
-  private def withCompactorLock[T](spark: SparkSession, path: String)
-      (body: => T): T =
-    withFencedCompactorLock(spark, path)(_ => body)
-
-  /** [[withCompactorLock]] variant handing the body a FENCE CHECK to
-    * call immediately before its first irreversible mutation (an epoch
-    * commit, a directory retirement): re-verifies the lock still
-    * carries this session's token and aborts loudly if a steal
-    * displaced it mid-body — the last line of defense behind the
-    * identity-checked steal. */
-  private def withFencedCompactorLock[T](spark: SparkSession, path: String)
-      (body: (() => Unit) => T): T = {
+    * call FAILS LOUDLY instead of racing it; a lock older than
+    * [[SinkConf.compactLockStaleMs]] belongs to a crashed holder and is
+    * stolen. Released on every exit — an exception from `body` means the
+    * op has stopped mutating, and crash recovery is the next run's job.
+    *
+    * The body gets the call's [[SinkConf]] (`conf`, or the session's
+    * when None — read once, before the lock, so the staleness threshold
+    * and the body agree) and a FENCE CHECK to call immediately before
+    * its first irreversible mutation (an epoch commit, a directory
+    * retirement): it re-verifies the lock still carries this session's
+    * token and aborts loudly if a steal displaced it mid-body — the last
+    * line of defense behind the identity-checked steal. */
+  private def withFencedCompactorLock[T](spark: SparkSession, path: String,
+      conf: Option[SinkConf])(body: (SinkConf, () => Unit) => T): T = {
+    val c = conf.getOrElse(SinkConf.of(spark))
     val f = fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     f.mkdirs(root)
     val lock = new org.apache.hadoop.fs.Path(root, CompactLock)
-    val staleMs = spark.conf.getOption("spark.graft.compact.lockStaleMs")
-      .map(_.toLong).getOrElse(60L * 60 * 1000)
+    val staleMs = c.compactLockStaleMs
     val token = s"${java.util.UUID.randomUUID()}\n"
     def tryAcquire(): Boolean =
       try {
@@ -1292,7 +1247,7 @@ object Streaming {
     // release only a lock that still carries OUR token: a blanket
     // delete would release whatever lock exists at exit, including one
     // a later stealer legitimately holds after displacing us mid-body
-    try body(fenceCheck)
+    try body(c, fenceCheck)
     finally if (holdsOwnToken()) f.delete(lock, false)
   }
 
@@ -1493,8 +1448,9 @@ object Streaming {
     * already writing the new name conforms as a no-op. */
   def alterSink(spark: SparkSession, path: String,
       renames: Map[String, String] = Map.empty,
-      drops: Seq[String] = Seq.empty, tsCol: String = "ts"): Unit =
-    withFencedCompactorLock(spark, path) { fence =>
+      drops: Seq[String] = Seq.empty, tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Unit =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       require(renames.nonEmpty || drops.nonEmpty,
         "alterSink needs at least one rename or drop")
       val f = fs(spark, path)
@@ -1512,7 +1468,7 @@ object Streaming {
         "a column cannot be both renamed and dropped in one alter")
       require(renames.values.toSeq.distinct.size == renames.size,
         "two renames target the same new name")
-      val cur = readSink(spark, path, tsCol).columns.toSet
+      val cur = readSink(spark, path, tsCol, conf = Some(c)).columns.toSet
       renames.foreach { case (o, n) =>
         require(cur.contains(o), s"rename source '$o' is not in the " +
           s"sink schema (${cur.toSeq.sorted.mkString(", ")})")
@@ -1619,7 +1575,7 @@ object Streaming {
     * evaluated must not silently admit rows). Holds [[CompactLock]]. */
   def addSinkCheck(spark: SparkSession, path: String, name: String,
       sql: String): Unit =
-    withFencedCompactorLock(spark, path) { fence =>
+    withFencedCompactorLock(spark, path, None) { (_, fence) =>
       require(name.matches("[A-Za-z][A-Za-z0-9_]*"),
         s"check name '$name' must be an identifier " +
           "([A-Za-z][A-Za-z0-9_]*)")
@@ -1662,7 +1618,7 @@ object Streaming {
     * Holds [[CompactLock]]. */
   def dropSinkCheck(spark: SparkSession, path: String,
       name: String): Unit =
-    withFencedCompactorLock(spark, path) { fence =>
+    withFencedCompactorLock(spark, path, None) { (_, fence) =>
       val f = fs(spark, path)
       val existing = readChecks(f, path)
       require(existing.exists(_._1 == name),
@@ -1678,17 +1634,6 @@ object Streaming {
   def listSinkChecks(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     readChecks(fs(spark, path), path).toDF("name", "predicate")
-  }
-
-  /** `spark.graft.sink.checkMode`: `refuse` (default) or
-    * `quarantine`; anything else refuses loudly. */
-  private def checkModeOf(spark: SparkSession): String = {
-    val m = spark.conf.getOption("spark.graft.sink.checkMode")
-      .getOrElse("refuse")
-    require(m == "refuse" || m == "quarantine",
-      s"spark.graft.sink.checkMode must be 'refuse' or 'quarantine', " +
-        s"got '$m'")
-    m
   }
 
   /** The per-check violation columns — ONE construction shared by the
@@ -1731,7 +1676,7 @@ object Streaming {
     * paid only on the rare flagged epoch (a cache here would leak
     * across the callers' commit boundaries for a constant-factor win
     * on the unhappy path). */
-  private def enforceChecks(spark: SparkSession, path: String,
+  private def enforceChecks(conf: SinkConf, path: String,
       incoming: DataFrame, checks: Seq[(String, String)], op: String)
       : (DataFrame, Option[DataFrame]) = {
     if (checks.isEmpty) return (incoming, None)
@@ -1739,7 +1684,7 @@ object Streaming {
     if (bad == 0L) return (incoming, None)
     val detail = perCheck.filter(_._2 > 0)
       .map { case (n, c) => s"$n: $c" }.mkString("; ")
-    require(checkModeOf(spark) == "quarantine",
+    require(conf.checkMode == "quarantine",
       s"$op over $path refused by CHECK constraint(s) [$detail] of " +
         s"$total incoming row(s) - rectify the feed, drop the check, " +
         "or set spark.graft.sink.checkMode=quarantine to divert")
@@ -1860,7 +1805,7 @@ object Streaming {
     * drained origin ids, oldest first. Holds [[CompactLock]]. */
   def clearSinkQuarantine(spark: SparkSession, path: String,
       throughEpoch: Long): Seq[Long] =
-    withFencedCompactorLock(spark, path) { fence =>
+    withFencedCompactorLock(spark, path, None) { (_, fence) =>
       val f = fs(spark, path)
       val cut = maxEpoch(spark, path)
       if (cut < 0) Seq.empty
@@ -1885,7 +1830,7 @@ object Streaming {
   /** Every day of committed epoch `epochId` paired with the directory
     * that PHYSICALLY holds it: the epoch's own `day=` children plus —
     * when a durable [[MergePlan]] is present (snapshot mode,
-    * [[keepEpochs]] > 1, or any mid-crash window) — each still-owed
+    * [[SinkConf.keepEpochs]] > 1, or any mid-crash window) — each still-owed
     * day resolved TRANSITIVELY down the committed-epoch chain (an
     * owed day may itself be owed by the source epoch, and so on;
     * plans always link an epoch to its immediate committed
@@ -2000,16 +1945,30 @@ object Streaming {
     f.delete(plan, false)
   }
 
-  /** Enforce the snapshot-retention depth: keep the [[keepEpochs]]
-    * newest committed epochs, MATERIALIZE the oldest retained one,
-    * delete the rest. Crash-ordered — materialize fully, then delete —
-    * so a death at any point leaves every retained epoch resolvable
-    * and the next call finishes the job. Caller holds [[CompactLock]].
-    * Returns the retired epoch ids, oldest first. */
+  /** Enforce the snapshot-retention depth: keep the
+    * [[SinkConf.keepEpochs]] newest committed epochs, MATERIALIZE the
+    * oldest retained one, delete the rest. Crash-ordered — materialize
+    * fully, then delete — so a death at any point leaves every retained
+    * epoch resolvable and the next call finishes the job. Caller holds
+    * [[CompactLock]]. Returns the retired epoch ids, oldest first.
+    *
+    * Mechanically, K > 1 flips the merge-move protocol into
+    * BY-REFERENCE mode: a lifecycle op still records the untouched
+    * days it owes from the previous epoch in its [[MergePlan]], but
+    * the plan becomes a DURABLE structure — nobody rolls it forward,
+    * the previous epoch stays intact as an immutable snapshot, and
+    * readers resolve each referenced day transitively down the
+    * committed-epoch chain ([[resolvedDays]]). Day directories MOVE
+    * (O(1) rename) only when an epoch falls below the retention
+    * horizon, here. Lowering K (even back to 1) is safe and collapses
+    * history at the next maintenance op ([[vacuumEpochs]] forces it).
+    * The marginal cost of an epoch of grace is metadata plus the
+    * TOUCHED days' data — untouched days are shared by reference — so
+    * grace is cheap exactly when mutations are day-local. */
   private def retireEpochsLocked(spark: SparkSession, path: String,
-      f: org.apache.hadoop.fs.FileSystem): Seq[Long] = {
+      f: org.apache.hadoop.fs.FileSystem, conf: SinkConf): Seq[Long] = {
     val committed = committedEpochs(spark, path)
-    val keep = keepEpochs(spark)
+    val keep = conf.keepEpochs
     if (committed.size <= keep) Seq.empty
     else {
       val victims = committed.dropRight(keep)
@@ -2092,9 +2051,10 @@ object Streaming {
     *
     * Returns the new max epoch (unchanged if nothing to do). */
   def compactSink(spark: SparkSession, path: String,
-      tsCol: String = "ts", quiesced: Boolean = false): Long =
-    withFencedCompactorLock(spark, path) { fence =>
-      compactLocked(spark, path, tsCol, quiesced, fence)
+      tsCol: String = "ts", quiesced: Boolean = false,
+      conf: Option[SinkConf] = None): Long =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
+      compactLocked(spark, path, tsCol, quiesced, fence, c)
     }
 
   /** Recovery step shared by every maintenance op: settle every epoch
@@ -2103,14 +2063,14 @@ object Streaming {
     * discard uncommitted attempts (which by construction hold no
     * moved-in days). */
   private def settleEpochs(spark: SparkSession, path: String,
-      f: org.apache.hadoop.fs.FileSystem): Unit = {
+      f: org.apache.hadoop.fs.FileSystem, conf: SinkConf): Unit = {
     // In snapshot mode (keepEpochs > 1) a committed epoch's plan is
     // the DURABLE by-reference structure, not a crashed move phase —
     // only classic mode rolls plans forward here. Ascending order
     // makes the single-level finishMoves total even over a plan CHAIN
     // left behind by a keepEpochs decrease: by the time an epoch is
     // processed, the epoch its plan references is already physical.
-    val rollForward = keepEpochs(spark) == 1
+    val rollForward = conf.keepEpochs == 1
     subdirs(spark, path, "epoch=").sortBy(_._1).foreach { case (_, p) =>
       if (!f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)))
         f.delete(p, true)
@@ -2124,9 +2084,9 @@ object Streaming {
     * `indexSinkBloom` discipline leaves open (every lifecycle op mints
     * an epoch whose stale manifest REFUSES pruned reads until a
     * re-index runs; correct-but-loud, and at 100 TB a maintenance step
-    * someone forgets). With `spark.graft.stats.autoIndexColumns`
-    * and/or `spark.graft.bloom.autoIndexColumns` set (comma-separated
-    * column lists), every epoch-minting op ends by re-indexing the
+    * someone forgets). With [[SinkConf.statsAutoIndex]] and/or
+    * [[SinkConf.bloomAutoIndex]] set, every epoch-minting op ends by
+    * re-indexing the
     * fresh epoch before the op returns — so a pruned read NEVER
     * observes a manifest-less epoch. Cost per op: stats re-index is
     * O(files) distributed footer reads — and so is the bloom re-index,
@@ -2138,11 +2098,10 @@ object Streaming {
     * Off by default (both confs unset = the manual discipline).
     * An epoch holding no data (retention emptied it) has nothing to
     * index and is skipped. */
-  private def autoIndexStats(spark: SparkSession, path: String): Unit = {
-    def confCols(key: String): Seq[String] = spark.conf.getOption(key)
-      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val statCols = confCols("spark.graft.stats.autoIndexColumns")
-    val bloomCols = confCols("spark.graft.bloom.autoIndexColumns")
+  private def autoIndexStats(spark: SparkSession, path: String,
+      conf: SinkConf): Unit = {
+    val statCols = conf.statsAutoIndex
+    val bloomCols = conf.bloomAutoIndex
     if (statCols.nonEmpty || bloomCols.nonEmpty) {
       val f = fs(spark, path)
       val e = maxEpoch(spark, path)
@@ -2158,12 +2117,12 @@ object Streaming {
     * normalize pass, delete and upsert affected-day rewrites) so no
     * lifecycle op silently destroys the sink's clustering layout:
     *
-    *  - optional zone-map clustering (`spark.graft.compact.clusterBy`,
-    *    comma-separated columns) inserted between the partition key
+    *  - optional zone-map clustering ([[SinkConf.clusterBy]])
+    *    inserted between the partition key
     *    and the ts tie-breaker, so each sized file covers a narrow
     *    range of the clustered columns and SinkStats' per-file min/max
     *    manifest can actually skip files;
-    *  - the multi-column variant (`spark.graft.compact.zorderBy`, ≥ 2
+    *  - the multi-column variant ([[SinkConf.zorderBy]], ≥ 2
     *    columns): a Morton-interleaved quantile-rank key so each sized
     *    file covers a small RECTANGLE across all named columns — zone
     *    maps then prune on any of them. Costs one approximate-quantile
@@ -2177,16 +2136,10 @@ object Streaming {
     * delete/upsert rewrites keyed on (day, ts) unconditionally — a
     * rename/drop normalize on a clustered sink destroyed the layout,
     * degrading skipping until the next data-bearing compaction. */
-  private def epochRangeKeys(spark: SparkSession, df: DataFrame,
+  private def epochRangeKeys(conf: SinkConf, df: DataFrame,
       tsCol: String): Seq[Column] = {
-    val clusterCols = spark.conf
-      .getOption("spark.graft.compact.clusterBy").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .filter(df.columns.contains(_)).map(col)
-    val zKey = spark.conf
-      .getOption("spark.graft.compact.zorderBy").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .filter(df.columns.contains(_)) match {
+    val clusterCols = conf.clusterBy.filter(df.columns.contains(_)).map(col)
+    val zKey = conf.zorderBy.filter(df.columns.contains(_)) match {
       case zc if zc.size >= 2 => Seq(SinkStats.zOrderKey(df, zc))
       case _ => Seq.empty
     }
@@ -2195,7 +2148,7 @@ object Streaming {
   }
 
   /** Writer options every epoch write carries: with
-    * `spark.graft.bloom.autoIndexColumns` set, the parquet writer
+    * [[SinkConf.bloomAutoIndex]] set, the parquet writer
     * emits its NATIVE per-chunk bloom filters for those columns
     * (adaptively sized to the chunk's actual distinct count) and
     * disables dictionary encoding on them — parquet skips the bloom
@@ -2204,12 +2157,8 @@ object Streaming {
     * there. This is what makes the auto bloom re-index O(files):
     * [[SinkStats.indexSinkBloom]] lifts the ready-made filters out of
     * the footers instead of re-scanning the epoch's data. */
-  private def bloomAutoCols(spark: SparkSession): Seq[String] =
-    spark.conf.getOption("spark.graft.bloom.autoIndexColumns")
-      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-
-  private def epochWriteOptions(spark: SparkSession): Map[String, String] = {
-    val cols = bloomAutoCols(spark)
+  private def epochWriteOptions(conf: SinkConf): Map[String, String] = {
+    val cols = conf.bloomAutoIndex
     if (cols.isEmpty) Map.empty
     else Map(
       "parquet.bloom.filter.adaptive.enabled" -> "true",
@@ -2278,14 +2227,15 @@ object Streaming {
   }
 
   private def compactLocked(spark: SparkSession, path: String,
-      tsCol: String, quiesced: Boolean, fence: () => Unit): Long = {
+      tsCol: String, quiesced: Boolean, fence: () => Unit,
+      conf: SinkConf): Long = {
     val f = fs(spark, path)
     // fence BEFORE the first irreversible mutation: settleEpochs deletes
     // uncommitted epoch attempts, and a displaced holder (stalled past
     // staleness, lock since stolen) running it would delete the NEW
     // holder's in-flight attempt out from under its commit
     fence()
-    settleEpochs(spark, path, f) // recovery step 1
+    settleEpochs(spark, path, f, conf) // recovery step 1
     val before = maxEpoch(spark, path)
     // recovery step 2: committed epochs past the retention depth are
     // fully represented in the retained ones (re-compaction folds
@@ -2298,7 +2248,7 @@ object Streaming {
     val prev = epochMarker(f, path, before)
     val wm = prev.fold(-1L)(_.watermark)
     fence() // about to retire subsumed epochs/batches: last exit
-    retireEpochsLocked(spark, path, f)
+    retireEpochsLocked(spark, path, f, conf)
     settleChangeRefs(spark, path, f, wm)
     // pending rename/drop: normalize it PHYSICALLY in this rewrite -
     // every input (batches and previous epoch) conforms to the logical
@@ -2323,35 +2273,30 @@ object Streaming {
         alterRen, alterDrop)
       val epoch = before + 1
       val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
-      val targetBytes = spark.conf
-        .getOption("spark.graft.compact.targetFileBytes")
-        .map(_.toLong).getOrElse(128L << 20)
       val inputBytes =
         prevDays.map(d => f.getContentSummary(d._2).getLength).sum
-      val k = math.min(32768L, math.max(
-        math.min(prevDays.size.toLong, 1024L),
-        (inputBytes + targetBytes - 1) / targetBytes)).toInt
+      val k = conf.writers(inputBytes, math.min(prevDays.size.toLong, 1024L))
       withMicrosTs(spark) {
-        src.repartitionByRange(k, epochRangeKeys(spark, src, tsCol): _*)
-          .write.mode("overwrite").options(epochWriteOptions(spark))
+        src.repartitionByRange(k, epochRangeKeys(conf, src, tsCol): _*)
+          .write.mode("overwrite").options(epochWriteOptions(conf))
           .partitionBy("day")
           .parquet(epochDir.toString)
       }
       // a rename/drop changes representation, not rows: an EMPTY
       // manifest keeps CDC ranges crossing this epoch on the O(churn)
       // path ("nothing changed" ≠ "churn not recorded")
-      if (changeFilesEnabled(spark))
+      if (conf.changeFiles)
         writeEpochChanges(spark, epochDir,
           src.limit(0).withColumn(CdcKindCol, lit("insert")))
       carryQuarantine(spark, f, path, before, epochDir, alterRen, alterDrop)
       fence()
       // all-days rewrite: the written frame IS the epoch's full width
       commitEpoch(f, epochDir, wm, "compact",
-        mintedBloomCols(spark, prev), prev,
+        mintedBloomCols(conf, prev), prev,
         Some(mintSchema(src.schema, None)))
       f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false)
-      retireEpochsLocked(spark, path, f)
-      autoIndexStats(spark, path)
+      retireEpochsLocked(spark, path, f, conf)
+      autoIndexStats(spark, path, conf)
       epoch
     }
     // input selection: committed batches only, max live id held back
@@ -2428,7 +2373,7 @@ object Streaming {
     // exactly the working set a compaction owns; unpersisted in the
     // finally below.
     val (fresh, quarRows) =
-      enforceChecks(spark, path, fresh0d, readChecks(f, path), "compaction")
+      enforceChecks(conf, path, fresh0d, readChecks(f, path), "compaction")
     fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val prevNarrow = prevSchema.exists(s =>
@@ -2462,17 +2407,12 @@ object Streaming {
     // file creations, so the floor buys cross-day write parallelism
     // while a hot day still spans multiple (day, tsCol) ranges and
     // writes through that many sized files (see scaladoc)
-    val targetBytes = spark.conf
-      .getOption("spark.graft.compact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     val inputBytes = (withData.map(_._2) ++ overlap.map(_._2))
       .map(p => f.getContentSummary(p).getLength).sum
-    val k = math.min(32768L, math.max(
-      math.min(freshDays.size.toLong, 1024L),
-      (inputBytes + targetBytes - 1) / targetBytes)).toInt
+    val k = conf.writers(inputBytes, math.min(freshDays.size.toLong, 1024L))
     withMicrosTs(spark) {
-      merged.repartitionByRange(k, epochRangeKeys(spark, merged, tsCol): _*)
-        .write.mode("overwrite").options(epochWriteOptions(spark))
+      merged.repartitionByRange(k, epochRangeKeys(conf, merged, tsCol): _*)
+        .write.mode("overwrite").options(epochWriteOptions(conf))
           .partitionBy("day")
         .parquet(epochDir.toString)
     }
@@ -2496,7 +2436,7 @@ object Streaming {
     // dirs hold rows that did NOT insert, and a reader resolving them
     // would serve phantom inserts — so that (rare, already-flagged)
     // epoch pays the row-copy manifest of exactly the admitted rows.
-    if (changeFilesEnabled(spark)) {
+    if (conf.changeFiles) {
       if (quarRows.isEmpty) {
         import spark.implicits._
         writeEpochChanges(spark, epochDir,
@@ -2523,7 +2463,7 @@ object Streaming {
     // in moved days writes a merged frame NARROWER than the epoch it
     // mints (the moved days still carry those columns)
     commitEpoch(f, epochDir, consumed, "compact",
-      mintedBloomCols(spark, prev), prev,
+      mintedBloomCols(conf, prev), prev,
       Some(mintSchema(merged.schema,
         Some(org.apache.spark.sql.types.StructType(target)))))
     // the alter is now physical: clear the marker. A crash between the
@@ -2535,20 +2475,20 @@ object Streaming {
     // classic mode: materialize the new epoch (transitive finishMoves)
     // and retire the source; snapshot mode: the plan stays durable and
     // only epochs past the retention depth retire
-    retireEpochsLocked(spark, path, f)
+    retireEpochsLocked(spark, path, f, conf)
     // batch retirement: a batch the change manifest holds by reference
     // MOVES under the epoch (its files are the recorded insert rows);
     // everything else deletes as before (including a quarantined
     // fold's batches — their admitted rows were manifested by copy)
     val refIds: Set[Long] =
-      if (changeFilesEnabled(spark) && quarRows.isEmpty)
+      if (conf.changeFiles && quarRows.isEmpty)
         withData.map(_._1).toSet
       else Set.empty
     live.foreach { case (id, p) =>
       if (refIds.contains(id)) moveRefInto(f, epochDir, p)
       else f.delete(p, true)
     }
-    autoIndexStats(spark, path)
+    autoIndexStats(spark, path, conf)
     epoch
     } finally fresh.unpersist(false)
   }
@@ -2998,7 +2938,7 @@ object Streaming {
     * every lifecycle op retired its source epoch at commit, so a
     * reader constructed on epoch N−1 raced the retirement and
     * `VERSION AS OF` was impossible): events compact into epoch E
-    * under `spark.graft.sink.keepEpochs = 2`, a GDPR-style
+    * under `keepEpochs = 2`, a GDPR-style
     * [[deleteWhere]] removes the `user_id % 7 = 3` cohort — minting
     * epoch E+1 while E survives as an immutable snapshot, its
     * untouched days shared BY REFERENCE through the now-durable merge
@@ -3013,35 +2953,29 @@ object Streaming {
     * nothing leaked from the rewrite, nothing lost with it — while
     * the current read serves exactly the post-delete table,
     * simultaneously, from one sink. Scratch-sink convention and
-    * determinism story are q115's; keepEpochs is restored on exit
-    * (the returned frame's directories are already pinned — no
-    * maintenance op runs between construction and the scan). */
+    * determinism story are q115's; keepEpochs = 2 is passed to the
+    * delete and the current read only, never set on the session. */
   def q134TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     // the delete MUTATES: clone the shared compacted base. Retention
-    // depth applies AT EACH OP's retire step, so setting keepEpochs
-    // only around the delete grants the clone's compact epoch exactly
-    // the same grace a keepEpochs-2 compaction would have
+    // depth applies AT EACH OP's retire step, so keepEpochs = 2 on the
+    // delete alone grants the clone's compact epoch exactly the same
+    // grace a keepEpochs-2 compaction would have; the current read
+    // takes it too, or its roll-forward would move the snapshot's days
+    val keep2 = Some(SinkConf.of(spark).copy(keepEpochs = 2))
     val sink = SharedArtifacts.cloneTo(spark, sharedEventsBase(spark, dir),
       scratchSink(spark, dir, "events_tt"))
-    val prevKeep = spark.conf.getOption("spark.graft.sink.keepEpochs")
-    spark.conf.set("spark.graft.sink.keepEpochs", "2")
-    try {
-      val snap = maxEpoch(spark, sink)
-      deleteWhere(spark, sink, col("user_id") % 7 === 3)
-      val before = readSink(spark, sink, atEpoch = Some(snap))
-        .select(col("day")).withColumn("version", lit("before"))
-      val after = readSink(spark, sink)
-        .select(col("day")).withColumn("version", lit("after"))
-      before.unionByName(after)
-        .groupBy(col("day"))
-        .agg(
-          count(when(col("version") === "before", lit(1))).as("n_before"),
-          count(when(col("version") === "after", lit(1))).as("n_after"))
-        .orderBy("day")
-    } finally prevKeep match {
-      case Some(v) => spark.conf.set("spark.graft.sink.keepEpochs", v)
-      case None => spark.conf.unset("spark.graft.sink.keepEpochs")
-    }
+    val snap = maxEpoch(spark, sink)
+    deleteWhere(spark, sink, col("user_id") % 7 === 3, conf = keep2)
+    val before = readSink(spark, sink, atEpoch = Some(snap))
+      .select(col("day")).withColumn("version", lit("before"))
+    val after = readSink(spark, sink, conf = keep2)
+      .select(col("day")).withColumn("version", lit("after"))
+    before.unionByName(after)
+      .groupBy(col("day"))
+      .agg(
+        count(when(col("version") === "before", lit(1))).as("n_before"),
+        count(when(col("version") === "after", lit(1))).as("n_after"))
+      .orderBy("day")
   }
 
   /** q161 — TIMESTAMP-AS-OF time travel END TO END under the oracle
@@ -3065,37 +2999,31 @@ object Streaming {
     * story are q115's. */
   def q161TimestampAsOf(spark: SparkSession, dir: String): DataFrame = {
     // the delete MUTATES: clone the shared compacted base (q134's
-    // keepEpochs dance — the grace depth applies at the delete's
-    // retire step)
+    // keepEpochs = 2 — the grace depth applies at the delete's retire
+    // step; both reads are atEpoch reads, which never roll forward)
     val sink = SharedArtifacts.cloneTo(spark, sharedEventsBase(spark, dir),
       scratchSink(spark, dir, "events_tsof"))
-    val prevKeep = spark.conf.getOption("spark.graft.sink.keepEpochs")
-    spark.conf.set("spark.graft.sink.keepEpochs", "2")
-    try {
-      val snap = maxEpoch(spark, sink)
-      val cur = deleteWhere(spark, sink, col("user_id") % 7 === 3)
-      val f = fs(spark, sink)
-      val tSnap = epochMintMsOf(f, sink, snap)
-      val tCur = epochMintMsOf(f, sink, cur)
-      require(tSnap.isDefined && tCur.isDefined && tCur.get > tSnap.get,
-        s"q161: expected strictly increasing mint records, got " +
-          s"$tSnap -> $tCur")
-      // mint(E+1) − 1 ≥ mint(E) by strict monotonicity: always a
-      // resolvable instant, and always epoch E
-      val before = readSinkAsOf(spark, sink, tCur.get - 1)
-        .select(col("day")).withColumn("version", lit("before"))
-      val after = readSinkAsOf(spark, sink, tCur.get)
-        .select(col("day")).withColumn("version", lit("after"))
-      before.unionByName(after)
-        .groupBy(col("day"))
-        .agg(
-          count(when(col("version") === "before", lit(1))).as("n_before"),
-          count(when(col("version") === "after", lit(1))).as("n_after"))
-        .orderBy("day")
-    } finally prevKeep match {
-      case Some(v) => spark.conf.set("spark.graft.sink.keepEpochs", v)
-      case None => spark.conf.unset("spark.graft.sink.keepEpochs")
-    }
+    val snap = maxEpoch(spark, sink)
+    val cur = deleteWhere(spark, sink, col("user_id") % 7 === 3,
+      conf = Some(SinkConf.of(spark).copy(keepEpochs = 2)))
+    val f = fs(spark, sink)
+    val tSnap = epochMintMsOf(f, sink, snap)
+    val tCur = epochMintMsOf(f, sink, cur)
+    require(tSnap.isDefined && tCur.isDefined && tCur.get > tSnap.get,
+      s"q161: expected strictly increasing mint records, got " +
+        s"$tSnap -> $tCur")
+    // mint(E+1) − 1 ≥ mint(E) by strict monotonicity: always a
+    // resolvable instant, and always epoch E
+    val before = readSinkAsOf(spark, sink, tCur.get - 1)
+      .select(col("day")).withColumn("version", lit("before"))
+    val after = readSinkAsOf(spark, sink, tCur.get)
+      .select(col("day")).withColumn("version", lit("after"))
+    before.unionByName(after)
+      .groupBy(col("day"))
+      .agg(
+        count(when(col("version") === "before", lit(1))).as("n_before"),
+        count(when(col("version") === "after", lit(1))).as("n_after"))
+      .orderBy("day")
   }
 
   /** q162 — RESTORE (write-side time travel) END TO END under the
@@ -3121,40 +3049,35 @@ object Streaming {
     * story are q115's. */
   def q162RestoreSink(spark: SparkSession, dir: String): DataFrame = {
     // the delete MUTATES: clone the shared compacted base (q134's
-    // keepEpochs dance — the grace depth applies at each op's retire
+    // keepEpochs = 2 — the grace depth applies at each op's retire
     // step, and K=2 is the tightest depth that keeps the restore's
     // TARGET alive until the restore commits: {E, E+1} after the
     // delete, {E+1, E+2} after the restore itself retires E)
+    val keep2 = Some(SinkConf.of(spark).copy(keepEpochs = 2))
     val sink = SharedArtifacts.cloneTo(spark, sharedEventsBase(spark, dir),
       scratchSink(spark, dir, "events_restore"))
-    val prevKeep = spark.conf.getOption("spark.graft.sink.keepEpochs")
-    spark.conf.set("spark.graft.sink.keepEpochs", "2")
-    try {
-      val snap = maxEpoch(spark, sink)
-      val deleted = deleteWhere(spark, sink, col("user_id") % 7 === 3)
-      val cur = restoreSink(spark, sink, snap)
-      // an empty cohort (possible on a custom SF slice) makes both ops
-      // documented no-ops — the query still answers, like q134, with
-      // restored == deleted == the full table, exactly the oracle's
-      // complement when no row matches
-      require(
-        if (deleted == snap) cur == snap else cur == deleted + 1,
-        s"q162: delete minted $deleted from $snap but the restore " +
-          s"returned $cur")
-      val restored = readSink(spark, sink)
-        .select(col("day")).withColumn("version", lit("restored"))
-      val reverted = readSink(spark, sink, atEpoch = Some(deleted))
-        .select(col("day")).withColumn("version", lit("deleted"))
-      restored.unionByName(reverted)
-        .groupBy(col("day"))
-        .agg(
-          count(when(col("version") === "restored", lit(1))).as("n_restored"),
-          count(when(col("version") === "deleted", lit(1))).as("n_deleted"))
-        .orderBy("day")
-    } finally prevKeep match {
-      case Some(v) => spark.conf.set("spark.graft.sink.keepEpochs", v)
-      case None => spark.conf.unset("spark.graft.sink.keepEpochs")
-    }
+    val snap = maxEpoch(spark, sink)
+    val deleted =
+      deleteWhere(spark, sink, col("user_id") % 7 === 3, conf = keep2)
+    val cur = restoreSink(spark, sink, snap, conf = keep2)
+    // an empty cohort (possible on a custom SF slice) makes both ops
+    // documented no-ops — the query still answers, like q134, with
+    // restored == deleted == the full table, exactly the oracle's
+    // complement when no row matches
+    require(
+      if (deleted == snap) cur == snap else cur == deleted + 1,
+      s"q162: delete minted $deleted from $snap but the restore " +
+        s"returned $cur")
+    val restored = readSink(spark, sink, conf = keep2)
+      .select(col("day")).withColumn("version", lit("restored"))
+    val reverted = readSink(spark, sink, atEpoch = Some(deleted))
+      .select(col("day")).withColumn("version", lit("deleted"))
+    restored.unionByName(reverted)
+      .groupBy(col("day"))
+      .agg(
+        count(when(col("version") === "restored", lit(1))).as("n_restored"),
+        count(when(col("version") === "deleted", lit(1))).as("n_deleted"))
+      .orderBy("day")
   }
 
   /** q163 — CHECK constraints + quarantine END TO END under the oracle
@@ -3186,11 +3109,8 @@ object Streaming {
       writeBatchIdempotent(Tables.events(spark, dir), out, 0L)
       addSinkCheck(spark, out, "no_purchase_events",
         "event_type <> 'purchase'")
-      val prevMode = spark.conf.getOption("spark.graft.sink.checkMode")
-      spark.conf.set("spark.graft.sink.checkMode", "quarantine")
-      try compactSink(spark, out, quiesced = true)
-      finally prevMode.fold(spark.conf.unset("spark.graft.sink.checkMode"))(
-        spark.conf.set("spark.graft.sink.checkMode", _))
+      compactSink(spark, out, quiesced = true,
+        conf = Some(SinkConf.of(spark).copy(checkMode = "quarantine")))
     }
     val clean = readSink(spark, sink)
       .select(col("day")).withColumn("side", lit("clean"))
@@ -3236,7 +3156,7 @@ object Streaming {
     * The frame is otherwise a SNAPSHOT of the directories present at
     * construction: a compaction that retires them mid-read fails the
     * scan (see [[compactSink]]'s reader-overlap note) — unless the
-    * sink runs with [[keepEpochs]] > 1, whose grace depth keeps the
+    * sink runs with [[SinkConf.keepEpochs]] > 1, whose grace depth keeps the
     * pinned epoch's files alive for K−1 further lifecycle ops.
     *
     * TIME TRAVEL: `atEpoch = Some(n)` serves retained committed epoch
@@ -3247,7 +3167,8 @@ object Streaming {
     * what IS retained; retain more history by raising
     * `spark.graft.sink.keepEpochs`. */
   def readSink(spark: SparkSession, path: String,
-      tsCol: String = "ts", atEpoch: Option[Long] = None): DataFrame = {
+      tsCol: String = "ts", atEpoch: Option[Long] = None,
+      conf: Option[SinkConf] = None): DataFrame = {
     val f = fs(spark, path)
     // pending rename/drop: every view this reader serves — current,
     // time-travel, each live batch — conforms to the LOGICAL schema
@@ -3264,8 +3185,8 @@ object Streaming {
         val retained = committedEpochs(spark, path).map(_._1)
         s"epoch $id is not a committed retained epoch of $path " +
           s"(retained: ${retained.mkString("[", ", ", "]")}) - history " +
-          "past the grace depth is vacuumed; raise " +
-          "spark.graft.sink.keepEpochs to retain more"
+          "past the grace depth is vacuumed; " +
+          "raise spark.graft.sink.keepEpochs to retain more"
       })
       val frame = readEpochFrame(spark, f, path, id)
       require(frame.nonEmpty, s"epoch $id of $path holds no data")
@@ -3281,7 +3202,7 @@ object Streaming {
       else {
         val eDir = s"$path/epoch=$cut"
         val plan = new org.apache.hadoop.fs.Path(eDir, MergePlan)
-        if (f.exists(plan) && keepEpochs(spark) == 1)
+        if (f.exists(plan) && conf.getOrElse(SinkConf.of(spark)).keepEpochs == 1)
           try finishMoves(f, path,
             new org.apache.hadoop.fs.Path(eDir)) // reader roll-forward
           catch { case e: Exception =>
@@ -3375,8 +3296,8 @@ object Streaming {
       else
         s"TIMESTAMP AS OF $tsMillis over $path precedes the retention " +
           s"horizon (oldest retained epoch $oldest minted at " +
-          s"$oldestMint) - history before it is vacuumed; raise " +
-          "spark.graft.sink.keepEpochs to retain more"
+          s"$oldestMint) - history before it is vacuumed; " +
+          "raise spark.graft.sink.keepEpochs to retain more"
     })
     readSink(spark, path, tsCol, atEpoch = Some(resolved.max))
   }
@@ -3479,8 +3400,8 @@ object Streaming {
     * Null-day rows ([[NullDayDir]]) carry no date to age on and are
     * never retired by this op. Holds [[CompactLock]]. */
   def retireDays(spark: SparkSession, path: String,
-      olderThan: java.sql.Date): Seq[String] =
-    withFencedCompactorLock(spark, path) { fence =>
+      olderThan: java.sql.Date, conf: Option[SinkConf] = None): Seq[String] =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       val f = fs(spark, path)
       val cut = maxEpoch(spark, path)
       if (cut < 0) Seq.empty
@@ -3496,7 +3417,7 @@ object Streaming {
           s"retention over $path requires a quiesced compaction first: " +
             s"${liveCommitted.size} consumable live batch dir(s) would " +
             "resurrect retired days at the next compaction")
-        if (keepEpochs(spark) > 1) {
+        if (c.keepEpochs > 1) {
           // snapshot mode: retention MINTS an epoch whose plan lists
           // exactly the surviving days BY REFERENCE — O(1) metadata,
           // no directory touched, so every retained snapshot
@@ -3515,16 +3436,10 @@ object Streaming {
             f.mkdirs(epochDir)
             if (survivors.nonEmpty)
               writePlan(f, epochDir, cut, survivors)
-            // opt-in churn record ([[ChangesDir]]): the expired days'
-            // rows are this epoch's deletes, but reading them back
-            // turns an O(1)-metadata retention into an O(expired data)
-            // op, so the default is no manifest (fallback)
-            if (changeFilesEnabled(spark) && spark.conf
-              .getOption("spark.graft.sink.changeFiles.onRetire")
-              .exists(_.toBoolean))
-              writeEpochChanges(spark, epochDir,
-                readDays(spark, resolved.filter(d => victims.contains(d._1)))
-                  .withColumn(CdcKindCol, lit("delete")))
+            // no churn record ([[ChangesDir]]): the expired days' rows
+            // are this epoch's deletes, but reading them back would turn
+            // an O(1)-metadata retention into an O(expired data) op, so
+            // CDC ranges crossing a retention take the snapshot join
             // the retention mint carries the un-drained quarantine
             // feed like every other epoch-minting op - without this
             // the next readSinkQuarantine would serve an empty feed
@@ -3532,12 +3447,12 @@ object Streaming {
             carryQuarantine(spark, f, path, cut, epochDir)
             fence() // the commit makes the retention visible: last exit
             commitEpoch(f, epochDir, wm, "retire", // no batches consumed
-              mintedBloomCols(spark, prev), prev,
+              mintedBloomCols(c, prev), prev,
               // by-reference mint: content is the survivors of the
               // superseded epoch — its recorded schema carries forward
               prev.flatMap(_.schema))
-            retireEpochsLocked(spark, path, f)
-            autoIndexStats(spark, path)
+            retireEpochsLocked(spark, path, f, c)
+            autoIndexStats(spark, path, c)
             victims
           }
         } else {
@@ -3557,7 +3472,7 @@ object Streaming {
             require(f.delete(new org.apache.hadoop.fs.Path(eDir, d), true),
               s"could not delete $eDir/$d")
           }
-          if (victims.nonEmpty) autoIndexStats(spark, path)
+          if (victims.nonEmpty) autoIndexStats(spark, path, c)
           victims
         }
       }
@@ -3603,13 +3518,13 @@ object Streaming {
     * epoch (unchanged when nothing matched — a no-op delete mints no
     * epoch). */
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
-      tsCol: String = "ts"): Long =
-    withFencedCompactorLock(spark, path) { fence =>
+      tsCol: String = "ts", conf: Option[SinkConf] = None): Long =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       rewriteLocked(spark, path,
         df => df.filter(predicate),
         df => df.filter(!(predicate <=> lit(true))),
         df => df.filter(predicate).withColumn(CdcKindCol, lit("delete")),
-        "delete", tsCol, fence)
+        "delete", tsCol, fence, c)
     }
 
   /** Row-level delete by KEY SET — the form a CDC feed's `delete`
@@ -3625,19 +3540,20 @@ object Streaming {
     * The keys side is a CDC batch — small by contract — and AQE
     * broadcasts it; an empty key set is a no-op. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
-      keyCols: Seq[String], tsCol: String = "ts"): Long = {
+      keyCols: Seq[String], tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Long = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     val missing = keyCols.filterNot(keys.columns.contains)
     require(missing.isEmpty,
       s"delete key set lacks key column(s): ${missing.mkString(", ")}")
     val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
-    withFencedCompactorLock(spark, path) { fence =>
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       rewriteLocked(spark, path,
         df => df.join(distinctKeys, keyCols, "left_semi"),
         df => df.join(distinctKeys, keyCols, "left_anti"),
         df => df.join(distinctKeys, keyCols, "left_semi")
           .withColumn(CdcKindCol, lit("delete")),
-        "delete", tsCol, fence)
+        "delete", tsCol, fence, c)
     }
   }
 
@@ -3675,7 +3591,8 @@ object Streaming {
     * a downstream consumer replays it exactly. Returns the new max
     * epoch (unchanged when nothing matched). */
   def updateWhere(spark: SparkSession, path: String, predicate: Column,
-      sets: Seq[(String, Column)], tsCol: String = "ts"): Long = {
+      sets: Seq[(String, Column)], tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Long = {
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
     val dup = sets.groupBy(_._1).collect { case (c, vs) if vs.size > 1 => c }
     require(dup.isEmpty,
@@ -3705,7 +3622,7 @@ object Streaming {
       }
       out
     }
-    withFencedCompactorLock(spark, path) { fence =>
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       rewriteLocked(spark, path,
         df => { checkedSets(df.limit(0)); df.filter(predicate) },
         df => {
@@ -3733,7 +3650,7 @@ object Streaming {
             .unionByName(applySets(matched, predicate, sets)
               .withColumn(CdcKindCol, lit("update_post")))
         },
-        "update", tsCol, fence)
+        "update", tsCol, fence, c)
     }
   }
 
@@ -3767,10 +3684,10 @@ object Streaming {
   private def rewriteLocked(spark: SparkSession, path: String,
       matchOf: DataFrame => DataFrame, rewriteOf: DataFrame => DataFrame,
       cdcOf: DataFrame => DataFrame, op: String,
-      tsCol: String, fence: () => Unit): Long = {
+      tsCol: String, fence: () => Unit, conf: SinkConf): Long = {
     val f = fs(spark, path)
     fence() // settleEpochs deletes attempts: fence first (compactLocked's note)
-    settleEpochs(spark, path, f)
+    settleEpochs(spark, path, f, conf)
     val pendingAlter = readAlter(f, path)
     require(pendingAlter._1.isEmpty && pendingAlter._2.isEmpty,
       s"row-level $op over $path: a schema alter is pending - run " +
@@ -3818,20 +3735,15 @@ object Streaming {
     // exactly SQL DELETE's complement — or the anti-join) for a
     // delete; every row with the SET projection applied for an update
     val kept = rewriteOf(affectedFrame)
-    val targetBytes = spark.conf
-      .getOption("spark.graft.compact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     // sizing by the affected dirs' bytes is right for both shapes: a
     // delete's output is a strict subset of its input, an update's is
     // the same rows transformed
     val inputBytes =
       affectedDirs.map(d => f.getContentSummary(d._2).getLength).sum
-    val k = math.min(32768L, math.max(
-      math.min(affected.size.toLong, 1024L),
-      (inputBytes + targetBytes - 1) / targetBytes)).toInt
-    val sized = kept.repartitionByRange(k, epochRangeKeys(spark, kept, tsCol): _*)
+    val k = conf.writers(inputBytes, math.min(affected.size.toLong, 1024L))
+    val sized = kept.repartitionByRange(k, epochRangeKeys(conf, kept, tsCol): _*)
     withMicrosTs(spark) {
-      sized.write.mode("overwrite").options(epochWriteOptions(spark))
+      sized.write.mode("overwrite").options(epochWriteOptions(conf))
           .partitionBy("day")
         .parquet(epochDir.toString)
     }
@@ -3839,7 +3751,7 @@ object Streaming {
     // the matched rows ARE the op's change set (delete pre-images, or
     // update pre/post pairs), and reading them back is bounded by the
     // affected days the rewrite already pays for
-    if (changeFilesEnabled(spark))
+    if (conf.changeFiles)
       writeEpochChanges(spark, epochDir, cdcOf(affectedFrame))
     // untouched days move by the AFFECTED set, not the written set: an
     // affected day emptied by a delete was legitimately not written
@@ -3849,12 +3761,12 @@ object Streaming {
     carryQuarantine(spark, f, path, before, epochDir)
     fence() // the commit makes the rewrite visible: last exit
     commitEpoch(f, epochDir, wm, op, // no batches consumed
-      mintedBloomCols(spark, prev), prev,
+      mintedBloomCols(conf, prev), prev,
       // widened to the FULL epoch frame: an affected-days subset can
       // be narrower than the moved days' drift columns
       Some(mintSchema(kept.schema, Some(epochFrame.schema))))
-    retireEpochsLocked(spark, path, f)
-    autoIndexStats(spark, path)
+    retireEpochsLocked(spark, path, f, conf)
+    autoIndexStats(spark, path, conf)
     epoch
     } finally affectedFrame.unpersist(false)
   }
@@ -3925,11 +3837,12 @@ object Streaming {
     * and mints strictly after the epoch it supersedes. Holds
     * [[CompactLock]]. Returns the new max epoch (or the unchanged
     * current one for the no-op). */
-  def restoreSink(spark: SparkSession, path: String, toEpoch: Long): Long =
-    withFencedCompactorLock(spark, path) { fence =>
+  def restoreSink(spark: SparkSession, path: String, toEpoch: Long,
+      conf: Option[SinkConf] = None): Long =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
       val f = fs(spark, path)
       fence() // settleEpochs deletes attempts: fence first
-      settleEpochs(spark, path, f)
+      settleEpochs(spark, path, f, c)
       val before = maxEpoch(spark, path)
       // DEPTH-bounded, not marker-exists: a committed directory
       // lingering past the grace depth (crashed retirement, a lowered
@@ -3938,7 +3851,7 @@ object Streaming {
       // a silently truncated snapshot and then DELETE the moved days'
       // last copies at the retire step
       val committed = committedEpochs(spark, path).map(_._1)
-      val depthRetained = committed.takeRight(keepEpochs(spark))
+      val depthRetained = committed.takeRight(c.keepEpochs)
       require(depthRetained.contains(toEpoch),
         s"restoreSink over $path: epoch $toEpoch is not a committed " +
           s"retained epoch within the grace depth (restorable: " +
@@ -3996,12 +3909,12 @@ object Streaming {
         val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
         f.delete(epochDir, true) // discard an uncommitted crashed attempt
         f.mkdirs(epochDir)
-        val conf = spark.sparkContext.hadoopConfiguration
+        val hadoopConf = spark.sparkContext.hadoopConfiguration
         targetDays.foreach { case (d, p) =>
-          SharedArtifacts.linkOrCopyTree(conf, p,
+          SharedArtifacts.linkOrCopyTree(hadoopConf, p,
             new org.apache.hadoop.fs.Path(epochDir, d))
         }
-        if (changeFilesEnabled(spark))
+        if (c.changeFiles)
           writeEpochChanges(spark, epochDir,
             restoreChurn(spark, prevDays, targetDays))
         // the quarantine feed is operational state, not table state: a
@@ -4014,8 +3927,8 @@ object Streaming {
         val target = CommitLog.lenient(epochMarker(f, path, toEpoch))
         commitEpoch(f, epochDir, wm, "restore",
           target.flatMap(_.bloomCols), prev, target.flatMap(_.schema))
-        retireEpochsLocked(spark, path, f)
-        autoIndexStats(spark, path)
+        retireEpochsLocked(spark, path, f, c)
+        autoIndexStats(spark, path, c)
         epoch
       }
     }
@@ -4092,10 +4005,8 @@ object Streaming {
     * SURVIVES — state the merge key as non-null columns (as SQL MERGE
     * ON does). Duplicate keys WITHIN the batch are appended as-is
     * (dedup to last-write-wins upstream if the feed carries multiple
-    * versions). The keys side broadcasts by default (a CDC batch is
-    * small by contract); set `spark.graft.upsert.broadcastKeys=false`
-    * for a bulk backfill-sized batch and let AQE pick the join. An
-    * empty batch is a no-op; an empty sink makes the upsert a pure
+    * versions). The keys side always broadcasts (a CDC batch is small
+    * by contract). An empty batch is a no-op; an empty sink makes the upsert a pure
     * insert minting epoch 0.
     *
     * Rails mirror [[deleteWhere]]: consumable live batch dirs are
@@ -4104,9 +4015,10 @@ object Streaming {
     * batch is fine (its rows land after the merge's cut). Holds
     * [[CompactLock]]. Returns the new max epoch. */
   def upsertBatch(spark: SparkSession, path: String, batch: DataFrame,
-      keyCols: Seq[String], tsCol: String = "ts"): Long =
-    withFencedCompactorLock(spark, path) { fence =>
-      mergeLocked(spark, path, batch, None, keyCols, tsCol, fence)
+      keyCols: Seq[String], tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Long =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
+      mergeLocked(spark, path, batch, None, keyCols, tsCol, fence, c)
     }
 
   /** MERGE with deletes in ONE minted epoch — the CDC consumer's apply
@@ -4132,14 +4044,15 @@ object Streaming {
     * empty `batch` with matching deletes is a key-set delete in apply
     * clothing; both empty is a no-op. Returns the new max epoch. */
   def applyBatch(spark: SparkSession, path: String, deletes: DataFrame,
-      batch: DataFrame, keyCols: Seq[String], tsCol: String = "ts"): Long =
-    withFencedCompactorLock(spark, path) { fence =>
-      mergeLocked(spark, path, batch, Some(deletes), keyCols, tsCol, fence)
+      batch: DataFrame, keyCols: Seq[String], tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Long =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
+      mergeLocked(spark, path, batch, Some(deletes), keyCols, tsCol, fence, c)
     }
 
   private def mergeLocked(spark: SparkSession, path: String,
       batch: DataFrame, delSet: Option[DataFrame], keyCols: Seq[String],
-      tsCol: String, fence: () => Unit): Long = {
+      tsCol: String, fence: () => Unit, conf: SinkConf): Long = {
     // diagnostics name the PUBLIC entry point actually called — an
     // operator debugging a failed CDC apply must not be pointed at
     // upsertBatch (r17 advice)
@@ -4155,7 +4068,7 @@ object Streaming {
     }
     val f = fs(spark, path)
     fence() // settleEpochs deletes attempts: fence first (compactLocked's note)
-    settleEpochs(spark, path, f)
+    settleEpochs(spark, path, f, conf)
     val pendingAlter = readAlter(f, path)
     require(pendingAlter._1.isEmpty && pendingAlter._2.isEmpty,
       s"$opName over $path: a schema alter is pending - run " +
@@ -4195,11 +4108,7 @@ object Streaming {
     // key deleting its old sink row would turn a refused replacement
     // into a silent delete.
     val (incoming, quarRows) =
-      enforceChecks(spark, path, incoming0, readChecks(f, path), opName)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (spark.conf.getOption("spark.graft.upsert.broadcastKeys")
-        .forall(_.toBoolean)) broadcast(df)
-      else df
+      enforceChecks(conf, path, incoming0, readChecks(f, path), opName)
     // the match scan and the kept-row anti-join see the UNION of both
     // key sets (a deleted row and a replaced row leave the epoch the
     // same way); the manifest classification below keeps the two sets
@@ -4207,9 +4116,9 @@ object Streaming {
     // arm builds on the already-distinct upsert keys rather than
     // re-projecting (and re-broadcasting) the batch (r17 advice).
     val upsKeys = incoming.select(keyCols.map(col): _*).distinct()
-    val upsKeysB = maybeBroadcast(upsKeys)
+    val upsKeysB = broadcast(upsKeys)
     val keys = delKeys.fold(upsKeysB)(dk =>
-      maybeBroadcast(upsKeys.unionByName(dk).distinct()))
+      broadcast(upsKeys.unionByName(dk).distinct()))
     // previous-epoch days by RESOLVED physical location (snapshot mode
     // may hold days by reference; classic mode this is the listing)
     val prevDays: Seq[(String, org.apache.hadoop.fs.Path)] =
@@ -4283,9 +4192,6 @@ object Streaming {
     val kept = affectedFrame.map(_.join(keys, keyCols, "left_anti"))
     val epochRows =
       kept.fold(incoming)(_.unionByName(incoming, allowMissingColumns = true))
-    val targetBytes = spark.conf
-      .getOption("spark.graft.compact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     // size BOTH inputs: the affected epoch dirs AND the incoming batch
     // itself — a backfill-sized upsert into an empty/small sink would
     // otherwise derive k from ~0 epoch bytes and funnel multi-GB days
@@ -4307,13 +4213,11 @@ object Streaming {
     val inputBytes =
       affectedDirs.map(d => f.getContentSummary(d._2).getLength).sum +
         batchBytes
-    val k = math.min(32768L, math.max(
-      math.min(affected.size.toLong, 1024L),
-      (inputBytes + targetBytes - 1) / targetBytes)).toInt
+    val k = conf.writers(inputBytes, math.min(affected.size.toLong, 1024L))
     val sized = epochRows.repartitionByRange(k,
-      epochRangeKeys(spark, epochRows, tsCol): _*)
+      epochRangeKeys(conf, epochRows, tsCol): _*)
     withMicrosTs(spark) {
-      sized.write.mode("overwrite").options(epochWriteOptions(spark))
+      sized.write.mode("overwrite").options(epochWriteOptions(conf))
           .partitionBy("day")
         .parquet(epochDir.toString)
     }
@@ -4321,7 +4225,7 @@ object Streaming {
     // the replaced rows (pre-images) come from one more pass over the
     // matched days the merge already reads, the batch itself carries
     // the post-images, and matched-vs-new classifies update vs insert
-    if (changeFilesEnabled(spark)) {
+    if (conf.changeFiles) {
       val allCols = epochRows.columns.toSeq
       def conformEv(df: DataFrame): DataFrame =
         df.select(allCols.map(c =>
@@ -4334,11 +4238,7 @@ object Streaming {
         case Some(o) =>
           val mk = o.select(keyCols.map(col): _*).distinct()
             .withColumn("__cdc_m", lit(1))
-          val mkSide =
-            if (spark.conf.getOption("spark.graft.upsert.broadcastKeys")
-              .forall(_.toBoolean)) broadcast(mk)
-            else mk
-          conformEv(incoming).join(mkSide, keyCols, "left_outer")
+          conformEv(incoming).join(broadcast(mk), keyCols, "left_outer")
             .withColumn(CdcKindCol, when(col("__cdc_m").isNotNull,
               lit("update_post")).otherwise(lit("insert")))
             .select((allCols :+ CdcKindCol).map(col): _*)
@@ -4350,7 +4250,7 @@ object Streaming {
       // kind is del-matched ANTI upsert-keyed
       val delPre = delKeys.flatMap { dk =>
         affectedFrame.map(_
-          .join(maybeBroadcast(dk), keyCols, "left_semi")
+          .join(broadcast(dk), keyCols, "left_semi")
           .join(upsKeysB, keyCols, "left_anti"))
       }.map(d => conformEv(d).withColumn(CdcKindCol, lit("delete")))
       val upserts = olds match {
@@ -4368,12 +4268,12 @@ object Streaming {
     fence() // the commit makes the merge visible: last exit
     commitEpoch(f, epochDir, wm, // no batches consumed
       if (delKeys.isDefined) "apply" else "upsert",
-      mintedBloomCols(spark, prev), prev,
+      mintedBloomCols(conf, prev), prev,
       // widened to the FULL previous-epoch frame: the affected-days
       // subset can be narrower than the moved days' drift columns
       Some(mintSchema(epochRows.schema, prevFrame.map(_.schema))))
-    retireEpochsLocked(spark, path, f)
-    autoIndexStats(spark, path)
+    retireEpochsLocked(spark, path, f, conf)
+    autoIndexStats(spark, path, conf)
     epoch
     } finally affectedFrame.foreach(_.unpersist(false))
   }
@@ -4513,18 +4413,19 @@ object Streaming {
     *     keepEpochs-was-lowered case; see [[vacuumEpochs]] — gated on
     *     a lock-free listing, so the steady-state cron pays nothing);
     *  5. RE-INDEX ZONE MAPS (only with
-    *     `spark.graft.maintain.statsColumns` set): every lifecycle op
+    *     [[SinkConf.maintainStatsColumns]] set): every lifecycle op
     *     mints a new epoch and stales the previous `_file_stats`
     *     manifest, so "current epoch has no manifest" is exactly the
     *     re-index signal — [[SinkStats.indexSinkStats]] runs then, and
     *     a steady-state cron pays one existence check;
     *  6. RE-INDEX THE BLOOM (only with
-    *     `spark.graft.maintain.bloomColumn` set): the same staleness
+    *     [[SinkConf.maintainBloomColumn]] set): the same staleness
     *     signal for the `_file_bloom` point-lookup manifest —
     *     [[SinkStats.indexSinkBloom]]'s one data pass, the price every
     *     bloom index pays at write time.
     *
-    * Each step takes the maintenance lock itself; between steps
+    * Every step runs with the one `conf` this call read (the session's
+    * when None). Each step takes the maintenance lock itself; between steps
     * another actor may interleave (every op is standalone-safe, so
     * interleaving only re-orders work). Returns the actions taken,
     * e.g. `compacted=3`, `retired=day=2024-01-01`, `vacuumed=2` —
@@ -4534,7 +4435,9 @@ object Streaming {
       compactAfterBytes: Long = 1L << 30,
       retainDays: Option[Int] = None,
       quiesced: Boolean = false,
-      tsCol: String = "ts"): Seq[String] = {
+      tsCol: String = "ts",
+      conf: Option[SinkConf] = None): Seq[String] = {
+    val c = conf.getOrElse(SinkConf.of(spark))
     val f = fs(spark, path)
     val wm = racedWatermark(spark, path, f)
     val live = committedBatches(spark, path, wm)
@@ -4548,7 +4451,7 @@ object Streaming {
     }.sum
     val compacted =
       if (live.size >= compactAfterBatches || liveBytes >= compactAfterBytes) {
-        compactSink(spark, path, tsCol, quiesced)
+        compactSink(spark, path, tsCol, quiesced, Some(c))
         Seq(s"compacted=${live.size}")
       } else Seq.empty
     val retired = retainDays match {
@@ -4577,61 +4480,57 @@ object Streaming {
         else {
           val horizon = java.sql.Date.valueOf(
             days.map(_.toLocalDate).max.minusDays(n - 1L))
-          retireDays(spark, path, horizon).map(d => s"retired=$d")
+          retireDays(spark, path, horizon, Some(c)).map(d => s"retired=$d")
         }
       case None => Seq.empty
     }
     val vacuumed =
       if (!quiesced) Seq.empty
       else {
-        val swept = vacuumSink(spark, path, quiesced = true)
+        val swept = vacuumSink(spark, path, quiesced = true, Some(c))
         if (swept.isEmpty) Seq.empty else Seq(s"vacuumed=${swept.size}")
       }
     // 4. EPOCH VACUUM: enforce the snapshot-retention depth. Lifecycle
     // ops already enforce it as they commit, so this only fires after
-    // an operator LOWERED spark.graft.sink.keepEpochs — gated on a
-    // lock-free listing so the steady-state cron takes no extra lock.
+    // an operator LOWERED keepEpochs — gated on a lock-free listing
+    // so the steady-state cron takes no extra lock.
     val epochsVacuumed = {
       val excess = subdirs(spark, path, "epoch=").count { case (_, p) =>
         f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit))
-      } > keepEpochs(spark)
+      } > c.keepEpochs
       if (!excess) Seq.empty
       else {
-        val gone = vacuumEpochs(spark, path)
+        val gone = vacuumEpochs(spark, path, Some(c))
         if (gone.isEmpty) Seq.empty
         else Seq(s"epochs_vacuumed=${gone.size}")
       }
     }
-    // 5. ZONE-MAP REFRESH: with `spark.graft.maintain.statsColumns`
-    // set (comma-separated), re-derive the `_file_stats` manifest
+    // 5. ZONE-MAP REFRESH: with maintainStatsColumns set, re-derive
+    // the `_file_stats` manifest
     // whenever the CURRENT epoch lacks one — every lifecycle op mints
     // a new epoch and stales the old manifest (SinkStats refuses stale
     // reads), so "manifest missing on the current epoch" is exactly
     // the re-index signal, and a steady-state cron with nothing to do
     // pays one existence check
-    val statsIndexed = spark.conf
-      .getOption("spark.graft.maintain.statsColumns").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) match {
-      case Nil => Seq.empty
-      case statCols =>
+    val statsIndexed =
+      if (c.maintainStatsColumns.isEmpty) Seq.empty
+      else {
         val cut = maxEpoch(spark, path)
         val fresh = cut >= 0 && f.exists(new org.apache.hadoop.fs.Path(
           s"$path/epoch=$cut/_file_stats"))
         if (cut < 0 || fresh) Seq.empty
         else {
-          val n = SinkStats.indexSinkStats(spark, path, statCols)
+          val n = SinkStats.indexSinkStats(spark, path, c.maintainStatsColumns)
           Seq(s"stats_indexed=$n")
         }
-    }
+      }
     // 6. BLOOM REFRESH: the equality-skipping twin of step 5 —
-    // `spark.graft.maintain.bloomColumn` names the point-lookup key,
+    // maintainBloomColumn names the point-lookup key,
     // and "no _file_bloom on the current epoch" is the re-index signal
     // (O(files) footer reads when the epoch carries native parquet
     // blooms — see epochWriteOptions — one column-pruned data pass
     // for files without them)
-    val bloomIndexed = spark.conf
-      .getOption("spark.graft.maintain.bloomColumn").map(_.trim)
-      .filter(_.nonEmpty) match {
+    val bloomIndexed = c.maintainBloomColumn match {
       case None => Seq.empty
       case Some(bloomCol) =>
         val cut = maxEpoch(spark, path)
@@ -4648,16 +4547,17 @@ object Streaming {
   }
 
   /** Enforce the snapshot-retention depth on demand: keep the
-    * [[keepEpochs]] newest committed epochs, materialize the oldest
-    * retained one, delete the rest — the vacuum an operator runs (or
-    * [[maintainSink]] runs for them) after LOWERING
-    * `spark.graft.sink.keepEpochs`; every lifecycle op already
+    * [[SinkConf.keepEpochs]] newest committed epochs, materialize the
+    * oldest retained one, delete the rest — the vacuum an operator runs
+    * (or [[maintainSink]] runs for them) after LOWERING
+    * `keepEpochs`; every lifecycle op already
     * enforces the depth as it commits, so in steady state this is a
     * no-op. Returns the retired epoch ids, oldest first. Holds
     * [[CompactLock]]. */
-  def vacuumEpochs(spark: SparkSession, path: String): Seq[Long] =
-    withFencedCompactorLock(spark, path) { _ =>
-      retireEpochsLocked(spark, path, fs(spark, path))
+  def vacuumEpochs(spark: SparkSession, path: String,
+      conf: Option[SinkConf] = None): Seq[Long] =
+    withFencedCompactorLock(spark, path, conf) { (c, _) =>
+      retireEpochsLocked(spark, path, fs(spark, path), c)
     }
 
   /** The time-travel catalog: one row per RETAINED committed epoch —
@@ -4711,8 +4611,8 @@ object Streaming {
     * staleness horizon). Committed data is never touched. Returns the
     * removed names. Holds [[CompactLock]]. */
   def vacuumSink(spark: SparkSession, path: String,
-      quiesced: Boolean = false): Seq[String] =
-    withFencedCompactorLock(spark, path) { fence =>
+      quiesced: Boolean = false, conf: Option[SinkConf] = None): Seq[String] =
+    withFencedCompactorLock(spark, path, conf) { (_, fence) =>
       val f = fs(spark, path)
       val cut = maxEpoch(spark, path)
       val uncommittedEpochs = subdirs(spark, path, "epoch=").collect {

@@ -1739,13 +1739,9 @@ object TextOps {
     * per mutation (postings + df). At 100 TB bytes/128 MB dominates the
     * floor and nothing changes. */
   private def lexWriterTasks(spark: SparkSession, df: DataFrame): Int = {
-    val targetBytes = spark.conf
-      .getOption("spark.graft.compact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     val stat = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val bytes = if (stat >= BigInt(Long.MaxValue) / 2) 0L else stat.toLong
-    math.min(32768L, math.max(math.min(lexBuckets.toLong, 8L),
-      (bytes + targetBytes - 1) / targetBytes)).toInt
+    SinkConf.of(spark).writers(bytes, math.min(lexBuckets.toLong, 8L))
   }
 
   private val LexMarker = "_GEN_COMMIT_"

@@ -1201,17 +1201,14 @@ object VectorOps {
     * let a hot list span several sized writers; cid= pruning exact. */
   private def writeCodes(spark: SparkSession, codes: DataFrame,
       out: String, gen: Long): Unit = {
-    val targetBytes = spark.conf
-      .getOption("spark.graft.compact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     val stat = codes.queryExecution.optimizedPlan.stats.sizeInBytes
     val codeBytes =
       if (stat >= BigInt(Long.MaxValue) / 2) 0L else stat.toLong
     // floor min(lists, 8), not the list count: lists are a hash-space
     // constant (the lexical writers' r19 rationale) and the range keys
     // (cid, vec_id) keep ~1 file per cid dir at any task count
-    val k = math.min(32768L, math.max(math.min(ivfCentroids.toLong, 8L),
-      (codeBytes + targetBytes - 1) / targetBytes)).toInt
+    val k = SinkConf.of(spark).writers(codeBytes,
+      math.min(ivfCentroids.toLong, 8L))
     codes.repartitionByRange(k, col("cid"), col("vec_id"))
       .write.mode("overwrite").partitionBy("cid")
       .parquet(s"$out/codes/gen=$gen")

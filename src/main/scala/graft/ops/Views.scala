@@ -199,13 +199,10 @@ object Views {
     val root = new org.apache.hadoop.fs.Path(viewPath)
     val dir = new org.apache.hadoop.fs.Path(root, s"gen=$gen")
     f.delete(dir, true) // a previous refresher's uncommitted attempt
-    // a view is O(groups) — tiny next to its source; one writer per
-    // `spark.graft.view.writePartitions` (default 1) keeps the file
-    // count bounded, and a genuinely wide view (per-user keys) raises
-    // the conf rather than inheriting the shuffle partitioning
-    val parts = spark.conf
-      .getOption("spark.graft.view.writePartitions").map(_.toInt).getOrElse(1)
-    rows.repartition(parts).write.mode("overwrite").parquet(dir.toString)
+    // a view is O(groups) — tiny next to its source; ONE writer keeps
+    // the file count bounded instead of inheriting the shuffle
+    // partitioning
+    rows.repartition(1).write.mode("overwrite").parquet(dir.toString)
     CommitLog.write(f, root, s"$MarkerPrefix$gen",
       s"cursor=$cursor\nepoch=$epoch\nmode=$mode\n" +
         s"def=$fp\nreplaces=${replaces.mkString(",")}",

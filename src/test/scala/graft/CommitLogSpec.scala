@@ -227,4 +227,15 @@ class CommitLogSpec extends SparkSpecBase {
     assert(CommitLog.keyValues(Seq("a=1", "b", "a=2", "c=x=y")) ===
       Map("a" -> "1", "c" -> "x=y"))
   }
+
+  test("an atomic replace leaves only the marker in its directory") {
+    val root = tmpDir("clog_replace")
+    val f = CommitLog.fs(spark, root)
+    val dir = new Path(root)
+    CommitLog.write(f, dir, "_CHECKS", "a=x > 0", "checks failed",
+      atomicReplace = true)
+    CommitLog.write(f, dir, "_CHECKS", "a=x > 1", "checks failed",
+      atomicReplace = true)
+    assert(new File(root).list().toSeq === Seq("_CHECKS"))
+  }
 }

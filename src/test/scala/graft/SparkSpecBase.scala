@@ -6,18 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM per forked test run). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-side listing for the stored-index dir trees (the mains'
-      // setting): without it every index read in the lifecycle suites
-      // pays a multi-task listing job for ~100-200 tiny local dirs
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the mains' shared settings (driver-side index listing, UTC, ...)
+    // on four cores
+    val s = LocalSpark.builder(LocalSpark.settings(
+      Seq("spark.app.name" -> "graft-test"), cores = "4")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
