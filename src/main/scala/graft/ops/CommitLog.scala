@@ -138,6 +138,26 @@ private[graft] object CommitLog {
         dataDirs(g).foreach(f.delete(_, true))
         f.delete(new Path(root, s"$prefix$g"), false)
       }
+
+    /** Mint generation [[nextId]] — the one mutation path of every
+      * generation family: clear that id's `dataDirs` (a torn write left
+      * data but no marker, and its id comes round again — without the
+      * sweep the new marker would adopt, say, an orphan tombstone), run
+      * `writes` (each given the id) concurrently through [[Par.all]],
+      * install `<prefix><id>` holding `lines` LAST, and, when `lines`
+      * carry `replaces=`, [[retire]] what the new marker superseded.
+      * `failure` words the refusal of a failed install. Returns the id. */
+    def mint(dataDirs: Long => Seq[Path], lines: Seq[String],
+        failure: Long => String)(writes: (Long => Unit)*): Long = {
+      val gen = nextId
+      dataDirs(gen).foreach(f.delete(_, true))
+      Par.all(writes.map(w => () => w(gen)): _*)
+      write(f, root, s"$prefix$gen", lines.mkString("\n"), failure(gen))
+      val marker = Gen(gen, keyValues(lines))
+      if (marker.meta.contains("replaces"))
+        copy(all = all :+ marker).retire(dataDirs)
+      gen
+    }
   }
 
   /** The generation markers under `root`. `base`, when given, names a

@@ -800,14 +800,16 @@ object SinkStats {
     // footer sweep AND the scan, two passes where r15 paid one) when
     // "none native" is already PROVEN without opening a footer: the
     // column's physical type can't carry a parquet bloom, or the epoch
-    // commit's bloom_cols record ([[Streaming.epochBloomColsOf]] — a
+    // commit's bloom_cols record ([[Streaming.EpochMarker.bloomCols]] — a
     // transitive union over the epochs whose files this one resolves)
     // affirmatively excludes the column. A legacy epoch without the
     // record, or one whose record names the column, still classifies
     // PER FILE — a mixed epoch (native rewrites + moved-in foreign
     // days) needs the per-file answer, and the record is only ever an
     // over-approximation of what may be native, never of what is.
-    val knownBloomCols = Streaming.epochBloomColsOf(f, sink, e)
+    // (lenient: a wrong None costs the per-file pass, never correctness)
+    val knownBloomCols =
+      CommitLog.lenient(Streaming.epochMarker(f, sink, e).flatMap(_.bloomCols))
     val noneNative = expectedPhys.isEmpty ||
       knownBloomCols.exists(!_.contains(column))
     val classified: Seq[(String, String, Boolean)] =

@@ -948,21 +948,6 @@ object Streaming {
       Some(EpochMarker(epochId, file, lines))
     }
 
-  /** The `mint_ms=` record of committed epoch `epochId`, lenient: None
-    * for pre-record or unreadable-mid-race markers. The resolver
-    * refuses rather than guesses there (a guessed time would silently
-    * serve the wrong snapshot). */
-  private[graft] def epochMintMsOf(f: org.apache.hadoop.fs.FileSystem,
-      path: String, epochId: Long): Option[Long] =
-    CommitLog.lenient(epochMarker(f, path, epochId).flatMap(_.mintMs))
-
-  /** The `bloom_cols=` record of committed epoch `epochId`, lenient
-    * (see [[EpochMarker.bloomCols]]): a wrong None costs a footer pass
-    * or a per-file scan, never correctness. */
-  private[graft] def epochBloomColsOf(f: org.apache.hadoop.fs.FileSystem,
-      path: String, epochId: Long): Option[Set[String]] =
-    CommitLog.lenient(epochMarker(f, path, epochId).flatMap(_.bloomCols))
-
   /** The schema a fresh data-bearing epoch records: the written
     * frame's columns widened by-name to the full previous-epoch width
     * (an affected-days rewrite's frame can be narrower than the epoch
@@ -1152,11 +1137,13 @@ object Streaming {
     *
     * The body gets the call's [[SinkConf]] (`conf`, or the session's
     * when None — read once, before the lock, so the staleness threshold
-    * and the body agree) and a FENCE CHECK to call immediately before
-    * its first irreversible mutation (an epoch commit, a directory
-    * retirement): it re-verifies the lock still carries this session's
-    * token and aborts loudly if a steal displaced it mid-body — the last
-    * line of defense behind the identity-checked steal. */
+    * and the body agree) and a FENCE CHECK: it re-verifies the lock
+    * still carries this session's token and aborts loudly if a steal
+    * displaced it mid-body — the last line of defense behind the
+    * identity-checked steal. The epoch-minting ops call it through
+    * [[mutate]] (before settling) and [[Mutation.mint]] (before the
+    * commit); the others immediately before their first irreversible
+    * mutation. */
   private def withFencedCompactorLock[T](spark: SparkSession, path: String,
       conf: Option[SinkConf])(body: (SinkConf, () => Unit) => T): T = {
     val c = conf.getOrElse(SinkConf.of(spark))
@@ -1731,9 +1718,8 @@ object Streaming {
     * schema once the marker clears. */
   private def carryQuarantine(spark: SparkSession,
       f: org.apache.hadoop.fs.FileSystem, path: String, fromEpoch: Long,
-      epochDir: org.apache.hadoop.fs.Path,
-      alterRen: Map[String, String] = Map.empty,
-      alterDrop: Seq[String] = Seq.empty): Unit = {
+      epochDir: org.apache.hadoop.fs.Path, alterRen: Map[String, String],
+      alterDrop: Seq[String]): Unit = {
     if (fromEpoch < 0) return
     val src = new org.apache.hadoop.fs.Path(
       s"$path/epoch=$fromEpoch/$QuarantineDir")
@@ -2053,9 +2039,7 @@ object Streaming {
   def compactSink(spark: SparkSession, path: String,
       tsCol: String = "ts", quiesced: Boolean = false,
       conf: Option[SinkConf] = None): Long =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      compactLocked(spark, path, tsCol, quiesced, fence, c)
-    }
+    mutate(spark, path, conf)(compactLocked(spark, path, tsCol, quiesced, _))
 
   /** Recovery step shared by every maintenance op: settle every epoch
     * attempt — finish the move phase of committed epochs still
@@ -2063,19 +2047,121 @@ object Streaming {
     * discard uncommitted attempts (which by construction hold no
     * moved-in days). */
   private def settleEpochs(spark: SparkSession, path: String,
-      f: org.apache.hadoop.fs.FileSystem, conf: SinkConf): Unit = {
+      f: org.apache.hadoop.fs.FileSystem, conf: SinkConf,
+      rollPlans: Boolean): Unit = {
     // In snapshot mode (keepEpochs > 1) a committed epoch's plan is
     // the DURABLE by-reference structure, not a crashed move phase —
     // only classic mode rolls plans forward here. Ascending order
     // makes the single-level finishMoves total even over a plan CHAIN
     // left behind by a keepEpochs decrease: by the time an epoch is
     // processed, the epoch its plan references is already physical.
-    val rollForward = conf.keepEpochs == 1
+    val rollForward = rollPlans && conf.keepEpochs == 1
     subdirs(spark, path, "epoch=").sortBy(_._1).foreach { case (_, p) =>
       if (!f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit)))
         f.delete(p, true)
       else if (rollForward && f.exists(new org.apache.hadoop.fs.Path(p, MergePlan)))
         finishMoves(f, path, p)
+    }
+  }
+
+  /** The scaffold of every op that mints (or retires) epochs: take the
+    * [[CompactLock]], fence, [[settleEpochs]] (an uncommitted attempt
+    * at any id — above all at `max+1`, the id the op is about to mint —
+    * is discarded, never adopted), read the cut, and hand the body a
+    * [[Mutation]]. `rollPlans = false` settles without rolling classic
+    * mode's plans forward, for [[retireDays]], whose rail refuses a
+    * plan owing an expired day. */
+  private def mutate[T](spark: SparkSession, path: String,
+      conf: Option[SinkConf], rollPlans: Boolean = true)(
+      body: Mutation => T): T =
+    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
+      // fence BEFORE the first irreversible mutation: settleEpochs
+      // deletes uncommitted epoch attempts, and a displaced holder
+      // (stalled past staleness, lock since stolen) running it would
+      // delete the NEW holder's in-flight attempt out from under its
+      // commit
+      fence()
+      settleEpochs(spark, path, fs(spark, path), c, rollPlans)
+      body(new Mutation(spark, path, c, fence))
+    }
+
+  /** A settled sink under the lock, as [[mutate]] hands it to an op:
+    * the call's settings `c`, the cut — `before` (max committed epoch,
+    * −1 none), `prev` (its marker, read strictly) and `wm` (its
+    * consumed-batch watermark) — and the steps the ops share. */
+  private final class Mutation(spark: SparkSession, path: String,
+      val c: SinkConf, val fence: () => Unit) {
+    val f: org.apache.hadoop.fs.FileSystem = fs(spark, path)
+    val before: Long = maxEpoch(spark, path)
+    val prev: Option[EpochMarker] = epochMarker(f, path, before)
+    val wm: Long = prev.fold(-1L)(_.watermark)
+
+    def dir(epoch: Long) = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
+
+    /** The quiesced-batches rail: committed batches above the watermark
+      * hold rows no epoch represents yet. `refusal` words the op's
+      * message from their count. */
+    def requireQuiesced(refusal: Int => String): Unit = {
+      val live = committedBatches(spark, path, wm)
+      require(live.isEmpty, refusal(live.size))
+    }
+
+    /** The pending-alter rail of the ops whose per-day rewrite must see
+      * one physical schema. */
+    def requireNoAlter(refusal: String): Unit = {
+      val (ren, drop) = readAlter(f, path)
+      require(ren.isEmpty && drop.isEmpty, refusal)
+    }
+
+    /** Retire the committed epochs past the retention depth, fenced. */
+    def retire(): Seq[Long] = {
+      fence()
+      retireEpochsLocked(spark, path, f, c)
+    }
+
+    /** Commit `epochDir`, whose data, change manifest and plan are
+      * written, as `op` — the tail every mint shares, in order:
+      * carry the superseded epoch's quarantine feed in (rewritten
+      * through the `alter` a normalizing fold applies), fence (the
+      * commit makes the epoch visible: last exit), [[commitEpoch]],
+      * `afterCommit`, retire past the retention depth (classic mode
+      * materializes the new epoch and drops its source), `afterRetire`,
+      * [[autoIndexStats]]. A mint consumes no batch unless it says so:
+      * `consumed` defaults to the watermark it supersedes. */
+    def mint(epochDir: org.apache.hadoop.fs.Path, op: String,
+        schema: Option[org.apache.spark.sql.types.StructType],
+        consumed: Long = wm,
+        bloomCols: Option[Set[String]] = mintedBloomCols(c, prev),
+        alter: (Map[String, String], Seq[String]) = (Map.empty, Seq.empty),
+        afterCommit: () => Unit = () => (),
+        afterRetire: () => Unit = () => ()): Unit = {
+      carryQuarantine(spark, f, path, before, epochDir, alter._1, alter._2)
+      fence()
+      commitEpoch(f, epochDir, consumed, op, bloomCols, prev, schema)
+      afterCommit()
+      retireEpochsLocked(spark, path, f, c)
+      afterRetire()
+      autoIndexStats(spark, path, c)
+    }
+  }
+
+  /** The sized epoch writer every rewrite shares: `frame` shuffles once,
+    * range-partitioned on [[epochRangeKeys]] into enough writers that
+    * each writes ~`targetFileBytes` of `inputBytes`, floored at the
+    * `dayCount` (capped at 1024) so quiet days keep one PARALLEL writer
+    * each — a measured local[32] comparison showed a single coalesced
+    * writer serializing its per-day parquet file creations, so the
+    * floor buys cross-day write parallelism while a hot day still spans
+    * several (day, tsCol) ranges and writes that many sized files. */
+  private def writeEpochDays(frame: DataFrame,
+      epochDir: org.apache.hadoop.fs.Path, inputBytes: Long, dayCount: Int,
+      tsCol: String, conf: SinkConf): Unit = {
+    val k = conf.writers(inputBytes, math.min(dayCount.toLong, 1024L))
+    withMicrosTs(frame.sparkSession) {
+      frame.repartitionByRange(k, epochRangeKeys(conf, frame, tsCol): _*)
+        .write.mode("overwrite").options(epochWriteOptions(conf))
+        .partitionBy("day")
+        .parquet(epochDir.toString)
     }
   }
 
@@ -2227,28 +2313,18 @@ object Streaming {
   }
 
   private def compactLocked(spark: SparkSession, path: String,
-      tsCol: String, quiesced: Boolean, fence: () => Unit,
-      conf: SinkConf): Long = {
-    val f = fs(spark, path)
-    // fence BEFORE the first irreversible mutation: settleEpochs deletes
-    // uncommitted epoch attempts, and a displaced holder (stalled past
-    // staleness, lock since stolen) running it would delete the NEW
-    // holder's in-flight attempt out from under its commit
-    fence()
-    settleEpochs(spark, path, f, conf) // recovery step 1
-    val before = maxEpoch(spark, path)
-    // recovery step 2: committed epochs past the retention depth are
-    // fully represented in the retained ones (re-compaction folds
+      tsCol: String, quiesced: Boolean, m: Mutation): Long = {
+    import m.{before, f, prev, wm, c => conf}
+    // recovery step 1 is [[mutate]]'s settle. Step 2: committed epochs
+    // past the retention depth are fully represented in the retained
+    // ones (re-compaction folds
     // history forward; materialization pulls referenced days up before
     // any deletion) — retire them, and retire batch dirs already
     // folded into an epoch. "Folded" is decided by the epoch's
     // consumed-batch WATERMARK, not its id: a delete-minted epoch id
     // runs ahead of the batch counter, and comparing ids would retire
     // the next batches unconsumed.
-    val prev = epochMarker(f, path, before)
-    val wm = prev.fold(-1L)(_.watermark)
-    fence() // about to retire subsumed epochs/batches: last exit
-    retireEpochsLocked(spark, path, f, conf)
+    m.retire()
     settleChangeRefs(spark, path, f, wm)
     // pending rename/drop: normalize it PHYSICALLY in this rewrite -
     // every input (batches and previous epoch) conforms to the logical
@@ -2271,33 +2347,21 @@ object Streaming {
       val src = applyAlter(
         readDays(spark, prevDays, prev.flatMap(_.schema)),
         alterRen, alterDrop)
-      val epoch = before + 1
-      val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
-      val inputBytes =
-        prevDays.map(d => f.getContentSummary(d._2).getLength).sum
-      val k = conf.writers(inputBytes, math.min(prevDays.size.toLong, 1024L))
-      withMicrosTs(spark) {
-        src.repartitionByRange(k, epochRangeKeys(conf, src, tsCol): _*)
-          .write.mode("overwrite").options(epochWriteOptions(conf))
-          .partitionBy("day")
-          .parquet(epochDir.toString)
-      }
+      val epochDir = m.dir(before + 1)
+      writeEpochDays(src, epochDir,
+        prevDays.map(d => f.getContentSummary(d._2).getLength).sum,
+        prevDays.size, tsCol, conf)
       // a rename/drop changes representation, not rows: an EMPTY
       // manifest keeps CDC ranges crossing this epoch on the O(churn)
       // path ("nothing changed" ≠ "churn not recorded")
       if (conf.changeFiles)
         writeEpochChanges(spark, epochDir,
           src.limit(0).withColumn(CdcKindCol, lit("insert")))
-      carryQuarantine(spark, f, path, before, epochDir, alterRen, alterDrop)
-      fence()
       // all-days rewrite: the written frame IS the epoch's full width
-      commitEpoch(f, epochDir, wm, "compact",
-        mintedBloomCols(conf, prev), prev,
-        Some(mintSchema(src.schema, None)))
-      f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false)
-      retireEpochsLocked(spark, path, f, conf)
-      autoIndexStats(spark, path, conf)
-      epoch
+      m.mint(epochDir, "compact", Some(mintSchema(src.schema, None)),
+        alter = (alterRen, alterDrop), afterCommit = () =>
+          f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false))
+      before + 1
     }
     // input selection: committed batches only, max live id held back
     // unless the writer is quiesced (see scaladoc)
@@ -2329,7 +2393,7 @@ object Streaming {
     // (which advances the epoch counter without consuming batches) the
     // batch counter may lag the epoch counter
     val epoch = math.max(consumed, before + 1)
-    val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
+    val epochDir = m.dir(epoch)
     // previous-epoch days by RESOLVED physical location: identical to
     // a directory listing in classic mode (no plan), and in snapshot
     // mode it sees the days the epoch holds by reference too
@@ -2400,29 +2464,15 @@ object Streaming {
       else fresh.unionByName(
         conform(alterOf(readDays(spark, overlap, prevRecorded)), target),
         allowMissingColumns = true)
-    // size-aware writer count: enough range partitions that each writes
-    // ~targetFileBytes, floored at the (capped) day count so quiet days
-    // keep one PARALLEL writer each — a measured local[32] comparison
-    // showed a single coalesced writer serializing its per-day parquet
-    // file creations, so the floor buys cross-day write parallelism
-    // while a hot day still spans multiple (day, tsCol) ranges and
-    // writes through that many sized files (see scaladoc)
-    val inputBytes = (withData.map(_._2) ++ overlap.map(_._2))
-      .map(p => f.getContentSummary(p).getLength).sum
-    val k = conf.writers(inputBytes, math.min(freshDays.size.toLong, 1024L))
-    withMicrosTs(spark) {
-      merged.repartitionByRange(k, epochRangeKeys(conf, merged, tsCol): _*)
-        .write.mode("overwrite").options(epochWriteOptions(conf))
-          .partitionBy("day")
-        .parquet(epochDir.toString)
-    }
+    writeEpochDays(merged, epochDir, (withData.map(_._2) ++ overlap.map(_._2))
+      .map(p => f.getContentSummary(p).getLength).sum,
+      freshDays.size, tsCol, conf)
     // the epoch's quarantine: this fold's violators under their own
-    // origin subdir, plus the superseded epoch's un-drained feed
-    // carried forward by link — both pre-commit, atomic with the
-    // epoch; a normalizing fold rewrites the carried generations
-    // through the alter instead of linking
+    // origin subdir, plus (at the mint) the superseded epoch's
+    // un-drained feed carried forward by link — both pre-commit, atomic
+    // with the epoch; a normalizing fold rewrites the carried
+    // generations through the alter instead of linking
     quarRows.foreach(writeQuarantine(spark, epochDir, epoch, _))
-    carryQuarantine(spark, f, path, before, epochDir, alterRen, alterDrop)
     // churn record for ingest compactions ([[ChangesDir]]): BY
     // REFERENCE — the consumed batches ARE this epoch's inserts, and
     // they were about to be deleted anyway, so the manifest records
@@ -2457,25 +2507,6 @@ object Streaming {
     // (readers switch to this epoch, resolving owed days via the
     // plan), then perform the moves and retire the sources
     if (toMove.nonEmpty) writePlan(f, epochDir, before, toMove.map(_._1))
-    fence() // the commit makes the epoch visible: last exit
-    // record the WIDENED TARGET's width, not merged's: conform only
-    // casts, so an old-schema fold whose drift columns live entirely
-    // in moved days writes a merged frame NARROWER than the epoch it
-    // mints (the moved days still carry those columns)
-    commitEpoch(f, epochDir, consumed, "compact",
-      mintedBloomCols(conf, prev), prev,
-      Some(mintSchema(merged.schema,
-        Some(org.apache.spark.sql.types.StructType(target)))))
-    // the alter is now physical: clear the marker. A crash between the
-    // commit and this delete leaves a stale marker whose re-application
-    // is a guarded no-op everywhere (applyAlter's idempotence) and
-    // which the next compaction clears.
-    if (alterPending)
-      f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false)
-    // classic mode: materialize the new epoch (transitive finishMoves)
-    // and retire the source; snapshot mode: the plan stays durable and
-    // only epochs past the retention depth retire
-    retireEpochsLocked(spark, path, f, conf)
     // batch retirement: a batch the change manifest holds by reference
     // MOVES under the epoch (its files are the recorded insert rows);
     // everything else deletes as before (including a quarantined
@@ -2484,11 +2515,23 @@ object Streaming {
       if (conf.changeFiles && quarRows.isEmpty)
         withData.map(_._1).toSet
       else Set.empty
-    live.foreach { case (id, p) =>
-      if (refIds.contains(id)) moveRefInto(f, epochDir, p)
-      else f.delete(p, true)
-    }
-    autoIndexStats(spark, path, conf)
+    // record the WIDENED TARGET's width, not merged's: conform only
+    // casts, so an old-schema fold whose drift columns live entirely
+    // in moved days writes a merged frame NARROWER than the epoch it
+    // mints (the moved days still carry those columns). Once committed
+    // the alter is physical: clear the marker (a crash before the
+    // delete leaves a stale marker whose re-application is a guarded
+    // no-op everywhere — applyAlter's idempotence — and which the next
+    // compaction clears); after the epochs retire, the batches do
+    m.mint(epochDir, "compact", Some(mintSchema(merged.schema,
+        Some(org.apache.spark.sql.types.StructType(target)))),
+      consumed = consumed, alter = (alterRen, alterDrop),
+      afterCommit = () => if (alterPending)
+        f.delete(new org.apache.hadoop.fs.Path(path, PendingAlter), false),
+      afterRetire = () => live.foreach { case (id, p) =>
+        if (refIds.contains(id)) moveRefInto(f, epochDir, p)
+        else f.delete(p, true)
+      })
     epoch
     } finally fresh.unpersist(false)
   }
@@ -3007,8 +3050,8 @@ object Streaming {
     val cur = deleteWhere(spark, sink, col("user_id") % 7 === 3,
       conf = Some(SinkConf.of(spark).copy(keepEpochs = 2)))
     val f = fs(spark, sink)
-    val tSnap = epochMintMsOf(f, sink, snap)
-    val tCur = epochMintMsOf(f, sink, cur)
+    val Seq(tSnap, tCur) = Seq(snap, cur).map(e =>
+      CommitLog.lenient(epochMarker(f, sink, e).flatMap(_.mintMs)))
     require(tSnap.isDefined && tCur.isDefined && tCur.get > tSnap.get,
       s"q161: expected strictly increasing mint records, got " +
         s"$tSnap -> $tCur")
@@ -3268,7 +3311,8 @@ object Streaming {
     require(committed.nonEmpty,
       s"TIMESTAMP AS OF over $path: no committed epoch - nothing to " +
         "travel to")
-    val mints = committed.map(e => e -> epochMintMsOf(f, path, e))
+    val mints = committed.map(e =>
+      e -> CommitLog.lenient(epochMarker(f, path, e).flatMap(_.mintMs)))
     val unrecorded = mints.collect { case (e, None) => e }
     val recorded = mints.collect { case (e, Some(m)) => (e, m) }
     require(recorded.nonEmpty,
@@ -3401,22 +3445,19 @@ object Streaming {
     * never retired by this op. Holds [[CompactLock]]. */
   def retireDays(spark: SparkSession, path: String,
       olderThan: java.sql.Date, conf: Option[SinkConf] = None): Seq[String] =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      val f = fs(spark, path)
-      val cut = maxEpoch(spark, path)
+    // classic mode's rail refuses a plan owing an expired day rather
+    // than rolling it forward, so its settle only discards attempts
+    mutate(spark, path, conf, rollPlans = false) { m =>
+      import m.{c, f, fence, before => cut}
       if (cut < 0) Seq.empty
       else {
-        val eDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$cut")
+        val eDir = m.dir(cut)
         def expired(name: String): Boolean =
           name != NullDayDir &&
             java.sql.Date.valueOf(name.stripPrefix("day=")).before(olderThan)
-        val prev = epochMarker(f, path, cut)
-        val wm = prev.fold(-1L)(_.watermark)
-        val liveCommitted = committedBatches(spark, path, wm)
-        require(liveCommitted.isEmpty,
-          s"retention over $path requires a quiesced compaction first: " +
-            s"${liveCommitted.size} consumable live batch dir(s) would " +
-            "resurrect retired days at the next compaction")
+        m.requireQuiesced(n => s"retention over $path requires a " +
+          s"quiesced compaction first: $n consumable live batch dir(s) " +
+          "would resurrect retired days at the next compaction")
         if (c.keepEpochs > 1) {
           // snapshot mode: retention MINTS an epoch whose plan lists
           // exactly the surviving days BY REFERENCE — O(1) metadata,
@@ -3431,28 +3472,17 @@ object Streaming {
           if (victims.isEmpty) Seq.empty
           else {
             val survivors = resolved.map(_._1).filterNot(expired)
-            val epochDir = new org.apache.hadoop.fs.Path(
-              s"$path/epoch=${cut + 1}")
+            val epochDir = m.dir(cut + 1)
             f.mkdirs(epochDir)
             if (survivors.nonEmpty)
               writePlan(f, epochDir, cut, survivors)
             // no churn record ([[ChangesDir]]): the expired days' rows
             // are this epoch's deletes, but reading them back would turn
             // an O(1)-metadata retention into an O(expired data) op, so
-            // CDC ranges crossing a retention take the snapshot join
-            // the retention mint carries the un-drained quarantine
-            // feed like every other epoch-minting op - without this
-            // the next readSinkQuarantine would serve an empty feed
-            // and the rows would be deleted with the aged-out epoch
-            carryQuarantine(spark, f, path, cut, epochDir)
-            fence() // the commit makes the retention visible: last exit
-            commitEpoch(f, epochDir, wm, "retire", // no batches consumed
-              mintedBloomCols(c, prev), prev,
-              // by-reference mint: content is the survivors of the
-              // superseded epoch — its recorded schema carries forward
-              prev.flatMap(_.schema))
-            retireEpochsLocked(spark, path, f, c)
-            autoIndexStats(spark, path, c)
+            // CDC ranges crossing a retention take the snapshot join.
+            // By-reference mint: content is the survivors of the
+            // superseded epoch — its recorded schema carries forward
+            m.mint(epochDir, "retire", m.prev.flatMap(_.schema))
             victims
           }
         } else {
@@ -3492,15 +3522,15 @@ object Streaming {
     * matching rows — at 100 TB, deleting one user's rows rewrites the
     * handful of day partitions they appear in, not the warehouse.
     *
-    * Crash safety is compaction's, by construction: same plan →
-    * commit → move → retire ordering, same [[settleEpochs]] recovery,
-    * same reader roll-forward. A delete that dies uncommitted is
-    * discarded wholesale (source epoch untouched); committed mid-move
-    * it is complete by reference. The minted epoch consumes NO batches,
-    * so its commit marker carries the PREVIOUS watermark forward (see
-    * [[EpochCommit]]) and the epoch counter advances past the batch
-    * counter — readers and recovery compare batch ids against the
-    * watermark, never the epoch id.
+    * Crash safety is compaction's, by construction: the same
+    * [[mutate]] scaffold (lock, fence, settle) and [[Mutation.mint]]
+    * tail, the same reader roll-forward. A delete that dies
+    * uncommitted is discarded wholesale (source epoch untouched);
+    * committed mid-move it is complete by reference. The minted epoch
+    * consumes NO batches, so its commit marker carries the PREVIOUS
+    * watermark forward (see [[EpochCommit]]) and the epoch counter
+    * advances past the batch counter — readers and recovery compare
+    * batch ids against the watermark, never the epoch id.
     *
     * Rails (both LOUD, mirroring [[retireDays]]): consumable live
     * batch dirs are refused — they may hold rows matching the
@@ -3519,13 +3549,11 @@ object Streaming {
     * epoch). */
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
       tsCol: String = "ts", conf: Option[SinkConf] = None): Long =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      rewriteLocked(spark, path,
-        df => df.filter(predicate),
-        df => df.filter(!(predicate <=> lit(true))),
-        df => df.filter(predicate).withColumn(CdcKindCol, lit("delete")),
-        "delete", tsCol, fence, c)
-    }
+    rewrite(spark, path,
+      df => df.filter(predicate),
+      df => df.filter(!(predicate <=> lit(true))),
+      df => df.filter(predicate).withColumn(CdcKindCol, lit("delete")),
+      "delete", tsCol, conf)
 
   /** Row-level delete by KEY SET — the form a CDC feed's `delete`
     * records arrive in (and [[SnapshotDiff.applyChanges]]'s delete
@@ -3547,14 +3575,12 @@ object Streaming {
     require(missing.isEmpty,
       s"delete key set lacks key column(s): ${missing.mkString(", ")}")
     val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      rewriteLocked(spark, path,
-        df => df.join(distinctKeys, keyCols, "left_semi"),
-        df => df.join(distinctKeys, keyCols, "left_anti"),
-        df => df.join(distinctKeys, keyCols, "left_semi")
-          .withColumn(CdcKindCol, lit("delete")),
-        "delete", tsCol, fence, c)
-    }
+    rewrite(spark, path,
+      df => df.join(distinctKeys, keyCols, "left_semi"),
+      df => df.join(distinctKeys, keyCols, "left_anti"),
+      df => df.join(distinctKeys, keyCols, "left_semi")
+        .withColumn(CdcKindCol, lit("delete")),
+      "delete", tsCol, conf)
   }
 
   /** Predicate UPDATE — the DML triad's third op beside DELETE-where
@@ -3571,7 +3597,7 @@ object Streaming {
     * column-pruned match scan over the epoch finds the day partitions
     * holding matching rows, ONLY those days rewrite (matched rows
     * transformed, the rest copied through), untouched days move by
-    * O(1) rename under the plan→commit→move protocol; consumable live
+    * O(1) rename through [[mutate]] and [[Mutation.mint]]; consumable live
     * batch dirs and pending alters refuse loudly; holds
     * [[CompactLock]]; a no-match update mints no epoch.
     *
@@ -3622,36 +3648,34 @@ object Streaming {
       }
       out
     }
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      rewriteLocked(spark, path,
-        df => { checkedSets(df.limit(0)); df.filter(predicate) },
-        df => {
-          val out = checkedSets(df)
-          // CHECK gate on the update's POST-images, refuse-only: SQL
-          // UPDATE fails on a violating result row ("quarantining" an
-          // update would silently delete it). One bounded aggregation
-          // over the matched rows, only when checks are declared.
-          val checks = readChecks(fs(spark, path), path)
-          if (checks.nonEmpty) {
-            val (_, bad, perCheck) = checkCounts(
-              applySets(df.filter(predicate), predicate, sets), checks)
-            require(bad == 0L,
-              s"updateWhere over $path refused: $bad SET post-image(s) " +
-                "violate CHECK constraint(s) [" +
-                perCheck.filter(_._2 > 0)
-                  .map { case (n, c) => s"$n: $c" }.mkString("; ") +
-                "] - fix the SET expressions or drop the check")
-          }
-          out
-        },
-        df => {
-          val matched = df.filter(predicate)
-          matched.withColumn(CdcKindCol, lit("update_pre"))
-            .unionByName(applySets(matched, predicate, sets)
-              .withColumn(CdcKindCol, lit("update_post")))
-        },
-        "update", tsCol, fence, c)
-    }
+    rewrite(spark, path,
+      df => { checkedSets(df.limit(0)); df.filter(predicate) },
+      df => {
+        val out = checkedSets(df)
+        // CHECK gate on the update's POST-images, refuse-only: SQL
+        // UPDATE fails on a violating result row ("quarantining" an
+        // update would silently delete it). One bounded aggregation
+        // over the matched rows, only when checks are declared.
+        val checks = readChecks(fs(spark, path), path)
+        if (checks.nonEmpty) {
+          val (_, bad, perCheck) = checkCounts(
+            applySets(df.filter(predicate), predicate, sets), checks)
+          require(bad == 0L,
+            s"updateWhere over $path refused: $bad SET post-image(s) " +
+              "violate CHECK constraint(s) [" +
+              perCheck.filter(_._2 > 0)
+                .map { case (n, c) => s"$n: $c" }.mkString("; ") +
+              "] - fix the SET expressions or drop the check")
+        }
+        out
+      },
+      df => {
+        val matched = df.filter(predicate)
+        matched.withColumn(CdcKindCol, lit("update_pre"))
+          .unionByName(applySets(matched, predicate, sets)
+            .withColumn(CdcKindCol, lit("update_post")))
+      },
+      "update", tsCol, conf)
   }
 
   /** SQL UPDATE's SET projection: ONE select in which every SET
@@ -3679,96 +3703,94 @@ object Streaming {
     * update), and `cdcOf` maps the same frame to the epoch's
     * kind-tagged change rows. Days without a match are never read
     * again — they move by O(1) rename (or stay referenced in snapshot
-    * mode) under the same plan→commit→move crash protocol as
-    * compaction; `op` tags the commit marker. */
-  private def rewriteLocked(spark: SparkSession, path: String,
+    * mode) through [[rewriteDays]]; `op` tags the commit marker. */
+  private def rewrite(spark: SparkSession, path: String,
       matchOf: DataFrame => DataFrame, rewriteOf: DataFrame => DataFrame,
-      cdcOf: DataFrame => DataFrame, op: String,
-      tsCol: String, fence: () => Unit, conf: SinkConf): Long = {
-    val f = fs(spark, path)
-    fence() // settleEpochs deletes attempts: fence first (compactLocked's note)
-    settleEpochs(spark, path, f, conf)
-    val pendingAlter = readAlter(f, path)
-    require(pendingAlter._1.isEmpty && pendingAlter._2.isEmpty,
-      s"row-level $op over $path: a schema alter is pending - run " +
-        s"compactSink to normalize it first (the $op's per-day " +
-        "rewrite must see one physical schema)")
-    val before = maxEpoch(spark, path)
-    val prev = epochMarker(f, path, before)
-    val wm = prev.fold(-1L)(_.watermark)
-    val liveCommitted = committedBatches(spark, path, wm)
-    require(liveCommitted.isEmpty,
-      s"row-level $op over $path requires a quiesced compaction " +
-        s"first: ${liveCommitted.size} consumable live batch dir(s) may " +
+      cdcOf: DataFrame => DataFrame, op: String, tsCol: String,
+      conf: Option[SinkConf]): Long =
+    mutate(spark, path, conf) { m =>
+      m.requireNoAlter(s"row-level $op over $path: a schema alter is " +
+        s"pending - run compactSink to normalize it first (the $op's " +
+        "per-day rewrite must see one physical schema)")
+      m.requireQuiesced(n => s"row-level $op over $path requires a " +
+        s"quiesced compaction first: $n consumable live batch dir(s) may " +
         s"hold rows matching that the $op would miss")
-    if (before < 0) return -1L // nothing compacted, nothing to rewrite
-    // previous-epoch days by RESOLVED physical location (snapshot mode
-    // may hold days by reference; classic mode this is the listing)
-    val prevDays = resolvedDays(f, path, before)
-    if (prevDays.isEmpty) return before // retention-emptied epoch
-    // match scan: ONE column-pruned pass over the epoch to find the
-    // day partitions holding matching rows (bounded by the calendar,
-    // like compaction's day list)
-    val epochFrame = readEpochFrame(spark, f, path, before).get
-    val affected = matchOf(epochFrame)
-      .select("day").distinct().collect()
+      // previous-epoch days by RESOLVED physical location (snapshot mode
+      // may hold days by reference; classic mode this is the listing)
+      val prevDays =
+        if (m.before < 0) Seq.empty else resolvedDays(m.f, path, m.before)
+      // nothing compacted (-1) or a retention-emptied epoch: no rewrite
+      if (prevDays.isEmpty) m.before
+      else {
+        // match scan: ONE column-pruned pass over the epoch
+        val epochFrame = readEpochFrame(spark, m.f, path, m.before).get
+        rewriteDays(spark, path, m, prevDays,
+          matchOf(epochFrame).select("day"), op) {
+          (affected, frame, epochDir, bytes) =>
+            // rewrite = what the affected days become: the survivors
+            // (predicate-not-TRUE — null-safe, a NULL predicate keeps
+            // the row, exactly SQL DELETE's complement — or the
+            // anti-join) for a delete; every row with the SET projection
+            // applied for an update. Sizing by the affected dirs' bytes
+            // is right for both: a delete's output is a strict subset
+            // of its input, an update's is the same rows transformed
+            val kept = rewriteOf(frame.get)
+            writeEpochDays(kept, epochDir, bytes, affected.size, tsCol, m.c)
+            // the matched rows ARE the op's change set (delete
+            // pre-images, or update pre/post pairs), bounded by the
+            // affected days the rewrite already pays for
+            if (m.c.changeFiles)
+              writeEpochChanges(spark, epochDir, cdcOf(frame.get))
+            // widened to the FULL epoch frame: an affected-days subset
+            // can be narrower than the moved days' drift columns
+            mintSchema(kept.schema, Some(epochFrame.schema))
+        }
+      }
+    }
+
+  /** The affected-days skeleton [[rewrite]] and [[merge]] share, from
+    * the cut `m` holding `prevDays`: ONE collect of `days` (a frame of
+    * `day` values — the match scan, unioned with a merge's insert days
+    * in the same action) names the affected days; none mints nothing
+    * and returns `before`, unless `force` (a merge whose batch has
+    * rows: it inserts even where nothing matched). The affected days
+    * are read ONCE, declared at the previous epoch's recorded schema
+    * (no footer inference, and drift columns living only in unaffected
+    * days stay in-width) and PERSISTED across their consumers — the
+    * range-partitioner's SAMPLE pass, the epoch write and the change
+    * manifest all read it; MEMORY_AND_DISK bounds it to the affected
+    * days, the working set every MERGE implementation materializes.
+    * `write` gets the affected day names, that frame (None when no
+    * previous day is affected — a merge inserting into new days only),
+    * the epoch dir and the affected dirs' bytes; it writes the epoch's
+    * rows and returns the schema the epoch records. The untouched days
+    * are then owed by plan — by the AFFECTED set, not the written one:
+    * an affected day a delete emptied was legitimately not written and
+    * must NOT be resurrected from the source epoch — and the epoch mints
+    * as `op` through [[Mutation.mint]]. Returns the new epoch. */
+  private def rewriteDays(spark: SparkSession, path: String, m: Mutation,
+      prevDays: Seq[(String, org.apache.hadoop.fs.Path)], days: DataFrame,
+      op: String, force: Boolean = false)(write: (Set[String],
+        Option[DataFrame], org.apache.hadoop.fs.Path, Long) =>
+        org.apache.spark.sql.types.StructType): Long = {
+    val affected = days.distinct().collect()
       .map(r => Option(r.get(0)).map(d => s"day=$d").getOrElse(NullDayDir))
       .toSet
-    if (affected.isEmpty) return before
+    if (affected.isEmpty && !force) return m.before
     val affectedDirs = prevDays.filter(d => affected.contains(d._1))
-    val epoch = before + 1
-    val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
-    // ONE affected-days frame feeds the rewrite and the CDC manifest
-    // below (mergeLocked's r17 sharing, applied here too), declared at
-    // the previous epoch's recorded schema (no footer inference, and
-    // drift columns living only in unaffected days stay in-width).
-    // PERSISTED across its consumers (r18): the survivor rewrite feeds
-    // the range-partitioner's SAMPLE pass and the epoch write, and the
-    // CDC manifest reads the same days a third time — MEMORY_AND_DISK
-    // bounds it to the affected days (the working set every row-level
-    // rewrite materializes); unpersisted in the finally below.
-    val affectedFrame = readDays(spark, affectedDirs, prev.flatMap(_.schema))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val epochDir = m.dir(m.before + 1)
+    val frame =
+      if (affectedDirs.isEmpty) None
+      else Some(readDays(spark, affectedDirs, m.prev.flatMap(_.schema))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-    // rewrite = what the affected days become: the survivors
-    // (predicate-not-TRUE — null-safe, a NULL predicate keeps the row,
-    // exactly SQL DELETE's complement — or the anti-join) for a
-    // delete; every row with the SET projection applied for an update
-    val kept = rewriteOf(affectedFrame)
-    // sizing by the affected dirs' bytes is right for both shapes: a
-    // delete's output is a strict subset of its input, an update's is
-    // the same rows transformed
-    val inputBytes =
-      affectedDirs.map(d => f.getContentSummary(d._2).getLength).sum
-    val k = conf.writers(inputBytes, math.min(affected.size.toLong, 1024L))
-    val sized = kept.repartitionByRange(k, epochRangeKeys(conf, kept, tsCol): _*)
-    withMicrosTs(spark) {
-      sized.write.mode("overwrite").options(epochWriteOptions(conf))
-          .partitionBy("day")
-        .parquet(epochDir.toString)
-    }
-    // record the epoch's churn for O(churn) CDC reads ([[ChangesDir]]):
-    // the matched rows ARE the op's change set (delete pre-images, or
-    // update pre/post pairs), and reading them back is bounded by the
-    // affected days the rewrite already pays for
-    if (conf.changeFiles)
-      writeEpochChanges(spark, epochDir, cdcOf(affectedFrame))
-    // untouched days move by the AFFECTED set, not the written set: an
-    // affected day emptied by a delete was legitimately not written
-    // and must NOT be resurrected from the source epoch
-    val toMove = prevDays.filterNot(d => affected.contains(d._1))
-    if (toMove.nonEmpty) writePlan(f, epochDir, before, toMove.map(_._1))
-    carryQuarantine(spark, f, path, before, epochDir)
-    fence() // the commit makes the rewrite visible: last exit
-    commitEpoch(f, epochDir, wm, op, // no batches consumed
-      mintedBloomCols(conf, prev), prev,
-      // widened to the FULL epoch frame: an affected-days subset can
-      // be narrower than the moved days' drift columns
-      Some(mintSchema(kept.schema, Some(epochFrame.schema))))
-    retireEpochsLocked(spark, path, f, conf)
-    autoIndexStats(spark, path, conf)
-    epoch
-    } finally affectedFrame.unpersist(false)
+      val schema = write(affected, frame, epochDir,
+        affectedDirs.map(d => m.f.getContentSummary(d._2).getLength).sum)
+      val toMove = prevDays.filterNot(d => affected.contains(d._1))
+      if (toMove.nonEmpty) writePlan(m.f, epochDir, m.before, toMove.map(_._1))
+      m.mint(epochDir, op, Some(schema))
+      m.before + 1
+    } finally frame.foreach(_.unpersist(false))
   }
 
   /** RESTORE — write-side time travel, the rollback every lakehouse
@@ -3834,16 +3856,14 @@ object Streaming {
     * rows ingested after the snapshot are dropped unless re-fed),
     * records `op=restore`, inherits the snapshot's `bloom_cols=`
     * receipt verbatim (the restored files ARE the snapshot's files),
-    * and mints strictly after the epoch it supersedes. Holds
-    * [[CompactLock]]. Returns the new max epoch (or the unchanged
-    * current one for the no-op). */
+    * and mints strictly after the epoch it supersedes — through the
+    * [[mutate]] scaffold and the [[Mutation.mint]] tail, like every
+    * epoch-minting op (so holds [[CompactLock]]). Returns the new max
+    * epoch (or the unchanged current one for the no-op). */
   def restoreSink(spark: SparkSession, path: String, toEpoch: Long,
       conf: Option[SinkConf] = None): Long =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      val f = fs(spark, path)
-      fence() // settleEpochs deletes attempts: fence first
-      settleEpochs(spark, path, f, c)
-      val before = maxEpoch(spark, path)
+    mutate(spark, path, conf) { m =>
+      import m.{before, c, f}
       // DEPTH-bounded, not marker-exists: a committed directory
       // lingering past the grace depth (crashed retirement, a lowered
       // keepEpochs, classic mode's own roll-forward above) may already
@@ -3861,14 +3881,10 @@ object Streaming {
           "you may want to undo")
       if (toEpoch == before) before // restoring to the present: no-op
       else {
-        val prev = epochMarker(f, path, before)
-        val wm = prev.fold(-1L)(_.watermark)
-        val liveCommitted = committedBatches(spark, path, wm)
-        require(liveCommitted.isEmpty,
-          s"restoreSink over $path requires a quiesced compaction " +
-            s"first: ${liveCommitted.size} consumable live batch dir(s) " +
-            "hold rows no epoch represents - a restore would silently " +
-            "discard them")
+        m.requireQuiesced(n => s"restoreSink over $path requires a " +
+          s"quiesced compaction first: $n consumable live batch dir(s) " +
+          "hold rows no epoch represents - a restore would silently " +
+          "discard them")
         val targetDays = resolvedDays(f, path, toEpoch)
         val prevDays = resolvedDays(f, path, before)
         // CHECK gate on the rows the restore RE-ADMITS (refuse-only,
@@ -3905,9 +3921,7 @@ object Streaming {
                 "compliant snapshot")
           }
         }
-        val epoch = before + 1
-        val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
-        f.delete(epochDir, true) // discard an uncommitted crashed attempt
+        val epochDir = m.dir(before + 1)
         f.mkdirs(epochDir)
         val hadoopConf = spark.sparkContext.hadoopConfiguration
         targetDays.foreach { case (d, p) =>
@@ -3919,17 +3933,13 @@ object Streaming {
             restoreChurn(spark, prevDays, targetDays))
         // the quarantine feed is operational state, not table state: a
         // restore reverts the TABLE but carries the un-drained feed
-        // forward from the epoch it supersedes, like every other mint
-        carryQuarantine(spark, f, path, before, epochDir)
-        fence() // the commit makes the restore visible: last exit
-        // the restored files ARE the snapshot's: its bloom and schema
+        // forward from the epoch it supersedes, like every other mint.
+        // The restored files ARE the snapshot's: its bloom and schema
         // records carry (lenient: both are perf-only)
         val target = CommitLog.lenient(epochMarker(f, path, toEpoch))
-        commitEpoch(f, epochDir, wm, "restore",
-          target.flatMap(_.bloomCols), prev, target.flatMap(_.schema))
-        retireEpochsLocked(spark, path, f, c)
-        autoIndexStats(spark, path, c)
-        epoch
+        m.mint(epochDir, "restore", target.flatMap(_.schema),
+          bloomCols = target.flatMap(_.bloomCols))
+        before + 1
       }
     }
 
@@ -3993,12 +4003,12 @@ object Streaming {
     * commits). Cost is O(scan + affected days): affected = days
     * holding a matching key (one column-pruned semi-join scan finds
     * them) PLUS days receiving a batch row; every other day moves by
-    * O(1) rename under the same plan→commit→move crash protocol as
-    * compaction — an hourly CDC batch whose rows cluster on recent
-    * days rewrites those days, not the table. Like a delete epoch,
-    * the minted epoch consumes NO batches: its marker carries the
-    * previous watermark forward and the epoch counter advances past
-    * the batch counter.
+    * O(1) rename through the same [[mutate]] scaffold and
+    * [[Mutation.mint]] tail as compaction — an hourly CDC batch whose
+    * rows cluster on recent days rewrites those days, not the table.
+    * Like a delete epoch, the minted epoch consumes NO batches: its
+    * marker carries the previous watermark forward and the epoch
+    * counter advances past the batch counter.
     *
     * Key-matching is JOIN equality, so NULL keys never match: a
     * null-key batch row always INSERTS and a null-key sink row always
@@ -4017,9 +4027,7 @@ object Streaming {
   def upsertBatch(spark: SparkSession, path: String, batch: DataFrame,
       keyCols: Seq[String], tsCol: String = "ts",
       conf: Option[SinkConf] = None): Long =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      mergeLocked(spark, path, batch, None, keyCols, tsCol, fence, c)
-    }
+    merge(spark, path, batch, None, keyCols, tsCol, conf)
 
   /** MERGE with deletes in ONE minted epoch — the CDC consumer's apply
     * (SQL MERGE's `WHEN MATCHED AND … THEN DELETE` arm alongside
@@ -4046,13 +4054,11 @@ object Streaming {
   def applyBatch(spark: SparkSession, path: String, deletes: DataFrame,
       batch: DataFrame, keyCols: Seq[String], tsCol: String = "ts",
       conf: Option[SinkConf] = None): Long =
-    withFencedCompactorLock(spark, path, conf) { (c, fence) =>
-      mergeLocked(spark, path, batch, Some(deletes), keyCols, tsCol, fence, c)
-    }
+    merge(spark, path, batch, Some(deletes), keyCols, tsCol, conf)
 
-  private def mergeLocked(spark: SparkSession, path: String,
+  private def merge(spark: SparkSession, path: String,
       batch: DataFrame, delSet: Option[DataFrame], keyCols: Seq[String],
-      tsCol: String, fence: () => Unit, conf: SinkConf): Long = {
+      tsCol: String, conf: Option[SinkConf]): Long = {
     // diagnostics name the PUBLIC entry point actually called — an
     // operator debugging a failed CDC apply must not be pointed at
     // upsertBatch (r17 advice)
@@ -4066,216 +4072,164 @@ object Streaming {
       require(dm.isEmpty,
         s"apply delete set lacks key column(s): ${dm.mkString(", ")}")
     }
-    val f = fs(spark, path)
-    fence() // settleEpochs deletes attempts: fence first (compactLocked's note)
-    settleEpochs(spark, path, f, conf)
-    val pendingAlter = readAlter(f, path)
-    require(pendingAlter._1.isEmpty && pendingAlter._2.isEmpty,
-      s"$opName over $path: a schema alter is pending - run " +
-        "compactSink to normalize it first (the merge must see one " +
+    mutate(spark, path, conf) { m =>
+      m.requireNoAlter(s"$opName over $path: a schema alter is pending - " +
+        "run compactSink to normalize it first (the merge must see one " +
         "physical schema)")
-    val before = maxEpoch(spark, path)
-    val prev = epochMarker(f, path, before)
-    val wm = prev.fold(-1L)(_.watermark)
-    val liveCommitted = committedBatches(spark, path, wm)
-    require(liveCommitted.isEmpty,
-      s"$opName over $path requires a quiesced compaction first: " +
-        s"${liveCommitted.size} consumable live batch dir(s) may hold " +
+      m.requireQuiesced(n => s"$opName over $path requires a quiesced " +
+        s"compaction first: $n consumable live batch dir(s) may hold " +
         "rows whose keys the merge would miss")
-    val batchEmpty = batch.isEmpty
-    // an absent delete set leaves mergeLocked exactly upsertLocked (the
-    // pre-r17 body); a present one — even an empty frame, which the
-    // joins below no-op through without a driver-side emptiness action
-    // (a hot replication loop must not pay an extra job per cycle) —
-    // adds the delete arm to the anti-join, the manifest, and the op tag
-    val delKeys: Option[DataFrame] =
-      delSet.map(d => d.select(keyCols.map(col): _*).distinct())
-    if (batchEmpty && delKeys.isEmpty) return before
-    def dayDir(v: Any): String =
-      Option(v).map(d => s"day=$d").getOrElse(NullDayDir)
-    // the day column is DERIVED here, never trusted from the caller: a
-    // batch that round-tripped through readSink may carry one
-    val dropped =
-      if (batch.columns.contains("day")) batch.drop("day") else batch
-    val incoming0 =
-      if (dropped.columns.contains(tsCol))
-        dropped.withColumn("day", to_date(col(tsCol)))
-      else dropped.withColumn("day", lit(null).cast("date"))
-    // CHECK gate on the batch (the merge's new rows): refuse aborts
-    // with counts before any mutation; quarantine diverts the
-    // violators (written under the minted epoch below). The merge
-    // keys MUST derive from the CLEAN rows only — a quarantined row's
-    // key deleting its old sink row would turn a refused replacement
-    // into a silent delete.
-    val (incoming, quarRows) =
-      enforceChecks(conf, path, incoming0, readChecks(f, path), opName)
-    // the match scan and the kept-row anti-join see the UNION of both
-    // key sets (a deleted row and a replaced row leave the epoch the
-    // same way); the manifest classification below keeps the two sets
-    // apart. ONE distinct key projection feeds both roles — the union
-    // arm builds on the already-distinct upsert keys rather than
-    // re-projecting (and re-broadcasting) the batch (r17 advice).
-    val upsKeys = incoming.select(keyCols.map(col): _*).distinct()
-    val upsKeysB = broadcast(upsKeys)
-    val keys = delKeys.fold(upsKeysB)(dk =>
-      broadcast(upsKeys.unionByName(dk).distinct()))
-    // previous-epoch days by RESOLVED physical location (snapshot mode
-    // may hold days by reference; classic mode this is the listing)
-    val prevDays: Seq[(String, org.apache.hadoop.fs.Path)] =
-      if (before < 0) Seq.empty
-      else resolvedDays(f, path, before)
-    val prevFrame: Option[DataFrame] =
-      if (prevDays.isEmpty) None
-      else Some(readEpochFrame(spark, f, path, before).get)
-    // type drift arrives via ingest + compactSink, whose widening
-    // rewrite normalizes EVERY previous day; a CDC batch widening a
-    // column HERE would land wide footers beside narrow moved days and
-    // poison every later single-scan epoch read — refuse loudly.
-    // (Additive columns remain fine: mergeSchema handles missing.)
-    prevFrame.foreach { pf =>
-      val es = pf.schema
-      incoming.schema.foreach { fld =>
-        es.find(_.name == fld.name).foreach { p =>
-          require(p.dataType == fld.dataType,
-            s"$opName over $path: column '${fld.name}' is " +
-              s"${p.dataType.simpleString} in the sink but " +
-              s"${fld.dataType.simpleString} in the batch - type " +
-              "widening must arrive via ingest + compactSink (whose " +
-              "rewrite normalizes every day); align the batch's type")
+      val batchEmpty = batch.isEmpty
+      // an absent delete set leaves the merge exactly an upsert (the
+      // pre-r17 body); a present one — even an empty frame, which the
+      // joins below no-op through without a driver-side emptiness action
+      // (a hot replication loop must not pay an extra job per cycle) —
+      // adds the delete arm to the anti-join, the manifest, and the op tag
+      val delKeys: Option[DataFrame] =
+        delSet.map(d => d.select(keyCols.map(col): _*).distinct())
+      if (batchEmpty && delKeys.isEmpty) m.before
+      else {
+        // the day column is DERIVED here, never trusted from the caller: a
+        // batch that round-tripped through readSink may carry one
+        val dropped =
+          if (batch.columns.contains("day")) batch.drop("day") else batch
+        val incoming0 =
+          if (dropped.columns.contains(tsCol))
+            dropped.withColumn("day", to_date(col(tsCol)))
+          else dropped.withColumn("day", lit(null).cast("date"))
+        // CHECK gate on the batch (the merge's new rows): refuse aborts
+        // with counts before any mutation; quarantine diverts the
+        // violators (written under the minted epoch below). The merge
+        // keys MUST derive from the CLEAN rows only — a quarantined row's
+        // key deleting its old sink row would turn a refused replacement
+        // into a silent delete.
+        val (incoming, quarRows) =
+          enforceChecks(m.c, path, incoming0, readChecks(m.f, path), opName)
+        // the match scan and the kept-row anti-join see the UNION of both
+        // key sets (a deleted row and a replaced row leave the epoch the
+        // same way); the manifest classification below keeps the two sets
+        // apart. ONE distinct key projection feeds both roles — the union
+        // arm builds on the already-distinct upsert keys rather than
+        // re-projecting (and re-broadcasting) the batch (r17 advice).
+        val upsKeys = incoming.select(keyCols.map(col): _*).distinct()
+        val upsKeysB = broadcast(upsKeys)
+        val keys = delKeys.fold(upsKeysB)(dk =>
+          broadcast(upsKeys.unionByName(dk).distinct()))
+        // previous-epoch days by RESOLVED physical location (snapshot mode
+        // may hold days by reference; classic mode this is the listing)
+        val prevDays: Seq[(String, org.apache.hadoop.fs.Path)] =
+          if (m.before < 0) Seq.empty
+          else resolvedDays(m.f, path, m.before)
+        val prevFrame: Option[DataFrame] =
+          if (prevDays.isEmpty) None
+          else Some(readEpochFrame(spark, m.f, path, m.before).get)
+        // type drift arrives via ingest + compactSink, whose widening
+        // rewrite normalizes EVERY previous day; a CDC batch widening a
+        // column HERE would land wide footers beside narrow moved days and
+        // poison every later single-scan epoch read — refuse loudly.
+        // (Additive columns remain fine: mergeSchema handles missing.)
+        prevFrame.foreach { pf =>
+          val es = pf.schema
+          incoming.schema.foreach { fld =>
+            es.find(_.name == fld.name).foreach { p =>
+              require(p.dataType == fld.dataType,
+                s"$opName over $path: column '${fld.name}' is " +
+                  s"${p.dataType.simpleString} in the sink but " +
+                  s"${fld.dataType.simpleString} in the batch - type " +
+                  "widening must arrive via ingest + compactSink (whose " +
+                  "rewrite normalizes every day); align the batch's type")
+            }
+          }
+        }
+        // match scan: ONE column-pruned semi-join pass over the epoch finds
+        // the day partitions holding a matching key — UNIONED with the
+        // batch's own days in the SAME action (r18: the two collects ran as
+        // two sequential driver jobs; only their union is ever used). A
+        // pure-delete apply whose keys match nothing (and an apply into an
+        // uncompacted sink) has nothing to rewrite and nothing to insert:
+        // minting an empty epoch would only churn retention
+        val insertDaysFrame = incoming.select("day")
+        val days = prevFrame.fold(insertDaysFrame)(_
+          .select((keyCols :+ "day").map(col): _*)
+          .join(keys, keyCols, "left_semi")
+          .select("day").unionByName(insertDaysFrame))
+        rewriteDays(spark, path, m, prevDays, days,
+            if (delKeys.isDefined) "apply" else "upsert",
+            force = !batchEmpty) { (affected, affectedFrame, epochDir, bytes) =>
+          // survivors of the matched days (anti-join = NOT matched) plus the
+          // batch itself — ONE write, ONE commit, atomic by construction
+          val kept = affectedFrame.map(_.join(keys, keyCols, "left_anti"))
+          val epochRows =
+            kept.fold(incoming)(
+              _.unionByName(incoming, allowMissingColumns = true))
+          // size BOTH inputs: the affected epoch dirs AND the incoming batch
+          // itself — a backfill-sized upsert into an empty/small sink would
+          // otherwise derive k from ~0 epoch bytes and funnel multi-GB days
+          // through one writer each (files later compactions only MOVE,
+          // never re-split). The batch's bytes come from its optimized
+          // plan's statistics: exact for parquet-backed sources (the
+          // backfill case this sizing exists for). A plan with NO real
+          // statistics — a streaming micro-batch source — reports
+          // spark.sql.defaultSizeInBytes = Long.MaxValue as its "unknown"
+          // sentinel; treating that as real bytes would clamp k to its max
+          // (32768 tiny files) on an empty sink and OVERFLOW the sum on a
+          // non-empty one, so unknown contributes zero and the day-count
+          // floor governs (micro-batches are small by construction).
+          // ([[rewrite]] sizes epoch dirs only — correct there: a delete's
+          // output is a strict subset of its input.)
+          val batchStat = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+          val batchBytes =
+            if (batchStat >= BigInt(Long.MaxValue) / 2) 0L else batchStat.toLong
+          writeEpochDays(epochRows, epochDir, bytes + batchBytes,
+            affected.size, tsCol, m.c)
+          // record the epoch's churn for O(churn) CDC reads ([[ChangesDir]]):
+          // the replaced rows (pre-images) come from one more pass over the
+          // matched days the merge already reads, the batch itself carries
+          // the post-images, and matched-vs-new classifies update vs insert
+          if (m.c.changeFiles) {
+            val allCols = epochRows.columns.toSeq
+            def conformEv(df: DataFrame): DataFrame =
+              df.select(allCols.map(c =>
+                if (df.columns.contains(c)) col(c)
+                else lit(null).cast(epochRows.schema(c).dataType).as(c)): _*)
+            // matched-vs-new classifies against the UPSERT keys only; the
+            // delete set's matches are their own kind below
+            val olds = affectedFrame.map(_.join(upsKeysB, keyCols, "left_semi"))
+            val posts = olds match {
+              case Some(o) =>
+                val mk = o.select(keyCols.map(col): _*).distinct()
+                  .withColumn("__cdc_m", lit(1))
+                conformEv(incoming).join(broadcast(mk), keyCols, "left_outer")
+                  .withColumn(CdcKindCol, when(col("__cdc_m").isNotNull,
+                    lit("update_post")).otherwise(lit("insert")))
+                  .select((allCols :+ CdcKindCol).map(col): _*)
+              case None =>
+                conformEv(incoming).withColumn(CdcKindCol, lit("insert"))
+            }
+            // the apply's delete arm: pre-images of rows removed WITHOUT a
+            // replacement — a key in both sets nets to the batch's row and
+            // classifies above (its removal is not churn), so the delete
+            // kind is del-matched ANTI upsert-keyed
+            val delPre = delKeys.flatMap { dk =>
+              affectedFrame.map(_
+                .join(broadcast(dk), keyCols, "left_semi")
+                .join(upsKeysB, keyCols, "left_anti"))
+            }.map(d => conformEv(d).withColumn(CdcKindCol, lit("delete")))
+            val upserts = olds match {
+              case Some(o) => conformEv(o)
+                .withColumn(CdcKindCol, lit("update_pre")).unionByName(posts)
+              case None => posts
+            }
+            val events = delPre.fold(upserts)(_.unionByName(upserts))
+            writeEpochChanges(spark, epochDir, events)
+          }
+          quarRows.foreach(writeQuarantine(spark, epochDir, m.before + 1, _))
+          // widened to the FULL previous-epoch frame: the affected-days
+          // subset can be narrower than the moved days' drift columns
+          mintSchema(epochRows.schema, prevFrame.map(_.schema))
         }
       }
     }
-    // match scan: ONE column-pruned semi-join pass over the epoch finds
-    // the day partitions holding a matching key (bounded by the
-    // calendar, like compaction's day list) — UNIONED with the batch's
-    // own days in the SAME action (r18: the two collects ran as two
-    // sequential driver jobs; only their union is ever used)
-    val matchDaysFrame: Option[DataFrame] =
-      if (prevDays.isEmpty) None
-      else Some(prevFrame.get
-        .select((keyCols :+ "day").map(col): _*)
-        .join(keys, keyCols, "left_semi")
-        .select("day"))
-    val insertDaysFrame = incoming.select("day")
-    val affected: Set[String] =
-      matchDaysFrame.fold(insertDaysFrame)(_.unionByName(insertDaysFrame))
-        .distinct().collect().map(r => dayDir(r.get(0))).toSet
-    // a pure-delete apply whose keys match nothing (and an apply into
-    // an uncompacted sink) has nothing to rewrite and nothing to
-    // insert: minting an empty epoch would only churn retention
-    if (batchEmpty && affected.isEmpty) return before
-    val affectedDirs = prevDays.filter(d => affected.contains(d._1))
-    val epoch = before + 1 // 0 on an empty sink: a pure insert
-    val epochDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$epoch")
-    // ONE affected-days frame feeds the survivor anti-join AND both
-    // manifest joins below (olds/delPre) — each used to re-derive its
-    // own readDays, handing the delete arm a third scan per apply
-    // cycle (r17 advice)
-    val affectedFrame: Option[DataFrame] =
-      if (affectedDirs.isEmpty) None
-      // declared at the previous epoch's recorded schema: no footer
-      // inference, and drift columns living only in unaffected days
-      // stay in-width (r18)
-      else Some(readDays(spark, affectedDirs, prev.flatMap(_.schema))
-        // PERSISTED across its consumers (r18): the survivor
-        // anti-join feeds the range-partitioner's SAMPLE pass and the
-        // epoch write, and the manifest's olds/delPre joins read the
-        // same days again — four executions of the same scan+join per
-        // merge where one suffices (guide §1.2/§5: the affected-days
-        // set is the bounded working set every MERGE implementation
-        // materializes; MEMORY_AND_DISK spills, never recomputes).
-        // Unpersisted before return below.
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-    // survivors of the matched days (anti-join = NOT matched) plus the
-    // batch itself — ONE write, ONE commit, atomic by construction
-    val kept = affectedFrame.map(_.join(keys, keyCols, "left_anti"))
-    val epochRows =
-      kept.fold(incoming)(_.unionByName(incoming, allowMissingColumns = true))
-    // size BOTH inputs: the affected epoch dirs AND the incoming batch
-    // itself — a backfill-sized upsert into an empty/small sink would
-    // otherwise derive k from ~0 epoch bytes and funnel multi-GB days
-    // through one writer each (files later compactions only MOVE,
-    // never re-split). The batch's bytes come from its optimized
-    // plan's statistics: exact for parquet-backed sources (the
-    // backfill case this sizing exists for). A plan with NO real
-    // statistics — a streaming micro-batch source — reports
-    // spark.sql.defaultSizeInBytes = Long.MaxValue as its "unknown"
-    // sentinel; treating that as real bytes would clamp k to its max
-    // (32768 tiny files) on an empty sink and OVERFLOW the sum on a
-    // non-empty one, so unknown contributes zero and the day-count
-    // floor governs (micro-batches are small by construction).
-    // (deleteLocked's twin block sizes epoch dirs only — correct
-    // there: a delete's output is a strict subset of its input.)
-    val batchStat = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    val batchBytes =
-      if (batchStat >= BigInt(Long.MaxValue) / 2) 0L else batchStat.toLong
-    val inputBytes =
-      affectedDirs.map(d => f.getContentSummary(d._2).getLength).sum +
-        batchBytes
-    val k = conf.writers(inputBytes, math.min(affected.size.toLong, 1024L))
-    val sized = epochRows.repartitionByRange(k,
-      epochRangeKeys(conf, epochRows, tsCol): _*)
-    withMicrosTs(spark) {
-      sized.write.mode("overwrite").options(epochWriteOptions(conf))
-          .partitionBy("day")
-        .parquet(epochDir.toString)
-    }
-    // record the epoch's churn for O(churn) CDC reads ([[ChangesDir]]):
-    // the replaced rows (pre-images) come from one more pass over the
-    // matched days the merge already reads, the batch itself carries
-    // the post-images, and matched-vs-new classifies update vs insert
-    if (conf.changeFiles) {
-      val allCols = epochRows.columns.toSeq
-      def conformEv(df: DataFrame): DataFrame =
-        df.select(allCols.map(c =>
-          if (df.columns.contains(c)) col(c)
-          else lit(null).cast(epochRows.schema(c).dataType).as(c)): _*)
-      // matched-vs-new classifies against the UPSERT keys only; the
-      // delete set's matches are their own kind below
-      val olds = affectedFrame.map(_.join(upsKeysB, keyCols, "left_semi"))
-      val posts = olds match {
-        case Some(o) =>
-          val mk = o.select(keyCols.map(col): _*).distinct()
-            .withColumn("__cdc_m", lit(1))
-          conformEv(incoming).join(broadcast(mk), keyCols, "left_outer")
-            .withColumn(CdcKindCol, when(col("__cdc_m").isNotNull,
-              lit("update_post")).otherwise(lit("insert")))
-            .select((allCols :+ CdcKindCol).map(col): _*)
-        case None => conformEv(incoming).withColumn(CdcKindCol, lit("insert"))
-      }
-      // the apply's delete arm: pre-images of rows removed WITHOUT a
-      // replacement — a key in both sets nets to the batch's row and
-      // classifies above (its removal is not churn), so the delete
-      // kind is del-matched ANTI upsert-keyed
-      val delPre = delKeys.flatMap { dk =>
-        affectedFrame.map(_
-          .join(broadcast(dk), keyCols, "left_semi")
-          .join(upsKeysB, keyCols, "left_anti"))
-      }.map(d => conformEv(d).withColumn(CdcKindCol, lit("delete")))
-      val upserts = olds match {
-        case Some(o) => conformEv(o)
-          .withColumn(CdcKindCol, lit("update_pre")).unionByName(posts)
-        case None => posts
-      }
-      val events = delPre.fold(upserts)(_.unionByName(upserts))
-      writeEpochChanges(spark, epochDir, events)
-    }
-    val toMove = prevDays.filterNot(d => affected.contains(d._1))
-    if (toMove.nonEmpty) writePlan(f, epochDir, before, toMove.map(_._1))
-    quarRows.foreach(writeQuarantine(spark, epochDir, epoch, _))
-    carryQuarantine(spark, f, path, before, epochDir)
-    fence() // the commit makes the merge visible: last exit
-    commitEpoch(f, epochDir, wm, // no batches consumed
-      if (delKeys.isDefined) "apply" else "upsert",
-      mintedBloomCols(conf, prev), prev,
-      // widened to the FULL previous-epoch frame: the affected-days
-      // subset can be narrower than the moved days' drift columns
-      Some(mintSchema(epochRows.schema, prevFrame.map(_.schema))))
-    retireEpochsLocked(spark, path, f, conf)
-    autoIndexStats(spark, path, conf)
-    epoch
-    } finally affectedFrame.foreach(_.unpersist(false))
   }
 
   /** Operational snapshot of the sink in ONE metadata row — what a
@@ -4296,7 +4250,7 @@ object Streaming {
     * holder, null when unleased), `epochs_kept` / `oldest_epoch` (the
     * time-travel depth actually on disk), `last_op` (the lifecycle op
     * that minted the current epoch: compact / delete / update / upsert /
-    * apply / retire; null for pre-tag epochs), `last_mint_ms` (when
+    * apply / retire / restore; null for pre-tag epochs), `last_mint_ms` (when
     * the current epoch committed — the TIMESTAMP-AS-OF anchor; null
     * for pre-record markers), `pending_alter` (the recorded
     * rename/drop awaiting its normalizing compaction; null when
@@ -4553,12 +4507,10 @@ object Streaming {
     * `keepEpochs`; every lifecycle op already
     * enforces the depth as it commits, so in steady state this is a
     * no-op. Returns the retired epoch ids, oldest first. Holds
-    * [[CompactLock]]. */
+    * [[CompactLock]] and settles first, like every op on [[mutate]]. */
   def vacuumEpochs(spark: SparkSession, path: String,
       conf: Option[SinkConf] = None): Seq[Long] =
-    withFencedCompactorLock(spark, path, conf) { (c, _) =>
-      retireEpochsLocked(spark, path, fs(spark, path), c)
-    }
+    mutate(spark, path, conf)(_.retire())
 
   /** The time-travel catalog: one row per RETAINED committed epoch —
     * `epoch`, `op` (the lifecycle op that minted it; null pre-tag),

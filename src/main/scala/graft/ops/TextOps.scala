@@ -1759,29 +1759,17 @@ object TextOps {
     Seq("postings", "df", "stats", "tomb")
       .map(part => new org.apache.hadoop.fs.Path(s"$out/$part/gen=$gen"))
 
-  /** Clear any orphan data a TORN write left under generation id
-    * `gen` before minting it anew: a crash after data landed but
-    * before the marker leaves uncommitted `gen=` dirs, and the next
-    * mint REUSES the id (markers drive the counter) — without this
-    * sweep, an orphan `tomb/gen=N` from a torn upsert/delete would be
-    * resurrected into the new generation the moment its marker lands
-    * (overwrite-mode writes cover postings/df/stats, but ops that
-    * write no tomb would adopt the stale one). */
-  private def lexClearGen(spark: SparkSession, out: String,
-      gen: Long): Unit = {
-    val f = fs(spark, out)
-    lexGenDirs(out, gen).foreach(f.delete(_, true))
-  }
-
-  /** Install generation `gen`'s marker, LAST: the generation becomes
-    * visible atomically (temp + rename, so a marker carrying metadata
-    * lines — e.g. [[syncLexicalIndex]]'s sink cursor — is never
-    * torn). */
-  private def lexCommit(spark: SparkSession, out: String, gen: Long,
-      lines: Seq[String], what: String): Unit =
-    CommitLog.write(fs(spark, out), new org.apache.hadoop.fs.Path(out),
-      s"$LexMarker$gen", lines.mkString("\n"),
-      s"could not commit $what at $out")
+  /** Mint the next generation of the index at `out` through
+    * [[CommitLog.Generations.mint]] (clear its dirs, overlap `writes`,
+    * marker last — so a marker carrying metadata lines, e.g.
+    * [[syncLexicalIndex]]'s sink cursor, is never torn — and sweep
+    * what a `replaces=` marker supersedes). `what` names the
+    * generation in a failed install's refusal. */
+  private def lexMint(marks: CommitLog.Generations, out: String,
+      lines: Seq[String], what: Long => String)(
+      writes: (Long => Unit)*): Long =
+    marks.mint(lexGenDirs(out, _), lines,
+      g => s"could not commit ${what(g)} at $out")(writes: _*)
 
   /** Space-split tokens per doc (q135's tokenizer — the index and the
     * from-scratch oracle must agree on token identity). */
@@ -1790,8 +1778,7 @@ object TextOps {
       filter(split(col("text"), " "), t => t =!= lit(""))).as("tok"))
 
   private def lexAppendGen(spark: SparkSession, docs: DataFrame,
-      out: String, gen: Long, meta: Seq[String] = Seq.empty): Unit = {
-    lexClearGen(spark, out, gen)
+      out: String, marks: CommitLog.Generations, meta: Seq[String]): Unit = {
     // one tokenize+count pass feeds all three writes (postings, df,
     // stats) — without the lineage cut each write job would re-scan
     // and re-tokenize the batch (q57's localCheckpoint discipline)
@@ -1804,23 +1791,22 @@ object TextOps {
     // size-aware range writers (the sink discipline): keys ⊃ {b}, so a
     // hot bucket spans several sized files and b= pruning stays exact.
     // The three tables are independent given the checkpointed tf, so
-    // their writes overlap (Par.all, guide §2.6); the marker below
-    // still lands only after all three are joined
+    // their writes overlap (guide §2.6); the marker still lands only
+    // after all three are joined
     val k = lexWriterTasks(spark, postings)
     val dfTab = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("b", pmod(xxhash64(col("tok")), lit(lexBuckets)))
-    Par.all(
-      () => postings.repartitionByRange(k, col("b"), col("tok"))
+    lexMint(marks, out, meta, g => s"lexical-index generation $g")(
+      gen => postings.repartitionByRange(k, col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/postings/gen=$gen"),
-      () => dfTab.repartitionByRange(lexWriterTasks(spark, dfTab),
+      gen => dfTab.repartitionByRange(lexWriterTasks(spark, dfTab),
           col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/df/gen=$gen"),
-      () => dl.agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))
+      gen => dl.agg(count(lit(1)).as("n_docs"), sum("len").as("total_len"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$out/stats/gen=$gen"))
-    lexCommit(spark, out, gen, meta, s"lexical-index generation $gen")
   }
 
   /** Build the stored lexical index from scratch (generation 0).
@@ -1829,7 +1815,7 @@ object TextOps {
   def writeLexicalIndex(spark: SparkSession, docs: DataFrame,
       out: String, meta: Seq[String] = Seq.empty): Unit = {
     fs(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
-    lexAppendGen(spark, docs, out, 0L, meta)
+    lexAppendGen(spark, docs, out, lexGens(spark, out), meta)
   }
 
   /** Append an ingest batch as the next generation — O(batch) work,
@@ -1842,7 +1828,7 @@ object TextOps {
     val gens = lexGens(spark, out)
     require(gens.committed.nonEmpty,
       s"no committed lexical index at $out - writeLexicalIndex first")
-    lexAppendGen(spark, docs, out, gens.nextId, meta)
+    lexAppendGen(spark, docs, out, gens, meta)
   }
 
   /** The union of every active generation's tombstones, or None when
@@ -1898,8 +1884,6 @@ object TextOps {
     val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed lexical index at $out - writeLexicalIndex first")
-    val gen = marks.nextId
-    lexClearGen(spark, out, gen)
     val genF = col("gen").isin(gens: _*)
     val ids = deletes.select("doc_id").distinct()
     // one pruned scan of the victims' LIVE postings (the gen-scoped
@@ -1917,22 +1901,19 @@ object TextOps {
     if (hit.isEmpty) return gens.max
     val dfNeg = hit.groupBy("b", "tok").agg((count(lit(1)) * -1L).as("df"))
     // three independent delta writes off the checkpointed hit frame
-    // overlap (Par.all, guide §2.6); marker still lands after the join
-    Par.all(
-      () => dfNeg.repartitionByRange(lexWriterTasks(spark, dfNeg),
+    // overlap (guide §2.6); marker still lands after the join
+    lexMint(marks, out, Seq.empty, g => s"lexical-index delete generation $g")(
+      gen => dfNeg.repartitionByRange(lexWriterTasks(spark, dfNeg),
           col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/df/gen=$gen"),
-      () => hit.select("doc_id", "len").distinct()
+      gen => hit.select("doc_id", "len").distinct()
         .agg((count(lit(1)) * -1L).as("n_docs"),
           (sum("len") * -1L).as("total_len"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$out/stats/gen=$gen"),
-      () => hit.select("doc_id").distinct()
+      gen => hit.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
-    lexCommit(spark, out, gen, Seq.empty,
-      s"lexical-index delete generation $gen")
-    gen
   }
 
   /** UPSERT docs into the stored lexical index — Lucene's update-
@@ -1964,8 +1945,6 @@ object TextOps {
       s"no committed lexical index at $out - writeLexicalIndex first")
     val batch = docs.select("doc_id", "text")
     if (batch.isEmpty) return gens.max
-    val gen = marks.nextId
-    lexClearGen(spark, out, gen)
     val genF = col("gen").isin(gens: _*)
     val ids = batch.select("doc_id").distinct()
     // victims (the batch ids' currently-LIVE postings, one pruned
@@ -1998,21 +1977,22 @@ object TextOps {
       .groupBy("b", "tok").agg(sum("df").as("df"))
       .filter(col("df") =!= 0)
     // the four tables are independent given the checkpointed tf and
-    // victims frames, so their writes overlap (Par.all, guide §2.6);
-    // the marker below still lands only after all four are joined.
+    // victims frames, so their writes overlap (guide §2.6); the marker
+    // still lands only after all four are joined, so the delete side
+    // and the add side flip visible as one.
     // stats: net deltas — n_docs grows only by the true inserts,
     // total_len by (new lengths − replaced lengths); the victim and
     // batch aggregates are each a single row, so a crossJoin folds
     // them into one job (r18), now running inside its own slot
-    Par.all(
-      () => postings.repartitionByRange(k, col("b"), col("tok"))
+    lexMint(marks, out, meta, g => s"lexical-index upsert generation $g")(
+      gen => postings.repartitionByRange(k, col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/postings/gen=$gen"),
-      () => dfNet.repartitionByRange(lexWriterTasks(spark, dfNet),
+      gen => dfNet.repartitionByRange(lexWriterTasks(spark, dfNet),
           col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/df/gen=$gen"),
-      () => {
+      gen => {
         val nets = dl.agg(count(lit(1)).as("n"),
             coalesce(sum("len"), lit(0L)).as("l"))
           .crossJoin(victims.select("doc_id", "len").distinct()
@@ -2025,11 +2005,8 @@ object TextOps {
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$out/stats/gen=$gen")
       },
-      () => victims.select("doc_id").distinct()
+      gen => victims.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
-    // marker LAST: the delete side and the add side flip visible as one
-    lexCommit(spark, out, gen, meta, s"lexical-index upsert generation $gen")
-    gen
   }
 
   /** Fold every active generation of the stored lexical index into ONE
@@ -2052,8 +2029,6 @@ object TextOps {
     val active = marks.committed
     require(active.nonEmpty, s"no committed lexical index at $out")
     if (active.size == 1) return active.head
-    val gen = marks.nextId
-    lexClearGen(spark, out, gen)
     val genF = col("gen").isin(active: _*)
     // fold tombstones away physically: the merged generation carries
     // neither the victims' postings nor any tomb rows, and the df sum
@@ -2069,31 +2044,28 @@ object TextOps {
       .groupBy("b", "tok").agg(sum("df").as("df"))
       .filter(col("df") > 0)
     // the three merged tables read disjoint inputs: overlap their
-    // writes (Par.all); the replaces-marker lands after the join
-    Par.all(
-      () => postings.repartitionByRange(k, col("b"), col("tok"))
+    // writes; the replaces-marker lands after the join — an atomic
+    // flip superseding the old gens. Sync lineage CARRIES FORWARD (the
+    // folded generations' max cursor/epoch) — without it the next
+    // syncLexicalIndex would re-append already-indexed batches. The
+    // mint's cleanup then drops the superseded gens (re-run at the next
+    // compaction, so a crash mid-sweep only defers garbage, never
+    // correctness).
+    lexMint(marks, out,
+        s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
+        _ => "lexical-index compaction")(
+      gen => postings.repartitionByRange(k, col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/postings/gen=$gen"),
-      () => dfFold.repartitionByRange(lexWriterTasks(spark, dfFold),
+      gen => dfFold.repartitionByRange(lexWriterTasks(spark, dfFold),
           col("b"), col("tok"))
         .write.mode("overwrite").partitionBy("b")
         .parquet(s"$out/df/gen=$gen"),
-      () => spark.read.schema(lexStatsSchema).parquet(s"$out/stats")
+      gen => spark.read.schema(lexStatsSchema).parquet(s"$out/stats")
         .filter(genF)
         .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total_len"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$out/stats/gen=$gen"))
-    // atomic flip: the marker supersedes the old gens. Sync lineage
-    // CARRIES FORWARD (the folded generations' max cursor/epoch) —
-    // without it the next syncLexicalIndex would re-append
-    // already-indexed batches. Cleanup then drops the superseded gens
-    // (re-run at the next compaction, so a crash mid-sweep only defers
-    // garbage, never correctness).
-    lexCommit(spark, out, gen,
-      s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
-      "lexical-index compaction")
-    lexGens(spark, out).retire(lexGenDirs(out, _))
-    gen
   }
 
   /** BM25 top-k per probe against the STORED index: the probe's

@@ -1183,15 +1183,17 @@ object VectorOps {
       p("vec_id") === t("vec_id") && p("gen") < t("tomb_gen"), "left_anti")
   }
 
-  /** Clear any orphan data a TORN write left under generation id
-    * `gen` before minting it anew (the id counter is marker-driven and
-    * REUSES a torn generation's id; without this sweep an orphan
-    * `tomb/gen=N` would be adopted by the new generation's marker). */
-  private def vecClearGen(spark: SparkSession, out: String,
-      gen: Long): Unit = {
-    val f = fs(spark, out)
-    vecGenDirs(out, gen).foreach(f.delete(_, true))
-  }
+  /** Mint the next code generation of the index at `out` through
+    * [[CommitLog.Generations.mint]]: its dirs cleared (the id counter is
+    * marker-driven and REUSES a torn generation's id; without the sweep
+    * an orphan `tomb/gen=N` would be adopted by the new marker), the
+    * `writes` overlapped, the marker last, and what a `replaces=`
+    * marker supersedes swept. `what` names it in a failed install. */
+  private def vecMint(marks: CommitLog.Generations, out: String,
+      lines: Seq[String], what: Long => String)(
+      writes: (Long => Unit)*): Long =
+    marks.mint(vecGenDirs(out, _), lines,
+      g => s"could not commit ${what(g)} at $out")(writes: _*)
 
   /** Size-aware range write of a codes frame into
     * `out/codes/gen=N/cid=K/` — the sink-compaction discipline: a
@@ -1278,10 +1280,8 @@ object VectorOps {
     require(marks.committed.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first")
     val codes = encodeAgainstStored(spark, rows, out)
-    val gen = marks.nextId
-    vecClearGen(spark, out, gen)
-    writeCodes(spark, codes, out, gen)
-    commitVecGen(spark, out, gen, meta, s"vector-index generation $gen")
+    vecMint(marks, out, meta, g => s"vector-index generation $g")(
+      writeCodes(spark, codes, out, _))
   }
 
   /** Route + residual-encode `rows` against the STORED artifacts (the
@@ -1302,13 +1302,6 @@ object VectorOps {
         cb.withColumn("css", dot(col("c"), col("c"))))
       .join(assigned.select("vec_id", "cid"), "vec_id")
   }
-
-  /** Install code generation `gen`'s marker, last (temp + rename). */
-  private def commitVecGen(spark: SparkSession, out: String, gen: Long,
-      lines: Seq[String], what: String): Unit =
-    CommitLog.write(fs(spark, out), new org.apache.hadoop.fs.Path(out),
-      s"_GEN_COMMIT_$gen", lines.mkString("\n"),
-      s"could not commit $what at $out")
 
   /** UPSERT vectors into the stored index — the embedding-side
     * update-document (a re-embedded doc, a refreshed crawl): ONE
@@ -1336,17 +1329,13 @@ object VectorOps {
       s"no committed vector index at $out - writeVectorIndex first")
     if (rows.isEmpty) return gens.max
     val codes = encodeAgainstStored(spark, rows, out)
-    val gen = marks.nextId
-    vecClearGen(spark, out, gen)
     // the codes and tombstone tables are independent: overlap their
-    // writes (Par.all); the commit marker lands after both join
-    Par.all(
-      () => writeCodes(spark, codes, out, gen),
-      () => rows.select("vec_id").distinct()
+    // writes; the commit marker lands after both join
+    vecMint(marks, out, meta, g => s"vector-index generation $g")(
+      writeCodes(spark, codes, out, _),
+      gen => rows.select("vec_id").distinct()
         .withColumn("final", lit(false))
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
-    commitVecGen(spark, out, gen, meta, s"vector-index generation $gen")
-    gen
   }
 
   /** DELETE vectors from the stored index — the op an upstream dedup
@@ -1374,7 +1363,6 @@ object VectorOps {
     val gens = marks.committed
     require(gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first")
-    val gen = marks.nextId
     val ids = deletes.select("vec_id").distinct()
     // skip ids that are FULLY dead, nothing to re-kill. A final latest
     // tombstone alone cannot prove death: an append after a delete
@@ -1403,12 +1391,9 @@ object VectorOps {
       case None => ids
     }
     if (fresh.isEmpty) return gens.max
-    vecClearGen(spark, out, gen)
-    fresh.withColumn("final", lit(true))
-      .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen")
-    commitVecGen(spark, out, gen, Seq.empty,
-      s"vector-index delete generation $gen")
-    gen
+    vecMint(marks, out, Seq.empty, g => s"vector-index delete generation $g")(
+      gen => fresh.withColumn("final", lit(true))
+        .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
   }
 
   /** Fold every active code generation into ONE, dropping tombstoned
@@ -1579,24 +1564,20 @@ object VectorOps {
     require(active.nonEmpty, s"no committed vector index at $out")
     val tomb = vecTomb(spark, out, active)
     if (active.size == 1 && tomb.isEmpty) return active.head
-    val gen = marks.nextId
-    vecClearGen(spark, out, gen)
     val base = spark.read.schema(vecCodesSchema).parquet(s"$out/codes")
       .filter(col("gen").isin(active: _*))
       .select("vec_id", "m", "code", "cid", "gen")
     val survivors = vecSurvivors(base, tomb).drop("gen")
-    writeCodes(spark, survivors, out, gen)
     // sync lineage CARRIES FORWARD (the lexical index's discipline):
     // without it the next syncVectorIndex would re-encode already-
-    // indexed batches. The cleanup sweep then drops the superseded
-    // code/tomb dirs and markers; [[IndexCommit]] survives even when
-    // gen 0 is replaced (it certifies the trained artifacts, not the
-    // codes, and is not a `_GEN_COMMIT_` marker).
-    commitVecGen(spark, out, gen,
-      s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
-      "vector-index compaction")
-    vecGens(spark, out).retire(vecGenDirs(out, _))
-    gen
+    // indexed batches. The mint's cleanup sweep then drops the
+    // superseded code/tomb dirs and markers; [[IndexCommit]] survives
+    // even when gen 0 is replaced (it certifies the trained artifacts,
+    // not the codes, and is not a `_GEN_COMMIT_` marker).
+    vecMint(marks, out,
+        s"replaces=${active.mkString(",")}" +: marks.carriedLineage,
+        _ => "vector-index compaction")(
+      writeCodes(spark, survivors, out, _))
   }
 
   /** The stored index's three relations (centroids, codebook, codes —

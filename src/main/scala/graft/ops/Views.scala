@@ -192,26 +192,24 @@ object Views {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  private def writeGen(spark: SparkSession, viewPath: String,
-      rows: DataFrame, gen: Long, cursor: Long, epoch: Long, mode: String,
+  /** Mint the view's next generation from `rows` through
+    * [[CommitLog.Generations.mint]]: a previous refresher's uncommitted
+    * attempt at the id is cleared, the marker lands last, and the
+    * superseded generations are swept data first, marker last — a
+    * crash between the two leaves a superseded marker the next sweep
+    * retires. */
+  private def writeGen(marks: CommitLog.Generations, viewPath: String,
+      rows: DataFrame, cursor: Long, epoch: Long, mode: String,
       replaces: Seq[Long], fp: String): Long = {
-    val f = fs(spark, viewPath)
-    val root = new org.apache.hadoop.fs.Path(viewPath)
-    val dir = new org.apache.hadoop.fs.Path(root, s"gen=$gen")
-    f.delete(dir, true) // a previous refresher's uncommitted attempt
-    // a view is O(groups) — tiny next to its source; ONE writer keeps
-    // the file count bounded instead of inheriting the shuffle
-    // partitioning
-    rows.repartition(1).write.mode("overwrite").parquet(dir.toString)
-    CommitLog.write(f, root, s"$MarkerPrefix$gen",
-      s"cursor=$cursor\nepoch=$epoch\nmode=$mode\n" +
-        s"def=$fp\nreplaces=${replaces.mkString(",")}",
-      s"could not install view commit marker for gen $gen under $viewPath")
-    // sweep superseded generations: data first, marker last — a crash
-    // between the two leaves a superseded marker the next sweep retires
-    markers(spark, viewPath)
-      .retire(g => Seq(new org.apache.hadoop.fs.Path(root, s"gen=$g")))
-    gen
+    def dir(g: Long) = new org.apache.hadoop.fs.Path(viewPath, s"gen=$g")
+    marks.mint(g => Seq(dir(g)),
+      Seq(s"cursor=$cursor", s"epoch=$epoch", s"mode=$mode", s"def=$fp",
+        s"replaces=${replaces.mkString(",")}"),
+      g => s"could not install view commit marker for gen $g under $viewPath")(
+      // a view is O(groups) — tiny next to its source; ONE writer keeps
+      // the file count bounded instead of inheriting the shuffle
+      // partitioning
+      g => rows.repartition(1).write.mode("overwrite").parquet(dir(g).toString))
   }
 
   /** Serialize refreshers: create-exclusive lock file, identity-checked
@@ -255,10 +253,11 @@ object Views {
   def createView(spark: SparkSession, sink: String, viewPath: String,
       vd: ViewDef, tsCol: String = "ts"): Long =
     withViewLock(spark, viewPath) {
-      require(markers(spark, viewPath).committed.isEmpty,
+      val marks = markers(spark, viewPath)
+      require(marks.committed.isEmpty,
         s"view already exists at $viewPath - refreshView maintains it")
       val (rows, cursor, e1) = pinnedFullRead(spark, sink, tsCol)
-      writeGen(spark, viewPath, vd.partial(rows), 0L, cursor, e1, "full",
+      writeGen(marks, viewPath, vd.partial(rows), cursor, e1, "full",
         Seq.empty, vd.fingerprint)
     }
 
@@ -294,12 +293,12 @@ object Views {
             val stored = spark.read.parquet(s"$viewPath/gen=$cur")
             val merged = mergePartials(stored, vd.partial(delta), vd)
             val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
-            (writeGen(spark, viewPath, merged, cur + 1, newCursor, e1,
+            (writeGen(marks, viewPath, merged, newCursor, e1,
               "incremental", committed, vd.fingerprint), "incremental")
         }
       } else {
         val (rows, cursor, e1) = pinnedFullRead(spark, sink, tsCol)
-        (writeGen(spark, viewPath, vd.partial(rows), cur + 1, cursor, e1,
+        (writeGen(marks, viewPath, vd.partial(rows), cursor, e1,
           "full", committed, vd.fingerprint), "full")
       }
     }

@@ -76,6 +76,52 @@ class CommitLogSpec extends SparkSpecBase {
       "an installed marker left its temp file behind")
   }
 
+  test("every non-compact epoch mint keeps its marker bytes and a rising mint_ms") {
+    import spark.implicits._
+    val out = s"${tmpDir("clog_mints")}/events"
+    val conf = Some(graft.ops.SinkConf.of(spark).copy(keepEpochs = 8))
+    def batch(ts: String, id: Long, user: Long) =
+      Seq((Timestamp.valueOf(ts), id, user)).toDF("ts", "event_id", "user_id")
+    Streaming.writeBatchIdempotent(
+      batch("2024-01-01 10:00:00", 1L, 7L)
+        .union(batch("2024-01-02 10:00:00", 2L, 7L))
+        .union(batch("2024-01-03 10:00:00", 3L, 7L)), out, 4L)
+    assert(Streaming.compactSink(spark, out, quiesced = true, conf = conf) == 4L)
+    // each mint consumes no batch: batches= carries watermark 4 forward.
+    // A merge's key join puts the key column first in what it writes
+    // and records; retire and restore carry a recorded schema as is
+    def pinned(op: String, schema: String) =
+      s"batches=4\nop=$op\nbloom_cols=\nschema=$schema\nmint_ms=<ms>"
+    val keyFirst = sinkSchema.replace(
+      """{"name":"ts","type":"timestamp","nullable":true,"metadata":{}},""" +
+        """{"name":"event_id","type":"long","nullable":true,"metadata":{}},""",
+      """{"name":"event_id","type":"long","nullable":true,"metadata":{}},""" +
+        """{"name":"ts","type":"timestamp","nullable":true,"metadata":{}},""")
+    assert(Streaming.deleteWhere(spark, out, col("event_id") === 1L,
+      conf = conf) == 5L)
+    assert(Streaming.updateWhere(spark, out, col("event_id") === 2L,
+      Seq("user_id" -> lit(8L)), conf = conf) == 6L)
+    assert(Streaming.upsertBatch(spark, out,
+      batch("2024-01-03 10:00:00", 3L, 9L), Seq("event_id"), conf = conf) == 7L)
+    assert(Streaming.applyBatch(spark, out, Seq(2L).toDF("event_id"),
+      batch("2024-01-04 10:00:00", 4L, 7L), Seq("event_id"), conf = conf) == 8L)
+    assert(Streaming.retireDays(spark, out, java.sql.Date.valueOf("2024-01-04"),
+      conf = conf) == Seq("day=2024-01-03"))
+    assert(Streaming.restoreSink(spark, out, 7L, conf = conf) == 10L)
+    Seq(5L -> "delete", 6L -> "update").foreach { case (e, op) =>
+      assert(marker(s"$out/epoch=$e/_EPOCH_COMMIT") === pinned(op, sinkSchema))
+    }
+    Seq(7L -> "upsert", 8L -> "apply", 9L -> "retire", 10L -> "restore")
+      .foreach { case (e, op) =>
+        assert(marker(s"$out/epoch=$e/_EPOCH_COMMIT") === pinned(op, keyFirst))
+      }
+    val f = CommitLog.fs(spark, out)
+    val mints = (4L to 10L).map(e =>
+      Streaming.epochMarker(f, out, e).flatMap(_.mintMs).get)
+    assert(mints.zip(mints.tail).forall { case (a, b) => a < b },
+      s"mint_ms not strictly increasing: $mints")
+  }
+
   test("the lexical index's generation markers keep their bytes") {
     import spark.implicits._
     val out = tmpDir("clog_lex")
@@ -207,10 +253,12 @@ class CommitLogSpec extends SparkSpecBase {
       .contains("corrupt epoch commit marker"))
     intercept[IllegalStateException](m.mintMs)
     assert(m.op === Some("compact"))
-    assert(Streaming.epochMintMsOf(f, sink, 0L).isEmpty)
+    assert(CommitLog.lenient(
+      Streaming.epochMarker(f, sink, 0L).flatMap(_.mintMs)).isEmpty)
     assert(intercept[IllegalStateException](Streaming.epochMarker(f, sink, 1L))
       .getMessage.contains("cannot read epoch commit marker"))
-    assert(Streaming.epochBloomColsOf(f, sink, 1L).isEmpty)
+    assert(CommitLog.lenient(
+      Streaming.epochMarker(f, sink, 1L).flatMap(_.bloomCols)).isEmpty)
     assert(Streaming.epochMarker(f, sink, -1L).isEmpty, "−1 is no epoch")
   }
 

@@ -95,7 +95,8 @@ class SinkConfSpec extends SparkSpecBase {
       e
     }
     val f = CommitLog.fs(spark, out)
-    assert(Streaming.epochBloomColsOf(f, out, e) === Some(Set("event_id")))
+    assert(CommitLog.lenient(Streaming.epochMarker(f, out, e).flatMap(_.bloomCols))
+      === Some(Set("event_id")))
     // the compaction's own auto-index lifted every file's bloom from its
     // footer: the files carry native blooms for the column
     val man = spark.read.parquet(s"$out/epoch=$e/_file_bloom/col=event_id")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{SinkStats, Streaming}
+import graft.ops.{CommitLog, SinkStats, Streaming}
 
 /** Zone-map data skipping (SinkStats): pruned read ≡ full filter with
   * files actually skipped, pruning safety under all-null/drifted
@@ -620,7 +620,8 @@ class SinkStatsSpec extends SparkSpecBase {
     val f = hfs(sink)
     val e0 = maxEpochOf(sink)
     // the receipt that lets indexSinkBloom skip its footer pass
-    assert(Streaming.epochBloomColsOf(f, sink, e0) === Some(Set.empty),
+    assert(CommitLog.lenient(Streaming.epochMarker(f, sink, e0)
+      .flatMap(_.bloomCols)) === Some(Set.empty),
       "a conf-less lifecycle must record an EMPTY bloom_cols set")
     // ...and the skip path still builds a correct all-scan manifest
     SinkStats.indexSinkBloom(spark, sink, "event_id")
@@ -639,13 +640,14 @@ class SinkStatsSpec extends SparkSpecBase {
       spark.conf.unset("spark.graft.bloom.autoIndexColumns"))(
       v => spark.conf.set("spark.graft.bloom.autoIndexColumns", v))
     val e1 = maxEpochOf(sink)
-    assert(Streaming.epochBloomColsOf(f, sink, e1)
+    assert(CommitLog.lenient(Streaming.epochMarker(f, sink, e1).flatMap(_.bloomCols))
       === Some(Set("event_id")))
     // a FURTHER mutation with the conf OFF still carries the record
     // forward: untouched days MOVE, so their bloomed files survive and
     // the union is what keeps the current epoch's line sound
     Streaming.deleteWhere(spark, sink, col("user_id") % 11 === 5)
-    assert(Streaming.epochBloomColsOf(f, sink, maxEpochOf(sink))
+    assert(CommitLog.lenient(Streaming.epochMarker(f, sink, maxEpochOf(sink))
+      .flatMap(_.bloomCols))
       === Some(Set("event_id")),
       "the bloom_cols record must inherit from the previous epoch")
   }
@@ -671,7 +673,8 @@ class SinkStatsSpec extends SparkSpecBase {
     val e = maxEpochOf(sink)
     // the marker names the column (union of own conf + inherited), so
     // the footer classification RAN - and found both classes
-    assert(Streaming.epochBloomColsOf(hfs(sink), sink, e)
+    assert(CommitLog.lenient(Streaming.epochMarker(hfs(sink), sink, e)
+      .flatMap(_.bloomCols))
       === Some(Set("event_id")))
     val man = spark.read.parquet(s"$sink/epoch=$e/_file_bloom/col=event_id")
     val nNative = man.filter(col("native") === true).count()

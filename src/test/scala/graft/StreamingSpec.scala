@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.ops.{Replay, SnapshotDiff, Streaming}
+import graft.ops.{CommitLog, Replay, SnapshotDiff, Streaming}
 
 /** Structured Streaming specs via MemoryStream: windowed counts with
   * watermarks and the keyed-state replay machine (V11/V16).
@@ -2756,14 +2756,14 @@ class StreamingSpec extends SparkSpecBase
     Streaming.writeBatchIdempotent(
       Seq((tsv("2024-01-02 10:00:00"), 2L)).toDF("ts", "event_id"), out, 1L)
     assert(Streaming.compactSink(spark, out, quiesced = true) == 1L)
-    val m1 = Streaming.epochMintMsOf(f, out, 1L)
+    val m1 = CommitLog.lenient(Streaming.epochMarker(f, out, 1L).flatMap(_.mintMs))
     assert(m1.isDefined, "gapped first epoch lacks a mint record")
     // a follow-up gapped compaction (batch 2 -> epoch 2) clamps
     // strictly past the superseded epoch's mint
     Streaming.writeBatchIdempotent(
       Seq((tsv("2024-01-03 10:00:00"), 3L)).toDF("ts", "event_id"), out, 2L)
     assert(Streaming.compactSink(spark, out, quiesced = true) == 2L)
-    val m2 = Streaming.epochMintMsOf(f, out, 2L)
+    val m2 = CommitLog.lenient(Streaming.epochMarker(f, out, 2L).flatMap(_.mintMs))
     assert(m2.isDefined && m2.get > m1.get,
       s"mint not strictly increasing across gapped ids: $m1 -> $m2")
   }
@@ -2786,7 +2786,8 @@ class StreamingSpec extends SparkSpecBase
       // mint records are STRICTLY increasing even when ops land within
       // one clock millisecond (the commit clamps to prev + 1)
       val Seq(t0, t1, t2) = (0L to 2L).map(e =>
-        Streaming.epochMintMsOf(f, out, e).getOrElse(
+        CommitLog.lenient(Streaming.epochMarker(f, out, e).flatMap(_.mintMs))
+          .getOrElse(
           fail(s"epoch $e lacks a mint record")))
       assert(t0 < t1 && t1 < t2, s"mint not strictly increasing: $t0 $t1 $t2")
       def ids(ts: Long): Seq[Long] =
@@ -2876,7 +2877,8 @@ class StreamingSpec extends SparkSpecBase
         "restored day files are copies, not hard links")
       // the restore minted strictly after the epoch it superseded
       val Seq(m1, m2) = Seq(snap + 1, snap + 2).map(e =>
-        Streaming.epochMintMsOf(f, out, e).getOrElse(
+        CommitLog.lenient(Streaming.epochMarker(f, out, e).flatMap(_.mintMs))
+          .getOrElse(
           fail(s"epoch $e lacks a mint record")))
       assert(m1 < m2, s"restore mint not strictly increasing: $m1 -> $m2")
       assert(Streaming.describeSink(spark, out).collect()(0)
