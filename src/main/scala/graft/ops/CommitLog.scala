@@ -160,6 +160,13 @@ private[graft] object CommitLog {
     }
   }
 
+  /** Does `root` hold any `gen=` data dir? A tombstone root a
+    * compaction sweep emptied holds none, and `spark.read.parquet`
+    * refuses to infer a schema for it. */
+  def hasGenDirs(f: FileSystem, root: Path): Boolean =
+    f.exists(root) && f.listStatus(root).exists(s =>
+      s.isDirectory && s.getPath.getName.startsWith("gen="))
+
   /** The generation markers under `root`. `base`, when given, names a
     * marker that stands for generation 0 (the vector index's
     * `_INDEX_COMMIT`, which certifies its trained artifacts and is never

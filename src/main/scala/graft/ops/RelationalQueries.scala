@@ -809,16 +809,9 @@ object RelationalQueries {
     * per-JVM token + the session identity so two concurrent runs over
     * the same source dir (bench and tests in parallel) never race
     * writer-vs-reader on one directory. */
-  private[graft] def q90ScratchPath(spark: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    new java.io.File(
-      new java.io.File(root, s"graft_scratch_$jvmToken"),
-      s"customer_${key}_${graft.SessionCache.sessionToken(spark)}")
-      .getAbsolutePath
-  }
+  private[graft] def q90ScratchPath(spark: SparkSession, dir: String): String =
+    SharedArtifacts.scratchPath(spark, dir, s"graft_scratch_$jvmToken",
+      "customer")
 
   def q90Upsert(spark: SparkSession, dir: String): DataFrame = {
     // materialized: feeds the change derivation, the max-key scalar

@@ -43,18 +43,27 @@ private[graft] object SharedArtifacts {
   def once(spark: SparkSession, dir: String, name: String)
       (build: String => Unit): String =
     graft.SessionCache.getOrBuild(built, spark, s"artifact:$name:$dir") {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val root = spark.conf.getOption("spark.graft.scratchDir")
-        .getOrElse(System.getProperty("java.io.tmpdir"))
-      val path = new java.io.File(
-        new java.io.File(root, "graft_shared"),
-        s"${name}_${key}_${graft.SessionCache.sessionToken(spark)}")
-        .getAbsolutePath
+      val path = scratchPath(spark, dir, "graft_shared", name)
       CommitLog.fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
       build(path)
       path
     }
+
+  /** `<root>/<area>/<name>_<md5(dir)>_<session token>`: the one scratch
+    * path scheme of the session's shared artifacts and per-query
+    * scratch trees. `root` is `spark.graft.scratchDir` (the JVM tmpdir
+    * when unset); md5(dir) keys the input dir collision-free, and the
+    * session token keeps two sessions (or JVMs) apart. */
+  def scratchPath(spark: SparkSession, dir: String, area: String,
+      name: String): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val root = spark.conf.getOption("spark.graft.scratchDir")
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+    new java.io.File(new java.io.File(root, area),
+      s"${name}_${key}_${graft.SessionCache.sessionToken(spark)}")
+      .getAbsolutePath
+  }
 
   /** Clone shared artifact `src` into the caller's PRIVATE scratch
     * path `dst` (cleared first), so lifecycle mutations never touch

@@ -90,19 +90,49 @@ object SinkStats {
     }.reduce(_ + _)
   }
 
-  private def currentEpoch(spark: SparkSession, sink: String): Long =
-    Streaming.listSinkEpochs(spark, sink).collect()
-      .map(_.getLong(0)).foldLeft(-1L)(math.max)
-
-  /** File-level manifests speak the PHYSICAL schema; a pending
-    * rename/drop would make the indexed names diverge from the logical
-    * view readSink serves — refuse loudly until compaction normalizes. */
-  private def requireNoAlter(spark: SparkSession, sink: String,
-      op: String): Unit = {
-    val (r, d) = Streaming.readAlter(fs(spark, sink), sink)
-    require(r.isEmpty && d.isEmpty,
+  /** The sink's [[Streaming.Cut]] for a manifest op. File-level
+    * manifests speak the PHYSICAL schema; a pending rename/drop would
+    * make the indexed names diverge from the logical view readSink
+    * serves — refuse loudly until compaction normalizes. */
+  private def physicalCut(spark: SparkSession, sink: String,
+      op: String): Streaming.Cut = {
+    val cut = Streaming.cutOf(spark, sink)
+    require(!cut.alterPending,
       s"$op over $sink: a schema alter is pending - run compactSink to " +
         "normalize it first (file manifests index physical column names)")
+    cut
+  }
+
+  private val RerunStats = "every lifecycle op mints a new epoch whose " +
+    "files the previous manifest cannot describe; run indexSinkStats " +
+    "after maintenance"
+
+  /** The opener every `_file_stats`-served read shares: the
+    * [[physicalCut]], its committed epoch, and that epoch's manifest —
+    * which must exist (`hint` ends the refusal). Returns the cut and
+    * the manifest path. */
+  private def statsCut(spark: SparkSession, sink: String, op: String,
+      hint: String = RerunStats): (Streaming.Cut, String) = {
+    val cut = physicalCut(spark, sink, op)
+    val e = cut.epoch
+    require(e >= 0, s"no committed epoch at $sink")
+    val manifest = s"$sink/epoch=$e/$StatsDir"
+    require(fs(spark, sink).exists(new org.apache.hadoop.fs.Path(manifest)),
+      s"no _file_stats manifest for the current epoch $e of $sink - $hint")
+    (cut, manifest)
+  }
+
+  /** The cut's epoch days by name. A manifest day the epoch no longer
+    * resolves is stale by rename drift: refuse rather than silently
+    * drop its rows. */
+  private def heldDays(spark: SparkSession, cut: Streaming.Cut,
+      named: Seq[String]): Map[String, org.apache.hadoop.fs.Path] = {
+    val dayMap = Streaming.resolvedDays(fs(spark, cut.path), cut.path,
+      cut.epoch).toMap
+    named.foreach(d => require(dayMap.contains(d),
+      s"manifest names $d but epoch ${cut.epoch} does not hold it - re-run " +
+        "indexSinkStats"))
+    dayMap
   }
 
   /** min/max of one NUMERIC column chunk as a conservative double
@@ -190,10 +220,9 @@ object SinkStats {
   def indexSinkStats(spark: SparkSession, sink: String,
       cols: Seq[String]): Long = {
     require(cols.nonEmpty, "index at least one column")
-    requireNoAlter(spark, sink, "indexSinkStats")
+    val e = physicalCut(spark, sink, "indexSinkStats").epoch
     import spark.implicits._
     val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
     val days = Streaming.resolvedDays(f, sink, e)
     val files: Seq[(String, String, String)] = days.flatMap {
@@ -367,16 +396,7 @@ object SinkStats {
   def readSinkPruned(spark: SparkSession, sink: String, column: String,
       lo: Double, hi: Double, tsCol: String = "ts"): DataFrame = {
     require(lo <= hi, s"empty band: $lo > $hi")
-    requireNoAlter(spark, sink, "readSinkPruned")
-    val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
-    require(e >= 0, s"no committed epoch at $sink")
-    val manifest = s"$sink/epoch=$e/$StatsDir"
-    require(f.exists(new org.apache.hadoop.fs.Path(manifest)), {
-      s"no _file_stats manifest for the current epoch $e of $sink - " +
-        "every lifecycle op mints a new epoch whose files the previous " +
-        "manifest cannot describe; run indexSinkStats after maintenance"
-    })
+    val (cut, manifest) = statsCut(spark, sink, "readSinkPruned")
     val man = spark.read.parquet(manifest)
     // a file is skipped only when PROVABLY safe: recorded bounds
     // disjoint from the band, or provably all-null (n_nulls = nrows —
@@ -393,7 +413,8 @@ object SinkStats {
       .filter(col("column") === column && !allNull && !disjoint)
       .select("day", "file").collect()
       .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, sink, f, e, kept, tsCol)
+    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
+      tsCol)
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -417,15 +438,7 @@ object SinkStats {
       column: String, lo: String, hi: String,
       tsCol: String = "ts"): DataFrame = {
     require(lo != null && hi != null && lo <= hi, s"empty band: $lo > $hi")
-    requireNoAlter(spark, sink, "readSinkPrunedString")
-    val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
-    require(e >= 0, s"no committed epoch at $sink")
-    val manifest = s"$sink/epoch=$e/$StatsDir"
-    require(f.exists(new org.apache.hadoop.fs.Path(manifest)),
-      s"no _file_stats manifest for the current epoch $e of $sink - " +
-        "every lifecycle op mints a new epoch whose files the previous " +
-        "manifest cannot describe; run indexSinkStats after maintenance")
+    val (cut, manifest) = statsCut(spark, sink, "readSinkPrunedString")
     val man = spark.read.parquet(manifest)
     require(man.columns.contains("lo_b"),
       s"the _file_stats manifest of $sink predates byte string bounds - " +
@@ -449,7 +462,8 @@ object SinkStats {
         allNull || disjoint
       }
       .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, sink, f, e, kept, tsCol)
+    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
+      tsCol)
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -475,15 +489,7 @@ object SinkStats {
       val i = t.toInstant
       i.getEpochSecond.toDouble * 1e6 + i.getNano.toDouble / 1e3
     }
-    requireNoAlter(spark, sink, "readSinkPrunedTs")
-    val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
-    require(e >= 0, s"no committed epoch at $sink")
-    val manifest = s"$sink/epoch=$e/$StatsDir"
-    require(f.exists(new org.apache.hadoop.fs.Path(manifest)),
-      s"no _file_stats manifest for the current epoch $e of $sink - " +
-        "every lifecycle op mints a new epoch whose files the previous " +
-        "manifest cannot describe; run indexSinkStats after maintenance")
+    val (cut, manifest) = statsCut(spark, sink, "readSinkPrunedTs")
     val loU = math.nextDown(micros(lo))
     val hiU = math.nextUp(micros(hi))
     // same provably-safe skip rule as [[readSinkPruned]]: a stats-less
@@ -495,23 +501,19 @@ object SinkStats {
       .filter(col("column") === column && !allNull && !disjoint)
       .select("day", "file").collect()
       .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, sink, f, e, kept, tsCol)
+    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
+      tsCol)
       .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
   /** The relation over a pruned file set plus — conservatively — every
-    * committed live batch (stats cover the compacted zone only): the
-    * shared serving tail of [[readSinkPruned]] /
-    * [[readSinkPrunedString]] / [[readSinkPrunedTs]]. */
-  private def keptFilesFrame(spark: SparkSession, sink: String,
-      f: org.apache.hadoop.fs.FileSystem, e: Long,
+    * live batch of the cut (stats cover the compacted zone only): the
+    * shared serving tail of [[readSinkPruned]] / [[readSinkPrunedString]]
+    * / [[readSinkPrunedTs]] / [[readSinkPointIn]]. `dayMap` resolves
+    * every kept day ([[heldDays]], or the bloom probe's own check). */
+  private def keptFilesFrame(spark: SparkSession, cut: Streaming.Cut,
+      dayMap: Map[String, org.apache.hadoop.fs.Path],
       kept: Seq[(String, String)], tsCol: String): DataFrame = {
-    val dayMap = Streaming.resolvedDays(f, sink, e).toMap
-    // a manifest day the epoch no longer resolves = stale by rename
-    // drift; refuse rather than silently drop its rows
-    kept.foreach { case (d, _) => require(dayMap.contains(d),
-      s"manifest names $d but epoch $e does not hold it - re-run " +
-        "indexSinkStats") }
     // one reader per PHYSICAL BASE (the epoch dir holding each day —
     // ≤ retention depth many, 1 in steady state), not one per day:
     // `basePath` keeps the hive `day=` inference, and a 30-day band
@@ -522,19 +524,17 @@ object SinkStats {
         spark.read.option("basePath", basePath)
           .parquet(entries.map { case (d, fn) => s"${dayMap(d)}/$fn" }: _*)
       }
-    def withDay(df: DataFrame): DataFrame =
-      if (df.columns.contains(tsCol))
-        df.withColumn("day", to_date(col(tsCol)))
-      else df.withColumn("day", lit(null).cast("date"))
-    val wmRow = Streaming.listSinkEpochs(spark, sink).collect()
-      .filter(_.getLong(0) == e)
-    val wm = wmRow.headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveParts = Streaming.committedBatches(spark, sink, wm)
-      .map(d => withDay(spark.read.parquet(d._2.toString)))
-    val parts = epochParts ++ liveParts
+    val parts = epochParts ++ cut.frames(spark, cut.live, tsCol)
     if (parts.nonEmpty) parts.reduce(_.unionByName(_,
       allowMissingColumns = true))
-    else Streaming.readSink(spark, sink, tsCol).limit(0)
+    // a fully-pruned read serves the schema-only empty frame: no live
+    // batch widens the epoch's RECORDED schema here, so no sink file is
+    // listed, let alone read (a limit(0) over readSink would list every
+    // epoch file); only a pre-record marker infers it through readSink
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      cut.marker.flatMap(_.schema)
+        .getOrElse(Streaming.readSink(spark, cut.path, tsCol).schema))
   }
 
   /** The SHARED clustered sink the read-only skipping provers
@@ -620,15 +620,9 @@ object SinkStats {
       lo: Double, hi: Double, tsCol: String = "ts")
       : (DataFrame, Long, Long) = {
     require(lo <= hi, s"empty band: $lo > $hi")
-    requireNoAlter(spark, sink, "countSinkPruned")
+    val (cut, manifest) = statsCut(spark, sink, "countSinkPruned",
+      "run indexSinkStats after maintenance")
     import spark.implicits._
-    val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
-    require(e >= 0, s"no committed epoch at $sink")
-    val manifest = s"$sink/epoch=$e/$StatsDir"
-    require(f.exists(new org.apache.hadoop.fs.Path(manifest)),
-      s"no _file_stats manifest for the current epoch $e of $sink - " +
-        "run indexSinkStats after maintenance")
     val man = spark.read.parquet(manifest)
       .filter(col("column") === column).collect().toSeq
       .map(r => (r.getString(0), r.getString(1),
@@ -648,12 +642,7 @@ object SinkStats {
       case (_, _, fLo, fHi, _, nNulls) =>
         fLo.exists(_ >= lo) && fHi.exists(_ <= hi) && nNulls.isDefined
     }
-    val dayMap = Streaming.resolvedDays(f, sink, e).toMap
-    (inside ++ straddle).foreach { case (d, _, _, _, _, _) =>
-      require(dayMap.contains(d),
-        s"manifest names $d but epoch $e does not hold it - re-run " +
-          "indexSinkStats")
-    }
+    val dayMap = heldDays(spark, cut, (inside ++ straddle).map(_._1))
     def dayVal(d: String): java.sql.Date =
       if (d == Streaming.NullDayDir) null
       else java.sql.Date.valueOf(d.stripPrefix("day="))
@@ -671,18 +660,9 @@ object SinkStats {
       }
       .map(_.filter(col(column) >= lo && col(column) <= hi)
         .groupBy(col("day")).agg(count(lit(1)).as("n")))
-    val wm = Streaming.listSinkEpochs(spark, sink).collect()
-      .filter(_.getLong(0) == e).headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveDF = Streaming.committedBatches(spark, sink, wm)
-      .map { d =>
-        val raw = spark.read.parquet(d._2.toString)
-        val dated =
-          if (raw.columns.contains(tsCol))
-            raw.withColumn("day", to_date(col(tsCol)))
-          else raw.withColumn("day", lit(null).cast("date"))
-        dated.filter(col(column) >= lo && col(column) <= hi)
-          .groupBy(col("day")).agg(count(lit(1)).as("n"))
-      }
+    val liveDF = cut.frames(spark, cut.live, tsCol)
+      .map(_.filter(col(column) >= lo && col(column) <= hi)
+        .groupBy(col("day")).agg(count(lit(1)).as("n")))
     val parts = Seq(metaDF) ++ scanDF ++ liveDF
     val counts = parts.reduce(_.unionByName(_))
       .groupBy(col("day")).agg(sum(col("n")).as("n_events"))
@@ -740,9 +720,8 @@ object SinkStats {
   def indexSinkBloom(spark: SparkSession, sink: String, column: String,
       bits: Int = 1 << 14, seeds: Int = 4): Long = {
     require(bits > 0 && seeds > 0, "bloom needs positive bits and seeds")
-    requireNoAlter(spark, sink, "indexSinkBloom")
+    val e = physicalCut(spark, sink, "indexSinkBloom").epoch
     val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
     // IDEMPOTENCE FAST PATH (r18, the stats manifest's twin): the
     // per-column bloom manifest is epoch-pinned and a pure function of
@@ -1019,44 +998,16 @@ object SinkStats {
     * cost one manifest read and one footer sweep, not N. */
   def readSinkPointIn(spark: SparkSession, sink: String, column: String,
       values: Seq[Any], tsCol: String = "ts"): DataFrame = {
-    requireNoAlter(spark, sink, "readSinkPoint")
+    val cut = physicalCut(spark, sink, "readSinkPoint")
     require(values.nonEmpty, "probe at least one value")
     values.foreach(v => require(v != null,
       "point lookup on NULL is an IS NULL scan, not an equality probe"))
     val vs = values.distinct
-    val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
-    require(e >= 0, s"no committed epoch at $sink")
+    require(cut.epoch >= 0, s"no committed epoch at $sink")
     val (colType, dayMap, perValue) = pointKeptByValue(spark, sink,
-      column, vs, f, e)
-    val kept = perValue.flatten.distinct
-    val epochParts = kept
-      .groupBy { case (d, _) => dayMap(d).getParent.toString }
-      .toSeq.map { case (basePath, entries) =>
-        spark.read.option("basePath", basePath)
-          .parquet(entries.map { case (d, fn) => s"${dayMap(d)}/$fn" }: _*)
-      }
-    def withDay(df: DataFrame): DataFrame =
-      if (df.columns.contains(tsCol))
-        df.withColumn("day", to_date(col(tsCol)))
-      else df.withColumn("day", lit(null).cast("date"))
-    val wm = Streaming.listSinkEpochs(spark, sink).collect()
-      .filter(_.getLong(0) == e).headOption.map(_.getLong(2)).getOrElse(-1L)
-    val liveParts = Streaming.committedBatches(spark, sink, wm)
-      .map(d => withDay(spark.read.parquet(d._2.toString)))
-    val parts = epochParts ++ liveParts
-    val base =
-      if (parts.nonEmpty) parts.reduce(_.unionByName(_,
-        allowMissingColumns = true))
-      // a fully-pruned probe must yield a frame with ZERO input files
-      // (a limit(0) over readSink would still report every sink file
-      // and defeat the caller's skip accounting) - materialize the
-      // schema-only empty frame instead
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Streaming.readSink(spark, sink, tsCol).schema)
-    base.filter(vs.map(v => col(column) === lit(v).cast(colType))
-      .reduce(_ || _))
+      column, vs, fs(spark, sink), cut.epoch)
+    keptFilesFrame(spark, cut, dayMap, perValue.flatten.distinct, tsCol)
+      .filter(vs.map(v => col(column) === lit(v).cast(colType)).reduce(_ || _))
   }
 
   /** The kept-file computation both point lookups share: per probed
@@ -1406,8 +1357,8 @@ object SinkStats {
       // sized against the stale batch-derived target wrote ~17x the
       // intended file count
       val epochBytes = f.getContentSummary(new org.apache.hadoop.fs.Path(
-        s"$sink/epoch=${Streaming.listSinkEpochs(spark, sink).collect()
-          .map(_.getLong(0)).max}")).getLength
+        s"$sink/epoch=${Streaming.committedEpochs(spark, sink).last._1}"))
+        .getLength
       Streaming.deleteWhere(spark, sink, col("user_id") % 7 === 3,
         conf = Some(conf.copy(
           targetFileBytes = math.max(1L, epochBytes / 512))))
@@ -1433,7 +1384,7 @@ object SinkStats {
     // total file count via the epoch listing (NOT via an index call -
     // this query must never index anything)
     val f = fs(spark, sink)
-    val e = currentEpoch(spark, sink)
+    val e = Streaming.cutOf(spark, sink).epoch
     val total = Streaming.resolvedDays(f, sink, e).map { case (_, d) =>
       f.listStatus(d).count(s => s.isFile &&
         !s.getPath.getName.startsWith("_") &&

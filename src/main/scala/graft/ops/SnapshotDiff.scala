@@ -96,8 +96,7 @@ object SnapshotDiff {
       compareCols: Seq[String], valueCols: Seq[String],
       tsCol: String, conf: SinkConf): Option[DataFrame] = {
     if (!conf.cdcUseChangeFiles) return None
-    val retained = Streaming.listSinkEpochs(spark, path).collect()
-      .map(_.getLong(0)).toSet
+    val retained = Streaming.committedEpochs(spark, path).map(_._1).toSet
     if (!retained.contains(fromEpoch) || !retained.contains(toEpoch))
       return None
     val frames = ((fromEpoch + 1) to toEpoch).map(e =>
@@ -382,8 +381,7 @@ object SnapshotDiff {
     * post-upsert state — `keepEpochs = 3` retains exactly the
     * compact / delete / upsert triple. */
   private def cdcEndpoints(spark: SparkSession, src: String): (Long, Long) = {
-    val es = Streaming.listSinkEpochs(spark, src).collect()
-      .map(_.getLong(0)).sorted
+    val es = Streaming.committedEpochs(spark, src).map(_._1)
     require(es.length == 3,
       s"shared CDC source holds ${es.length} retained epochs, expected " +
         "3 (compact, delete, upsert) - the artifact was mutated")
@@ -473,8 +471,7 @@ object SnapshotDiff {
     * in the rename, nothing doubled. */
   def q159CdcIngest(spark: SparkSession, dir: String): DataFrame = {
     val src = sharedIngestCdcSource(spark, dir)
-    val es = Streaming.listSinkEpochs(spark, src).collect()
-      .map(_.getLong(0)).sorted
+    val es = Streaming.committedEpochs(spark, src).map(_._1)
     require(es.length == 3,
       s"shared ingest-CDC source holds ${es.length} retained epochs, " +
         "expected 3 (compact, compact, delete) - the artifact was mutated")

@@ -774,7 +774,7 @@ object Streaming {
   /** Committed batch dirs (their [[BatchCommit]] marker exists) with id
     * above `after`, ascending — with the watermark as `after`, the live
     * batches no epoch has folded yet. */
-  private[ops] def committedBatches(spark: SparkSession, path: String,
+  private def committedBatches(spark: SparkSession, path: String,
       after: Long = -1L): Seq[(Long, org.apache.hadoop.fs.Path)] = {
     val f = fs(spark, path)
     subdirs(spark, path, "batch_id=").filter { case (id, p) =>
@@ -784,7 +784,7 @@ object Streaming {
 
   /** Committed epoch dirs (their [[EpochCommit]] marker exists),
     * ascending. */
-  private def committedEpochs(spark: SparkSession, path: String)
+  private[ops] def committedEpochs(spark: SparkSession, path: String)
       : Seq[(Long, org.apache.hadoop.fs.Path)] = {
     val f = fs(spark, path)
     subdirs(spark, path, "epoch=").filter { case (_, p) =>
@@ -982,24 +982,84 @@ object Streaming {
     prev.fold(Option(own))(_.bloomCols.map(_ ++ own))
   }
 
-  /** Watermark read for UNLOCKED callers (readers, pollers, policy
-    * inputs): a concurrent maintenance op may retire the listed max
-    * epoch between `maxEpoch` and the marker open — a benign race, and
-    * the post-race state is consistent, so retry once; a second
-    * failure (or any non-FileNotFound cause) is real corruption and
-    * propagates. LOCKED maintenance bodies read [[epochMarker]]
-    * directly: under the lock the epoch cannot vanish, so every
-    * failure there is loud by design. */
-  private def racedWatermark(spark: SparkSession, path: String,
-      f: org.apache.hadoop.fs.FileSystem): Long = {
-    def fnf(e: Throwable): Boolean = e match {
+  /** Run a lock-free read, retried ONCE when it lost a benign race
+    * with concurrent maintenance: a dir or marker listed at the top is
+    * retired (FileNotFoundException, possibly wrapped — [[epochMarker]]
+    * wraps its read failure) before the read of it lands. The
+    * post-maintenance state is consistent, so the retry sees a whole
+    * cut; a second failure, or any other cause, is a real fault and
+    * propagates. LOCKED maintenance bodies never retry: under the lock
+    * nothing they list can vanish, so every failure there is loud. */
+  private def racedOnce[T](read: => T): T = {
+    def raced(e: Throwable): Boolean = e match {
       case _: java.io.FileNotFoundException => true
-      case e if e.getCause != null => fnf(e.getCause)
+      case e: Exception => e.getCause != null && raced(e.getCause)
       case _ => false
     }
-    def once() = epochMarker(f, path, maxEpoch(spark, path))
-      .fold(-1L)(_.watermark)
-    try once() catch { case e: IllegalStateException if fnf(e) => once() }
+    try read catch { case e: Exception if raced(e) => read }
+  }
+
+  /** What one lock-free reader sees of the sink, read once ([[cutOf]]):
+    * the current committed epoch's [[EpochMarker]] (its id, watermark,
+    * recorded schema and op), the committed `batch_id=` dirs above that
+    * watermark (`live`, ascending), every retained committed epoch id
+    * (`retained`, ascending) and the pending alter ([[readAlter]]).
+    * Every unlocked reader — [[readSink]], [[readSinkSince]],
+    * [[sinkWatermark]], [[describeSink]], [[maintainSink]]'s policy
+    * reads, [[SinkStats]]' pruned and point reads, [[Views]]' pinned
+    * reads and the index syncs — decides "which epoch, and which
+    * batches" from one cut, so the epoch a frame reads and the
+    * watermark its live batches start above come from ONE marker read.
+    * Two listings could pair epoch N's rows with epoch N+1's watermark
+    * and silently drop the batches N+1 folded. */
+  private[ops] final case class Cut(path: String, marker: Option[EpochMarker],
+      live: Seq[(Long, org.apache.hadoop.fs.Path)], retained: Seq[Long],
+      alter: (Map[String, String], Seq[String])) {
+    /** The current committed epoch id; −1 before the first. */
+    def epoch: Long = marker.fold(-1L)(_.id)
+
+    /** The current epoch's consumed-batch watermark; −1 without one. */
+    def watermark: Long = marker.fold(-1L)(_.watermark)
+
+    /** The highest batch id visible through this cut: the max of the
+      * watermark and the live batch ids ([[sinkWatermark]]). */
+    def cursor: Long = (watermark +: live.map(_._1)).max
+
+    def alterPending: Boolean = alter._1.nonEmpty || alter._2.nonEmpty
+
+    /** `df` under the pending alter's logical schema ([[applyAlter]]). */
+    def conform(df: DataFrame): DataFrame = applyAlter(df, alter._1, alter._2)
+
+    /** One frame per batch dir: `day` derived from `tsCol` (NULL when
+      * the batch lacks it), conformed to the pending alter. */
+    def frames(spark: SparkSession, dirs: Seq[(Long, org.apache.hadoop.fs.Path)],
+        tsCol: String): Seq[DataFrame] = dirs.map { case (_, d) =>
+      val df = spark.read.parquet(d.toString)
+      conform(
+        if (df.columns.contains(tsCol)) df.withColumn("day", to_date(col(tsCol)))
+        else df.withColumn("day", lit(null).cast("date")))
+    }
+
+    /** The current view's parts: the epoch's relation (when it holds
+      * data) and every live batch, each conformed. */
+    def parts(spark: SparkSession, tsCol: String): Seq[DataFrame] =
+      (if (epoch < 0) Seq.empty
+       else readEpochFrame(spark, fs(spark, path), path, epoch).toSeq)
+        .map(conform) ++ frames(spark, live, tsCol)
+  }
+
+  /** The sink's [[Cut]], read once, without the lock, retried once on a
+    * race ([[racedOnce]]). The alter is read FIRST: a normalizing
+    * compaction commits its epoch before it clears the marker, so an
+    * alter read ahead of the epoch listing can only be stale toward a
+    * normalized epoch, where its guarded renames are no-ops. */
+  private[ops] def cutOf(spark: SparkSession, path: String): Cut = racedOnce {
+    val f = fs(spark, path)
+    val alter = readAlter(f, path)
+    val retained = committedEpochs(spark, path).map(_._1)
+    val marker = epochMarker(f, path, retained.lastOption.getOrElse(-1L))
+    Cut(path, marker, committedBatches(spark, path, marker.fold(-1L)(_.watermark)),
+      retained, alter)
   }
 
   // -------------------------------------------------- writer lease
@@ -1385,7 +1445,7 @@ object Streaming {
 
   private val PendingAlter = "_PENDING_ALTER"
 
-  private[ops] def readAlter(f: org.apache.hadoop.fs.FileSystem,
+  private def readAlter(f: org.apache.hadoop.fs.FileSystem,
       path: String): (Map[String, String], Seq[String]) = {
     val p = new org.apache.hadoop.fs.Path(path, PendingAlter)
     if (!f.exists(p)) (Map.empty, Seq.empty)
@@ -2543,14 +2603,8 @@ object Streaming {
     * previous run's tree so reruns are deterministic. */
   private[ops] def scratchSink(spark: SparkSession, dir: String,
       prefix: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val sink = new java.io.File(
-      new java.io.File(root, "graft_sink_scratch"),
-      s"${prefix}_${key}_${graft.SessionCache.sessionToken(spark)}")
-      .getAbsolutePath
+    val sink = SharedArtifacts.scratchPath(spark, dir, "graft_sink_scratch",
+      prefix)
     fs(spark, sink).delete(new org.apache.hadoop.fs.Path(sink), true)
     sink
   }
@@ -3181,7 +3235,8 @@ object Streaming {
     * `day` predicate prunes the scan to that day's directory — the
     * read-path payoff of the date-partitioned layout; on live batches
     * it is computed so the same predicate stays cheap and the view is
-    * uniform.
+    * uniform. The epoch, its watermark, the live batches and the
+    * pending alter come from one [[Cut]] ([[cutOf]]), read once.
     *
     * A committed epoch still carrying its merge plan is ROLLED FORWARD
     * at construction: the reader completes the owed renames itself
@@ -3211,18 +3266,9 @@ object Streaming {
     * `spark.graft.sink.keepEpochs`. */
   def readSink(spark: SparkSession, path: String,
       tsCol: String = "ts", atEpoch: Option[Long] = None,
-      conf: Option[SinkConf] = None): DataFrame = {
-    val f = fs(spark, path)
-    // pending rename/drop: every view this reader serves — current,
-    // time-travel, each live batch — conforms to the LOGICAL schema
-    // (per part, so old-name epochs and new-name batches meet under
-    // one name; column-mapping semantics: history shows the current
-    // logical schema, like every mapping-based lakehouse)
-    val (alterRen, alterDrop) = readAlter(f, path)
-    def altered(df: DataFrame): DataFrame =
-      if (alterRen.isEmpty && alterDrop.isEmpty) df
-      else applyAlter(df, alterRen, alterDrop)
-    atEpoch.foreach { id =>
+      conf: Option[SinkConf] = None): DataFrame = atEpoch match {
+    case Some(id) =>
+      val f = fs(spark, path)
       require(f.exists(new org.apache.hadoop.fs.Path(
         s"$path/epoch=$id", EpochCommit)), {
         val retained = committedEpochs(spark, path).map(_._1)
@@ -3233,48 +3279,40 @@ object Streaming {
       })
       val frame = readEpochFrame(spark, f, path, id)
       require(frame.nonEmpty, s"epoch $id of $path holds no data")
-      return altered(frame.get)
+      // a pending rename/drop conforms history to the current logical
+      // schema too (column-mapping semantics)
+      val (ren, drop) = readAlter(f, path)
+      applyAlter(frame.get, ren, drop)
+    case None => readCut(spark, cutOf(spark, path), tsCol, conf)
+  }
+
+  /** [[readSink]]'s current view over one [[Cut]]: the cut's epoch,
+    * rolled forward first in classic mode, plus its live batches, each
+    * part conformed to the pending alter (per part, so old-name epochs
+    * and new-name batches meet under one name). */
+  private def readCut(spark: SparkSession, cut: Cut, tsCol: String,
+      conf: Option[SinkConf]): DataFrame = {
+    val path = cut.path
+    if (cut.epoch >= 0) {
+      val f = fs(spark, path)
+      val eDir = new org.apache.hadoop.fs.Path(s"$path/epoch=${cut.epoch}")
+      val plan = new org.apache.hadoop.fs.Path(eDir, MergePlan)
+      if (f.exists(plan) && conf.getOrElse(SinkConf.of(spark)).keepEpochs == 1)
+        try finishMoves(f, path, eDir) // reader roll-forward
+        catch { case e: Exception =>
+          // fall back to plan-resolution in readEpochFrame — but LOUDLY:
+          // a persistent roll-forward failure (permissions, FS quirk)
+          // silently degrading every read to the weaker pre-move
+          // resolution mode would otherwise leave zero trace
+          log.warn(s"reader roll-forward of $plan failed; falling " +
+            "back to resolving pending days from the source epoch " +
+            s"(reads completing after the move lands will fail): $e")
+        }
     }
-    val cut = maxEpoch(spark, path)
-    def withDay(df: DataFrame): DataFrame =
-      if (df.columns.contains(tsCol))
-        df.withColumn("day", to_date(col(tsCol)))
-      else df.withColumn("day", lit(null).cast("date"))
-    val epochParts: Seq[DataFrame] =
-      if (cut < 0) Seq.empty
-      else {
-        val eDir = s"$path/epoch=$cut"
-        val plan = new org.apache.hadoop.fs.Path(eDir, MergePlan)
-        if (f.exists(plan) && conf.getOrElse(SinkConf.of(spark)).keepEpochs == 1)
-          try finishMoves(f, path,
-            new org.apache.hadoop.fs.Path(eDir)) // reader roll-forward
-          catch { case e: Exception =>
-            // fall back to plan-resolution below — but LOUDLY: a
-            // persistent roll-forward failure (permissions, FS quirk)
-            // silently degrading every read to the weaker pre-move
-            // resolution mode would otherwise leave zero trace
-            log.warn(s"reader roll-forward of $plan failed; falling " +
-              "back to resolving pending days from the source epoch " +
-              s"(reads completing after the move lands will fail): $e")
-          }
-        // an epoch retention emptied of every day dir holds no data
-        // files — it contributes nothing (live batches may still
-        // carry rows); a plan-bearing epoch resolves each owed day to
-        // whichever epoch physically holds it
-        readEpochFrame(spark, f, path, cut).toSeq
-      }
-    // live = newer than the epoch's consumed-batch WATERMARK (== the
-    // epoch id except after a delete, whose epoch consumed no batches
-    // — filtering on the id there would hide legitimately live rows).
-    // Raced-retried: this is an unlocked reader; if maintenance
-    // retires `cut` mid-construction the scan below fails loudly
-    // anyway (the documented reader-overlap contract), but the
-    // watermark read itself must not die on the benign window.
-    val wm = racedWatermark(spark, path, f)
-    val liveDirs = committedBatches(spark, path, wm)
-      .sortBy(_._1).map(_._2.toString)
-    val parts = (epochParts ++
-      liveDirs.map(d => withDay(spark.read.parquet(d)))).map(altered)
+    // an epoch retention emptied of every day dir contributes nothing
+    // (live batches may still carry rows); live = newer than the
+    // epoch's consumed-batch WATERMARK, read from the same marker
+    val parts = cut.parts(spark, tsCol)
     require(parts.nonEmpty, s"empty sink at $path")
     parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -3352,12 +3390,10 @@ object Streaming {
     * (NOT the epoch id, which runs ahead after a [[deleteWhere]]).
     * −1 on a sink holding neither. A downstream incremental consumer
     * records this, does its work, and later asks [[readSinkSince]]
-    * for everything that arrived after it. */
-  def sinkWatermark(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, path)
-    val wm = racedWatermark(spark, path, f)
-    committedBatches(spark, path).map(_._1).foldLeft(wm)(math.max)
-  }
+    * for everything that arrived after it. The [[Cut.cursor]] of one
+    * [[cutOf]] read. */
+  def sinkWatermark(spark: SparkSession, path: String): Long =
+    cutOf(spark, path).cursor
 
   /** Incremental consumption: the rows of exactly the COMMITTED batch
     * directories with id > `cursor` (a value previously returned by
@@ -3382,44 +3418,35 @@ object Streaming {
     * schema, so a poll loop needs no special casing once the sink
     * holds ANY committed data; a poll against a never-written sink
     * (no committed epoch, no committed batch — nothing to derive a
-    * schema from) refuses with an actionable message instead. */
+    * schema from) refuses with an actionable message instead. The
+    * horizon and the delta come from one [[Cut]] ([[cutOf]]). */
   def readSinkSince(spark: SparkSession, path: String, cursor: Long,
       tsCol: String = "ts"): DataFrame = {
-    val f = fs(spark, path)
-    val wm = racedWatermark(spark, path, f)
+    val cut = cutOf(spark, path)
+    val wm = cut.watermark
     require(cursor >= wm,
       s"incremental history before batch $wm is gone from $path: " +
         s"cursor $cursor predates the compaction horizon (those batches " +
         "were folded into the epoch and their boundaries retired) — " +
         "re-read the full sink via readSink and restart the cursor")
-    val delta = committedBatches(spark, path, cursor)
-      .sortBy(_._1).map(_._2.toString)
-    def withDay(df: DataFrame): DataFrame =
-      if (df.columns.contains(tsCol))
-        df.withColumn("day", to_date(col(tsCol)))
-      else df.withColumn("day", lit(null).cast("date"))
+    // cursor >= watermark, so the delta is a suffix of the cut's live
+    // batches
+    val delta = cut.live.filter(_._1 > cursor)
     // empty delta: serve readSink's schema with zero rows, so a poll
     // loop needs no special casing ONCE THE SINK HOLDS ANY COMMITTED
     // DATA. A never-written sink has no schema to serve — surface the
     // poll-before-first-commit case as a distinct, actionable error
     // instead of readSink's generic empty-sink failure.
     if (delta.isEmpty) {
-      require(wm >= 0 || committedBatches(spark, path).nonEmpty,
+      require(wm >= 0 || cut.live.nonEmpty,
         s"readSinkSince($cursor) on $path: the sink holds no committed " +
         "data yet, so there is no schema to serve an empty delta with - " +
         "poll again after the producer's first commit")
-      readSink(spark, path, tsCol).limit(0)
+      readCut(spark, cut, tsCol, None).limit(0)
     }
-    else {
-      // the delta conforms to the same logical schema as readSink (a
-      // pending rename/drop applies per batch, guarded - see readSink)
-      val (alterRen, alterDrop) = readAlter(f, path)
-      delta.map(d => withDay(spark.read.parquet(d)))
-        .map(df =>
-          if (alterRen.isEmpty && alterDrop.isEmpty) df
-          else applyAlter(df, alterRen, alterDrop))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
+    // the delta conforms to the same logical schema as readSink
+    else cut.frames(spark, delta, tsCol)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Warehouse retention: drop the committed epoch's `day=` directories
@@ -3577,11 +3604,19 @@ object Streaming {
     val distinctKeys = keys.select(keyCols.map(col): _*).distinct()
     rewrite(spark, path,
       df => df.join(distinctKeys, keyCols, "left_semi"),
-      df => df.join(distinctKeys, keyCols, "left_anti"),
+      withoutKeys(_, distinctKeys, keyCols),
       df => df.join(distinctKeys, keyCols, "left_semi")
         .withColumn(CdcKindCol, lit("delete")),
       "delete", tsCol, conf)
   }
+
+  /** `df` minus its rows whose `keyCols` tuple appears in `keys`, in
+    * `df`'s own column order: a `USING` join puts the key columns
+    * first, and an epoch written from that order would record and
+    * serve it. */
+  private def withoutKeys(df: DataFrame, keys: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    df.join(keys, keyCols, "left_anti").select(df.columns.toSeq.map(col): _*)
 
   /** Predicate UPDATE — the DML triad's third op beside DELETE-where
     * ([[deleteWhere]]) and key-MERGE ([[upsertBatch]]), closing the
@@ -4158,7 +4193,7 @@ object Streaming {
             force = !batchEmpty) { (affected, affectedFrame, epochDir, bytes) =>
           // survivors of the matched days (anti-join = NOT matched) plus the
           // batch itself — ONE write, ONE commit, atomic by construction
-          val kept = affectedFrame.map(_.join(keys, keyCols, "left_anti"))
+          val kept = affectedFrame.map(withoutKeys(_, keys, keyCols))
           val epochRows =
             kept.fold(incoming)(
               _.unionByName(incoming, allowMissingColumns = true))
@@ -4262,26 +4297,18 @@ object Streaming {
     // marker read refusing) before its stat call lands. The
     // post-maintenance state is itself consistent — retry the whole
     // snapshot once; a second failure is a real fault and propagates.
-    def raced(e: Throwable): Boolean = e match {
-      case _: java.io.FileNotFoundException => true
-      case e: Exception => e.getCause != null && raced(e.getCause)
-      case _ => false
-    }
-    try describeSinkOnce(spark, path)
-    catch { case e: Exception if raced(e) => describeSinkOnce(spark, path) }
+    racedOnce(describeSinkOnce(spark, path))
   }
 
   private def describeSinkOnce(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, path)
-    val cut = maxEpoch(spark, path)
-    val cutMarker = epochMarker(f, path, cut)
-    val wm = cutMarker.fold(-1L)(_.watermark)
-    val batches = subdirs(spark, path, "batch_id=")
-    val (committed, inflight) = batches.partition { case (_, p) =>
+    val snap = cutOf(spark, path)
+    val (cut, cutMarker, wm, live) =
+      (snap.epoch, snap.marker, snap.watermark, snap.live)
+    val inflight = subdirs(spark, path, "batch_id=").filterNot { case (_, p) =>
       f.exists(new org.apache.hadoop.fs.Path(p, BatchCommit))
     }
-    val live = committed.filter(_._1 > wm)
     val eDir = new org.apache.hadoop.fs.Path(s"$path/epoch=$cut")
     val dayDirs =
       if (cut < 0) Seq.empty
@@ -4316,14 +4343,14 @@ object Streaming {
     // snapshot-retention visibility: how deep the time-travel history
     // actually is right now, and which lifecycle op minted the current
     // epoch — the counters an operator reads instead of listing dirs
-    val epochIds = committedEpochs(spark, path).map(_._1)
+    val epochIds = snap.retained
     val oldestEpoch = epochIds.headOption.getOrElse(-1L)
     val lastOp = cutMarker.flatMap(_.op).orNull
     // a pending rename/drop is operator-visible state: readers serve
     // the logical schema, mutations refuse, the next compaction pays
     // an all-days rewrite - the monitor should see it without knowing
     // about marker files
-    val alter = readAlter(f, path)
+    val alter = snap.alter
     val pendingAlter = (alter._1.toSeq.sorted.map { case (o, n) =>
       s"rename $o->$n"
     } ++ alter._2.sorted.map(c => s"drop $c")) match {
@@ -4393,8 +4420,7 @@ object Streaming {
       conf: Option[SinkConf] = None): Seq[String] = {
     val c = conf.getOrElse(SinkConf.of(spark))
     val f = fs(spark, path)
-    val wm = racedWatermark(spark, path, f)
-    val live = committedBatches(spark, path, wm)
+    val live = cutOf(spark, path).live
     // unlocked policy input, racing a concurrent compactor's batch
     // retirement: a dir that vanishes between list and stat simply
     // contributes 0 to the backlog (the other actor is already doing
@@ -4411,9 +4437,8 @@ object Streaming {
     val retired = retainDays match {
       case Some(n) =>
         require(n > 0, s"retainDays must be positive, got $n")
-        val cut = maxEpoch(spark, path)
-        val wmNow = racedWatermark(spark, path, f) // unlocked policy read
-        val backlog = committedBatches(spark, path, wmNow).nonEmpty
+        val now = cutOf(spark, path) // unlocked policy read
+        val (cut, backlog) = (now.epoch, now.live.nonEmpty)
         val days =
           if (cut < 0) Seq.empty
           else try f
@@ -4449,9 +4474,7 @@ object Streaming {
     // an operator LOWERED keepEpochs — gated on a lock-free listing
     // so the steady-state cron takes no extra lock.
     val epochsVacuumed = {
-      val excess = subdirs(spark, path, "epoch=").count { case (_, p) =>
-        f.exists(new org.apache.hadoop.fs.Path(p, EpochCommit))
-      } > c.keepEpochs
+      val excess = committedEpochs(spark, path).size > c.keepEpochs
       if (!excess) Seq.empty
       else {
         val gone = vacuumEpochs(spark, path, Some(c))
@@ -4520,17 +4543,12 @@ object Streaming {
     * operator consults before a `readSink(atEpoch = …)` — the
     * `VERSION AS OF` listing. Lock-free metadata listings only, with
     * [[describeSink]]'s one-retry race posture. */
-  def listSinkEpochs(spark: SparkSession, path: String): DataFrame = {
-    def raced(e: Throwable): Boolean = e match {
-      case _: java.io.FileNotFoundException => true
-      case e: Exception => e.getCause != null && raced(e.getCause)
-      case _ => false
-    }
-    def once(): DataFrame = {
+  def listSinkEpochs(spark: SparkSession, path: String): DataFrame =
+    racedOnce {
       import spark.implicits._
       val f = fs(spark, path)
-      val cut = maxEpoch(spark, path)
       val committed = committedEpochs(spark, path)
+      val cut = committed.lastOption.fold(-1L)(_._1)
       committed.map { case (id, p) =>
         val phys = f.listStatus(p).toSeq.count(s =>
           s.isDirectory && s.getPath.getName.startsWith("day="))
@@ -4546,8 +4564,6 @@ object Streaming {
       }.toDF("epoch", "op", "watermark", "physical_days",
         "referenced_days", "bytes", "is_current")
     }
-    try once() catch { case e: Exception if raced(e) => once() }
-  }
 
   /** Orphan sweep: remove the sink's uncommitted leftovers — epoch
     * attempts without [[EpochCommit]] (a compactor died mid-write;

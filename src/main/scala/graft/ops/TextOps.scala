@@ -1833,19 +1833,15 @@ object TextOps {
 
   /** The union of every active generation's tombstones, or None when
     * the index has never seen a delete (the common case pays no read).
-    * Listed manually because a compaction sweep can leave `tomb/`
-    * empty, which `spark.read.parquet` refuses to infer a schema for. */
+    * Checked with [[CommitLog.hasGenDirs]] first because a compaction
+    * sweep can leave `tomb/` empty. */
   private def lexTomb(spark: SparkSession, out: String,
-      gens: Seq[Long]): Option[DataFrame] = {
-    val f = fs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
-    if (!f.exists(root)) None
-    else if (!f.listStatus(root).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("gen="))) None
+      gens: Seq[Long]): Option[DataFrame] =
+    if (!CommitLog.hasGenDirs(fs(spark, out),
+      new org.apache.hadoop.fs.Path(s"$out/tomb"))) None
     else Some(spark.read.schema(lexTombSchema).parquet(s"$out/tomb")
       .filter(col("gen").isin(gens: _*))
       .select(col("doc_id"), col("gen").as("tomb_gen")))
-  }
 
   /** `p` minus tombstone-killed rows. A tombstone minted at generation
     * M kills the victim's postings from generations STRICTLY BEFORE M
@@ -2133,16 +2129,8 @@ object TextOps {
   }
 
   private def lexScratch(spark: SparkSession, dir: String,
-      prefix: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    new java.io.File(
-      new java.io.File(root, "graft_lex_index"),
-      s"${prefix}_${key}_${graft.SessionCache.sessionToken(spark)}")
-      .getAbsolutePath
-  }
+      prefix: String): String =
+    SharedArtifacts.scratchPath(spark, dir, "graft_lex_index", prefix)
 
   /** The SHARED two-generation BM25 base the lexical lifecycle provers
     * start from — built ONCE per session ([[SharedArtifacts]];
@@ -2276,11 +2264,8 @@ object TextOps {
     require(gens.nonEmpty, s"no committed lexical index at $out")
     val (cursor, epoch) = marks.syncState
     val f = fs(spark, out)
-    val tombs = {
-      val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
-      f.exists(root) && f.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("gen="))
-    }
+    val tombs =
+      CommitLog.hasGenDirs(f, new org.apache.hadoop.fs.Path(s"$out/tomb"))
     val bytes = f.getContentSummary(
       new org.apache.hadoop.fs.Path(out)).getLength
     Seq((gens.size.toLong, gens.max, cursor, epoch, tombs, bytes))
@@ -2339,27 +2324,26 @@ object TextOps {
       : (Long, String) = {
     val marks = lexGens(spark, out)
     val gens = marks.committed
-    val catalog = Views.epochCatalog(spark, sink)
-    val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
+    val cut = Streaming.cutOf(spark, sink)
     if (gens.isEmpty) {
-      val (rows, cursor, epoch) = Views.pinnedFullRead(spark, sink, "ts")
+      val (rows, cursor, epoch) = Views.pinnedFullRead(spark, cut, "ts")
       writeLexicalIndex(spark, rows.select("doc_id", "text"), out,
         Seq(s"cursor=$cursor", s"epoch=$epoch"))
       (0L, "build")
     } else {
       val (c, e0) = marks.syncState
-      require(Views.incrementalSound(catalog, e0, c),
+      require(Views.incrementalSound(spark, cut, e0, c),
         s"cannot sync $out from $sink: the sink compacted past cursor " +
           s"$c or mutated content (delete/upsert/retire) since epoch " +
           s"$e0 - an append stream cannot express either; rebuild the " +
           "index, or deleteFromLexicalIndex the affected ids and " +
           "restart the cursor from a fresh build")
-      val (deltaOpt, newCursor) = Views.pinnedDelta(spark, sink, c, "ts")
+      val (deltaOpt, newCursor) = Views.pinnedDelta(spark, cut, c, "ts")
       deltaOpt match {
         case None => (gens.max, "noop")
         case Some(delta) =>
           appendLexicalIndex(spark, delta.select("doc_id", "text"), out,
-            Seq(s"cursor=$newCursor", s"epoch=$e1"))
+            Seq(s"cursor=$newCursor", s"epoch=${cut.epoch}"))
           (gens.max + 1, "append")
       }
     }

@@ -1149,12 +1149,9 @@ object VectorOps {
     * an upsert's tombstone is non-final. Legacy tomb rows (pre-upsert
     * indexes, no `final` column) read as final — they were deletes. */
   private def vecTomb(spark: SparkSession, out: String,
-      gens: Seq[Long]): Option[DataFrame] = {
-    val f = fs(spark, out)
-    val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
-    if (!f.exists(root)) None
-    else if (!f.listStatus(root).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("gen="))) None
+      gens: Seq[Long]): Option[DataFrame] =
+    if (!CommitLog.hasGenDirs(fs(spark, out),
+      new org.apache.hadoop.fs.Path(s"$out/tomb"))) None
     else {
       // declared schema: legacy (pre-upsert) tomb rows have no `final`
       // column and read as NULL -> coalesced to true (they were
@@ -1169,7 +1166,6 @@ object VectorOps {
         .select(col("vec_id"), col("s.gen").as("tomb_gen"),
           col("s.final").as("tomb_final")))
     }
-  }
 
   /** `p` minus tombstone-killed code rows (see [[vecTomb]]'s
     * gen-scoped rule). `p` must carry the `gen` partition column.
@@ -1424,11 +1420,8 @@ object VectorOps {
     val (cursor, epoch) = marks.syncState
     val geom = marks.meta(0L)
     val f = fs(spark, out)
-    val tombs = {
-      val root = new org.apache.hadoop.fs.Path(s"$out/tomb")
-      f.exists(root) && f.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("gen="))
-    }
+    val tombs =
+      CommitLog.hasGenDirs(f, new org.apache.hadoop.fs.Path(s"$out/tomb"))
     val bytes = f.getContentSummary(
       new org.apache.hadoop.fs.Path(out)).getLength
     Seq((gens.size.toLong, gens.max, cursor, epoch,
@@ -1485,22 +1478,21 @@ object VectorOps {
     require(gens.nonEmpty,
       s"no committed vector index at $out - writeVectorIndex first " +
         "(train the artifacts; encodeFilter = lit(false) starts empty)")
-    val catalog = Views.epochCatalog(spark, sink)
-    val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
+    val cut = Streaming.cutOf(spark, sink)
     val (c, e0) = marks.syncState
-    require(Views.incrementalSound(catalog, e0, c),
+    require(Views.incrementalSound(spark, cut, e0, c),
       s"cannot sync $out from $sink: the sink compacted past cursor " +
         s"$c or mutated content (delete/upsert/retire) since epoch " +
         s"$e0 - an append stream cannot express either; rebuild the " +
         "index, or deleteFromVectorIndex the affected ids and restart " +
         "the cursor from a fresh sink")
-    val (deltaOpt, newCursor) = Views.pinnedDelta(spark, sink, c, "ts")
+    val (deltaOpt, newCursor) = Views.pinnedDelta(spark, cut, c, "ts")
     deltaOpt match {
       case None => (gens.max, "noop")
       case Some(delta) =>
         appendVectorIndexRows(spark,
           delta.select("vec_id", "label", "embedding"), out,
-          Seq(s"cursor=$newCursor", s"epoch=$e1"))
+          Seq(s"cursor=$newCursor", s"epoch=${cut.epoch}"))
         (gens.max + 1, "append")
     }
   }
@@ -1676,16 +1668,8 @@ object VectorOps {
     searchVectorIndex(spark, dir, sharedIvfpqBase(spark, dir))
 
   private def vecScratch(spark: SparkSession, dir: String,
-      prefix: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val root = spark.conf.getOption("spark.graft.scratchDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    new java.io.File(
-      new java.io.File(root, "graft_vector_index"),
-      s"${prefix}_${key}_${graft.SessionCache.sessionToken(spark)}")
-      .getAbsolutePath
-  }
+      prefix: String): String =
+    SharedArtifacts.scratchPath(spark, dir, "graft_vector_index", prefix)
 
   /** The SHARED full-corpus stored IVF-PQ index the vector lifecycle
     * provers start from — built ONCE per session ([[SharedArtifacts]];

@@ -105,67 +105,51 @@ object Views {
     CommitLog.generations(fs(spark, viewPath),
       new org.apache.hadoop.fs.Path(viewPath), MarkerPrefix)
 
-  private def withDay(df: DataFrame, tsCol: String): DataFrame =
-    if (df.columns.contains(tsCol))
-      df.withColumn("day", to_date(col(tsCol)))
-    else df.withColumn("day", lit(null).cast("date"))
-
-  /** The sink's retained-epoch catalog, collected — bounded by the
-    * retention depth (`keepEpochs`+1 rows), never data I/O. */
-  private[ops] def epochCatalog(spark: SparkSession, sink: String)
-      : Seq[(Long, String, Long)] =
-    Streaming.listSinkEpochs(spark, sink).collect().toSeq
-      .map(r => (r.getLong(0), Option(r.getString(1)).orNull, r.getLong(2)))
-      .sortBy(_._1)
-
-  /** Is a delta-only refresh provably equivalent to a recompute?
-    * Sound iff every epoch minted since the view's recorded one is
-    * retained and tagged `op=compact` (content-preserving over the
-    * batch log) and the view's cursor has not fallen behind the
-    * compaction horizon. A missing (vacuumed) intermediate epoch or a
-    * legacy untagged marker is UNPROVABLE, not assumed. */
-  private[ops] def incrementalSound(catalog: Seq[(Long, String, Long)],
+  /** Is a delta-only refresh from the view's recorded epoch `e0` and
+    * `cursor` provably equivalent to a recompute over `cut`? Sound iff
+    * every epoch minted since `e0` is retained and tagged `op=compact`
+    * (content-preserving over the batch log) and the cursor has not
+    * fallen behind the cut's compaction horizon (its watermark). A
+    * missing intermediate marker — vacuumed, even mid-call — an
+    * unreadable one, or a legacy untagged one is UNPROVABLE, not
+    * assumed. */
+  private[ops] def incrementalSound(spark: SparkSession, cut: Streaming.Cut,
       e0: Long, cursor: Long): Boolean = {
-    val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
+    val e1 = cut.epoch
+    def op(id: Long): Option[String] =
+      if (id == e1) cut.marker.flatMap(_.op)
+      else if (!cut.retained.contains(id)) None
+      else CommitLog.lenient(Streaming.epochMarker(fs(spark, cut.path),
+        cut.path, id).flatMap(_.op))
     if (e1 == e0) true
     else if (e1 < e0) false
-    else {
-      val byId = catalog.map(t => t._1 -> t).toMap
-      val chainCompact = (e0 + 1 to e1).forall(id =>
-        byId.get(id).exists(_._2 == "compact"))
-      chainCompact && cursor >= byId(e1)._3
-    }
+    else (e0 + 1 to e1).forall(op(_).contains("compact")) &&
+      cursor >= cut.watermark
   }
 
-  /** One driver-side listing pinning BOTH the rows a full recompute
-    * reads and the cursor it records: the current committed epoch's
-    * relation plus exactly the committed live batch dirs above its
-    * watermark. */
-  private[ops] def pinnedFullRead(spark: SparkSession, sink: String,
+  /** The rows a full recompute reads and the cursor and epoch it
+    * records, all from one [[Streaming.Cut]]: the current committed
+    * epoch's relation plus exactly the committed live batch dirs above
+    * its watermark, conformed to a pending alter as [[Streaming.readSink]]
+    * conforms them. */
+  private[ops] def pinnedFullRead(spark: SparkSession, cut: Streaming.Cut,
       tsCol: String): (DataFrame, Long, Long) = {
-    val f = fs(spark, sink)
-    val catalog = epochCatalog(spark, sink)
-    val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
-    val wm = catalog.lastOption.map(_._3).getOrElse(-1L)
-    val epochPart: Option[DataFrame] =
-      if (e1 < 0) None else Streaming.readEpochFrame(spark, f, sink, e1)
-    val live = Streaming.committedBatches(spark, sink, wm)
-    val cursor = (wm +: live.map(_._1)).max
-    val parts = epochPart.toSeq ++
-      live.map(d => withDay(spark.read.parquet(d._2.toString), tsCol))
+    val parts = cut.parts(spark, tsCol)
     require(parts.nonEmpty,
-      s"empty sink at $sink - nothing to materialize a view from")
-    (parts.reduce(_.unionByName(_, allowMissingColumns = true)), cursor, e1)
+      s"empty sink at ${cut.path} - nothing to materialize a view from")
+    (parts.reduce(_.unionByName(_, allowMissingColumns = true)), cut.cursor,
+      cut.epoch)
   }
 
-  /** One driver-side listing pinning the delta: committed batch dirs
-    * strictly above the view's cursor, and the cursor those dirs
-    * advance it to. None when the view is already current. */
-  private[ops] def pinnedDelta(spark: SparkSession, sink: String, cursor: Long,
-      tsCol: String): (Option[DataFrame], Long) = {
-    val delta = Streaming.committedBatches(spark, sink, cursor)
+  /** The delta above the view's `cursor` — the cut's live batches past
+    * it (callers check [[incrementalSound]] first, which holds the
+    * cursor at or above the cut's watermark) — and the cursor those
+    * batches advance it to. None when the view is already current. */
+  private[ops] def pinnedDelta(spark: SparkSession, cut: Streaming.Cut,
+      cursor: Long, tsCol: String): (Option[DataFrame], Long) = {
+    val delta = cut.live.filter(_._1 > cursor)
     if (delta.isEmpty) (None, cursor)
-    else (Some(delta.map(d => withDay(spark.read.parquet(d._2.toString), tsCol))
+    else (Some(cut.frames(spark, delta, tsCol)
       .reduce(_.unionByName(_, allowMissingColumns = true))),
       delta.map(_._1).max)
   }
@@ -256,7 +240,8 @@ object Views {
       val marks = markers(spark, viewPath)
       require(marks.committed.isEmpty,
         s"view already exists at $viewPath - refreshView maintains it")
-      val (rows, cursor, e1) = pinnedFullRead(spark, sink, tsCol)
+      val (rows, cursor, e1) =
+        pinnedFullRead(spark, Streaming.cutOf(spark, sink), tsCol)
       writeGen(marks, viewPath, vd.partial(rows), cursor, e1, "full",
         Seq.empty, vd.fingerprint)
     }
@@ -284,20 +269,19 @@ object Views {
           "one definition; create a new path for a new shape")
       val c = meta("cursor").toLong
       val e0 = meta("epoch").toLong
-      val catalog = epochCatalog(spark, sink)
-      if (incrementalSound(catalog, e0, c)) {
-        val (deltaOpt, newCursor) = pinnedDelta(spark, sink, c, tsCol)
+      val cut = Streaming.cutOf(spark, sink)
+      if (incrementalSound(spark, cut, e0, c)) {
+        val (deltaOpt, newCursor) = pinnedDelta(spark, cut, c, tsCol)
         deltaOpt match {
           case None => (cur, "noop")
           case Some(delta) =>
             val stored = spark.read.parquet(s"$viewPath/gen=$cur")
             val merged = mergePartials(stored, vd.partial(delta), vd)
-            val e1 = catalog.lastOption.map(_._1).getOrElse(-1L)
-            (writeGen(marks, viewPath, merged, newCursor, e1,
+            (writeGen(marks, viewPath, merged, newCursor, cut.epoch,
               "incremental", committed, vd.fingerprint), "incremental")
         }
       } else {
-        val (rows, cursor, e1) = pinnedFullRead(spark, sink, tsCol)
+        val (rows, cursor, e1) = pinnedFullRead(spark, cut, tsCol)
         (writeGen(marks, viewPath, vd.partial(rows), cursor, e1,
           "full", committed, vd.fingerprint), "full")
       }

@@ -87,16 +87,10 @@ class CommitLogSpec extends SparkSpecBase {
         .union(batch("2024-01-02 10:00:00", 2L, 7L))
         .union(batch("2024-01-03 10:00:00", 3L, 7L)), out, 4L)
     assert(Streaming.compactSink(spark, out, quiesced = true, conf = conf) == 4L)
-    // each mint consumes no batch: batches= carries watermark 4 forward.
-    // A merge's key join puts the key column first in what it writes
-    // and records; retire and restore carry a recorded schema as is
-    def pinned(op: String, schema: String) =
-      s"batches=4\nop=$op\nbloom_cols=\nschema=$schema\nmint_ms=<ms>"
-    val keyFirst = sinkSchema.replace(
-      """{"name":"ts","type":"timestamp","nullable":true,"metadata":{}},""" +
-        """{"name":"event_id","type":"long","nullable":true,"metadata":{}},""",
-      """{"name":"event_id","type":"long","nullable":true,"metadata":{}},""" +
-        """{"name":"ts","type":"timestamp","nullable":true,"metadata":{}},""")
+    // each mint consumes no batch: batches= carries watermark 4 forward,
+    // and every op records the sink's own column order
+    def pinned(op: String) =
+      s"batches=4\nop=$op\nbloom_cols=\nschema=$sinkSchema\nmint_ms=<ms>"
     assert(Streaming.deleteWhere(spark, out, col("event_id") === 1L,
       conf = conf) == 5L)
     assert(Streaming.updateWhere(spark, out, col("event_id") === 2L,
@@ -108,18 +102,32 @@ class CommitLogSpec extends SparkSpecBase {
     assert(Streaming.retireDays(spark, out, java.sql.Date.valueOf("2024-01-04"),
       conf = conf) == Seq("day=2024-01-03"))
     assert(Streaming.restoreSink(spark, out, 7L, conf = conf) == 10L)
-    Seq(5L -> "delete", 6L -> "update").foreach { case (e, op) =>
-      assert(marker(s"$out/epoch=$e/_EPOCH_COMMIT") === pinned(op, sinkSchema))
+    Seq(5L -> "delete", 6L -> "update", 7L -> "upsert", 8L -> "apply",
+      9L -> "retire", 10L -> "restore").foreach { case (e, op) =>
+      assert(marker(s"$out/epoch=$e/_EPOCH_COMMIT") === pinned(op))
     }
-    Seq(7L -> "upsert", 8L -> "apply", 9L -> "retire", 10L -> "restore")
-      .foreach { case (e, op) =>
-        assert(marker(s"$out/epoch=$e/_EPOCH_COMMIT") === pinned(op, keyFirst))
-      }
     val f = CommitLog.fs(spark, out)
     val mints = (4L to 10L).map(e =>
       Streaming.epochMarker(f, out, e).flatMap(_.mintMs).get)
     assert(mints.zip(mints.tail).forall { case (a, b) => a < b },
       s"mint_ms not strictly increasing: $mints")
+  }
+
+  test("a key-matched delete or upsert serves the sink's column order") {
+    import spark.implicits._
+    val out = s"${tmpDir("clog_order")}/events"
+    def batch(ts: String, id: Long) =
+      Seq((Timestamp.valueOf(ts), id, 7L)).toDF("ts", "event_id", "user_id")
+    Streaming.writeBatchIdempotent(batch("2024-01-01 10:00:00", 1L)
+      .union(batch("2024-01-02 10:00:00", 2L)), out, 0L)
+    Streaming.compactSink(spark, out, quiesced = true)
+    val compacted = Streaming.readSink(spark, out).columns.toSeq
+    Streaming.deleteKeys(spark, out, Seq(1L).toDF("event_id"), Seq("event_id"))
+    val deleted = Streaming.readSink(spark, out).columns.toSeq
+    Streaming.upsertBatch(spark, out, batch("2024-01-02 11:00:00", 2L),
+      Seq("event_id"))
+    val upserted = Streaming.readSink(spark, out).columns.toSeq
+    assert((deleted, upserted) === ((compacted, compacted)))
   }
 
   test("the lexical index's generation markers keep their bytes") {

@@ -108,6 +108,30 @@ class SinkStatsSpec extends SparkSpecBase {
     assert(rowsOf(pruned) == rowsOf(full))
   }
 
+  test("a band disjoint from every file on a quiesced sink lists and reads no sink file") {
+    import spark.implicits._
+    val sink = scratch("pruned_out")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Streaming.writeBatchIdempotent(Seq((ts("2024-01-01 10:00:00"), 1L, 7L),
+      (ts("2024-01-02 10:00:00"), 2L, 8L)).toDF("ts", "event_id", "user_id"),
+      sink, 0L)
+    Streaming.compactSink(spark, sink, quiesced = true)
+    SinkStats.indexSinkStats(spark, sink, Seq("user_id"))
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    def listed = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount +
+      HiveCatalogMetrics.METRIC_FILE_CACHE_HITS.getCount
+    val before = listed
+    val out = SinkStats.readSinkPruned(spark, sink, "user_id", 100.0, 200.0)
+    val manifestFiles = new java.io.File(s"$sink/epoch=0/_file_stats")
+      .list().count(n => !n.startsWith("_") && !n.startsWith("."))
+    assert(listed - before == manifestFiles,
+      "a fully pruned band listed sink files beyond its manifest")
+    assert(out.inputFiles.isEmpty,
+      s"a fully pruned band read ${out.inputFiles.length} file(s)")
+    assert(out.columns.toSeq == Streaming.readSink(spark, sink).columns.toSeq)
+    assert(out.count() == 0)
+  }
+
   test("all-null files prune safely: a range predicate cannot match them") {
     val sink = scratch("nulls")
     // value is NULL for the even user cohort - whole files of the

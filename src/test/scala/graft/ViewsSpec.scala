@@ -227,6 +227,25 @@ class ViewsSpec extends SparkSpecBase {
       .getString(4) == vd.fingerprint)
   }
 
+  test("a pending rename reaches the view: the epoch and a new-name batch group as one column") {
+    import spark.implicits._
+    val sink = scratch("alter_sink"); val view = scratch("alter_view")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Streaming.writeBatchIdempotent(Seq((ts("2024-01-01 10:00:00"), 1L, 7L),
+      (ts("2024-01-02 10:00:00"), 2L, 8L)).toDF("ts", "event_id", "user_id"),
+      sink, 0L)
+    Streaming.compactSink(spark, sink, quiesced = true)
+    Streaming.alterSink(spark, sink, renames = Map("user_id" -> "uid"))
+    Streaming.writeBatchIdempotent(Seq((ts("2024-01-03 10:00:00"), 3L, 7L))
+      .toDF("ts", "event_id", "uid"), sink, 1L)
+    val byUid = ViewDef(Seq("uid"),
+      _.groupBy(col("uid")).agg(count(lit(1)).as("count")),
+      Seq("count" -> "sum"))
+    Views.createView(spark, sink, view, byUid)
+    assert(rowsOf(Views.readView(spark, view)) ==
+      rowsOf(Streaming.readSink(spark, sink).groupBy("uid").count()))
+  }
+
   test("createView refuses an existing view; readView refuses a missing one") {
     val sink = scratch("cr_sink"); val view = scratch("cr_view")
     Streaming.writeBatchIdempotent(slice(0), sink, 0L)
