@@ -135,7 +135,7 @@ private[graft] object SharedArtifacts {
       val n = s.getName
       def copy(): Unit = java.nio.file.Files.copy(s.toPath, d.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      if (n.startsWith("_") || n.startsWith(".")) copy()
+      if (!Streaming.isDataName(n)) copy()
       else try java.nio.file.Files.createLink(d.toPath, s.toPath)
       catch { case _: Exception => copy() }
     }

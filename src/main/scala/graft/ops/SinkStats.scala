@@ -122,17 +122,65 @@ object SinkStats {
     (cut, manifest)
   }
 
-  /** The cut's epoch days by name. A manifest day the epoch no longer
-    * resolves is stale by rename drift: refuse rather than silently
-    * drop its rows. */
-  private def heldDays(spark: SparkSession, cut: Streaming.Cut,
-      named: Seq[String]): Map[String, org.apache.hadoop.fs.Path] = {
-    val dayMap = Streaming.resolvedDays(fs(spark, cut.path), cut.path,
-      cut.epoch).toMap
+  /** Epoch `e`'s days by name. A day a `manifest` names that the epoch
+    * no longer resolves is stale by rename drift: refuse (pointing at
+    * `reindex`) rather than silently drop its rows. */
+  private def heldDays(f: org.apache.hadoop.fs.FileSystem, sink: String,
+      e: Long, named: Seq[String], manifest: String = "manifest",
+      reindex: String = "indexSinkStats")
+      : Map[String, org.apache.hadoop.fs.Path] = {
+    val dayMap = Streaming.resolvedDays(f, sink, e).toMap
     named.foreach(d => require(dayMap.contains(d),
-      s"manifest names $d but epoch ${cut.epoch} does not hold it - re-run " +
-        "indexSinkStats"))
+      s"$manifest names $d but epoch $e does not hold it - re-run $reindex"))
     dayMap
+  }
+
+  /** The one distributed footer pass: `files` ((day, file name, path))
+    * sliced over at most 256 tasks, the session's hadoop conf broadcast
+    * once, and each file's parquet footer opened once, handed to `read`
+    * and closed. The listing stays driver-side (unavoidable without a
+    * manifest to bootstrap from - the same trade every lakehouse's
+    * first OPTIMIZE pays), but at millions of files the FOOTER I/O is
+    * the dominant cost, and a serial driver loop over it was the
+    * round-14 bench's top line. `read` must return a strict Seq. */
+  private def footerSweep[T: scala.reflect.ClassTag](spark: SparkSession,
+      files: Seq[(String, String, org.apache.hadoop.fs.Path)])(
+      read: (String, String, org.apache.parquet.hadoop.ParquetFileReader)
+        => Seq[T]): org.apache.spark.rdd.RDD[T] = {
+    val confProps = spark.sparkContext.broadcast {
+      import scala.jdk.CollectionConverters._
+      spark.sparkContext.hadoopConfiguration.iterator().asScala
+        .map(en => en.getKey -> en.getValue).toList
+    }
+    spark.sparkContext
+      .parallelize(files.map { case (d, n, p) => (d, n, p.toString) },
+        math.max(1, math.min(files.size, 256)))
+      .mapPartitions { it =>
+        val c = new org.apache.hadoop.conf.Configuration(false)
+        confProps.value.foreach { case (k, v) => c.set(k, v) }
+        it.flatMap { case (day, name, full) =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(new org.apache.hadoop.fs.Path(full), c))
+          try read(day, name, reader) finally reader.close()
+        }
+      }
+  }
+
+  /** The numeric skip rule over `_file_stats` rows: a file may hold a
+    * value of `[lo, hi]` unless it is provably all-null (n_nulls =
+    * nrows - a range predicate never matches null) or its recorded
+    * bounds are disjoint from the band. A file with NO recorded bounds
+    * and UNKNOWN null counts must SCAN: before r15, null bounds alone
+    * were treated as all-null, which is true for every Spark-written
+    * file but silently DROPS rows of a stats-less foreign file (INT96
+    * timestamps are the live example: that legacy physical type
+    * carries no footer statistics at all). */
+  private def mayHold(lo: Double, hi: Double): Column = {
+    val allNull = col("n_nulls").isNotNull && col("n_nulls") === col("nrows")
+    val disjoint = col("lo").isNotNull &&
+      (col("lo") > hi || col("hi") < lo)
+    !allNull && !disjoint
   }
 
   /** min/max of one NUMERIC column chunk as a conservative double
@@ -224,14 +272,7 @@ object SinkStats {
     import spark.implicits._
     val f = fs(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
-    val days = Streaming.resolvedDays(f, sink, e)
-    val files: Seq[(String, String, String)] = days.flatMap {
-      case (dayName, dayDir) =>
-        f.listStatus(dayDir).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(st => (dayName, st.getPath.getName, st.getPath.toString))
-    }
+    val files = Streaming.epochFiles(f, sink, e)
     require(files.nonEmpty, s"epoch $e of $sink holds no data files")
     // IDEMPOTENCE FAST PATH (r18): the manifest is epoch-pinned and a
     // pure function of (the epoch's immutable file set, cols) — a
@@ -252,120 +293,95 @@ object SinkStats {
         if (prevCols == cols.toSet) return files.size.toLong
       }
     }
-    // the footer reads DISTRIBUTE: one task per slice of the file list
-    // reads its footers executor-side and the manifest writes without
-    // the rows ever touching the driver. The listing above stays
-    // driver-side (unavoidable without a manifest to bootstrap from -
-    // the same trade every lakehouse's first OPTIMIZE pays), but at
-    // millions of files the FOOTER I/O is the dominant cost and a
-    // serial driver loop over it was the round-14 bench's top line.
-    val confProps = spark.sparkContext.broadcast {
+    // the footer reads DISTRIBUTE ([[footerSweep]]) and the manifest
+    // writes without the rows ever touching the driver
+    val colList = cols.toList
+    val manifestRows = footerSweep(spark, files) { (day, file, reader) =>
       import scala.jdk.CollectionConverters._
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(en => en.getKey -> en.getValue).toList
-    }
-    val colsB = spark.sparkContext.broadcast(cols.toList)
-    val manifestRows = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 256)))
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confProps.value.foreach { case (k, v) => c.set(k, v) }
-        it.flatMap { case (dayName, fileName, full) =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(full), c))
-          val byCol =
-            try {
-              import scala.jdk.CollectionConverters._
-              val blocks = reader.getFooter.getBlocks.asScala
-              val nrows = blocks.map(_.getRowCount).sum
-              val chunks = blocks.flatMap(_.getColumns.asScala)
-              colsB.value.map { col0 =>
-                // missing chunks (schema drift) == all-null: reading
-                // this file yields only nulls for c, so an empty range
-                // is the truth and a range predicate prunes it
-                val mine = chunks.filter(_.getPath.toDotString == col0)
-                val isStr = mine.exists(_.getStatistics match {
-                  case _: org.apache.parquet.column.statistics
-                    .BinaryStatistics => true
-                  case _ => false
-                })
-                // per-chunk classification — the rail every recorded
-                // bound hangs off: a chunk is PROVABLY ALL-NULL only
-                // when its stats say so arithmetically (null count set
-                // AND equal to the chunk's value count — min/max
-                // dropped for size leaves hasNonNullValue false on a
-                // chunk that DOES hold values, so that flag alone
-                // proves nothing); it carries USABLE BOUNDS when
-                // non-empty stats expose min/max; anything else —
-                // stats omitted by a foreign writer, size-dropped
-                // binary bounds, an un-incrementable 0xFF prefix —
-                // poisons the WHOLE file: no bounds recorded, null
-                // count unknown, the read side must SCAN. Before r16 a
-                // stats-less chunk was silently dropped from the merge
-                // and the surviving chunks' bounds were recorded as if
-                // they covered it — a pruned read could skip a file
-                // holding in-band rows.
-                def statsOf(
-                    cc: org.apache.parquet.hadoop.metadata
-                      .ColumnChunkMetaData) = Option(cc.getStatistics)
-                def provablyAllNull(
-                    cc: org.apache.parquet.hadoop.metadata
-                      .ColumnChunkMetaData): Boolean =
-                  statsOf(cc).exists(s => !s.isEmpty && s.isNumNullsSet &&
-                    s.getNumNulls == cc.getValueCount)
-                def hasBounds(
-                    cc: org.apache.parquet.hadoop.metadata
-                      .ColumnChunkMetaData): Boolean =
-                  statsOf(cc).exists(s => !s.isEmpty && s.hasNonNullValue)
-                val unusable = mine.exists(cc =>
-                  !provablyAllNull(cc) && !hasBounds(cc))
-                val bounded = mine.filter(cc =>
-                  !provablyAllNull(cc) && hasBounds(cc))
-                val merged =
-                  if (isStr || unusable) None
-                  else bounded
-                    // hasBounds holds for every chunk here, so the
-                    // flatten drops nothing (unsupported types throw)
-                    .flatMap(cc => chunkRange(cc.getStatistics, col0,
-                      fileName))
-                    .reduceOption((a, b) =>
-                      (math.min(a._1, b._1), math.max(a._2, b._2)))
-                // string bounds (raw truncated UTF-8 bytes, unsigned
-                // order): every value-bearing chunk must yield a usable
-                // byte range — one un-boundable chunk makes the file's
-                // true range unknowable and the read side SCANS it
-                val mergedStr: Option[(Array[Byte], Array[Byte])] =
-                  if (!isStr || unusable) None
-                  else {
-                    val rs = bounded.map(_.getStatistics match {
-                      case b: org.apache.parquet.column.statistics
-                        .BinaryStatistics => strChunkRange(b)
-                      case _ => None
-                    })
-                    if (rs.isEmpty || rs.exists(_.isEmpty)) None
-                    else Some(rs.flatten.reduce((a, b) => (
-                      if (ucmp(a._1, b._1) <= 0) a._1 else b._1,
-                      if (ucmp(a._2, b._2) >= 0) a._2 else b._2)))
-                  }
-                // null count: known only when EVERY chunk SETS it (an
-                // unset count reads back as −1, which would corrupt the
-                // sum — metadata answers must then fall back to
-                // scanning, never guess)
-                val nulls =
-                  if (mine.isEmpty) Some(nrows) // no chunk = all null
-                  else if (mine.forall(cc => statsOf(cc).exists(s =>
-                    !s.isEmpty && s.isNumNullsSet)))
-                    Some(mine.map(_.getStatistics.getNumNulls).sum)
-                  else None
-                (dayName, fileName, col0, merged.map(_._1),
-                  merged.map(_._2), nrows, nulls,
-                  mergedStr.map(_._1), mergedStr.map(_._2))
-              }
-            } finally reader.close()
-          byCol
-        }
+      val blocks = reader.getFooter.getBlocks.asScala
+      val nrows = blocks.map(_.getRowCount).sum
+      val chunks = blocks.flatMap(_.getColumns.asScala)
+      colList.map { col0 =>
+        // missing chunks (schema drift) == all-null: reading
+        // this file yields only nulls for c, so an empty range
+        // is the truth and a range predicate prunes it
+        val mine = chunks.filter(_.getPath.toDotString == col0)
+        val isStr = mine.exists(_.getStatistics match {
+          case _: org.apache.parquet.column.statistics
+            .BinaryStatistics => true
+          case _ => false
+        })
+        // per-chunk classification — the rail every recorded
+        // bound hangs off: a chunk is PROVABLY ALL-NULL only
+        // when its stats say so arithmetically (null count set
+        // AND equal to the chunk's value count — min/max
+        // dropped for size leaves hasNonNullValue false on a
+        // chunk that DOES hold values, so that flag alone
+        // proves nothing); it carries USABLE BOUNDS when
+        // non-empty stats expose min/max; anything else —
+        // stats omitted by a foreign writer, size-dropped
+        // binary bounds, an un-incrementable 0xFF prefix —
+        // poisons the WHOLE file: no bounds recorded, null
+        // count unknown, the read side must SCAN. Before r16 a
+        // stats-less chunk was silently dropped from the merge
+        // and the surviving chunks' bounds were recorded as if
+        // they covered it — a pruned read could skip a file
+        // holding in-band rows.
+        def statsOf(
+            cc: org.apache.parquet.hadoop.metadata
+              .ColumnChunkMetaData) = Option(cc.getStatistics)
+        def provablyAllNull(
+            cc: org.apache.parquet.hadoop.metadata
+              .ColumnChunkMetaData): Boolean =
+          statsOf(cc).exists(s => !s.isEmpty && s.isNumNullsSet &&
+            s.getNumNulls == cc.getValueCount)
+        def hasBounds(
+            cc: org.apache.parquet.hadoop.metadata
+              .ColumnChunkMetaData): Boolean =
+          statsOf(cc).exists(s => !s.isEmpty && s.hasNonNullValue)
+        val unusable = mine.exists(cc =>
+          !provablyAllNull(cc) && !hasBounds(cc))
+        val bounded = mine.filter(cc =>
+          !provablyAllNull(cc) && hasBounds(cc))
+        val merged =
+          if (isStr || unusable) None
+          else bounded
+            // hasBounds holds for every chunk here, so the
+            // flatten drops nothing (unsupported types throw)
+            .flatMap(cc => chunkRange(cc.getStatistics, col0, file))
+            .reduceOption((a, b) =>
+              (math.min(a._1, b._1), math.max(a._2, b._2)))
+        // string bounds (raw truncated UTF-8 bytes, unsigned
+        // order): every value-bearing chunk must yield a usable
+        // byte range — one un-boundable chunk makes the file's
+        // true range unknowable and the read side SCANS it
+        val mergedStr: Option[(Array[Byte], Array[Byte])] =
+          if (!isStr || unusable) None
+          else {
+            val rs = bounded.map(_.getStatistics match {
+              case b: org.apache.parquet.column.statistics
+                .BinaryStatistics => strChunkRange(b)
+              case _ => None
+            })
+            if (rs.isEmpty || rs.exists(_.isEmpty)) None
+            else Some(rs.flatten.reduce((a, b) => (
+              if (ucmp(a._1, b._1) <= 0) a._1 else b._1,
+              if (ucmp(a._2, b._2) >= 0) a._2 else b._2)))
+          }
+        // null count: known only when EVERY chunk SETS it (an
+        // unset count reads back as −1, which would corrupt the
+        // sum — metadata answers must then fall back to
+        // scanning, never guess)
+        val nulls =
+          if (mine.isEmpty) Some(nrows) // no chunk = all null
+          else if (mine.forall(cc => statsOf(cc).exists(s =>
+            !s.isEmpty && s.isNumNullsSet)))
+            Some(mine.map(_.getStatistics.getNumNulls).sum)
+          else None
+        (day, file, col0, merged.map(_._1), merged.map(_._2), nrows, nulls,
+          mergedStr.map(_._1), mergedStr.map(_._2))
       }
+    }
     val manifest = s"$sink/epoch=$e/$StatsDir"
     try manifestRows
       .toDF("day", "file", "column", "lo", "hi", "nrows", "n_nulls",
@@ -396,26 +412,24 @@ object SinkStats {
   def readSinkPruned(spark: SparkSession, sink: String, column: String,
       lo: Double, hi: Double, tsCol: String = "ts"): DataFrame = {
     require(lo <= hi, s"empty band: $lo > $hi")
-    val (cut, manifest) = statsCut(spark, sink, "readSinkPruned")
-    val man = spark.read.parquet(manifest)
-    // a file is skipped only when PROVABLY safe: recorded bounds
-    // disjoint from the band, or provably all-null (n_nulls = nrows —
-    // a range predicate never matches null). A file with NO recorded
-    // bounds and UNKNOWN null counts must SCAN: before r15, null
-    // bounds alone were treated as all-null, which is true for every
-    // Spark-written file but silently DROPS rows of a stats-less
-    // foreign file (INT96 timestamps are the live example: that legacy
-    // physical type carries no footer statistics at all).
-    val allNull = col("n_nulls").isNotNull && col("n_nulls") === col("nrows")
-    val disjoint = col("lo").isNotNull &&
-      (col("lo") > hi || col("hi") < lo)
-    val kept = man
-      .filter(col("column") === column && !allNull && !disjoint)
+    prunedRead(spark, sink, "readSinkPruned", column, lo, hi, tsCol,
+      col(column) >= lo && col(column) <= hi)
+  }
+
+  /** The body of [[readSinkPruned]] and [[readSinkPrunedTs]]: the files
+    * `op`'s manifest cannot rule out of `[lo, hi]` ([[mayHold]]), read
+    * by [[keptFilesFrame]] with the `exact` predicate re-applied. */
+  private def prunedRead(spark: SparkSession, sink: String, op: String,
+      column: String, lo: Double, hi: Double, tsCol: String,
+      exact: Column): DataFrame = {
+    val (cut, manifest) = statsCut(spark, sink, op)
+    val kept = spark.read.parquet(manifest)
+      .filter(col("column") === column && mayHold(lo, hi))
       .select("day", "file").collect()
       .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
-      tsCol)
-      .filter(col(column) >= lo && col(column) <= hi)
+    keptFilesFrame(spark, cut,
+      heldDays(fs(spark, sink), sink, cut.epoch, kept.map(_._1)), kept, tsCol)
+      .filter(exact)
   }
 
   /** Serve `lo <= column <= hi` on a STRING column from the manifest's
@@ -437,14 +451,17 @@ object SinkStats {
   def readSinkPrunedString(spark: SparkSession, sink: String,
       column: String, lo: String, hi: String,
       tsCol: String = "ts"): DataFrame = {
-    require(lo != null && hi != null && lo <= hi, s"empty band: $lo > $hi")
+    require(lo != null && hi != null, s"empty band: $lo > $hi")
+    val loB = lo.getBytes("UTF-8")
+    val hiB = hi.getBytes("UTF-8")
+    // ordered as the prune and the engine's filter order strings: by
+    // unsigned UTF-8 bytes, not java.lang.String's UTF-16 code units
+    require(ucmp(loB, hiB) <= 0, s"empty band: $lo > $hi")
     val (cut, manifest) = statsCut(spark, sink, "readSinkPrunedString")
     val man = spark.read.parquet(manifest)
     require(man.columns.contains("lo_b"),
       s"the _file_stats manifest of $sink predates byte string bounds - " +
         "re-run indexSinkStats")
-    val loB = lo.getBytes("UTF-8")
-    val hiB = hi.getBytes("UTF-8")
     // the band test runs DRIVER-side on the collected manifest rows
     // (bounded metadata) with an explicit unsigned comparison — no
     // reliance on any engine's binary collation for the prune decision
@@ -462,8 +479,8 @@ object SinkStats {
         allNull || disjoint
       }
       .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
-      tsCol)
+    keptFilesFrame(spark, cut,
+      heldDays(fs(spark, sink), sink, cut.epoch, kept.map(_._1)), kept, tsCol)
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -489,53 +506,43 @@ object SinkStats {
       val i = t.toInstant
       i.getEpochSecond.toDouble * 1e6 + i.getNano.toDouble / 1e3
     }
-    val (cut, manifest) = statsCut(spark, sink, "readSinkPrunedTs")
-    val loU = math.nextDown(micros(lo))
-    val hiU = math.nextUp(micros(hi))
-    // same provably-safe skip rule as [[readSinkPruned]]: a stats-less
-    // file (INT96-written history) scans, never skips
-    val allNull = col("n_nulls").isNotNull && col("n_nulls") === col("nrows")
-    val disjoint = col("lo").isNotNull &&
-      (col("lo") > hiU || col("hi") < loU)
-    val kept = spark.read.parquet(manifest)
-      .filter(col("column") === column && !allNull && !disjoint)
-      .select("day", "file").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toSeq
-    keptFilesFrame(spark, cut, heldDays(spark, cut, kept.map(_._1)), kept,
-      tsCol)
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+    prunedRead(spark, sink, "readSinkPrunedTs", column,
+      math.nextDown(micros(lo)), math.nextUp(micros(hi)), tsCol,
+      col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
   /** The relation over a pruned file set plus — conservatively — every
     * live batch of the cut (stats cover the compacted zone only): the
     * shared serving tail of [[readSinkPruned]] / [[readSinkPrunedString]]
     * / [[readSinkPrunedTs]] / [[readSinkPointIn]]. `dayMap` resolves
-    * every kept day ([[heldDays]], or the bloom probe's own check). */
+    * every kept day ([[heldDays]]). The kept files are read through
+    * [[Streaming.readDays]] under the cut's recorded schema, so a
+    * column only some of them carry reads as NULL in the others
+    * instead of vanishing with one sampled footer. */
   private def keptFilesFrame(spark: SparkSession, cut: Streaming.Cut,
       dayMap: Map[String, org.apache.hadoop.fs.Path],
       kept: Seq[(String, String)], tsCol: String): DataFrame = {
-    // one reader per PHYSICAL BASE (the epoch dir holding each day —
-    // ≤ retention depth many, 1 in steady state), not one per day:
-    // `basePath` keeps the hive `day=` inference, and a 30-day band
-    // read costs one DataFrame construction instead of thirty
-    val epochParts = kept
-      .groupBy { case (d, _) => dayMap(d).getParent.toString }
-      .toSeq.map { case (basePath, entries) =>
-        spark.read.option("basePath", basePath)
-          .parquet(entries.map { case (d, fn) => s"${dayMap(d)}/$fn" }: _*)
-      }
-    val parts = epochParts ++ cut.frames(spark, cut.live, tsCol)
+    val epochPart =
+      if (kept.isEmpty) Seq.empty
+      else Seq(Streaming.readDays(spark, kept.map { case (d, fn) =>
+        new org.apache.hadoop.fs.Path(dayMap(d), fn) }, cut.schema))
+    val parts = epochPart ++ cut.frames(spark, cut.live, tsCol)
     if (parts.nonEmpty) parts.reduce(_.unionByName(_,
       allowMissingColumns = true))
     // a fully-pruned read serves the schema-only empty frame: no live
     // batch widens the epoch's RECORDED schema here, so no sink file is
     // listed, let alone read (a limit(0) over readSink would list every
-    // epoch file); only a pre-record marker infers it through readSink
+    // epoch file)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      cut.marker.flatMap(_.schema)
-        .getOrElse(Streaming.readSink(spark, cut.path, tsCol).schema))
+      servedSchema(spark, cut, tsCol))
   }
+
+  /** The cut's recorded epoch schema; only a pre-record marker infers
+    * it through [[Streaming.readSink]]. */
+  private def servedSchema(spark: SparkSession, cut: Streaming.Cut,
+      tsCol: String = "ts"): org.apache.spark.sql.types.StructType =
+    cut.schema.getOrElse(Streaming.readSink(spark, cut.path, tsCol).schema)
 
   /** The SHARED clustered sink the read-only skipping provers
     * (q144 / q149 / q151) index and read — built ONCE per session
@@ -623,26 +630,22 @@ object SinkStats {
     val (cut, manifest) = statsCut(spark, sink, "countSinkPruned",
       "run indexSinkStats after maintenance")
     import spark.implicits._
-    val man = spark.read.parquet(manifest)
-      .filter(col("column") === column).collect().toSeq
+    // readSinkPruned's skip rule ([[mayHold]]): a stats-less file (no
+    // bounds, unknown nulls) lands on the SCAN side — never silently
+    // uncounted
+    val overlap = spark.read.parquet(manifest)
+      .filter(col("column") === column && mayHold(lo, hi)).collect().toSeq
       .map(r => (r.getString(0), r.getString(1),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getDouble(4)),
         r.getLong(5),
         if (r.isNullAt(6)) None else Some(r.getLong(6))))
-    // provably-safe skip rule (readSinkPruned's): drop a file only when
-    // its recorded bounds are disjoint from the band or it is provably
-    // all-null; a stats-less file (no bounds, unknown nulls) lands on
-    // the SCAN side — never silently uncounted
-    val overlap = man.filter { case (_, _, fLo, fHi, nrows, nNulls) =>
-      !nNulls.contains(nrows) &&
-        !(fLo.isDefined && (fLo.exists(_ > hi) || fHi.exists(_ < lo)))
-    }
     val (inside, straddle) = overlap.partition {
       case (_, _, fLo, fHi, _, nNulls) =>
         fLo.exists(_ >= lo) && fHi.exists(_ <= hi) && nNulls.isDefined
     }
-    val dayMap = heldDays(spark, cut, (inside ++ straddle).map(_._1))
+    val dayMap = heldDays(fs(spark, sink), sink, cut.epoch,
+      (inside ++ straddle).map(_._1))
     def dayVal(d: String): java.sql.Date =
       if (d == Streaming.NullDayDir) null
       else java.sql.Date.valueOf(d.stripPrefix("day="))
@@ -651,19 +654,13 @@ object SinkStats {
       .map { case (d, fs0) =>
         (dayVal(d), fs0.map(x => x._5 - x._6.get).sum)
       }.toDF("day", "n")
-    val scanDF = straddle
-      .groupBy { case (d, _, _, _, _, _) => dayMap(d).getParent.toString }
-      .toSeq.map { case (basePath, entries) =>
-        spark.read.option("basePath", basePath)
-          .parquet(entries.map { case (d, fn, _, _, _, _) =>
-            s"${dayMap(d)}/$fn" }: _*)
-      }
+    val scanned =
+      if (straddle.isEmpty) Seq.empty
+      else Seq(Streaming.readDays(spark, straddle.map(s =>
+        new org.apache.hadoop.fs.Path(dayMap(s._1), s._2)), cut.schema))
+    val parts = Seq(metaDF) ++ (scanned ++ cut.frames(spark, cut.live, tsCol))
       .map(_.filter(col(column) >= lo && col(column) <= hi)
         .groupBy(col("day")).agg(count(lit(1)).as("n")))
-    val liveDF = cut.frames(spark, cut.live, tsCol)
-      .map(_.filter(col(column) >= lo && col(column) <= hi)
-        .groupBy(col("day")).agg(count(lit(1)).as("n")))
-    val parts = Seq(metaDF) ++ scanDF ++ liveDF
     val counts = parts.reduce(_.unionByName(_))
       .groupBy(col("day")).agg(sum(col("n")).as("n_events"))
       .filter(col("n_events") > 0)
@@ -720,7 +717,8 @@ object SinkStats {
   def indexSinkBloom(spark: SparkSession, sink: String, column: String,
       bits: Int = 1 << 14, seeds: Int = 4): Long = {
     require(bits > 0 && seeds > 0, "bloom needs positive bits and seeds")
-    val e = physicalCut(spark, sink, "indexSinkBloom").epoch
+    val cut = physicalCut(spark, sink, "indexSinkBloom")
+    val e = cut.epoch
     val f = fs(spark, sink)
     require(e >= 0, s"no committed epoch at $sink - compact before indexing")
     // IDEMPOTENCE FAST PATH (r18, the stats manifest's twin): the
@@ -740,22 +738,12 @@ object SinkStats {
         if (sameRecipe) return spark.read.parquet(existing).count()
       }
     }
-    val days = Streaming.resolvedDays(f, sink, e)
-    require(days.nonEmpty, s"epoch $e of $sink holds no day partitions")
-    val files: Seq[(String, String, String)] = days.flatMap {
-      case (dayName, dayDir) =>
-        f.listStatus(dayDir).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(st => (dayName, st.getPath.getName, st.getPath.toString))
-    }
-    require(files.nonEmpty, s"epoch $e of $sink holds no data files")
-    val parts = days.groupBy(_._2.getParent.toString).toSeq
-      .map { case (base, entries) =>
-        spark.read.option("basePath", base)
-          .parquet(entries.map(_._2.toString): _*)
-      }
-    val colType = parts.head.schema(column).dataType
+    val files = Streaming.epochFiles(f, sink, e)
+    require(files.nonEmpty,
+      if (Streaming.resolvedDays(f, sink, e).isEmpty)
+        s"epoch $e of $sink holds no day partitions"
+      else s"epoch $e of $sink holds no data files")
+    val colType = servedSchema(spark, cut)(column).dataType
     // parquet blooms hash the PLAIN encoding of these physical types;
     // anything else (decimals, nested, timestamps-as-INT96) takes the
     // engine-hash scan path, which hashes any Spark type
@@ -767,11 +755,11 @@ object SinkStats {
       case "string" => Some("BINARY")
       case _ => None
     }
-    // FOOTER PASS (distributed, the indexSinkStats pattern): classify
-    // each file — (day, file, native). native=false rows need the scan
-    // pass; a file whose footer PROVES the column all-null/absent
-    // emits nothing (no manifest row = probe-skipped, like a file
-    // whose scan finds no non-null value).
+    // FOOTER PASS ([[footerSweep]]): classify each file — (day, file,
+    // native). native=false rows need the scan pass; a file whose
+    // footer PROVES the column all-null/absent emits nothing (no
+    // manifest row = probe-skipped, like a file whose scan finds no
+    // non-null value).
     //
     // SKIPPED OUTRIGHT (r17, un-regressing the manual-index path: r16
     // made every indexSinkBloom call pay this pass even on sinks whose
@@ -786,100 +774,50 @@ object SinkStats {
     // PER FILE — a mixed epoch (native rewrites + moved-in foreign
     // days) needs the per-file answer, and the record is only ever an
     // over-approximation of what may be native, never of what is.
-    // (lenient: a wrong None costs the per-file pass, never correctness)
-    val knownBloomCols =
-      CommitLog.lenient(Streaming.epochMarker(f, sink, e).flatMap(_.bloomCols))
     val noneNative = expectedPhys.isEmpty ||
-      knownBloomCols.exists(!_.contains(column))
+      cut.marker.flatMap(_.bloomCols).exists(!_.contains(column))
     val classified: Seq[(String, String, Boolean)] =
       if (noneNative) files.map(t => (t._1, t._2, false))
-      else {
-      // built only when the footer pass actually runs: the skip path
-      // must not pay a whole-hadoopConfiguration broadcast per call
-      val confProps = spark.sparkContext.broadcast {
+      else footerSweep(spark, files) { (day, file, reader) =>
         import scala.jdk.CollectionConverters._
-        spark.sparkContext.hadoopConfiguration.iterator().asScala
-          .map(en => en.getKey -> en.getValue).toList
-      }
-      val colB = spark.sparkContext.broadcast((column, expectedPhys))
-      spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 256)))
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confProps.value.foreach { case (k, v) => c.set(k, v) }
-        val (col0, phys) = colB.value
-        it.flatMap { case (dayName, fileName, full) =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(full), c))
-          try {
-            import scala.jdk.CollectionConverters._
-            val perBlock = reader.getFooter.getBlocks.asScala.toSeq.map(b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == col0))
-            if (perBlock.forall(_.isEmpty))
-              // schema drift: the file has no such column - only nulls
-              // can be read from it, equality never matches
-              Seq.empty
-            else {
-              val native = phys.isDefined && perBlock.forall(cc =>
-                cc.exists(m => m.getBloomFilterOffset >= 0 &&
-                  m.getPrimitiveType.getPrimitiveTypeName.name() ==
-                    phys.get))
-              Seq((dayName, fileName, native))
-            }
-          } finally reader.close()
-        }
+        val perBlock = reader.getFooter.getBlocks.asScala.toSeq.map(b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == column))
+        if (perBlock.forall(_.isEmpty))
+          // schema drift: the file has no such column - only nulls can
+          // be read from it, equality never matches
+          Seq.empty
+        else Seq((day, file, expectedPhys.isDefined && perBlock.forall(cc =>
+          cc.exists(m => m.getBloomFilterOffset >= 0 &&
+            m.getPrimitiveType.getPrimitiveTypeName.name() ==
+              expectedPhys.get))))
       }.collect().toSeq // bounded: one small tuple per file
-      }
     import spark.implicits._
     val nativeDF = classified.filter(_._3)
       .map(t => (t._1, t._2))
       .toDF("day", "file")
       .withColumn("bloom", lit(null).cast("array<int>"))
       .withColumn("native", lit(true))
-    val scanFiles = classified.filter(!_._3)
-      .map(t => (t._1, t._2)).toSet
+    val scanKeys = classified.filter(!_._3).map(t => (t._1, t._2)).toSet
+    val scanFiles = files.collect { case (d, n, p) if scanKeys((d, n)) => p }
     // SCAN PASS, restricted to exactly the files the footers could not
     // serve (none, when the epoch was written with native blooms): the
-    // engine-hash positions manifest, unchanged semantics
-    val scanDF =
-      if (scanFiles.isEmpty) None
-      else {
-        val dayMap = days.toMap
-        // mergeSchema: on the classification-skip path the scan set may
-        // contain schema-drift files (classification would have
-        // excluded them); without the merge, a group's inferred schema
-        // comes from ONE footer, and a drift file sampled first would
-        // hide the column from every OTHER file in its group — their
-        // values would drop from the bloom and a probe would falsely
-        // skip them. With the merge, drift files read as all-null for
-        // the column, fall out at the isNotNull filter, and end up
-        // probe-skipped — exactly the per-file classification semantics.
-        val scanParts = scanFiles.toSeq
-          .groupBy { case (d, _) => dayMap(d).getParent.toString }
-          .toSeq.map { case (base, entries) =>
-            spark.read.option("basePath", base)
-              .option("mergeSchema", "true")
-              .parquet(entries.map { case (d, fn) =>
-                s"${dayMap(d)}/$fn" }: _*)
-          }
-        val all = scanParts
-          .map(df =>
-            // a group where NO file carries the column (whole-group
-            // drift, skip path only): nothing can match an equality
-            // probe - emit no positions, like the per-file exclusion
-            if (!df.columns.contains(column))
-              df.select(col("day"), input_file_name().as("path"),
-                lit(null).cast(colType).as("v")).limit(0)
-            else df.select(col("day"), input_file_name().as("path"),
-              col(column).as("v")))
-          .reduce(_.unionByName(_))
+    // engine-hash positions manifest. The recorded schema is declared,
+    // so a drift file on the classification-skip path reads the column
+    // as NULL, falls out at the isNotNull filter and ends up
+    // probe-skipped — the per-file classification semantics. Under a
+    // pre-record marker's inferred schema, a column no scanned file
+    // carries has nothing an equality probe could match.
+    val scanDF = Some(scanFiles).filter(_.nonEmpty)
+      .map(Streaming.readDays(spark, _, cut.schema))
+      .filter(_.columns.contains(column))
+      .map { all =>
         val dayDir = when(col("day").isNull, lit(Streaming.NullDayDir))
           .otherwise(concat(lit("day="),
             date_format(col("day"), "yyyy-MM-dd")))
-        Some(all
+        all
           .select(dayDir.as("day"),
-            regexp_extract(col("path"), "[^/]+$", 0).as("file"), col("v"))
+            regexp_extract(input_file_name(), "[^/]+$", 0).as("file"),
+            col(column).as("v"))
           .filter(col("v").isNotNull)
           .select(col("day"), col("file"),
             explode(sequence(lit(0), lit(seeds - 1))).as("seed"), col("v"))
@@ -888,7 +826,7 @@ object SinkStats {
               .cast("int").as("pos"))
           .groupBy("day", "file")
           .agg(sort_array(collect_set(col("pos"))).as("bloom"))
-          .withColumn("native", lit(false)))
+          .withColumn("native", lit(false))
       }
     val manifest = (Seq(nativeDF) ++ scanDF)
       .reduce(_.unionByName(_))
@@ -916,53 +854,36 @@ object SinkStats {
     * cannot be hashed — skip less, never lie. Returns one kept
     * (day, file) list per input value, index-aligned with `values`. */
   private def nativeBloomProbe(spark: SparkSession,
-      files: Seq[(String, String, String)], column: String,
-      values: Seq[Any]): Seq[Seq[(String, String)]] = {
+      files: Seq[(String, String, org.apache.hadoop.fs.Path)],
+      column: String, values: Seq[Any]): Seq[Seq[(String, String)]] = {
     if (files.isEmpty || values.isEmpty)
       return values.map(_ => Seq.empty)
-    val confProps = spark.sparkContext.broadcast {
+    val vs = values.toList
+    val keptPairs = footerSweep(spark, files) { (day, file, reader) =>
       import scala.jdk.CollectionConverters._
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(en => en.getKey -> en.getValue).toList
-    }
-    val probeB = spark.sparkContext.broadcast((column, values.toList))
-    val keptPairs: Seq[(Int, (String, String))] = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 256)))
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confProps.value.foreach { case (k, v0) => c.set(k, v0) }
-        val (col0, vs) = probeB.value
-        it.flatMap { case (dayName, fileName, full) =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(full), c))
-          try {
-            import scala.jdk.CollectionConverters._
-            // resolve each row group's filter ONCE (None = the block
-            // lacks the chunk or its filter is unreadable: that block
-            // keeps every value), then test all values against it
-            val perBlock: Seq[Option[
-              org.apache.parquet.column.values.bloomfilter.BloomFilter]] =
-              reader.getFooter.getBlocks.asScala.toSeq.map { b =>
-                b.getColumns.asScala.find(_.getPath.toDotString == col0)
-                  .flatMap(cc => Option(reader.getBloomFilterDataReader(b)
-                    .readBloomFilter(cc)))
-              }
-            vs.zipWithIndex.collect { case (value, i) if perBlock.exists {
-              case None => true // chunk absent or filter unreadable: keep
-              case Some(bf) => value match {
-                case l: java.lang.Long => bf.findHash(bf.hash(l.longValue))
-                case n: java.lang.Integer => bf.findHash(bf.hash(n.intValue))
-                case d: java.lang.Double => bf.findHash(bf.hash(d.doubleValue))
-                case fl: java.lang.Float => bf.findHash(bf.hash(fl.floatValue))
-                case s: String => bf.findHash(bf.hash(
-                  org.apache.parquet.io.api.Binary.fromString(s)))
-                case _ => true
-              }
-            } => (i, (dayName, fileName)) }
-          } finally reader.close()
+      // resolve each row group's filter ONCE (None = the block lacks the
+      // chunk or its filter is unreadable: that block keeps every
+      // value), then test all values against it
+      val perBlock: Seq[Option[
+        org.apache.parquet.column.values.bloomfilter.BloomFilter]] =
+        reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == column)
+            .flatMap(cc => Option(reader.getBloomFilterDataReader(b)
+              .readBloomFilter(cc)))
         }
-      }.collect().toSeq
+      vs.zipWithIndex.collect { case (value, i) if perBlock.exists {
+        case None => true // chunk absent or filter unreadable: keep
+        case Some(bf) => value match {
+          case l: java.lang.Long => bf.findHash(bf.hash(l.longValue))
+          case n: java.lang.Integer => bf.findHash(bf.hash(n.intValue))
+          case d: java.lang.Double => bf.findHash(bf.hash(d.doubleValue))
+          case fl: java.lang.Float => bf.findHash(bf.hash(fl.floatValue))
+          case s: String => bf.findHash(bf.hash(
+            org.apache.parquet.io.api.Binary.fromString(s)))
+          case _ => true
+        }
+      } => (i, (day, file)) }
+    }.collect().toSeq
     val byValue = keptPairs.groupBy(_._1)
     values.indices.map(i => byValue.getOrElse(i, Seq.empty).map(_._2))
   }
@@ -971,15 +892,15 @@ object SinkStats {
     * cannot rule the value out — plus every committed live batch,
     * conservatively — with the exact predicate re-applied on top (a
     * bloom false positive costs I/O, never a phantom row). A file
-    * indexed from its NATIVE parquet blooms is tested against the
-    * manifest's recorded bitsets with parquet's own hash
-    * ([[nativeBloomKeeps]], evaluated executor-side); a scan-indexed
-    * file keeps the engine-hash positions test, with the probe
-    * positions derived by the ENGINE from the manifest's own recipe
-    * (type cast, bits, seeds) so build and probe hash identically by
-    * construction. Same staleness rails as [[readSinkPruned]]: the
-    * manifest must exist for the CURRENT epoch and cover `column`,
-    * else refuse loudly. */
+    * indexed from its NATIVE parquet blooms is tested against its own
+    * footer's bloom filters with parquet's own hash
+    * ([[nativeBloomProbe]], one distributed footer sweep; the manifest
+    * records no bitset for it); a scan-indexed file keeps the
+    * engine-hash positions test, with the probe positions derived by
+    * the ENGINE from the manifest's own recipe (type cast, bits,
+    * seeds) so build and probe hash identically by construction. Same
+    * staleness rails as [[readSinkPruned]]: the manifest must exist
+    * for the CURRENT epoch and cover `column`, else refuse loudly. */
   def readSinkPoint(spark: SparkSession, sink: String, column: String,
       value: Any, tsCol: String = "ts"): DataFrame =
     readSinkPointIn(spark, sink, column, Seq(value), tsCol)
@@ -1072,7 +993,16 @@ object SinkStats {
         positions.indices.map(i => hits.getOrElse(i, Array.empty).toSeq
           .map(r => r.getString(1) -> r.getString(2)))
       }
-      val dayMap = Streaming.resolvedDays(f0, sink, e).toMap
+      val nativeFiles =
+        if (!hasNative) Seq.empty
+        else man.filter(col("native") === true)
+          .select("day", "file").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+      // every day a kept positions row or a native row names must still
+      // be held by the epoch
+      val dayMap = heldDays(f0, sink, e,
+        (keptPos.flatten ++ nativeFiles).map(_._1).distinct,
+        "bloom manifest", "indexSinkBloom")
       val keptNative: Seq[Seq[(String, String)]] =
         if (!hasNative) vs.map(_ => Seq.empty)
         else {
@@ -1085,21 +1015,11 @@ object SinkStats {
             }: _*).head()
             g.indices.map(row.get)
           }.toSeq
-          val nativeFiles = man.filter(col("native") === true)
-            .select("day", "file").collect()
-            .map(r => (r.getString(0), r.getString(1)))
-            .toSeq
-          nativeFiles.foreach { case (d, _) => require(dayMap.contains(d),
-            s"bloom manifest names $d but epoch $e does not hold it - " +
-              "re-run indexSinkBloom") }
-          nativeBloomProbe(spark,
-            nativeFiles.map { case (d, fn) => (d, fn, s"${dayMap(d)}/$fn") },
+          nativeBloomProbe(spark, nativeFiles.map { case (d, fn) =>
+            (d, fn, new org.apache.hadoop.fs.Path(dayMap(d), fn)) },
             column, typed)
         }
       val perValue = keptPos.zip(keptNative).map { case (a, b) => a ++ b }
-      perValue.flatten.foreach { case (d, _) => require(dayMap.contains(d),
-        s"bloom manifest names $d but epoch $e does not hold it - re-run " +
-          "indexSinkBloom") }
       (colType, dayMap, perValue)
     } finally man.unpersist()
   }
@@ -1383,13 +1303,8 @@ object SinkStats {
     val ev = graft.Tables.events(spark, dir)
     // total file count via the epoch listing (NOT via an index call -
     // this query must never index anything)
-    val f = fs(spark, sink)
-    val e = Streaming.cutOf(spark, sink).epoch
-    val total = Streaming.resolvedDays(f, sink, e).map { case (_, d) =>
-      f.listStatus(d).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    }.sum
+    val total = Streaming.epochFiles(fs(spark, sink), sink,
+      Streaming.cutOf(spark, sink).epoch).size
     val b = ev.agg(min(col("user_id")), max(col("user_id"))).head()
     val uMin = b.getLong(0)
     val uHi = uMin + math.floor((b.getLong(1) - uMin) / 8.0).toLong

@@ -1027,6 +1027,11 @@ object Streaming {
 
     def alterPending: Boolean = alter._1.nonEmpty || alter._2.nonEmpty
 
+    /** The current epoch's recorded schema ([[EpochMarker.schema]]);
+      * None before the first epoch or for a pre-record marker. */
+    def schema: Option[org.apache.spark.sql.types.StructType] =
+      marker.flatMap(_.schema)
+
     /** `df` under the pending alter's logical schema ([[applyAlter]]). */
     def conform(df: DataFrame): DataFrame = applyAlter(df, alter._1, alter._2)
 
@@ -1911,26 +1916,45 @@ object Streaming {
     }
   }
 
-  /** One DataFrame over a set of resolved day directories, grouped by
-    * physical parent epoch so the plan keeps ONE parquet relation per
-    * source epoch (bounded by the retained-epoch count) instead of one
-    * per day; `day` comes from hive partition discovery under each
-    * group's basePath, so day-predicate pruning prunes file listings
-    * exactly as on a fully-physical epoch. */
-  /** One frame over resolved day directories. With a recorded epoch
-    * schema ([[EpochMarker.schema]]) the read is declared, not inferred —
-    * no footer job at construction; files missing a recorded column
-    * (additive drift in moved days) surface it as NULL, exactly what
-    * the mergeSchema fallback produced. */
-  private def readDays(spark: SparkSession,
-      days: Seq[(String, org.apache.hadoop.fs.Path)],
+  /** Whether `name` names a data file: Hadoop's hidden-file rule,
+    * under which `_`/`.` names (markers, manifests, checksums) are
+    * metadata. */
+  private[ops] def isDataName(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** Every data file of committed epoch `epochId` as (day, file name,
+    * path), over its [[resolvedDays]]: the one answer to "which files
+    * does this epoch hold" that [[SinkStats]]' manifests index and
+    * count. */
+  private[ops] def epochFiles(f: org.apache.hadoop.fs.FileSystem,
+      path: String, epochId: Long)
+      : Seq[(String, String, org.apache.hadoop.fs.Path)] =
+    resolvedDays(f, path, epochId).flatMap { case (day, dir) =>
+      f.listStatus(dir).toSeq
+        .filter(s => s.isFile && isDataName(s.getPath.getName))
+        .map(s => (day, s.getPath.getName, s.getPath))
+    }
+
+  /** One frame over resolved day directories, or data files directly
+    * under them, grouped by physical parent epoch so the plan keeps ONE
+    * parquet relation per source epoch (bounded by the retained-epoch
+    * count) instead of one per day; `day` comes from hive partition
+    * discovery under each group's basePath, so day-predicate pruning
+    * prunes file listings exactly as on a fully-physical epoch. With a
+    * recorded epoch schema ([[EpochMarker.schema]]) the read is
+    * declared, not inferred — no footer job at construction, and files
+    * missing a recorded column (additive drift in moved days) surface
+    * it as NULL; only a pre-record marker falls back to mergeSchema. */
+  private[ops] def readDays(spark: SparkSession,
+      paths: Seq[org.apache.hadoop.fs.Path],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame =
-    days.groupBy(_._2.getParent.toString).toSeq.sortBy(_._1)
-      .map { case (base, ds) =>
+    paths.groupBy(p => (if (p.getName.startsWith("day=")) p else p.getParent)
+        .getParent.toString).toSeq.sortBy(_._1)
+      .map { case (base, ps) =>
         val r = spark.read.option("basePath", base)
         schema.fold(r.option("mergeSchema", "true"))(r.schema)
-          .parquet(ds.map(_._2.toString).sorted: _*)
+          .parquet(ps.map(_.toString).sorted: _*)
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
@@ -1962,7 +1986,8 @@ object Streaming {
       }
     } else {
       val days = resolvedDays(f, path, epochId)
-      if (days.isEmpty) None else Some(readDays(spark, days, recorded))
+      if (days.isEmpty) None
+      else Some(readDays(spark, days.map(_._2), recorded))
     }
   }
 
@@ -2405,7 +2430,7 @@ object Streaming {
         return before
       }
       val src = applyAlter(
-        readDays(spark, prevDays, prev.flatMap(_.schema)),
+        readDays(spark, prevDays.map(_._2), prev.flatMap(_.schema)),
         alterRen, alterDrop)
       val epochDir = m.dir(before + 1)
       writeEpochDays(src, epochDir,
@@ -2470,7 +2495,7 @@ object Streaming {
     val prevSchema: Option[org.apache.spark.sql.types.StructType] =
       if (prevDays.isEmpty) None
       else Some(org.apache.spark.sql.types.StructType(
-        alterOf(readDays(spark, prevDays, prevRecorded)).schema
+        alterOf(readDays(spark, prevDays.map(_._2), prevRecorded)).schema
           .filterNot(_.name == "day")))
     val target = widenedSchema(batchSchemas ++ prevSchema,
       s"compaction over $path")
@@ -2522,7 +2547,8 @@ object Streaming {
     val merged =
       if (overlap.isEmpty) fresh
       else fresh.unionByName(
-        conform(alterOf(readDays(spark, overlap, prevRecorded)), target),
+        conform(alterOf(readDays(spark, overlap.map(_._2), prevRecorded)),
+          target),
         allowMissingColumns = true)
     writeEpochDays(merged, epochDir, (withData.map(_._2) ++ overlap.map(_._2))
       .map(p => f.getContentSummary(p).getLength).sum,
@@ -3816,7 +3842,8 @@ object Streaming {
     val epochDir = m.dir(m.before + 1)
     val frame =
       if (affectedDirs.isEmpty) None
-      else Some(readDays(spark, affectedDirs, m.prev.flatMap(_.schema))
+      else Some(readDays(spark, affectedDirs.map(_._2),
+          m.prev.flatMap(_.schema))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
       val schema = write(affected, frame, epochDir,
@@ -3942,7 +3969,7 @@ object Streaming {
             // pending alter applies to the validation frame exactly
             // as readSink serves the restored rows
             val (aRen, aDrop) = readAlter(f, path)
-            val frame0 = readDays(spark, readmitted)
+            val frame0 = readDays(spark, readmitted.map(_._2))
             val frame =
               if (aRen.isEmpty && aDrop.isEmpty) frame0
               else applyAlter(frame0, aRen, aDrop)
@@ -3998,7 +4025,7 @@ object Streaming {
     val addedSide = targetDays.filter { case (d, p) => !pm.get(d).contains(p) }
     def side(days: Seq[(String, org.apache.hadoop.fs.Path)])
         : Option[DataFrame] =
-      if (days.isEmpty) None else Some(readDays(spark, days))
+      if (days.isEmpty) None else Some(readDays(spark, days.map(_._2)))
     val beforeF = side(removedSide)
     val afterF = side(addedSide)
     if (beforeF.isEmpty && afterF.isEmpty)

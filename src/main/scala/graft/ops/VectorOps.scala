@@ -1392,20 +1392,6 @@ object VectorOps {
         .write.mode("overwrite").parquet(s"$out/tomb/gen=$gen"))
   }
 
-  /** Fold every active code generation into ONE, dropping tombstoned
-    * vectors' codes physically (the vector-side twin of
-    * [[graft.ops.TextOps.compactLexicalIndex]] — the maintenance that
-    * bounds the reader's gens factor and reclaims deleted space):
-    * surviving codes rewrite through the sized list writers under a
-    * NEW generation, invisible until its marker lands carrying
-    * `replaces=<old gens>` via atomic rename — readers in the crash
-    * window between marker and cleanup see exactly one side, never
-    * both. Cleanup (idempotent, re-swept next invocation) drops the
-    * superseded code/tomb directories and their markers; gen 0's
-    * certificate [[IndexCommit]] is never deleted — it vouches for
-    * centroids + codebook, and a phantom gen 0 with no directories
-    * reads as empty. Returns the surviving generation id; an index
-    * with one generation and no tombstones is a no-op. */
   /** One metadata row for operators ([[graft.ops.Streaming.describeSink]]'s
     * convention for the stored vector index): committed code-generation
     * count and max id, the sync lineage (cursor/epoch, −1 before the
@@ -1549,6 +1535,20 @@ object VectorOps {
         s"the shared vec pipe base's first sync must append, got $m1")
     }
 
+  /** Fold every active code generation into ONE, dropping tombstoned
+    * vectors' codes physically (the vector-side twin of
+    * [[graft.ops.TextOps.compactLexicalIndex]] — the maintenance that
+    * bounds the reader's gens factor and reclaims deleted space):
+    * surviving codes rewrite through the sized list writers under a
+    * NEW generation, invisible until its marker lands carrying
+    * `replaces=<old gens>` via atomic rename — readers in the crash
+    * window between marker and cleanup see exactly one side, never
+    * both. Cleanup (idempotent, re-swept next invocation) drops the
+    * superseded code/tomb directories and their markers; gen 0's
+    * certificate [[IndexCommit]] is never deleted — it vouches for
+    * centroids + codebook, and a phantom gen 0 with no directories
+    * reads as empty. Returns the surviving generation id; an index
+    * with one generation and no tombstones is a no-op. */
   def compactVectorIndex(spark: SparkSession, out: String): Long = {
     vecGens(spark, out).retire(vecGenDirs(out, _))
     val marks = vecGens(spark, out)

@@ -255,6 +255,10 @@ class SinkStatsSpec extends SparkSpecBase {
     // ASCII band BELOW the non-ASCII cohort in byte order: must skip
     // the ż files too (their lo bound exceeds the band)
     check("aa", "ab", expectSkip = true)
+    // a band ordered in UTF-8 bytes (EF BF BD < F0 9F 98 80) but not in
+    // UTF-16 code units (U+FFFD > the high surrogate D83D): the band
+    // check must use the byte order the prune and the filter use
+    check("\uFFFD", "\uD83D\uDE00", expectSkip = true)
   }
 
   test("timestamp band read prunes on the default (day, ts) layout and equals the full filter") {
@@ -758,5 +762,88 @@ class SinkStatsSpec extends SparkSpecBase {
       "event_id", Seq(absent), f, e)
     assert(absentKept.head.isEmpty,
       s"absent id kept ${absentKept.head.size} files")
+  }
+
+  test("pruned and point reads keep a column only some of an epoch's files carry") {
+    import spark.implicits._
+    val sink = scratch("drift_kept")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Streaming.writeBatchIdempotent(Seq((ts("2024-01-01 10:00:00"), 1L, 7L),
+      (ts("2024-01-02 10:00:00"), 2L, 8L)).toDF("ts", "event_id", "user_id"),
+      sink, 0L)
+    Streaming.compactSink(spark, sink, quiesced = true)
+    // the second compaction adds `extra` on day 2 only: with keepEpochs
+    // = 1 the new epoch dir holds day 1's files, moved in without the
+    // column, beside day 2's rewrite
+    Streaming.writeBatchIdempotent(
+      Seq((ts("2024-01-02 11:00:00"), 3L, 9L, "x"))
+        .toDF("ts", "event_id", "user_id", "extra"), sink, 1L)
+    Streaming.compactSink(spark, sink, quiesced = true)
+    val full = Streaming.readSink(spark, sink)
+    assert(full.columns.contains("extra"))
+    SinkStats.indexSinkStats(spark, sink, Seq("user_id"))
+    val pruned = SinkStats.readSinkPruned(spark, sink, "user_id", 7.0, 9.0)
+    assert(pruned.columns.toSeq == full.columns.toSeq)
+    assert(rowsOf(pruned) == rowsOf(full.filter(col("user_id").between(7, 9))))
+    SinkStats.indexSinkBloom(spark, sink, "event_id")
+    // one id from each day: both days' files are kept and read together
+    val point = SinkStats.readSinkPointIn(spark, sink, "event_id", Seq(1L, 3L))
+    assert(point.columns.toSeq == full.columns.toSeq)
+    assert(point.filter(col("event_id") === 3L).select("extra").collect()
+      .map(_.getString(0)).toSeq == Seq("x"))
+    assert(rowsOf(point) == rowsOf(full.filter(col("event_id").isin(1L, 3L))))
+    assert(SinkStats.indexSinkBloom(spark, sink, "extra") == 1L)
+  }
+
+  test("the stats and bloom manifests keep their rows") {
+    import spark.implicits._
+    val sink = scratch("manifest_rows")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Streaming.writeBatchIdempotent(Seq(
+      (ts("2024-01-01 10:00:00"), 1L, Some(7L), "a"),
+      (ts("2024-01-01 11:30:00"), 2L, None, "bb"),
+      (ts("2024-01-02 10:00:00"), 3L, Some(8L), "\u017ceta"),
+      (ts("2024-01-02 12:00:00"), 4L, Some(9L), null))
+      .toDF("ts", "event_id", "user_id", "tag"), sink, 0L)
+    // the write emits native blooms on event_id and lifts them into the
+    // bloom manifest; user_id takes the scan path
+    Streaming.compactSink(spark, sink, quiesced = true,
+      conf = Some(graft.ops.SinkConf.of(spark).copy(
+        bloomAutoIndex = Seq("event_id"))))
+    assert(SinkStats.indexSinkStats(spark, sink,
+      Seq("user_id", "tag", "ts")) == 2L)
+    assert(SinkStats.indexSinkBloom(spark, sink, "user_id", bits = 64,
+      seeds = 2) == 2L)
+    val e = maxEpochOf(sink)
+    val names = spark.read.parquet(s"$sink/epoch=$e/_file_stats")
+      .select("file").distinct().collect().map(_.getString(0)).sorted
+    def rank(r: org.apache.spark.sql.Row, i: Int): String =
+      names.indexOf(r.getString(i)).toString
+    def cell(v: Any): String = v match {
+      case b: Array[Byte] => b.map(x => f"$x%02x").mkString
+      case s: scala.collection.Seq[_] => s.mkString("[", " ", "]")
+      case x => String.valueOf(x)
+    }
+    def rows(dir: String): Seq[String] = {
+      val df = spark.read.parquet(s"$sink/epoch=$e/$dir")
+      val fi = df.columns.indexOf("file")
+      df.collect().toSeq.map(r => r.toSeq.indices.map(i =>
+        if (i == fi) rank(r, i) else cell(r.get(i))).mkString("|")).sorted
+    }
+    // day | file rank | column | lo | hi | nrows | n_nulls | lo_b | hi_b
+    assert(rows("_file_stats") == Seq(
+      "day=2024-01-01|0|tag|null|null|2|0|61|6262",
+      "day=2024-01-01|0|ts|1.7041031999999998E15|1.7041086000000002E15|2|0|null|null",
+      "day=2024-01-01|0|user_id|6.999999999999999|7.000000000000001|2|1|null|null",
+      "day=2024-01-02|1|tag|null|null|2|1|c5bc657461|c5bc657461",
+      "day=2024-01-02|1|ts|1.7041895999999998E15|1.7041968000000002E15|2|0|null|null",
+      "day=2024-01-02|1|user_id|7.999999999999999|9.000000000000002|2|0|null|null"))
+    // day | file rank | bloom | native | column | col_type | bits | seeds
+    assert(rows("_file_bloom/col=event_id") == Seq(
+      "day=2024-01-01|0|null|true|event_id|bigint|16384|4",
+      "day=2024-01-02|1|null|true|event_id|bigint|16384|4"))
+    assert(rows("_file_bloom/col=user_id") == Seq(
+      "day=2024-01-01|0|[12 51]|false|user_id|bigint|64|2",
+      "day=2024-01-02|1|[4 18 22 58]|false|user_id|bigint|64|2"))
   }
 }
